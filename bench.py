@@ -456,8 +456,17 @@ def main() -> int:
                 # reruns.  A real plan regression moves raw seconds
                 # too, so require BOTH axes to trip before spending a
                 # rerun.
+                # The skipped query still lands in regression_noise,
+                # so the audit trail keeps the denominator artifacts.
                 psec = prev_secs.get(q)
                 if psec and psec > 0 and sec / psec <= 1.5:
+                    regression_noise[q] = {
+                        "prev_norm": round(pn, 2),
+                        "norm": round(nn, 2),
+                        "prev_sec": psec,
+                        "sec": sec,
+                        "reason": "raw-flat",
+                    }
                     continue
                 fn = qs.get(q)
                 best2 = float("inf")
