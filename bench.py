@@ -289,6 +289,22 @@ HEADLINE = [
 ]
 
 
+def full_artifact_name(here: str) -> str:
+    """File name for this run's BENCH_full archive in directory
+    ``here``: the first index, counting up from the round after the
+    newest ``BENCH_r*.json``, whose ``BENCH_full`` file does not exist
+    yet, so an earlier archive is never overwritten."""
+    rounds = [
+        int(m.group(1))
+        for name in os.listdir(here)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))
+    ]
+    n = max(rounds, default=0) + 1
+    while os.path.exists(os.path.join(here, f"BENCH_full_r{n:02d}.json")):
+        n += 1
+    return f"BENCH_full_r{n:02d}.json"
+
+
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -616,19 +632,10 @@ def main() -> int:
     # in the artifact); noise-demoted names ride along for the audit
     line["regressions"] = sorted(regressions)
     line["regression_noise"] = sorted(regression_noise)
-    # Self-archive the COMPLETE payload next to the driver artifacts
-    # (next round index = one past the newest existing BENCH_r*.json).
+    # Self-archive the COMPLETE payload next to the BENCH_r*.json files.
     try:
-        import glob
-
         here = os.path.dirname(os.path.abspath(__file__))
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
-        n = (max(rounds) + 1) if rounds else 1
-        full_name = f"BENCH_full_r{n:02d}.json"
+        full_name = full_artifact_name(here)
         with open(os.path.join(here, full_name), "w") as f:
             json.dump(payload, f, indent=1, sort_keys=True)
         line["full_artifact"] = full_name

@@ -67,6 +67,13 @@ def star(spark: SparkSession, sf_dir: str) -> DataFrame:
     via the ModelRunner; rewriting is cheap relative to re-joining per
     query.  Results are identical to the direct join — every consumer
     is oracle-checked against the join-every-time SQL.
+
+    The *unexecuted* scan DataFrame is memoized per session, keyed by
+    the materialized path (the ``catalog.load_table`` pattern): a fresh
+    ``spark.read.parquet`` re-lists the year directories and runs a
+    one-task footer-schema job, and its plan would be the same every
+    time.  No result is cached — every query still plans and runs its
+    own scan of the files.
     """
     path = _STAR_CACHE.get(sf_dir)
     if path is None:
@@ -86,4 +93,7 @@ def star(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(path)
         )
         _STAR_CACHE[sf_dir] = path
-    return spark.read.parquet(path)
+    memo = vars(spark).setdefault("_cvds_star_cache", {})
+    if path not in memo:
+        memo[path] = spark.read.parquet(path)
+    return memo[path]

@@ -15,6 +15,18 @@ small idiomatic-Python registry:
     scan as the view (dbt ``table``: computed once, queried many times).
     Tables can be partitioned (e.g. star by order-year → partition
     pruning for the Q1 flight's date predicates at 100 TB) and bucketed.
+  - ``INCREMENTAL`` → dbt's merge (copy-on-write versions),
+    insert_overwrite and append strategies (``_materialize_incremental``).
+
+Every re-read of a relation the runner wrote scans it with the schema
+it was written with, so it costs no parquet-footer inference job and
+partition columns keep the model's types.  A REBALANCE
+(``catalog.rebalanced``) precedes only partitioned writes, where it
+gives one file per partition value instead of one per task and value,
+and the incremental model's writes (copy-on-write versions and
+batches).  An unpartitioned TABLE already writes one file per write
+task, and a REBALANCE there would shuffle the whole relation just to
+resize its files.
 
 Within a single query Spark's lazy plan already orders work; the runner
 exists for the *cross-query* materialization boundary the reference's
@@ -35,6 +47,7 @@ from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from clickhouse_vs_dbt_spark.catalog import rebalanced
 
@@ -104,6 +117,8 @@ class ModelRunner:
     # incremental model -> (version counter, current data path); survives
     # across run() calls so the next run sees the prior materialization.
     _incr_state: dict[str, tuple[int, str]] = field(default_factory=dict)
+    # data path -> the schema the runner wrote there (see _scan)
+    _written: dict[str, StructType] = field(default_factory=dict)
 
     def model(
         self,
@@ -286,9 +301,7 @@ class ModelRunner:
                 f"range [{oldest}, {current}] (keep_versions="
                 f"{model.keep_versions})"
             )
-        return self.spark.read.parquet(
-            f"{self.warehouse_dir}/{name}_v{version}"
-        )
+        return self._scan(f"{self.warehouse_dir}/{name}_v{version}")
 
     def mutate(
         self,
@@ -317,7 +330,7 @@ class ModelRunner:
                 "the copy-on-write versioned materialization"
             )
         version, path = state
-        cur = self.spark.read.parquet(path)
+        cur = self._scan(path)
         if delete_where:
             cur = cur.filter(f"NOT ({delete_where})")
         if set_exprs:
@@ -353,7 +366,7 @@ class ModelRunner:
                 "the copy-on-write versioned materialization"
             )
         version, path = state
-        cur = self.spark.read.parquet(path).coalesce(max(target_files, 1))
+        cur = self._scan(path).coalesce(max(target_files, 1))
         # rebalance=False: compact() manages its own layout — a
         # REBALANCE shuffle on top of the coalesce would override the
         # caller's target_files with AQE's advisory sizing (review
@@ -366,31 +379,46 @@ class ModelRunner:
     ) -> DataFrame:
         """Write ``df`` as the model's version ``version``, apply the
         retention policy, update state, re-register the temp view.
-        ``rebalance=False`` skips the pre-write REBALANCE for callers
-        that manage the layout themselves (compact)."""
-        new_path = f"{self.warehouse_dir}/{model.name}_v{version}"
-        shutil.rmtree(new_path, ignore_errors=True)
-        # REBALANCE before the write (catalog.rebalanced): right-sized
-        # files, one per partition value locally instead of one per
-        # (task × partition value)
-        out_df = (
-            rebalanced(df, *(model.partition_by or ()))
-            if rebalance
-            else df
-        )
-        writer = out_df.write.mode("overwrite")
-        if model.partition_by:
-            writer = writer.partitionBy(*model.partition_by)
-        writer.parquet(new_path)
+        The write is REBALANCEd (catalog.rebalanced: right-sized files,
+        one per partition value locally instead of one per task and
+        value) unless ``rebalance=False``, for callers that manage the
+        layout themselves (compact)."""
+        path = f"{self.warehouse_dir}/{model.name}_v{version}"
+        out = self._create(df, path, model.partition_by, rebalance)
         drop_below = version - max(model.keep_versions, 1) + 1
         for v in range(max(drop_below, 0)):
-            shutil.rmtree(
-                f"{self.warehouse_dir}/{model.name}_v{v}", ignore_errors=True
-            )
-        self._incr_state[model.name] = (version, new_path)
-        out = self.spark.read.parquet(new_path)
+            old = f"{self.warehouse_dir}/{model.name}_v{v}"
+            shutil.rmtree(old, ignore_errors=True)
+            self._written.pop(old, None)
+        self._incr_state[model.name] = (version, path)
         out.createOrReplaceTempView(model.name)
         return out
+
+    def _create(
+        self, df: DataFrame, path: str, partition_by: Sequence[str],
+        rebalance: bool,
+    ) -> DataFrame:
+        """Write ``df`` as a new parquet relation at ``path``, replacing
+        any old one, with a REBALANCE first when ``rebalance``; return
+        the relation's scan (:meth:`_scan`)."""
+        shutil.rmtree(path, ignore_errors=True)
+        out = rebalanced(df, *partition_by) if rebalance else df
+        writer = out.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+        self._written[path] = df.schema
+        return self._scan(path)
+
+    def _scan(self, path: str) -> DataFrame:
+        """Scan of the relation the runner wrote at ``path``, with the
+        schema it wrote there rather than one inferred from parquet
+        footers: inference costs a Spark job per read, and it reads a
+        partition column back by its directory names, so a STRING key
+        ``'01'`` would come back as the INT ``1``.  The incremental
+        insert_overwrite and append strategies keep the schema of the
+        relation's first write (dbt's ``on_schema_change='ignore'``)."""
+        return self.spark.read.schema(self._written[path]).parquet(path)
 
     def _materialize_incremental(self, model: Model) -> DataFrame:
         """dbt ``incremental``: the builder returns only the new batch;
@@ -412,40 +440,37 @@ class ModelRunner:
         if self.warehouse_dir is None:
             self.warehouse_dir = tempfile.mkdtemp(prefix="spark_models_")
         state = self._incr_state.get(model.name)
-        existing = self.spark.read.parquet(state[1]) if state else None
+        existing = self._scan(state[1]) if state else None
         batch = model.builder(self.spark, existing)  # type: ignore[call-arg]
 
-        if existing is None:
-            version = 0
-            path = f"{self.warehouse_dir}/{model.name}_v0"
-            shutil.rmtree(path, ignore_errors=True)
-            writer = rebalanced(
-                batch, *(model.partition_by or ())
-            ).write.mode("overwrite")
-            if model.partition_by:
-                writer = writer.partitionBy(*model.partition_by)
-            writer.parquet(path)
-        elif model.unique_key:
+        if state is None:
+            return self._write_version(model, 0, batch)
+        version, path = state
+        if model.unique_key:
             keys = list(model.unique_key)
+            # no distinct on the batch keys: a left-anti join ignores
+            # duplicates on its right side, so it would be dead work
             merged = existing.join(
-                batch.select(*keys).distinct(), on=keys, how="left_anti"
+                batch.select(*keys), on=keys, how="left_anti"
             ).unionByName(batch)
-            return self._write_version(model, state[0] + 1, merged)
-        elif model.partition_by:
-            version, path = state
+            return self._write_version(model, version + 1, merged)
+        if model.partition_by:
             with _conf(self.spark, "spark.sql.sources.partitionOverwriteMode",
                        "dynamic"):
                 rebalanced(batch, *model.partition_by).write.mode(
                     "overwrite"
                 ).partitionBy(*model.partition_by).parquet(path)
         else:
-            version, path = state
             rebalanced(batch).write.mode("append").parquet(path)
-
-        self._incr_state[model.name] = (version, path)
-        return self.spark.read.parquet(path)
+        return self._scan(path)
 
     def _materialize_table(self, model: Model, df: DataFrame) -> DataFrame:
+        """dbt ``table``: write ``df`` and return the scan of what was
+        written.  Only a partitioned write is REBALANCEd: without it
+        every write task emits one file per partition value it holds.
+        An unpartitioned write already emits one file per task, so a
+        REBALANCE there would shuffle the whole relation (at 100 TB, the
+        whole star) just to resize its files."""
         if model.bucket_by is not None:
             # Bucketed output must go through the session catalog
             # (bucket metadata lives there, not in the parquet files).
@@ -463,15 +488,10 @@ class ModelRunner:
             return self.spark.table(model.name)
         if self.warehouse_dir is None:
             self.warehouse_dir = tempfile.mkdtemp(prefix="spark_models_")
-        path = f"{self.warehouse_dir}/{model.name}"
-        shutil.rmtree(path, ignore_errors=True)
-        writer = rebalanced(df, *(model.partition_by or ())).write.mode(
-            "overwrite"
+        return self._create(
+            df, f"{self.warehouse_dir}/{model.name}", model.partition_by,
+            rebalance=bool(model.partition_by),
         )
-        if model.partition_by:
-            writer = writer.partitionBy(*model.partition_by)
-        writer.parquet(path)
-        return self.spark.read.parquet(path)
 
 
 # --- verbatim dbt model: the reference's star.sql, character-for-character ---

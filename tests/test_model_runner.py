@@ -538,3 +538,155 @@ def test_reference_star_sql_is_verbatim():
         "INNER JOIN {{ ref('stg_part') }} AS p ON p.P_PARTKEY = l.LO_PARTKEY",
     ):
         assert frag in REFERENCE_STAR_SQL
+
+
+# --- job and plan-shape pins for the materializations ---
+
+
+@pytest.fixture
+def parquet_writes(spark, monkeypatch):
+    """Every ``DataFrameWriter.parquet`` call as (path, DataFrame
+    written); ``after_write`` holds the job group opened right after
+    each write, so the jobs between two writes can be counted."""
+    from pyspark.sql import DataFrameWriter
+
+    sc = spark.sparkContext
+    seen: list[tuple[str, object]] = []
+    after_write: list[str] = []
+    write = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        sc.setJobGroup(f"write-{path}", "write")
+        write(self, path, *args, **kwargs)
+        seen.append((path, self._df))
+        after_write.append(f"after-{len(seen)}-{path}")
+        sc.setJobGroup(after_write[-1], "after write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    yield seen, after_write
+    sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _executed(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _merge_batches(rows_v0, rows_next, schema="id long, g string, v int"):
+    def batch(s, existing):
+        return s.createDataFrame(rows_v0 if existing is None else rows_next, schema)
+
+    return batch
+
+
+def test_rereads_of_written_relations_launch_no_job(spark, tmp_path, parquet_writes):
+    """Re-registering a written TABLE or merge version, and reading the
+    prior version back for the next merge, scans with the written
+    schema: no footer-inference job runs between two writes."""
+    _, after_write = parquet_writes
+    runner = ModelRunner(spark, warehouse_dir=str(tmp_path))
+    runner.add(Model(
+        "flat", lambda s: s.range(20).selectExpr("id", "id % 3 AS g"),
+        materialization=Materialization.TABLE,
+    ))
+    runner.add(Model(
+        "mrg",
+        _merge_batches([(1, "a", 0), (2, "b", 0)], [(2, "b", 1), (3, "c", 1)]),
+        materialization=Materialization.INCREMENTAL, unique_key=("id",),
+    ))
+    runner.run()
+    runner.run()
+    tracker = spark.sparkContext.statusTracker()
+    # flat twice, mrg v0 and v1
+    assert len(after_write) == 4
+    assert {g: list(tracker.getJobIdsForGroup(g)) for g in after_write} == {
+        g: [] for g in after_write
+    }
+    assert sorted(tuple(r) for r in spark.table("mrg").collect()) == [
+        (1, "a", 0), (2, "b", 1), (3, "c", 1),
+    ]
+
+
+def test_only_partitioned_table_writes_rebalance(spark, tmp_path, parquet_writes):
+    """An unpartitioned TABLE is written straight from its plan (one
+    file per task, no shuffle); a ``partition_by`` TABLE keeps its
+    REBALANCE, which gives one file per partition value."""
+    seen, _ = parquet_writes
+    runner = ModelRunner(spark, warehouse_dir=str(tmp_path))
+    for name, parts in (("flat", ()), ("parted", ("g",))):
+        runner.add(Model(
+            name, lambda s: s.range(0, 40, 1, 4).selectExpr("id", "id % 3 AS g"),
+            materialization=Materialization.TABLE, partition_by=parts,
+        ))
+    runner.run()
+    plans = {path.rsplit("/", 1)[-1]: _executed(df) for path, df in seen}
+    assert "Exchange" not in plans["flat"]
+    assert "REBALANCE_PARTITIONS_BY_COL" in plans["parted"]
+    assert spark.table("flat").count() == spark.table("parted").count() == 40
+
+
+def test_merge_plan_has_no_aggregate_over_batch_keys(spark, tmp_path, parquet_writes):
+    """The merge's left-anti join takes the batch keys as they are: a
+    ``distinct`` in front of it would only add an aggregation."""
+    seen, _ = parquet_writes
+    runner = ModelRunner(spark, warehouse_dir=str(tmp_path))
+    runner.add(Model(
+        "mrg",
+        _merge_batches([(1, "a", 0), (2, "b", 0)], [(2, "b", 1), (2, "b", 2)]),
+        materialization=Materialization.INCREMENTAL, unique_key=("id",),
+    ))
+    runner.run()
+    runner.run()
+    path, merged = seen[-1]
+    assert path.endswith("/mrg_v1")
+    plan = _executed(merged)
+    assert "LeftAnti" in plan
+    assert "Aggregate" not in plan
+
+
+def test_partition_key_keeps_its_model_type(spark, tmp_path):
+    """A partition column is read back with the model's type, not one
+    inferred from directory names (which turns the STRING '01' into
+    the INT 1), in the TABLE view and in every merge version."""
+    runner = ModelRunner(spark, warehouse_dir=str(tmp_path))
+    runner.add(Model(
+        "pk", lambda s: s.createDataFrame([(1, "01"), (2, "10")], "id long, k string"),
+        materialization=Materialization.TABLE, partition_by=("k",),
+    ))
+    runner.add(Model(
+        "pk_mrg",
+        _merge_batches([(1, "01", 0)], [(2, "01", 1)], "id long, k string, v int"),
+        materialization=Materialization.INCREMENTAL, unique_key=("id",),
+        partition_by=("k",), keep_versions=2,
+    ))
+    runner.run()
+    runner.run()
+    assert sorted((r.id, r.k) for r in spark.table("pk").collect()) == [
+        (1, "01"), (2, "10"),
+    ]
+    for df in (spark.table("pk_mrg"), runner.read_version("pk_mrg", 0)):
+        assert dict(df.dtypes)["k"] == "string"
+        assert {r.k for r in df.collect()} == {"01"}
+
+
+def test_written_views_match_an_inferred_read(spark, sf_dir, tmp_path):
+    """The star TABLE and a merge version, registered with the written
+    schema, have exactly the schema (names, order, types, nullability)
+    that inferring it from the files gives."""
+    runner = ModelRunner(spark, warehouse_dir=str(tmp_path))
+    runner.add(Model(
+        "star_w", lambda s: build_star(s, sf_dir),
+        materialization=Materialization.TABLE,
+    ))
+    runner.add(Model(
+        "mrg_w",
+        lambda s, existing: s.range(3).selectExpr(
+            "id", "array(id) AS a", "named_struct('x', id) AS st",
+            "CAST(id AS DECIMAL(12, 2)) AS d",
+        ),
+        materialization=Materialization.INCREMENTAL, unique_key=("id",),
+    ))
+    runner.run()
+    runner.run()
+    for name, path in (("star_w", "star_w"), ("mrg_w", "mrg_w_v1")):
+        inferred = spark.read.parquet(str(tmp_path / path)).schema
+        assert spark.table(name).schema == inferred, name

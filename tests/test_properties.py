@@ -7,7 +7,7 @@ boundary-adjacent timestamps, negative/zero values).
 
 from decimal import ROUND_HALF_UP, Decimal
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -302,3 +302,59 @@ def test_argmax_state_merge_matches_bruteforce(spark, rows):
         pairs = [(v, a) for gg, _, v, a in rows if gg == g and v is not None]
         want[g] = max(pairs)[1] if pairs else None
     assert got == want
+
+
+# (k, j, v) rows: a composite key with NULL-able parts, dense enough
+# that batches hit existing keys and repeat their own
+merge_rows_strategy = st.lists(
+    st.tuples(
+        st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+        st.one_of(st.none(), st.integers(min_value=0, max_value=1)),
+        st.integers(min_value=0, max_value=9),
+    ),
+    max_size=12,
+)
+MERGE_SCHEMA = "k int, j int, v int"
+MERGE_KEYS = ["k", "j"]
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(old=merge_rows_strategy, new=merge_rows_strategy)
+@example(old=[(1, 0, 0), (2, 0, 0)], new=[(1, 0, 1), (1, 0, 2)])  # duplicate batch keys
+@example(old=[(None, 0, 0), (1, None, 0), (1, 1, 0)],
+         new=[(None, 0, 1), (1, None, 1), (1, 1, 1)])  # NULL keys on both sides
+@example(old=[(1, 0, 0), (None, None, 0)], new=[])  # empty batch
+@example(old=[(1, 0, 0), (2, 1, 0)], new=[(2, 1, 1), (1, 0, 1)])  # replaces every row
+def test_merge_without_distinct_matches_distinct_form(spark, tmp_path, old, new):
+    """The merge strategy's left-anti join over the raw batch keys gives
+    the same merged relation as the ``distinct()``-keyed form it
+    replaced, and both match the dbt merge rule: a prior row survives
+    unless the batch holds its exact (non-NULL) key; every batch row
+    is added."""
+    import tempfile
+    from collections import Counter
+
+    from clickhouse_vs_dbt_spark.plans.models import (
+        Materialization,
+        Model,
+        ModelRunner,
+    )
+
+    existing = spark.createDataFrame(old, MERGE_SCHEMA)
+    batch = spark.createDataFrame(new, MERGE_SCHEMA)
+    runner = ModelRunner(spark, warehouse_dir=tempfile.mkdtemp(dir=tmp_path))
+    runner.add(Model(
+        "merge_prop", lambda s, prior: existing if prior is None else batch,
+        materialization=Materialization.INCREMENTAL, unique_key=MERGE_KEYS,
+    ))
+    runner.run()
+    got = Counter(tuple(r) for r in runner.run()["merge_prop"].collect())
+
+    distinct_form = existing.join(
+        batch.select(*MERGE_KEYS).distinct(), on=MERGE_KEYS, how="left_anti"
+    ).unionByName(batch)
+    batch_keys = {(k, j) for k, j, _ in new}
+    rule = Counter(
+        [r for r in old if None in r[:2] or r[:2] not in batch_keys] + new
+    )
+    assert got == Counter(tuple(r) for r in distinct_form.collect()) == rule

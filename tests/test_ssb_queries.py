@@ -4,6 +4,8 @@ sf0.01 — tests here catch drift earlier and on edge params)."""
 
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 
@@ -63,3 +65,25 @@ def test_every_query_has_callable(spark):
     assert qs, "queries() must not be empty"
     for name, fn in qs.items():
         assert callable(fn), name
+
+
+def test_second_star_call_launches_no_job(spark, sf_dir):
+    """common.star memoizes its unexecuted scan per session: a second
+    call neither re-lists the year directories nor re-reads a footer
+    schema, and the scan it returns still runs its own jobs."""
+    from clickhouse_vs_dbt_spark.operators.common import star
+
+    sc = spark.sparkContext
+
+    def jobs(action) -> list[int]:
+        group = f"star-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    star(spark, sf_dir)
+    assert jobs(lambda: star(spark, sf_dir)) == []
+    assert jobs(lambda: star(spark, sf_dir).filter("order_year = 1995").count())
