@@ -318,9 +318,9 @@ def main() -> int:
 
     # Warmup: touch every fixture table once (file listing, footer reads,
     # codegen warm) so per-query numbers measure the query, not startup.
-    from clickhouse_vs_dbt_spark.catalog import FIXTURE_TABLES, load_table
+    from clickhouse_vs_dbt_spark.catalog import FIXTURE_SCHEMAS, load_table
 
-    for t in FIXTURE_TABLES:
+    for t in FIXTURE_SCHEMAS:
         load_table(spark, sf_dir, t).limit(1).write.format("noop").mode(
             "overwrite"
         ).save()

@@ -190,3 +190,138 @@ def test_rechunk_splits_by_bytes_not_row_groups(spark, tmp_path):
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
         cat._CHUNK_CACHE.pop((src_dir, "orders"), None)
+
+
+# --- declared fixture schemas (catalog.FIXTURE_SCHEMAS) ---
+
+
+def _declared():
+    from clickhouse_vs_dbt_spark.catalog import FIXTURE_SCHEMAS
+
+    return {name: ddl for name, ddl in FIXTURE_SCHEMAS.items() if ddl}
+
+
+def _generate_bench_inputs(out_dir: str, sf: float) -> None:
+    """Write the benchmark's inputs with ``perfbench/gen.py``."""
+    import importlib.util
+    from pathlib import Path
+
+    path = Path(__file__).resolve().parents[1] / "perfbench" / "gen.py"
+    spec = importlib.util.spec_from_file_location("perfbench_gen", path)
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    gen.generate(out_dir, sf)
+
+
+def _job_ids(spark, group: str, fn):
+    """``fn()``'s result and the ids of the Spark jobs it launched."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _fresh_dir(tmp_path, sf_dir: str) -> str:
+    """A path the catalog has never loaded from, onto ``sf_dir``."""
+    fresh = tmp_path / "in"
+    fresh.symlink_to(sf_dir)
+    return str(fresh)
+
+
+def test_declared_schemas_equal_inferred_in_every_generation(spark, sf_dir, tmp_path):
+    """Every declared schema equals the one Spark infers from the
+    footer (names, types, order, nullability) in each fixture scale and
+    in the benchmark generator's output.  Reading with the declared
+    schema would turn a column missing from a file into NULLs, so
+    drift must fail here."""
+    import glob
+    import os
+
+    from pyspark.sql.types import StructType
+
+    gen_dir = str(tmp_path / "gen")
+    _generate_bench_inputs(gen_dir, 0.001)
+    dirs = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*")))
+    declared = _declared()
+    checked: dict[str, list[str]] = {}
+    for d in [*dirs, gen_dir]:
+        for name, ddl in declared.items():
+            f = f"{d}/{name}.parquet"
+            if os.path.exists(f):
+                assert spark.read.parquet(f).schema == StructType.fromDDL(ddl), f
+                checked.setdefault(name, []).append(d)
+    assert set(checked) == set(declared)
+    assert len(checked["orders"]) == len(dirs) + 1
+
+
+def test_load_table_launches_no_schema_job(spark, sf_dir, tmp_path):
+    """From a fresh path, a declared table loads without a Spark job;
+    ``events`` runs its one footer-inference job."""
+    from clickhouse_vs_dbt_spark.catalog import FIXTURE_SCHEMAS, load_table
+
+    fresh = _fresh_dir(tmp_path, sf_dir)
+    jobs = {
+        name: len(_job_ids(spark, f"load-{fresh}-{name}",
+                           lambda name=name: load_table(spark, fresh, name))[1])
+        for name in FIXTURE_SCHEMAS
+    }
+    assert jobs == {name: 0 if ddl else 1 for name, ddl in FIXTURE_SCHEMAS.items()}
+
+
+def test_rechunked_table_launches_only_its_rewrite(spark, sf_dir, tmp_path, monkeypatch):
+    """A re-chunked table costs the jobs of its rewrite and no more: no
+    schema job for the source, none for the re-read of the copy, and
+    the copy reads with the declared schema."""
+    import shutil
+
+    from pyspark.sql.types import StructType
+
+    from clickhouse_vs_dbt_spark import catalog as cat
+
+    monkeypatch.setattr(cat, "_CHUNK_MIN_BYTES", 0)
+    fresh = _fresh_dir(tmp_path, sf_dir)
+    ddl = cat.FIXTURE_SCHEMAS["orders"]
+    try:
+        df, loaded = _job_ids(spark, f"rechunk-{fresh}",
+                              lambda: cat.load_table(spark, fresh, "orders"))
+    finally:
+        copy = cat._CHUNK_CACHE.pop((fresh, "orders"), None)
+    assert copy and all(f.startswith(f"file://{copy}/") for f in df.inputFiles())
+    n = spark.sparkContext.defaultParallelism
+    _, rewrite = _job_ids(
+        spark, f"rewrite-{fresh}",
+        lambda: spark.read.schema(ddl).parquet(f"{fresh}/orders.parquet")
+        .repartition(n).write.parquet(str(tmp_path / "rewrite")),
+    )
+    assert rewrite and len(loaded) == len(rewrite)
+    assert df.schema == StructType.fromDDL(ddl)
+    assert df.count() == spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    shutil.rmtree(copy)
+
+
+def test_declared_type_mismatch_fails_loudly(spark, tmp_path):
+    """A fixture file whose column type differs from the declared one
+    fails the read; it returns no rows, not converted or NULL values."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clickhouse_vs_dbt_spark.catalog import load_table
+
+    n = 3
+    table = pa.table({
+        "o_orderkey": pa.array([str(k) for k in range(n)]),
+        "o_custkey": pa.array(range(n), pa.int64()),
+        "o_orderstatus": pa.array(["O"] * n),
+        "o_totalprice": pa.array([1.5] * n),
+        "o_orderdate": pa.array([0] * n, pa.timestamp("us")),
+        "o_orderpriority": pa.array(["1-URGENT"] * n),
+    })
+    pq.write_table(table, str(tmp_path / "orders.parquet"))
+    rows = None
+    with pytest.raises(SparkException,
+                       match="FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        rows = load_table(spark, str(tmp_path), "orders").collect()
+    assert rows is None

@@ -27,12 +27,12 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as e
-    from clickhouse_vs_dbt_spark.catalog import FIXTURE_TABLES, load_table
+    from clickhouse_vs_dbt_spark.catalog import FIXTURE_SCHEMAS, load_table
     from clickhouse_vs_dbt_spark.session import get_spark
 
     spark = get_spark("qtime")
     qs = e.queries()
-    for t in FIXTURE_TABLES:
+    for t in FIXTURE_SCHEMAS:
         load_table(spark, args.sf, t).limit(1).write.format("noop").mode(
             "overwrite"
         ).save()
