@@ -7699,3 +7699,126 @@ def test_r17_group_array_replan_null_and_residual_edges(spark):
     )
     assert "__ga_t0.__ga_k0" in out
     assert len(spark.sql(out).collect()) == 3
+
+
+def test_replan_alias_key_keeps_compound_operators(spark):
+    """A GROUP BY that names a select alias swaps the aliased
+    expression into the re-plan's inner select.  The swap re-joins
+    the expression's tokens without splitting ``>=`` into ``> =``
+    (a Spark parse error), in the weighted-quantile re-plan and the
+    joined groupConcat re-plan alike; both agree with their fold
+    spelling."""
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW ak_t AS SELECT id, "
+        "CAST(id % 3 AS DOUBLE) AS x, CAST(id AS DOUBLE) AS v, "
+        "id % 2 + 1 AS w, concat('s', id) AS s FROM range(6)"
+    )
+    spark.sql("CREATE OR REPLACE TEMP VIEW ak_u AS SELECT id FROM range(6)")
+    qw = (
+        "SELECT if(x >= 1, 'a', 'b') AS k, "
+        "quantileExactWeighted(0.5)(v, w) AS q FROM ak_t GROUP BY k"
+    )
+    gc = (
+        "SELECT if(x >= 1, 'a', 'b') AS k, groupConcat(',', 5)(s) AS g "
+        "FROM ak_t JOIN ak_u ON ak_t.id = ak_u.id GROUP BY k"
+    )
+    for sql, marker in ((qw, "__qw_k0"), (gc, "__gc_k0")):
+        replan = transpile(sql)
+        fold = transpile(sql + " HAVING count(*) >= 0")
+        assert marker in replan and marker not in fold, sql
+        assert "> =" not in replan, sql
+
+        def rows(q):
+            return sorted(
+                (r[0], sorted(r[1].split(",")) if isinstance(r[1], str)
+                 else r[1])
+                for r in spark.sql(q).collect()
+            )
+
+        assert rows(replan) == rows(fold), sql
+
+
+def test_ga_residual_heads_are_an_allow_list():
+    """A group-array tier residual runs on the re-plan's un-grouped
+    outer projection, so only allow-listed scalar heads may wrap the
+    tier call.  An aggregate head — including the interval sweep
+    ``maxIntersectionsPosition``, which no deny-list named — keeps
+    the statement on the fold path, as does ``sum``."""
+    for sql in (
+        "SELECT arraySlice(groupArraySample(3)(x), 1, "
+        "maxIntersectionsPosition(k, k)) AS m FROM t GROUP BY k",
+        "SELECT arrayMap(y -> y + maxIntersectionsPosition(k, k), "
+        "groupArraySample(3)(x)) AS m FROM t GROUP BY k",
+        "SELECT arraySlice(groupArraySample(3)(x), 1, sum(k)) AS m "
+        "FROM t GROUP BY k",
+    ):
+        out = transpile(sql)
+        assert "__ga_t0" not in out and "__iv_pre" not in out, sql
+    # allow-listed heads and lambdas still re-plan
+    assert "__ga_t0" in transpile(
+        "SELECT k, arrayMap(y -> y, groupArraySample(3)(x)) AS m "
+        "FROM t GROUP BY k"
+    )
+    # a trailing identifier after an operator is an operand, not a
+    # bare alias: the unaliased item keeps the fold (no '+ AS k')
+    out = transpile(
+        "SELECT k, length(groupArrayLast(2)(x, o)) + k FROM t GROUP BY k"
+    )
+    assert "__ga_t0" not in out and "+ AS" not in out
+
+
+def test_ga_multi_tier_needs_a_plain_table_from():
+    """Each tier of the group-array re-plan inlines FROM once, so two
+    or more tiers re-plan only over a plain table reference — a LIMIT
+    subquery could hand each tier different rows.  One tier over the
+    same FROM still re-plans."""
+    two = (
+        "SELECT k, groupArraySample(3)(x) AS a, "
+        "groupArrayLast(2)(x, o) AS b FROM {f} GROUP BY k"
+    )
+    one = "SELECT k, groupArraySample(3)(x) AS a FROM {f} GROUP BY k"
+    sub = "(SELECT * FROM t LIMIT 10)"
+    assert "__ga_t0" not in transpile(two.format(f=sub))
+    assert "__ga_t0" not in transpile(two.format(f=sub + " AS q"))
+    assert "__ga_t0" not in transpile(
+        two.format(f="t JOIN u ON t.id = u.id")
+    )
+    assert "__ga_t0" in transpile(one.format(f=sub))
+    for f in ("t", "t AS a", "db.t a", "`db`.`t`"):
+        assert "__ga_t1" in transpile(two.format(f=f)), f
+
+
+def test_replan_group_keys_resolve_aliases_first(spark):
+    """GROUP BY resolves a select alias to its expression before the
+    keys match, so naming both the alias and its expression groups by
+    one key.  Weighted-quantile call arguments keep ``>=`` whole.  An
+    alias two items share, an ORDER BY name two outputs share, and a
+    literal that a GROUP BY ordinal does not name keep the fold."""
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW rk_t AS SELECT id % 3 AS k, "
+        "CAST(id % 5 AS DOUBLE) AS s, CAST(id % 5 + id % 3 AS DOUBLE) "
+        "AS e, CAST(id % 7 AS DOUBLE) AS v, id % 2 + 1 AS w "
+        "FROM range(30)"
+    )
+    for sql, marker in (
+        ("SELECT k AS kk, maxIntersections(s, e) AS mi FROM rk_t "
+         "GROUP BY kk, k", "__iv_k0"),
+        ("SELECT k, quantileExactWeighted(0.5)(if(v >= 3, v, 0), w) "
+         "AS q FROM rk_t GROUP BY k", "__qw_k0"),
+    ):
+        replan = transpile(sql)
+        fold = transpile(sql + " HAVING count(*) >= 0")
+        assert marker in replan and marker not in fold, sql
+        assert "__iv_k1" not in replan and "> =" not in replan, sql
+        assert sorted(spark.sql(replan).collect()) == sorted(
+            spark.sql(fold).collect()
+        ), sql
+    for sql in (
+        "SELECT k AS kk, k + 1 AS kk, maxIntersections(s, e) AS mi "
+        "FROM rk_t GROUP BY kk",
+        "SELECT k, k, maxIntersections(s, e) AS mi FROM rk_t "
+        "GROUP BY k ORDER BY k",
+        "SELECT k, 1 AS one, maxIntersections(s, e) AS mi FROM rk_t "
+        "GROUP BY 1",
+    ):
+        assert "__iv_pre" not in transpile(sql), sql

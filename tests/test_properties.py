@@ -358,3 +358,180 @@ def test_merge_without_distinct_matches_distinct_form(spark, tmp_path, old, new)
         [r for r in old if None in r[:2] or r[:2] not in batch_keys] + new
     )
     assert got == Counter(tuple(r) for r in distinct_form.collect()) == rule
+
+
+# Statement re-plans vs their fold spelling.  Appending
+# ``HAVING count(*) >= 0`` keeps every group but takes the statement
+# off the re-plan, so both spellings of one query must agree.
+
+#: GROUP BY variants: (key select item, GROUP BY text, key of a k)
+GROUP_VARIANTS = {
+    "column": ("k", "k", lambda k: k),
+    "ordinal": ("k", "1", lambda k: k),
+    "alias": ("k >= 1 AS kk", "kk", lambda k: None if k is None else k >= 1),
+}
+KEYS = st.one_of(st.none(), st.integers(min_value=0, max_value=2))
+KEEP = st.one_of(st.none(), st.booleans())  # WHERE keep may empty a group
+
+
+def _replan_and_fold(spark, sql, marker):
+    from clickhouse_vs_dbt_spark.dialect import transpile
+
+    replan = transpile(sql)
+    fold = transpile(sql + " HAVING count(*) >= 0")
+    assert marker in replan and marker not in fold, sql
+    return spark.sql(replan).collect(), spark.sql(fold).collect()
+
+
+def _view(spark, name, rows, dup, ddl):
+    """``rows`` plus a repeat of the first ``dup`` of them."""
+    spark.createDataFrame(rows + rows[:dup], ddl).createOrReplaceTempView(name)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    rows=st.lists(st.tuples(
+        KEYS,
+        st.one_of(st.none(), st.integers(min_value=-3, max_value=6)),
+        st.one_of(st.none(), st.integers(min_value=-3, max_value=6)),
+        KEEP,
+    ), max_size=25),
+    dup=st.integers(min_value=0, max_value=4),
+    big=st.booleans(),
+    variant=st.sampled_from(sorted(GROUP_VARIANTS)),
+)
+@example(  # inverted intervals, an all-NULL group, a group WHERE empties
+    rows=[(0, 5, 1, True), (0, 1, 4, True), (1, None, None, True),
+          (2, 1, 3, False), (None, 2, 2, True)],
+    dup=2, big=False, variant="column",
+)
+@example(  # endpoints above 2**53 collapse alike on both paths
+    rows=[(0, 1, 2, True), (0, 2, 3, True), (1, 0, 5, True)],
+    dup=1, big=True, variant="ordinal",
+)
+def test_interval_replan_matches_fold(spark, rows, dup, big, variant):
+    base = 1 << 53 if big else 0
+    rows = [
+        (k, None if s is None else base + s, None if e is None else base + e, keep)
+        for k, s, e, keep in rows
+    ]
+    _view(spark, "pp_iv", rows, dup, "k bigint, s bigint, e bigint, keep boolean")
+    key, gb, _ = GROUP_VARIANTS[variant]
+    replan, fold = _replan_and_fold(
+        spark,
+        f"SELECT {key}, maxIntersections(s, e) AS mi, "
+        "maxIntersectionsPosition(s, e) AS mip, intervalLengthSum(s, e) AS ils "
+        f"FROM pp_iv WHERE keep GROUP BY {gb}",
+        "__iv_pre",
+    )
+    assert sorted(replan, key=repr) == sorted(fold, key=repr)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    rows=st.lists(st.tuples(
+        KEYS,
+        st.one_of(st.none(), st.integers(min_value=-4, max_value=4)),
+        st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+        KEEP,
+    ), max_size=25),
+    dup=st.integers(min_value=0, max_value=4),
+    variant=st.sampled_from(sorted(GROUP_VARIANTS)),
+)
+@example(  # all-NULL pairs, a zero-weight group, a group WHERE empties
+    rows=[(0, None, 1, True), (0, 2, None, True), (1, 3, 0, True),
+          (1, 1, 0, True), (2, 1, 1, False), (None, 1, 2, True)],
+    dup=1, variant="alias",
+)
+def test_weighted_quantile_replan_matches_fold(spark, rows, dup, variant):
+    _view(spark, "pp_qw", rows, dup, "k bigint, v bigint, w bigint, keep boolean")
+    key, gb, _ = GROUP_VARIANTS[variant]
+    replan, fold = _replan_and_fold(
+        spark,
+        f"SELECT {key}, quantileExactWeighted(0.5)(v, w) AS q, "
+        "quantilesExactWeighted(0.25, 0.75)(v, w) AS qs, "
+        "medianExactWeighted(v, w) AS m, "
+        "round(quantileExactWeighted(0.9)(v, w) - "
+        "quantileExactWeighted(0.1)(v, w), 3) AS iqr "
+        f"FROM pp_qw WHERE keep GROUP BY {gb}",
+        "__qw_cw",
+    )
+    assert sorted(replan, key=repr) == sorted(fold, key=repr)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    rows=st.lists(st.tuples(
+        KEYS,
+        st.one_of(st.none(), st.integers(min_value=0, max_value=5)),
+        st.one_of(st.none(), st.integers(min_value=0, max_value=3)),
+        KEEP,
+    ), max_size=25),
+    dup=st.integers(min_value=0, max_value=4),
+    variant=st.sampled_from(sorted(GROUP_VARIANTS)),
+)
+@example(  # an all-NULL group, tied orders, a group WHERE empties
+    rows=[(0, None, 1, True), (0, None, 2, True), (1, 3, 1, True),
+          (1, 4, 1, True), (1, 5, None, True), (2, 1, 1, False)],
+    dup=2, variant="column",
+)
+def test_group_array_replan_matches_fold(spark, rows, dup, variant):
+    _view(spark, "pp_ga", rows, dup, "k bigint, x bigint, o bigint, keep boolean")
+    key, gb, _ = GROUP_VARIANTS[variant]
+    replan, fold = _replan_and_fold(
+        spark,
+        f"SELECT {key}, groupArraySample(3, 7)(x) AS smp, "
+        "groupArrayLast(2)(x, o) AS lst "
+        f"FROM pp_ga WHERE keep GROUP BY {gb}",
+        "__ga_t1",
+    )
+    assert sorted(replan, key=repr) == sorted(fold, key=repr)
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(
+    rows=st.lists(st.tuples(
+        KEYS, st.one_of(st.none(), st.sampled_from("abc")), KEEP,
+    ), max_size=25),
+    dup=st.integers(min_value=0, max_value=4),
+    variant=st.sampled_from(sorted(GROUP_VARIANTS)),
+)
+@example(  # an all-NULL group, a group past the limit, a group WHERE empties
+    rows=[(0, None, True), (1, "a", True), (1, "b", True), (1, "a", True),
+          (2, "c", False), (None, "b", True)],
+    dup=1, variant="alias",
+)
+def test_group_concat_replans_match_fold(spark, rows, dup, variant):
+    """Both groupConcat forms: the single-relation wrap (which keeps
+    GROUP BY ordinals on the fold) and the joined projection.  Which
+    values fill the limit is unspecified, so each group compares as a
+    multiset when nothing is cut off, else as a size-2 sub-multiset of
+    the group's non-NULL values."""
+    from collections import Counter
+
+    _view(spark, "pp_gc", rows, dup, "k bigint, s string, keep boolean")
+    spark.sql("CREATE OR REPLACE TEMP VIEW pp_one AS SELECT 1 AS one")
+    key, gb, key_of = GROUP_VARIANTS[variant]
+    values: dict = {}
+    for k, s, keep in rows + rows[:dup]:
+        if keep:
+            values.setdefault(key_of(k), Counter()).update([s] if s else [])
+    forms = [("pp_gc, pp_one", "__gc_k")]
+    if variant != "ordinal":
+        forms.append(("pp_gc", "__gc_rn0"))
+    for src, marker in forms:
+        replan, fold = _replan_and_fold(
+            spark,
+            f"SELECT {key}, groupConcat(',', 2)(s) AS g "
+            f"FROM {src} WHERE keep GROUP BY {gb}",
+            marker,
+        )
+        got = {r[0]: Counter(r.g.split(",") if r.g else []) for r in replan}
+        want = {r[0]: Counter(r.g.split(",") if r.g else []) for r in fold}
+        assert got.keys() == want.keys() == values.keys(), src
+        for grp, have in values.items():
+            if sum(have.values()) <= 2:
+                assert got[grp] == want[grp] == have, (src, grp)
+            else:
+                for side in (got[grp], want[grp]):
+                    assert sum(side.values()) == 2 and not side - have, (src, grp)
