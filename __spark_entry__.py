@@ -148,18 +148,22 @@ def entry(spark: SparkSession) -> DataFrame:
     return ssb_queries.q1_1(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
+def _merged(registry: str) -> dict:
+    """Every module's ``registry`` dict in ``_MODULES`` order; a name
+    two modules both define raises ValueError."""
+    out: dict = {}
     for mod in _MODULES:
-        overlap = out.keys() & mod.QUERIES.keys()
+        part = getattr(mod, registry)
+        overlap = out.keys() & part.keys()
         if overlap:
-            raise ValueError(f"duplicate query names: {sorted(overlap)}")
-        out.update(mod.QUERIES)
+            raise ValueError(f"duplicate {registry} names: {sorted(overlap)}")
+        out.update(part)
     return out
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return _merged("QUERIES")
 
 
 def oracle_sql() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for mod in _MODULES:
-        out.update(mod.ORACLES)
-    return out
+    return _merged("ORACLES")

@@ -51,6 +51,13 @@ builds on :func:`_select_clause_spans` and :func:`_own_grouped_select`
 and emits only the family's SQL, None keeping the expression-position
 fold; and one row ``(hit, replan)`` in ``_STATEMENT_REPLANS``.
 
+Every gated front-door query is one row ``(name, query, oracle)`` in
+``_GATES``, from which ``QUERIES`` and ``ORACLES`` are built.  To add
+one: a ``_CH_*`` statement, its ``O_*`` DuckDB oracle, and a row whose
+query is ``_gate(_CH_X, "table", ...)``; a ``q_*`` function is needed
+only when the gate does more than run one statement (scripts, scratch
+files, suppressed warnings).
+
 The full surface (each backed by gated oracle queries and unit tests):
 
 * clause level — ``PREWHERE``→WHERE, ``GROUP BY ... WITH TOTALS``→
@@ -3228,10 +3235,13 @@ def _render_format_readable_size(name, args):
 def _render_format_readable_quantity(name, args):
     if len(args) == 1:
         x = args[0]
-        units = "array('', ' thousand', ' million', ' billion', ' trillion')"
+        units = (
+            "array('', ' thousand', ' million', ' billion', ' trillion', "
+            "' quadrillion')"
+        )
         p = (
             f"CAST(least(greatest(floor(log(1000, "
-            f"greatest(abs(CAST({x} AS DOUBLE)), 1.0))), 0), 4) AS INT)"
+            f"greatest(abs(CAST({x} AS DOUBLE)), 1.0))), 0), 5) AS INT)"
         )
         # no grouping separators, matching ClickHouse (r6 advice)
         return (
@@ -15102,7 +15112,7 @@ def _gc_parse_item(ts: list[str]):
     if alias is None or ts[:2] != ["groupConcat", "("]:
         return None
     c1 = _match_close(ts, 1)
-    params = _split_top_commas(" ".join(ts[2:c1]))
+    params = _split_top_commas(_join_code_tokens(ts[2:c1]))
     rest = c1 + 1
     if (
         rest >= len(ts) or ts[rest] != "("
@@ -15110,7 +15120,7 @@ def _gc_parse_item(ts: list[str]):
         or len(params) != 2
     ):
         return None
-    args = _split_top_commas(" ".join(ts[rest + 1:-1]))
+    args = _split_top_commas(_join_code_tokens(ts[rest + 1:-1]))
     if len(args) != 1:
         return None
     lim = params[1].strip()
@@ -15315,9 +15325,9 @@ def _gc_replan(toks: list[str], s: int, e: int):
             j = _next_code(sel_toks, n + 1)
             c1 = _match_close(sel_toks, j)
             k = _next_code(sel_toks, c1 + 1)
-            params = _split_top_commas(" ".join(sel_toks[j + 1:c1]))
+            params = _split_top_commas(_join_code_tokens(sel_toks[j + 1:c1]))
             c2 = _match_close(sel_toks, k)
-            args = _split_top_commas(" ".join(sel_toks[k + 1:c2]))
+            args = _split_top_commas(_join_code_tokens(sel_toks[k + 1:c2]))
             if len(args) != 1:
                 return None
             lim = params[1].strip()
@@ -18429,6 +18439,35 @@ def run_clickhouse_sql(
     )
 
 
+def _gate(sql: str, *tables: str):
+    """The gate query that runs one ClickHouse statement through
+    :func:`run_clickhouse_sql` over the parquet views ``tables``."""
+
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return run_clickhouse_sql(spark, sql, sf_dir, tables)
+
+    return query
+
+
+def _reset_script_tables(
+    spark: SparkSession, sf_dir: str, *tables: str
+) -> None:
+    """Register the orders view and clear what an earlier run of a
+    script gate left behind: each of ``tables`` is dropped, and its
+    warehouse directory, a DETACH TABLE's parked ``.detached`` copy
+    and its detached-table entry are removed, so the script re-runs
+    in a session (or warehouse) that already ran it."""
+    import shutil
+
+    register_views(spark, sf_dir, ("orders",))
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    for t in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
+        shutil.rmtree(f"{wh}/{t}.detached", ignore_errors=True)
+        _DETACHED_TABLES.pop(t, None)
+
+
 # --- gated proofs: verbatim ClickHouse queries through the front door ---
 
 # 1. aggregate combinators + parametric aggregate + exact-decimal sums.
@@ -18468,11 +18507,6 @@ GROUP BY o_orderstatus
 """
 
 
-def q_dialect_combinators(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse aggregate-combinator query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_COMBINATORS, sf_dir, ("orders",))
-
-
 # 2. arrayJoin + splitByChar (compat UDF) + rename aggregates — the
 #    explode runs in the subquery select list exactly where CH puts it.
 _CH_ARRAYJOIN = """
@@ -18502,11 +18536,6 @@ GROUP BY tok
 """
 
 
-def q_dialect_arrayjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse arrayJoin pipeline (module doc)."""
-    return run_clickhouse_sql(spark, _CH_ARRAYJOIN, sf_dir, ("orders",))
-
-
 # 3. multiIf + cast functions + scalar compat names in one query.
 _CH_MULTIIF = """
 SELECT multiIf(o_totalprice < 75000, 'small',
@@ -18531,11 +18560,6 @@ SELECT CASE WHEN o_totalprice < 75000 THEN 'small'
 FROM orders
 GROUP BY bucket, shard
 """
-
-
-def q_dialect_multiif(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse multiIf/cast query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_MULTIIF, sf_dir, ("orders",))
 
 
 # 4. array higher-order functions + ClickHouse array literals.  The
@@ -18578,11 +18602,6 @@ FROM orders
 """
 
 
-def q_dialect_array_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse array-HOF query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_ARRAY_HOF, sf_dir, ("orders",))
-
-
 # 5. clause-level syntax: PREWHERE and GROUP BY ... WITH TOTALS.  The
 #    totals row follows the SQL-standard empty-grouping-set convention
 #    (NULL group keys), computed in the same aggregate pass.
@@ -18606,11 +18625,6 @@ FROM orders
 WHERE o_totalprice > 100000
 GROUP BY GROUPING SETS ((o_orderstatus), ())
 """
-
-
-def q_dialect_with_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse PREWHERE + WITH TOTALS query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_TOTALS, sf_dir, ("orders",))
 
 
 # 6. the structural ARRAY JOIN clause (LEFT variant keeps empty-array
@@ -18638,15 +18652,6 @@ GROUP BY tok
 """
 
 
-def q_dialect_array_join_clause(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse ARRAY JOIN clause query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_ARRAY_JOIN_CLAUSE, sf_dir, ("orders",)
-    )
-
-
 # 6b. multi-array ARRAY JOIN — ClickHouse's zip semantics (arrays walk
 #     in lockstep), rewritten to one inline(arrays_zip(...)) generator.
 _CH_ARRAY_JOIN_ZIP = """
@@ -18665,11 +18670,6 @@ FROM (
 )
 GROUP BY 1, 2
 """
-
-
-def q_dialect_array_join_zip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse multi-array ARRAY JOIN query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_ARRAY_JOIN_ZIP, sf_dir, ("orders",))
 
 
 # 7. string/regex family — every rename evaluated against a DuckDB
@@ -18703,11 +18703,6 @@ WHERE o_orderkey % 3 = 0
 """
 
 
-def q_dialect_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse string/regex query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_STRINGS, sf_dir, ("orders",))
-
-
 # 7b. table functions: numbers() spine + file() direct parquet query.
 _CH_NUMBERS = """
 SELECT number % 7 AS r,
@@ -18723,12 +18718,6 @@ SELECT number % 7 AS r, COUNT(*) AS n,
 FROM (SELECT unnest(range(1000)) AS number)
 GROUP BY 1
 """
-
-
-def q_dialect_numbers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse numbers() table-function query (module
-    doc)."""
-    return run_clickhouse_sql(spark, _CH_NUMBERS, sf_dir, ())
 
 
 def q_dialect_file_read(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -18783,11 +18772,6 @@ SELECT o_orderstatus, o_orderkey, o_totalprice FROM (
 """
 
 
-def q_dialect_limit_by(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse LIMIT n BY query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_LIMIT_BY, sf_dir, ("orders",))
-
-
 # 9. ASOF LEFT JOIN ... USING — for each purchase event, the user's
 #    latest click at-or-before it.  Event timestamps are globally
 #    unique in the testdata, so the top-1 pick is deterministic.  The
@@ -18813,11 +18797,6 @@ ASOF LEFT JOIN (
 ) c ON e.user_id = c.user_id AND e.ts >= c.ts
 WHERE e.event_type = 'purchase'
 """
-
-
-def q_dialect_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse ASOF LEFT JOIN USING query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_ASOF, sf_dir, ("events",))
 
 
 # 9b. ASOF LEFT JOIN ... ON — the free-form conjunct spelling with
@@ -18847,11 +18826,6 @@ WHERE e.event_type = 'purchase'
 """
 
 
-def q_dialect_asof_on(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse ASOF LEFT JOIN ON query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_ASOF_ON, sf_dir, ("events",))
-
-
 # 10. ORDER BY ... WITH FILL — yearly order counts on a gap-free
 #     1992..1999 spine (TO 2000 exclusive, ClickHouse semantics);
 #     missing years carry NULL counts (documented divergence from
@@ -18872,11 +18846,6 @@ LEFT JOIN (
 ) b USING (yr)
 ORDER BY yr
 """
-
-
-def q_dialect_with_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse ORDER BY WITH FILL query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_WITH_FILL, sf_dir, ("orders",))
 
 
 # 10b. WITH FILL on a DATE key with STEP INTERVAL — one user's sparse
@@ -18905,11 +18874,6 @@ ORDER BY d
 """
 
 
-def q_dialect_with_fill_date(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse date-spine WITH FILL query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_WITH_FILL_DATE, sf_dir, ("events",))
-
-
 # 10c. WITH FILL ... INTERPOLATE — filled years carry the previous
 #      customer count forward (LOCF); 1999-2000 are spine-only rows.
 _CH_WITH_FILL_INTERP = """
@@ -18931,13 +18895,6 @@ LEFT JOIN (
 ) b USING (yr)
 ORDER BY yr
 """
-
-
-def q_dialect_with_fill_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse WITH FILL INTERPOLATE query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_WITH_FILL_INTERP, sf_dir, ("orders",)
-    )
 
 
 # 10f. expression-key fill (r7) — ``ORDER BY toStartOfDay(ts) WITH
@@ -18968,16 +18925,6 @@ ORDER BY 1
 """
 
 
-def q_dialect_with_fill_expr(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse expression-key WITH FILL query (module doc
-    #10f)."""
-    return run_clickhouse_sql(
-        spark, _CH_WITH_FILL_EXPR, sf_dir, ("events",)
-    )
-
-
 # 10d. DESC fill — the spine walks downward from FROM (inclusive) to
 #      TO (exclusive on the low side), mirroring ClickHouse.
 _CH_WITH_FILL_DESC = """
@@ -18996,11 +18943,6 @@ LEFT JOIN (
 ) b USING (yr)
 ORDER BY yr DESC
 """
-
-
-def q_dialect_with_fill_desc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse descending WITH FILL query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_WITH_FILL_DESC, sf_dir, ("orders",))
 
 
 # 10e. multi-key fill — leading keys group the spine: each user gets
@@ -19030,15 +18972,6 @@ ORDER BY s.user_id, s.d
 """
 
 
-def q_dialect_with_fill_multikey(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse multi-key WITH FILL query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_WITH_FILL_MULTI, sf_dir, ("events",)
-    )
-
-
 # 11. topK(k)(x) — exact deterministic tier (count desc, value asc):
 #     the 3 most frequent priorities per order status.  The gate
 #     boundary serializes the array with arrayStringConcat — the
@@ -19064,11 +18997,6 @@ GROUP BY o_orderstatus
 """
 
 
-def q_dialect_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse topK query, exact tier (module doc)."""
-    return run_clickhouse_sql(spark, _CH_TOPK, sf_dir, ("orders",))
-
-
 # 12. 1-based array subscripts (positive and negative) over a split —
 #     ClickHouse arr[1] is the first element, arr[-1] the last; both
 #     map to try_element_at.  DuckDB list indexing is 1-based too, so
@@ -19088,11 +19016,6 @@ SELECT o_orderkey,
 FROM orders
 WHERE o_orderkey % 7 = 0
 """
-
-
-def q_dialect_subscript(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse 1-based subscript query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_SUBSCRIPT, sf_dir, ("orders",))
 
 
 # 12b. ANY LEFT JOIN ... USING — the right side collapses to its
@@ -19129,13 +19052,6 @@ SELECT o_orderstatus, any_flag,
 FROM orders LEFT JOIN fl USING (o_orderkey)
 GROUP BY o_orderstatus, any_flag
 """
-
-
-def q_dialect_any_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse ANY LEFT JOIN USING query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_ANY_JOIN, sf_dir, ("orders", "lineitem")
-    )
 
 
 # 12b2. ANY LEFT JOIN ... ON — the free-form equality-conjunct
@@ -19175,13 +19091,6 @@ GROUP BY o.o_orderstatus, fl.any_flag
 """
 
 
-def q_dialect_any_join_on(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse ANY LEFT JOIN ON query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_ANY_JOIN_ON, sf_dir, ("orders", "lineitem")
-    )
-
-
 # 12b4 (r12). ANY RIGHT JOIN — the mirror of the LEFT form: each
 #       RIGHT row keeps at most one left match, so the LEFT side
 #       collapses to one row per ON/USING key before the join
@@ -19211,15 +19120,6 @@ LEFT JOIN fo ON fo.o_custkey = c.c_custkey AND fo.rn = 1
 WHERE c.c_custkey % 13 = 0
 ORDER BY k
 """
-
-
-def q_dialect_any_right_join(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse ANY RIGHT JOIN (module doc #12b4)."""
-    return run_clickhouse_sql(
-        spark, _CH_ANY_RIGHT_JOIN, sf_dir, ("orders", "customer")
-    )
 
 
 # 12b3 (r12). ANY JOIN with a NON-equality ON conjunct (VERDICT r11
@@ -19260,15 +19160,6 @@ WITH j AS (
 SELECT k, CAST(tp AS DOUBLE) AS tp, sd, CAST(qty AS DOUBLE) AS qty
 FROM j WHERE rn = 1 ORDER BY k
 """
-
-
-def q_dialect_any_join_ineq(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse inequality ANY JOIN (module doc #12b3)."""
-    return run_clickhouse_sql(
-        spark, _CH_ANY_JOIN_INEQ, sf_dir, ("orders", "lineitem")
-    )
 
 
 # 12b4 (r13). ANY JOIN with NO equality conjunct at all (flips the
@@ -19321,15 +19212,6 @@ ORDER BY leg, k
 """
 
 
-def q_dialect_any_join_noeq(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse no-equality ANY JOIN (module doc #12b4)."""
-    return run_clickhouse_sql(
-        spark, _CH_ANY_JOIN_NOEQ, sf_dir, ("customer", "supplier")
-    )
-
-
 # 12c. combinator families round 2: -Array, -Distinct, -OrNull over
 #      inline arrays (integer-valued doubles keep the DOUBLE-policy
 #      sums exact under any partitioning), plus sumMap's
@@ -19380,12 +19262,6 @@ SELECT s.cohort, s.sa, s.mna, s.mxa, s.ca, s.aa, s.sd, s.cn,
        p.mk, p.mv
 FROM scalars s JOIN per_key p ON s.cohort = p.cohort
 """
-
-
-def q_dialect_combinators2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse -Array/-Distinct/-OrNull/-Map combinator
-    query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_COMBINATORS2, sf_dir, ("events",))
 
 
 # 12d. scalar/aggregate extras round 3: weighted mean, heavy-hitter
@@ -19449,12 +19325,6 @@ JOIN (
   FROM events WHERE event_id % 97 = 0 GROUP BY 1
 ) a ON a.grp = s.grp
 """
-
-
-def q_dialect_scalar_extras(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse scalar/aggregate extras query (module
-    doc)."""
-    return run_clickhouse_sql(spark, _CH_SCALAR_EXTRAS, sf_dir, ("events",))
 
 
 # r8 probe batch gated query: bit aggregates, bitmap cardinality,
@@ -19534,11 +19404,6 @@ ORDER BY agg.o_orderstatus
 """
 
 
-def q_dialect_probe8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse r8 probe-batch query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_PROBE8, sf_dir, ("orders",))
-
-
 # r8: windowFunnel strict modes (_window_funnel_modes_fold).  The
 # gated mode is strict_dedup, whose semantics admit an EXACT
 # relational spelling under mutually-exclusive conditions: the chain
@@ -19609,16 +19474,6 @@ FROM lvl_per_user GROUP BY lvl ORDER BY lvl
 """
 
 
-def q_dialect_funnel_dedup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse windowFunnel strict_dedup query (module
-    doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_FUNNEL_DEDUP, sf_dir, ("events",)
-    )
-
-
 # 12e. JSON / URL / strftime / tokenizer scalar families.
 _CH_JSON_URL = """
 SELECT event_id,
@@ -19658,12 +19513,6 @@ SELECT event_id,
 FROM events
 WHERE event_id % 53 = 0
 """
-
-
-def q_dialect_json_url(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse JSON/URL/strftime scalar query (module
-    doc)."""
-    return run_clickhouse_sql(spark, _CH_JSON_URL, sf_dir, ("events",))
 
 
 # 13. windowFunnel — the generic N-condition transpile (multi-anchor,
@@ -19707,11 +19556,6 @@ SELECT lvl, COUNT(*) AS n_users FROM lv GROUP BY lvl ORDER BY lvl
 """
 
 
-def q_dialect_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse windowFunnel query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_WINDOW_FUNNEL, sf_dir, ("events",))
-
-
 # 14. retention — the per-condition flag product, verbatim.  The
 #     fixed-length flag array is projected to scalar columns at the
 #     gate boundary via ClickHouse 1-based subscripts (driver's
@@ -19744,11 +19588,6 @@ ORDER BY user_id
 """
 
 
-def q_dialect_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse retention query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_RETENTION, sf_dir, ("events",))
-
-
 # 15. sequenceMatch — the (?1).*(?2) subsequence form; oracle is the
 #     exists-ordered-pair join spelling.
 _CH_SEQ_MATCH = """
@@ -19771,11 +19610,6 @@ FROM events e
 GROUP BY e.user_id
 ORDER BY e.user_id
 """
-
-
-def q_dialect_sequence_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse sequenceMatch query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_SEQ_MATCH, sf_dir, ("events",))
 
 
 # 15b. sequenceCount — non-overlapping chain count with ClickHouse's
@@ -19814,11 +19648,6 @@ FROM (SELECT DISTINCT user_id FROM events) u
 LEFT JOIN agg a USING (user_id)
 ORDER BY u.user_id
 """
-
-
-def q_dialect_sequence_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse sequenceCount query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_SEQ_COUNT, sf_dir, ("events",))
 
 
 # 15c. sequenceMatch adjacency + time guards (r8, VERDICT r7 item 4):
@@ -19885,14 +19714,6 @@ ORDER BY u.user_id
 """
 
 
-def q_dialect_sequence_guard(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse sequenceMatch adjacency/time-guard query
-    (module doc #15c)."""
-    return run_clickhouse_sql(spark, _CH_SEQ_GUARD, sf_dir, ("events",))
-
-
 # 15d. two-sided and exact time guards — the anchor-list fold (the
 #      single-sided forms above keep the O(1)-state extremal fold).
 #      A two-sided guard means: some view event is followed by a
@@ -19938,16 +19759,6 @@ ORDER BY u.user_id
 """
 
 
-def q_dialect_sequence_guard2(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse sequenceMatch two-sided/exact guard query
-    (module doc #15d)."""
-    return run_clickhouse_sql(
-        spark, _CH_SEQ_GUARD2, sf_dir, ("events",)
-    )
-
-
 # 11b. topKWeighted(k)(x, w) — exact weighted tier (weight-sum desc,
 #      value asc), serialized at the gate boundary like topK.
 _CH_TOPK_WEIGHTED = """
@@ -19973,12 +19784,6 @@ GROUP BY o_orderstatus
 """
 
 
-def q_dialect_topk_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse topKWeighted query, exact tier (module
-    doc)."""
-    return run_clickhouse_sql(spark, _CH_TOPK_WEIGHTED, sf_dir, ("orders",))
-
-
 # 17. DISTINCT ON — ClickHouse documents it as identical to LIMIT 1
 #     BY; the ORDER BY makes the kept row per user deterministic
 #     (latest event, event_id tiebreak).
@@ -19995,11 +19800,6 @@ SELECT user_id, event_id, event_type FROM (
                             ORDER BY ts DESC, event_id) AS rn
   FROM events) WHERE rn = 1
 """
-
-
-def q_dialect_distinct_on(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse DISTINCT ON query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_DISTINCT_ON, sf_dir, ("events",))
 
 
 # 18. expression-form WITH + ::Type casts + toTypeName + LIMIT WITH
@@ -20045,12 +19845,6 @@ ORDER BY o_orderdate
 """
 
 
-def q_dialect_modern_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse scalar-WITH / :: / toTypeName / WITH TIES
-    query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_MODERN, sf_dir, ("orders",))
-
-
 # 19. star modifiers — ``* EXCEPT … REPLACE … APPLY …`` expands via
 #     the catalog resolver into an explicit projection (ClickHouse
 #     SELECT-modifier docs); APPLY names follow ClickHouse (`f(col)`).
@@ -20070,15 +19864,6 @@ SELECT length(CAST(s_suppkey AS VARCHAR))
          AS "length(toString(s_nationkey))"
 FROM supplier
 """
-
-
-def q_dialect_star_modifiers(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse star-modifier query (module doc #19)."""
-    return run_clickhouse_sql(
-        spark, _CH_STAR_MODIFIERS, sf_dir, ("supplier",)
-    )
 
 
 # 21. -State/-Merge two-level aggregation — the AggregatingMergeTree
@@ -20115,16 +19900,6 @@ SELECT o_orderstatus,
 FROM orders
 GROUP BY o_orderstatus
 """
-
-
-def q_dialect_state_merge(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse -State/-Merge two-level aggregate (module
-    doc #21)."""
-    return run_clickhouse_sql(
-        spark, _CH_STATE_MERGE, sf_dir, ("orders",)
-    )
 
 
 # 21b. non-self-merging states with PORTABLE Spark representations:
@@ -20164,16 +19939,6 @@ FROM orders
 GROUP BY o_orderpriority
 ORDER BY o_orderpriority
 """
-
-
-def q_dialect_state_merge2(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse avg/uniqExact/groupArray -State/-Merge
-    two-level aggregate (module doc #21b)."""
-    return run_clickhouse_sql(
-        spark, _CH_STATE_MERGE2, sf_dir, ("orders",)
-    )
 
 
 # 21c. the last -State refusals closed (r8): uniqState → the
@@ -20275,16 +20040,6 @@ ORDER BY uc.o_orderstatus
 """
 
 
-def q_dialect_state_merge3(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse uniq/quantile/quantileTiming
-    -State/-Merge two-level aggregate (module doc #21c)."""
-    return run_clickhouse_sql(
-        spark, _CH_STATE_MERGE3, sf_dir, ("orders",)
-    )
-
-
 # 21d (r9). argMax/argMin -State/-Merge: the portable state is the
 #     extremal (value, arg) struct — struct compare is value-major, so
 #     MAX/MIN merges partial states losslessly (the max-by-struct
@@ -20333,16 +20088,6 @@ ORDER BY o_orderstatus
 """
 
 
-def q_dialect_state_merge4(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse argMax/argMin -State/-Merge two-level
-    aggregate (module doc #21d)."""
-    return run_clickhouse_sql(
-        spark, _CH_STATE_MERGE4, sf_dir, ("orders",)
-    )
-
-
 # 21e (r9). PASTE JOIN: positional zip of two ordered subqueries —
 #     maps to an inner join on row_number() over each side's own
 #     ORDER BY (see _rewrite_paste_join); the cheapest and the
@@ -20377,16 +20122,6 @@ SELECT cheap_key, cheap_price, rich_key, rich_price
 FROM l JOIN r USING (rn)
 ORDER BY cheap_key
 """
-
-
-def q_dialect_paste_join(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse PASTE JOIN over two ordered subqueries
-    (module doc #21e)."""
-    return run_clickhouse_sql(
-        spark, _CH_PASTE_JOIN, sf_dir, ("orders",)
-    )
 
 
 # 21f (r9). deterministic tiers of the order/randomness-dependent
@@ -20443,16 +20178,6 @@ ORDER BY o_orderstatus
 """
 
 
-def q_dialect_group_array_tiers(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse groupArraySample / groupArrayLast
-    deterministic tiers (module doc #21f)."""
-    return run_clickhouse_sql(
-        spark, _CH_GROUP_ARRAY_TIERS, sf_dir, ("orders",)
-    )
-
-
 # 21g (r9). punycode/IDNA family over Python's built-in RFC 3492 /
 #     IDNA2003 codecs (compat.py ch_idn — the refusal wall closed;
 #     Arrow-batched, no Catalyst spelling exists).  The oracle
@@ -20491,15 +20216,6 @@ ORDER BY name
 """
 
 
-def q_dialect_idn_family(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse punycode/IDNA query (module doc #21g)."""
-    return run_clickhouse_sql(
-        spark, _CH_IDN_FAMILY, sf_dir, ("nation",)
-    )
-
-
 # 21h (r9). JSONMergePatch — RFC 7386 via the stdlib json module; the
 #     DuckDB oracle runs its native json_merge_patch (verified output-
 #     identical: compact serialization, target-order keys).  The JSON
@@ -20528,15 +20244,6 @@ SELECT n_nationkey,
 FROM nation
 ORDER BY n_nationkey
 """
-
-
-def q_dialect_json_merge(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse JSONMergePatch query (module doc #21h)."""
-    return run_clickhouse_sql(
-        spark, _CH_JSON_MERGE, sf_dir, ("nation",)
-    )
 
 
 # 21i (r9). sumMap -State/-Merge (self-merging per-key partials —
@@ -20611,16 +20318,6 @@ ORDER BY sm.o_orderstatus
 """
 
 
-def q_dialect_probe14(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse sumMap/minMap -State/-Merge + JSONType
-    query (module doc #21i)."""
-    return run_clickhouse_sql(
-        spark, _CH_PROBE14, sf_dir, ("orders",)
-    )
-
-
 # 21j (r9). interval sweeps: intervalLengthSum (union length, overlaps
 #     merged) and maxIntersectionsPosition (leftmost peak point) —
 #     both as bounded per-group sweep folds (the maxIntersections
@@ -20681,16 +20378,6 @@ ORDER BY o_orderstatus
 """
 
 
-def q_dialect_interval_sweeps(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse interval-sweep aggregates (module doc
-    #21j)."""
-    return run_clickhouse_sql(
-        spark, _CH_INTERVAL_SWEEPS, sf_dir, ("orders",)
-    )
-
-
 # 21k (r9). bitmap-column aggregates over the sorted-distinct-array
 #     bitmap representation: within each (status, parity) group every
 #     row carries the SAME 2-element bitmap, so And/Or = 2 and Xor
@@ -20727,16 +20414,6 @@ FROM orders
 GROUP BY o_orderstatus, par
 ORDER BY o_orderstatus, par
 """
-
-
-def q_dialect_probe15(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse bitmap-aggregate + date-arrival query
-    (module doc #21k)."""
-    return run_clickhouse_sql(
-        spark, _CH_PROBE15, sf_dir, ("orders",)
-    )
 
 
 # 21l (r9). audit batch 3, value-gated: the key-function sort (CH's
@@ -20801,15 +20478,6 @@ LIMIT 100
 """
 
 
-def q_dialect_probe16(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse audit-batch-3 query (module doc #21l)."""
-    return run_clickhouse_sql(
-        spark, _CH_PROBE16, sf_dir, ("orders",)
-    )
-
-
 # 21m (r9). audit batch 4, value-gated: arrayFill (in-array LOCF),
 #     arraySplit (pred-boundary subarrays), the offset-to-end
 #     arraySlice, multi-array arrayUniq (distinct tuples) and the
@@ -20869,15 +20537,6 @@ LIMIT 100
 """
 
 
-def q_dialect_probe17(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse audit-batch-4 query (module doc #21m)."""
-    return run_clickhouse_sql(
-        spark, _CH_PROBE17, sf_dir, ("orders",)
-    )
-
-
 # 21n (r9). uniqExact as a WINDOW function (DISTINCT window rewrite)
 #     and the LIMIT offset, n comma form — the window computes over
 #     the FULL relation before the subquery's order/limit (both
@@ -20913,16 +20572,6 @@ ORDER BY l.o_orderstatus
 """
 
 
-def q_dialect_probe18(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse distinct-window + comma-limit query
-    (module doc #21n)."""
-    return run_clickhouse_sql(
-        spark, _CH_PROBE18, sf_dir, ("orders",)
-    )
-
-
 # 22. COLUMNS('regex') dynamic column selection + APPLY — expands via
 #     the catalog resolver to the matching columns in table order
 #     (re.search, ClickHouse's partial-match semantics), then the
@@ -20936,16 +20585,6 @@ SELECT max(o_orderkey) AS "max(o_orderkey)",
        max(o_custkey) AS "max(o_custkey)"
 FROM orders
 """
-
-
-def q_dialect_columns_select(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse COLUMNS('regex') APPLY query (module doc
-    #22)."""
-    return run_clickhouse_sql(
-        spark, _CH_COLUMNS_SELECT, sf_dir, ("orders",)
-    )
 
 
 # 23. dictionaries — CREATE DICTIONARY registers the lookup contract;
@@ -21200,18 +20839,12 @@ def q_ch_script_blue_green(
 ) -> DataFrame:
     """Verbatim ClickHouse blue/green reload script (module doc
     #16b)."""
-    import shutil
-
-    register_views(spark, sf_dir, ("orders",))
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
+    # a managed table renamed by EXCHANGE keeps its original
+    # directory, so a later DROP can orphan the other name's
+    # location — clear both before re-running the script
+    _reset_script_tables(
+        spark, sf_dir, "bg_live", "bg_stage", "__exchange_tmp_bg_live"
     )
-    for t in ("bg_live", "bg_stage", "__exchange_tmp_bg_live"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        # a managed table renamed by EXCHANGE keeps its original
-        # directory, so a later DROP can orphan the other name's
-        # location — clear both before re-running the script
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
     results = run_clickhouse_script(
         spark, _CH_BLUE_GREEN, overwrite_existing=True
     )
@@ -21264,14 +20897,7 @@ def q_ch_script_retention(
 ) -> DataFrame:
     """Verbatim ClickHouse partition-retention script (module doc
     #16c)."""
-    import shutil
-
-    register_views(spark, sf_dir, ("orders",))
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    spark.sql("DROP TABLE IF EXISTS ret_orders")
-    shutil.rmtree(f"{wh}/ret_orders", ignore_errors=True)
+    _reset_script_tables(spark, sf_dir, "ret_orders")
     results = run_clickhouse_script(
         spark, _CH_RETENTION_SCRIPT, overwrite_existing=True
     )
@@ -21410,15 +21036,7 @@ def q_ch_script_partition_ops(
 ) -> DataFrame:
     """Verbatim ClickHouse cross-table partition script (module doc
     #16e)."""
-    import shutil
-
-    register_views(spark, sf_dir, ("orders",))
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    for t in ("po_src", "po_dst", "po_fix"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
+    _reset_script_tables(spark, sf_dir, "po_src", "po_dst", "po_fix")
     results = run_clickhouse_script(
         spark, _CH_PARTITION_OPS, overwrite_existing=True
     )
@@ -21428,16 +21046,9 @@ def q_ch_script_partition_ops(
 def q_ch_script_detach(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verbatim ClickHouse DETACH/ATTACH PARTITION scripts (module
     doc #16d)."""
-    import shutil
-
     from pyspark.sql import functions as F
 
-    register_views(spark, sf_dir, ("orders",))
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    spark.sql("DROP TABLE IF EXISTS det_orders")
-    shutil.rmtree(f"{wh}/det_orders", ignore_errors=True)
+    _reset_script_tables(spark, sf_dir, "det_orders")
     r1 = run_clickhouse_script(
         spark, _CH_DETACH_SCRIPT1, overwrite_existing=True
     )
@@ -21509,29 +21120,19 @@ ORDER BY stage, o_orderstatus
 """
 
 
-def q_ch_script_detach_table(
-    spark: SparkSession, sf_dir: str
+def _detach_attach_table(
+    spark: SparkSession, sf_dir: str, table: str, detach: str, attach: str
 ) -> DataFrame:
-    """Verbatim ClickHouse DETACH/ATTACH TABLE scripts (module doc
-    #16d2)."""
-    import shutil
-
+    """Run the ``detach`` script (CREATE, INSERT, DETACH TABLE), pin
+    whether ``table`` still resolves, run the ``attach`` script (ATTACH
+    TABLE, then the read) and stack both stages."""
     from pyspark.sql import functions as F
 
-    register_views(spark, sf_dir, ("orders",))
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    spark.sql("DROP TABLE IF EXISTS dtt_orders")
-    shutil.rmtree(f"{wh}/dtt_orders", ignore_errors=True)
-    shutil.rmtree(f"{wh}/dtt_orders.detached", ignore_errors=True)
-    _DETACHED_TABLES.pop("dtt_orders", None)
-    run_clickhouse_script(
-        spark, _CH_DETACH_TABLE_SCRIPT1, overwrite_existing=True
-    )
+    _reset_script_tables(spark, sf_dir, table)
+    run_clickhouse_script(spark, detach, overwrite_existing=True)
     # mid-state pin: the detached name must be unresolvable (0)
-    gone = 1 if spark.catalog.tableExists("dtt_orders") else 0
-    r2 = run_clickhouse_script(spark, _CH_DETACH_TABLE_SCRIPT2)
+    gone = 1 if spark.catalog.tableExists(table) else 0
+    r2 = run_clickhouse_script(spark, attach)
     stage1 = spark.createDataFrame(
         [("detached", "", gone, 0.0)],
         "stage string, o_orderstatus string, n long, total double",
@@ -21541,6 +21142,17 @@ def q_ch_script_detach_table(
     )
     return stage1.unionByName(stage2).orderBy(
         "stage", "o_orderstatus"
+    )
+
+
+def q_ch_script_detach_table(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Verbatim ClickHouse DETACH/ATTACH TABLE scripts (module doc
+    #16d2)."""
+    return _detach_attach_table(
+        spark, sf_dir, "dtt_orders",
+        _CH_DETACH_TABLE_SCRIPT1, _CH_DETACH_TABLE_SCRIPT2,
     )
 
 
@@ -21591,33 +21203,9 @@ def q_ch_script_attach_full(
 ) -> DataFrame:
     """Verbatim ClickHouse DETACH → full-definition ATTACH scripts
     (module doc #16d3)."""
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    register_views(spark, sf_dir, ("orders",))
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix(
-        "file:"
-    )
-    spark.sql("DROP TABLE IF EXISTS dtf_orders")
-    shutil.rmtree(f"{wh}/dtf_orders", ignore_errors=True)
-    shutil.rmtree(f"{wh}/dtf_orders.detached", ignore_errors=True)
-    _DETACHED_TABLES.pop("dtf_orders", None)
-    run_clickhouse_script(
-        spark, _CH_ATTACH_FULL_SCRIPT1, overwrite_existing=True
-    )
-    # mid-state pin: the detached name must be unresolvable (0)
-    gone = 1 if spark.catalog.tableExists("dtf_orders") else 0
-    r2 = run_clickhouse_script(spark, _CH_ATTACH_FULL_SCRIPT2)
-    stage1 = spark.createDataFrame(
-        [("detached", "", gone, 0.0)],
-        "stage string, o_orderstatus string, n long, total double",
-    )
-    stage2 = r2[-1][1].withColumn("stage", F.lit("attached")).select(
-        "stage", "o_orderstatus", "n", "total"
-    )
-    return stage1.unionByName(stage2).orderBy(
-        "stage", "o_orderstatus"
+    return _detach_attach_table(
+        spark, sf_dir, "dtf_orders",
+        _CH_ATTACH_FULL_SCRIPT1, _CH_ATTACH_FULL_SCRIPT2,
     )
 
 
@@ -21806,12 +21394,6 @@ FROM m
 """
 
 
-def q_dialect_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse studentTTest/welchTTest query (module
-    doc)."""
-    return run_clickhouse_sql(spark, _CH_TTEST, sf_dir, ("events",))
-
-
 # 26b. meanZTest — the GIVEN-population-variance z-test (parametric:
 #      meanZTest(σx², σy², conf)(x, ind)).  The gate checks the z
 #      statistic and both confidence-interval bounds (pure conditional
@@ -21853,11 +21435,6 @@ SELECT round(diff / se, 6) AS z_stat,
        round(diff + 1.959963984540054 * se, 6) AS ci_high
 FROM m
 """
-
-
-def q_dialect_meanz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse meanZTest query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_MEANZ, sf_dir, ("events",))
 
 
 # 27. r8 scalar batch 2 (the pass-through audit): date-shift family,
@@ -21921,11 +21498,6 @@ ORDER BY o_orderstatus
 """
 
 
-def q_dialect_probe9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse scalar-batch-2 query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_PROBE9, sf_dir, ("orders",))
-
-
 # 27b. r8 scalar batch 5: ngramDistance/ngramSearch (exact 4-gram
 #      multiset contracts — see _render_call) and the mapApply
 #      tuple-lambda rewrite over the entry array.  Literal-argument
@@ -21956,11 +21528,6 @@ FROM part
 """
 
 
-def q_dialect_probe10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse scalar-batch-5 query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_PROBE10, sf_dir, ("part",))
-
-
 # 27c. normalizeUTF8NFC/NFD/NFKC/NFKD — Unicode normalization over the
 #      documents corpus via the Arrow compat UDF (ch_normalize_utf8).
 #      The NFC half is data-dependent and restated by DuckDB's
@@ -21987,11 +21554,6 @@ SELECT COUNT(*) AS n_docs,
        'K' AS kelvin_nfkc
 FROM documents
 """
-
-
-def q_dialect_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse Unicode-normalization query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_NORMALIZE, sf_dir, ("documents",))
 
 
 # 27d. r8 scalar batch 6 (third pass-through audit): date scalars,
@@ -22036,11 +21598,6 @@ FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
 
 
-def q_dialect_probe11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse scalar-batch-6 query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_PROBE11, sf_dir, ("orders",))
-
-
 # 27e. nonNegativeDerivative in WINDOW position (r8) — the
 #      deterministic OVER form expands to max(0, Δvalue/Δseconds)
 #      with the window duplicated onto both lag references (frame
@@ -22075,16 +21632,6 @@ SELECT event_type,
        round(max(r), 4) AS max_rate
 FROM w GROUP BY event_type ORDER BY event_type
 """
-
-
-def q_dialect_window_derivative(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse nonNegativeDerivative window query (module
-    doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_WINDOW_DERIVATIVE, sf_dir, ("events",)
-    )
 
 
 # 27h. r8 scalar batch 8: the roaring-bitmap family (portable
@@ -22122,11 +21669,6 @@ SELECT o_orderstatus,
        COUNT(*) AS n
 FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
-
-
-def q_dialect_probe13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse scalar-batch-8 query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_PROBE13, sf_dir, ("orders",))
 
 
 # 27g. exponentialTimeDecayed{Sum,Count} window functions (r8) — the
@@ -22168,12 +21710,6 @@ FROM p
 """
 
 
-def q_dialect_exp_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse exponentialTimeDecayed window query
-    (module doc)."""
-    return run_clickhouse_sql(spark, _CH_EXP_DECAY, sf_dir, ("events",))
-
-
 # 27f. -ArgMin/-ArgMax combinators (r8 batch 7) — aggregate x over
 #      only the rows carrying the group's extremal y.  Exact-valued
 #      columns only (counts, integer sums, min/max picks) so the
@@ -22211,16 +21747,6 @@ SELECT o_orderstatus,
        MAX(CASE WHEN ym = ym_min THEN o_totalprice END) AS max_first
 FROM t GROUP BY o_orderstatus ORDER BY o_orderstatus
 """
-
-
-def q_dialect_argmax_combinators(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse -ArgMax/-ArgMin combinator query (module
-    doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_ARGMAX_COMBINATORS, sf_dir, ("orders",)
-    )
 
 
 # 28. ClickHouse vector-math family over the embeddings table —
@@ -22271,13 +21797,6 @@ FROM n GROUP BY label ORDER BY label
 """
 
 
-def q_dialect_vector_math(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse vector-math query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_VECTOR, sf_dir, ("embeddings",)
-    )
-
-
 # 32 (r10). deterministic id-generator tier (VERDICT r9 missing-item
 #     3): generateUUIDv4/v7(expr) and generateSnowflakeID(expr) derive
 #     every non-version bit from md5(expr) — a pure function of the
@@ -22318,15 +21837,6 @@ SELECT k,
 FROM t
 ORDER BY k
 """
-
-
-def q_dialect_uuid_generators(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim ClickHouse seeded id-generator query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_UUID_GENERATORS, sf_dir, ("orders",)
-    )
 
 
 # 31 (r10). sumWithOverflow at every declared width (VERDICT r9
@@ -22378,11 +21888,6 @@ SELECT CAST(s8 % 256 AS BIGINT) AS u8,
             % 18446744073709551616 AS VARCHAR) AS u64
 FROM s
 """
-
-
-def q_dialect_sum_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse sumWithOverflow query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_SUM_OVERFLOW, sf_dir, ("orders",))
 
 
 # 30 (r10). path-form JSON introspection (VERDICT r9 item 6):
@@ -22440,12 +21945,6 @@ ORDER BY tag
 """
 
 
-def q_dialect_json_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse path-form JSON introspection query (module
-    doc)."""
-    return run_clickhouse_sql(spark, _CH_JSON_PATHS, sf_dir, ("orders",))
-
-
 # 29 (r10). fuzzy string-metric family (VERDICT r9 item 5):
 #     damerauLevenshteinDistance / jaroSimilarity /
 #     jaroWinklerSimilarity as Arrow-batched textbook implementations
@@ -22485,11 +21984,6 @@ FROM part
 WHERE p_partkey <= 300
 ORDER BY p_partkey
 """
-
-
-def q_dialect_fuzzy_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse fuzzy string-metric query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_FUZZY_FAMILY, sf_dir, ("part",))
 
 
 # 31 (r11). -Resample combinator (VERDICT r10 item 2): the parametric
@@ -22546,11 +22040,6 @@ FROM lineitem
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """
-
-
-def q_dialect_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim ClickHouse -Resample combinator query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_RESAMPLE, sf_dir, ("lineitem",))
 
 
 # 32 (r11). fixed-width reinterpretAs* byte algebra + literal-tuple
@@ -22628,15 +22117,6 @@ FROM part WHERE p_partkey <= 300 ORDER BY p_partkey
 """
 
 
-def q_dialect_reinterpret_tuples(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim CH reinterpret/tuple/group-matrix query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_REINTERPRET_TUPLES, sf_dir, ("part",)
-    )
-
-
 # 33 (r11). hilbertEncode/hilbertDecode (VERDICT r10 item 6): the 2-D
 #     Hilbert index fold (operators/zorder.py) through the dialect —
 #     the query proves in-engine bijectivity (decode∘encode = id on
@@ -22689,11 +22169,6 @@ ORDER BY k
 """
 
 
-def q_dialect_hilbert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH hilbertEncode/Decode query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_HILBERT, sf_dir, ("orders",))
-
-
 # 34 (r11). quantileExactWeighted family (audit batch 11): CH's
 #     non-interpolating exact-weighted rule — smallest value whose
 #     cumulative weight reaches level·Σw — as a collect-and-fold
@@ -22729,15 +22204,6 @@ SELECT g AS l_returnflag,
        MIN(CASE WHEN cw >= 0.5 * tot THEN x END) AS qdef
 FROM cum GROUP BY g ORDER BY g
 """
-
-
-def q_dialect_weighted_quantiles(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim CH exact-weighted quantile query (module doc)."""
-    return run_clickhouse_sql(
-        spark, _CH_WEIGHTED_QUANTILES, sf_dir, ("lineitem",)
-    )
 
 
 # 34c (r15, VERDICT r14 item 4). exact-weighted quantiles in
@@ -22779,14 +22245,6 @@ FROM cum GROUP BY g ORDER BY g
 """
 
 
-def q_dialect_qw_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH expression-position weighted-quantile query
-    (module doc #34c)."""
-    return run_clickhouse_sql(
-        spark, _CH_QW_EXPR, sf_dir, ("lineitem",)
-    )
-
-
 # 34b (r12). bounded groupConcat(sep, limit) (VERDICT r11 item 7):
 #     the statement-owned re-plan masks rows past the limit with a
 #     per-group row_number BEFORE collection, so aggregate state is
@@ -22819,15 +22277,6 @@ ORDER BY o_orderstatus
 """
 
 
-def q_dialect_group_concat_bounded(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim CH bounded-groupConcat query (module doc #34b)."""
-    return run_clickhouse_sql(
-        spark, _CH_GROUP_CONCAT_BOUNDED, sf_dir, ("orders",)
-    )
-
-
 # 34c (r13). JOIN-owned bounded groupConcat (VERDICT r12 item 3):
 #     the projecting re-plan carries qualified refs through an
 #     explicit inner select over the verbatim join, so grouped joins
@@ -22857,15 +22306,6 @@ FROM orders JOIN customer ON o_custkey = c_custkey
 GROUP BY c_mktsegment
 ORDER BY seg
 """
-
-
-def q_dialect_group_concat_join(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim CH join-shaped bounded-groupConcat query (#34c)."""
-    return run_clickhouse_sql(
-        spark, _CH_GROUP_CONCAT_JOIN, sf_dir, ("orders", "customer")
-    )
 
 
 # 37 (r12). audit batch 15 value gate (per-row tier): class-C IP
@@ -22918,11 +22358,6 @@ ORDER BY k
 """
 
 
-def q_dialect_probe20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch-15 per-row probe (module doc #37)."""
-    return run_clickhouse_sql(spark, _CH_PROBE20, sf_dir, ("orders",))
-
-
 # 37c (r12). audit batch 16 value gate: base58 round-trip identity
 #     (the oracle just echoes the column; the invalid-charset probe
 #     pins the NULL tier), fixed-date time extraction as epoch
@@ -22959,11 +22394,6 @@ FROM orders
 WHERE o_orderkey % 17 = 0
 ORDER BY k
 """
-
-
-def q_dialect_probe21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch-16 per-row probe (module doc #37c)."""
-    return run_clickhouse_sql(spark, _CH_PROBE21, sf_dir, ("orders",))
 
 
 # 37b (r12). one-way ANOVA: analysisOfVariance(value, category) as a
@@ -23010,11 +22440,6 @@ ORDER BY o_orderstatus
 """
 
 
-def q_dialect_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH analysisOfVariance query (module doc #37b)."""
-    return run_clickhouse_sql(spark, _CH_ANOVA, sf_dir, ("orders",))
-
-
 # 35 (r11). tumble window-view functions (audit batch 11): Spark's
 #     window() is the tumbling GROUP BY; DuckDB's time_bucket is the
 #     independent oracle.  tumbleStart/tumbleEnd are the arithmetic
@@ -23039,11 +22464,6 @@ FROM events
 GROUP BY 1, 2
 ORDER BY ws
 """
-
-
-def q_dialect_tumble(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH tumbling-window query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_TUMBLE, sf_dir, ("events",))
 
 
 # 36 (r11). audit batches 13-14 value gate: defensive casts (digit
@@ -23100,11 +22520,6 @@ SELECT o_orderkey AS k,
            i -> CAST(i AS VARCHAR)), ','), '') AS bp
 FROM orders WHERE o_orderkey <= 500 ORDER BY k
 """
-
-
-def q_dialect_probe19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch 13-14 probe query (module doc)."""
-    return run_clickhouse_sql(spark, _CH_PROBE19, sf_dir, ("orders",))
 
 
 # 38 (r13). geoDistance: WGS-84 ellipsoid distance as Andoyer–Lambert
@@ -23169,11 +22584,6 @@ FROM d GROUP BY nationkey ORDER BY nationkey
 """
 
 
-def q_dialect_geo_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH geoDistance query (module doc #38)."""
-    return run_clickhouse_sql(spark, _CH_GEO_DIST, sf_dir, ("customer",))
-
-
 # 40 (r14). WKT geometry serialization (VERDICT r13 item 3): parse
 #     and emit WKT POINT/LINESTRING/POLYGON/MULTIPOLYGON with pure
 #     string/array ops — data-driven point/polygon round-trips plus
@@ -23224,11 +22634,6 @@ FROM customer
 WHERE c_custkey % 11 = 0
 ORDER BY k
 """
-
-
-def q_dialect_wkt_geometry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH WKT parse/serialize query (module doc #40)."""
-    return run_clickhouse_sql(spark, _CH_WKT, sf_dir, ("customer",))
 
 
 # 41 (r14). seriesOutliersDetectTukey (VERDICT r13 item 4): Tukey
@@ -23309,13 +22714,6 @@ SELECT k,
 FROM sc
 ORDER BY k
 """
-
-
-def q_dialect_series_tukey(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH Tukey-fence outlier query (module doc #41)."""
-    return run_clickhouse_sql(
-        spark, _CH_SERIES_TUKEY, sf_dir, ("orders",)
-    )
 
 
 # 42 (r14). audit batch 24 value gate: bit-exact keyed SipHash-2-4
@@ -23459,11 +22857,6 @@ ORDER BY k
 """
 
 
-def q_dialect_probe26(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH subsequence / UUIDv7 query (module doc #43)."""
-    return run_clickhouse_sql(spark, _CH_PROBE26, sf_dir, ("orders",))
-
-
 # 44 (r15). the bit-exact 128-bit SipHash family (VERDICT r14 item
 #     2): sipHash128[Keyed] is ClickHouse's legacy construction
 #     (src/Common/SipHash.h get128: 64-bit finalization, v0^v1 ||
@@ -23509,11 +22902,6 @@ ORDER BY k
 """
 
 
-def q_dialect_probe27(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH 128-bit SipHash query (module doc #44)."""
-    return run_clickhouse_sql(spark, _CH_PROBE27, sf_dir, ("orders",))
-
-
 # 45 (r15). seriesPeriodDetectFFT (VERDICT r14 item 3 — was walled
 #     with STL): periodogram argmax as a pure-SQL O(n²) DFT cos/sin
 #     fold, mean-centered so a constant series hits the exact-zero
@@ -23548,13 +22936,6 @@ FROM orders
 WHERE o_orderkey % 211 = 0
 ORDER BY k
 """
-
-
-def q_dialect_series_fft(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH period-detection query (module doc #45)."""
-    return run_clickhouse_sql(
-        spark, _CH_SERIES_FFT, sf_dir, ("orders",)
-    )
 
 
 # 46 (r15). audit batch 29 value gate, per-row tier: the CH 24.x
@@ -23624,11 +23005,6 @@ ORDER BY k
 """
 
 
-def q_dialect_probe28(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH 24.x scalar-wave query (module doc #46)."""
-    return run_clickhouse_sql(spark, _CH_PROBE28, sf_dir, ("orders",))
-
-
 # 47 (r15). audit batch 29 value gate, aggregate tier: the
 #     -SimpleState delegates (SimpleAggregateFunction's state IS the
 #     finished value), the Map-typed -Map combinator members
@@ -23693,12 +23069,6 @@ ORDER BY o.st
 """
 
 
-def q_dialect_probe29(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch-29 aggregate-combinator query (module doc
-    #47)."""
-    return run_clickhouse_sql(spark, _CH_PROBE29, sf_dir, ("orders",))
-
-
 # 48 (r15). audit batch 30 value gate: arrayLevenshteinDistance-
 #     Weighted (CH's per-element cost model — docs example pinned in
 #     tests; the gate uses length-1 arrays whose DP collapses to the
@@ -23740,11 +23110,6 @@ ORDER BY k
 """
 
 
-def q_dialect_probe30(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch-30 query (module doc #48)."""
-    return run_clickhouse_sql(spark, _CH_PROBE30, sf_dir, ("orders",))
-
-
 # 49 (r15). audit batch 31, STATEMENT-form tier: four CH statement
 #     shapes that leaked as Spark analysis/parse errors — tuple
 #     [NOT] IN over literal tuple lists (→ equality disjunction;
@@ -23779,15 +23144,6 @@ WITH f AS (
 SELECT k, st FROM f WHERE rn = 1 AND k % 2 = 0
 ORDER BY k LIMIT 40 OFFSET 1
 """
-
-
-def q_dialect_statement_forms(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim CH statement-forms query (module doc #49)."""
-    return run_clickhouse_sql(
-        spark, _CH_STATEMENT_FORMS, sf_dir, ("orders",)
-    )
 
 
 # 50 (r16). fuzzBits deterministic-tier value gate (VERDICT r15
@@ -23919,11 +23275,6 @@ ORDER BY st
 """
 
 
-def q_dialect_probe32(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch-33 query (module doc #51)."""
-    return run_clickhouse_sql(spark, _CH_PROBE32, sf_dir, ("orders",))
-
-
 # 52 (r16). audit batch 33, window-position aggregate heads: CH
 #     allows any aggregate as a window function; the transpiler's
 #     renamed heads must compose with OVER (argMax → max_by OVER,
@@ -23958,15 +23309,6 @@ SELECT o_custkey AS ck,
 FROM orders WHERE o_orderkey % 101 = 0
 GROUP BY ck ORDER BY ck
 """
-
-
-def q_dialect_window_heads(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Verbatim CH window-position-heads query (module doc #52)."""
-    return run_clickhouse_sql(
-        spark, _CH_WINDOW_HEADS, sf_dir, ("orders",)
-    )
 
 
 # 39 (r13). audit batch 17 value gate (per-row tier): MAC codec
@@ -24041,11 +23383,6 @@ SELECT o_orderkey AS k,
        CAST(o_orderkey % 97 AS DOUBLE) AS fin
 FROM orders WHERE o_orderkey <= 400 ORDER BY k
 """
-
-
-def q_dialect_probe22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch-17 per-row probe (module doc #39)."""
-    return run_clickhouse_sql(spark, _CH_PROBE22, sf_dir, ("orders",))
 
 
 # 40 (r13). Batch-18 per-row value gate: vector-norm alias family,
@@ -24168,11 +23505,6 @@ FROM orders WHERE o_orderkey <= 400 ORDER BY k
 """
 
 
-def q_dialect_probe23(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch-18 per-row probe (module doc #40)."""
-    return run_clickhouse_sql(spark, _CH_PROBE23, sf_dir, ("orders",))
-
-
 # 41 (r13). Batch-21 value gate: generate_series as a FROM-position
 #     table function (inclusive bounds, empty inverted range), RFC
 #     7386 jsonMergePatch (Arrow register, n-ary fold, null-removes),
@@ -24213,235 +23545,158 @@ ORDER BY k
 """
 
 
-def q_dialect_probe24(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Verbatim CH batch-21 probe (module doc #41)."""
-    return run_clickhouse_sql(spark, _CH_PROBE24, sf_dir, ())
+# every gate, in run order: (name, query (spark, sf_dir) -> DataFrame,
+# DuckDB oracle SQL).  The script gates create tables, so the order is
+# part of the contract (tools/oracle_check.py runs them in one session).
+_GATES = (
+    ("dialect_strings", _gate(_CH_STRINGS, "orders"), O_STRINGS),
+    ("ch_script_lifecycle", q_ch_script_lifecycle, O_CH_SCRIPT_LIFECYCLE),
+    ("ch_script_blue_green", q_ch_script_blue_green, O_BLUE_GREEN),
+    ("ch_script_retention", q_ch_script_retention, O_RETENTION_SCRIPT),
+    ("ch_script_detach", q_ch_script_detach, O_DETACH_SCRIPT),
+    ("ch_script_detach_table", q_ch_script_detach_table, O_DETACH_TABLE),
+    ("ch_script_attach_full", q_ch_script_attach_full, O_ATTACH_FULL),
+    ("ch_script_partition_ops", q_ch_script_partition_ops, O_PARTITION_OPS),
+    ("ch_script_schema_evolution", q_ch_script_schema_evolution,
+     O_CH_SCRIPT_SCHEMA_EVOLUTION),
+    ("dialect_any_join", _gate(_CH_ANY_JOIN, "orders", "lineitem"),
+     O_ANY_JOIN),
+    ("dialect_any_join_on", _gate(_CH_ANY_JOIN_ON, "orders", "lineitem"),
+     O_ANY_JOIN_ON),
+    ("dialect_any_join_ineq", _gate(_CH_ANY_JOIN_INEQ, "orders", "lineitem"),
+     O_ANY_JOIN_INEQ),
+    ("dialect_any_join_noeq", _gate(_CH_ANY_JOIN_NOEQ, "customer", "supplier"),
+     O_ANY_JOIN_NOEQ),
+    ("dialect_any_right_join", _gate(_CH_ANY_RIGHT_JOIN, "orders", "customer"),
+     O_ANY_RIGHT_JOIN),
+    ("dialect_combinators2", _gate(_CH_COMBINATORS2, "events"),
+     O_COMBINATORS2),
+    ("dialect_numbers", _gate(_CH_NUMBERS), O_NUMBERS),
+    ("dialect_file_read", q_dialect_file_read, O_FILE_READ),
+    ("dialect_scalar_extras", _gate(_CH_SCALAR_EXTRAS, "events"),
+     O_SCALAR_EXTRAS),
+    ("dialect_probe8", _gate(_CH_PROBE8, "orders"), O_PROBE8),
+    ("dialect_funnel_dedup", _gate(_CH_FUNNEL_DEDUP, "events"),
+     O_FUNNEL_DEDUP),
+    ("dialect_json_url", _gate(_CH_JSON_URL, "events"), O_JSON_URL),
+    ("dialect_window_funnel", _gate(_CH_WINDOW_FUNNEL, "events"),
+     O_WINDOW_FUNNEL),
+    ("dialect_retention", _gate(_CH_RETENTION, "events"), O_RETENTION),
+    ("dialect_sequence_match", _gate(_CH_SEQ_MATCH, "events"), O_SEQ_MATCH),
+    ("dialect_sequence_count", _gate(_CH_SEQ_COUNT, "events"), O_SEQ_COUNT),
+    ("dialect_sequence_guard", _gate(_CH_SEQ_GUARD, "events"), O_SEQ_GUARD),
+    ("dialect_sequence_guard2", _gate(_CH_SEQ_GUARD2, "events"), O_SEQ_GUARD2),
+    ("dialect_topk_weighted", _gate(_CH_TOPK_WEIGHTED, "orders"),
+     O_TOPK_WEIGHTED),
+    ("dialect_distinct_on", _gate(_CH_DISTINCT_ON, "events"), O_DISTINCT_ON),
+    ("dialect_modern_sql", _gate(_CH_MODERN, "orders"), O_MODERN),
+    ("dialect_ttest", _gate(_CH_TTEST, "events"), O_TTEST),
+    ("dialect_meanz", _gate(_CH_MEANZ, "events"), O_MEANZ),
+    ("dialect_probe9", _gate(_CH_PROBE9, "orders"), O_PROBE9),
+    ("dialect_probe10", _gate(_CH_PROBE10, "part"), O_PROBE10),
+    ("dialect_probe11", _gate(_CH_PROBE11, "orders"), O_PROBE11),
+    ("dialect_window_derivative", _gate(_CH_WINDOW_DERIVATIVE, "events"),
+     O_WINDOW_DERIVATIVE),
+    ("dialect_argmax_combinators", _gate(_CH_ARGMAX_COMBINATORS, "orders"),
+     O_ARGMAX_COMBINATORS),
+    ("dialect_exp_decay", _gate(_CH_EXP_DECAY, "events"), O_EXP_DECAY),
+    ("dialect_probe13", _gate(_CH_PROBE13, "orders"), O_PROBE13),
+    ("dialect_normalize", _gate(_CH_NORMALIZE, "documents"), O_NORMALIZE),
+    ("dialect_vector_math", _gate(_CH_VECTOR, "embeddings"), O_VECTOR),
+    ("dialect_fuzzy_family", _gate(_CH_FUZZY_FAMILY, "part"), O_FUZZY_FAMILY),
+    ("dialect_json_paths", _gate(_CH_JSON_PATHS, "orders"), O_JSON_PATHS),
+    ("dialect_sum_overflow", _gate(_CH_SUM_OVERFLOW, "orders"),
+     O_SUM_OVERFLOW),
+    ("dialect_uuid_generators", _gate(_CH_UUID_GENERATORS, "orders"),
+     O_UUID_GENERATORS),
+    ("dialect_resample", _gate(_CH_RESAMPLE, "lineitem"), O_RESAMPLE),
+    ("dialect_reinterpret_tuples", _gate(_CH_REINTERPRET_TUPLES, "part"),
+     O_REINTERPRET_TUPLES),
+    ("dialect_hilbert", _gate(_CH_HILBERT, "orders"), O_HILBERT),
+    ("dialect_weighted_quantiles", _gate(_CH_WEIGHTED_QUANTILES, "lineitem"),
+     O_WEIGHTED_QUANTILES),
+    ("dialect_qw_expr", _gate(_CH_QW_EXPR, "lineitem"), O_QW_EXPR),
+    ("dialect_group_concat_bounded", _gate(_CH_GROUP_CONCAT_BOUNDED, "orders"),
+     O_GROUP_CONCAT_BOUNDED),
+    ("dialect_group_concat_join",
+     _gate(_CH_GROUP_CONCAT_JOIN, "orders", "customer"), O_GROUP_CONCAT_JOIN),
+    ("dialect_probe20", _gate(_CH_PROBE20, "orders"), O_PROBE20),
+    ("dialect_probe21", _gate(_CH_PROBE21, "orders"), O_PROBE21),
+    ("dialect_probe22", _gate(_CH_PROBE22, "orders"), O_PROBE22),
+    ("dialect_probe23", _gate(_CH_PROBE23, "orders"), O_PROBE23),
+    ("dialect_probe24", _gate(_CH_PROBE24), O_PROBE24),
+    ("dialect_anova", _gate(_CH_ANOVA, "orders"), O_ANOVA),
+    ("dialect_geo_distance", _gate(_CH_GEO_DIST, "customer"), O_GEO_DIST_ELL),
+    ("dialect_wkt_geometry", _gate(_CH_WKT, "customer"), O_WKT),
+    ("dialect_series_tukey", _gate(_CH_SERIES_TUKEY, "orders"),
+     O_SERIES_TUKEY),
+    ("dialect_probe25", q_dialect_probe25, O_PROBE25),
+    ("dialect_probe26", _gate(_CH_PROBE26, "orders"), O_PROBE26),
+    ("dialect_probe27", _gate(_CH_PROBE27, "orders"), O_PROBE27),
+    ("dialect_series_fft", _gate(_CH_SERIES_FFT, "orders"), O_SERIES_FFT),
+    ("dialect_probe28", _gate(_CH_PROBE28, "orders"), O_PROBE28),
+    ("dialect_probe29", _gate(_CH_PROBE29, "orders"), O_PROBE29),
+    ("dialect_probe30", _gate(_CH_PROBE30, "orders"), O_PROBE30),
+    ("dialect_statement_forms", _gate(_CH_STATEMENT_FORMS, "orders"),
+     O_STATEMENT_FORMS),
+    ("dialect_probe31", q_dialect_probe31, O_PROBE31),
+    ("dialect_probe32", _gate(_CH_PROBE32, "orders"), O_PROBE32),
+    ("dialect_window_heads", _gate(_CH_WINDOW_HEADS, "orders"),
+     O_WINDOW_HEADS),
+    ("dialect_tumble", _gate(_CH_TUMBLE, "events"), O_TUMBLE),
+    ("dialect_probe19", _gate(_CH_PROBE19, "orders"), O_PROBE19),
+    ("dialect_star_modifiers", _gate(_CH_STAR_MODIFIERS, "supplier"),
+     O_STAR_MODIFIERS),
+    ("dialect_sample_clause", q_dialect_sample_clause, _o_sample_dialect()),
+    ("dialect_sample_rows", q_dialect_sample_rows, _o_sample_rows()),
+    ("dialect_state_merge", _gate(_CH_STATE_MERGE, "orders"), O_STATE_MERGE),
+    ("dialect_state_merge2", _gate(_CH_STATE_MERGE2, "orders"),
+     O_STATE_MERGE2),
+    ("dialect_state_merge3", _gate(_CH_STATE_MERGE3, "orders"),
+     _o_state_merge3()),
+    ("dialect_state_merge4", _gate(_CH_STATE_MERGE4, "orders"),
+     O_STATE_MERGE4),
+    ("dialect_paste_join", _gate(_CH_PASTE_JOIN, "orders"), O_PASTE_JOIN),
+    ("dialect_group_array_tiers", _gate(_CH_GROUP_ARRAY_TIERS, "orders"),
+     _o_group_array_tiers()),
+    ("dialect_idn_family", _gate(_CH_IDN_FAMILY, "nation"), O_IDN_FAMILY),
+    ("dialect_json_merge", _gate(_CH_JSON_MERGE, "nation"), O_JSON_MERGE),
+    ("dialect_probe14", _gate(_CH_PROBE14, "orders"), O_PROBE14),
+    ("dialect_interval_sweeps", _gate(_CH_INTERVAL_SWEEPS, "orders"),
+     O_INTERVAL_SWEEPS),
+    ("dialect_probe15", _gate(_CH_PROBE15, "orders"), O_PROBE15),
+    ("dialect_probe16", _gate(_CH_PROBE16, "orders"), O_PROBE16),
+    ("dialect_probe17", _gate(_CH_PROBE17, "orders"), O_PROBE17),
+    ("dialect_probe18", _gate(_CH_PROBE18, "orders"), O_PROBE18),
+    ("dialect_columns_select", _gate(_CH_COLUMNS_SELECT, "orders"),
+     O_COLUMNS_SELECT),
+    ("dialect_dictionary", q_dialect_dictionary, O_DICTIONARY),
+    ("dialect_limit_by", _gate(_CH_LIMIT_BY, "orders"), O_LIMIT_BY),
+    ("dialect_asof_join", _gate(_CH_ASOF, "events"), O_ASOF),
+    ("dialect_asof_on", _gate(_CH_ASOF_ON, "events"), O_ASOF_ON),
+    ("dialect_with_fill", _gate(_CH_WITH_FILL, "orders"), O_WITH_FILL),
+    ("dialect_with_fill_date", _gate(_CH_WITH_FILL_DATE, "events"),
+     O_WITH_FILL_DATE),
+    ("dialect_with_fill_desc", _gate(_CH_WITH_FILL_DESC, "orders"),
+     O_WITH_FILL_DESC),
+    ("dialect_with_fill_multikey", _gate(_CH_WITH_FILL_MULTI, "events"),
+     O_WITH_FILL_MULTI),
+    ("dialect_with_fill_interp", _gate(_CH_WITH_FILL_INTERP, "orders"),
+     O_WITH_FILL_INTERP),
+    ("dialect_with_fill_expr", _gate(_CH_WITH_FILL_EXPR, "events"),
+     O_WITH_FILL_EXPR),
+    ("dialect_topk", _gate(_CH_TOPK, "orders"), O_TOPK),
+    ("dialect_subscript", _gate(_CH_SUBSCRIPT, "orders"), O_SUBSCRIPT),
+    ("dialect_combinators", _gate(_CH_COMBINATORS, "orders"), O_COMBINATORS),
+    ("dialect_arrayjoin", _gate(_CH_ARRAYJOIN, "orders"), O_ARRAYJOIN),
+    ("dialect_multiif", _gate(_CH_MULTIIF, "orders"), O_MULTIIF),
+    ("dialect_array_hof", _gate(_CH_ARRAY_HOF, "orders"), O_ARRAY_HOF),
+    ("dialect_with_totals", _gate(_CH_TOTALS, "orders"), O_TOTALS),
+    ("dialect_array_join_clause", _gate(_CH_ARRAY_JOIN_CLAUSE, "orders"),
+     O_ARRAY_JOIN_CLAUSE),
+    ("dialect_array_join_zip", _gate(_CH_ARRAY_JOIN_ZIP, "orders"),
+     O_ARRAY_JOIN_ZIP),
+)
 
-
-QUERIES = {
-    "dialect_strings": q_dialect_strings,
-    "ch_script_lifecycle": q_ch_script_lifecycle,
-    "ch_script_blue_green": q_ch_script_blue_green,
-    "ch_script_retention": q_ch_script_retention,
-    "ch_script_detach": q_ch_script_detach,
-    "ch_script_detach_table": q_ch_script_detach_table,
-    "ch_script_attach_full": q_ch_script_attach_full,
-    "ch_script_partition_ops": q_ch_script_partition_ops,
-    "ch_script_schema_evolution": q_ch_script_schema_evolution,
-    "dialect_any_join": q_dialect_any_join,
-    "dialect_any_join_on": q_dialect_any_join_on,
-    "dialect_any_join_ineq": q_dialect_any_join_ineq,
-    "dialect_any_join_noeq": q_dialect_any_join_noeq,
-    "dialect_any_right_join": q_dialect_any_right_join,
-    "dialect_combinators2": q_dialect_combinators2,
-    "dialect_numbers": q_dialect_numbers,
-    "dialect_file_read": q_dialect_file_read,
-    "dialect_scalar_extras": q_dialect_scalar_extras,
-    "dialect_probe8": q_dialect_probe8,
-    "dialect_funnel_dedup": q_dialect_funnel_dedup,
-    "dialect_json_url": q_dialect_json_url,
-    "dialect_window_funnel": q_dialect_window_funnel,
-    "dialect_retention": q_dialect_retention,
-    "dialect_sequence_match": q_dialect_sequence_match,
-    "dialect_sequence_count": q_dialect_sequence_count,
-    "dialect_sequence_guard": q_dialect_sequence_guard,
-    "dialect_sequence_guard2": q_dialect_sequence_guard2,
-    "dialect_topk_weighted": q_dialect_topk_weighted,
-    "dialect_distinct_on": q_dialect_distinct_on,
-    "dialect_modern_sql": q_dialect_modern_sql,
-    "dialect_ttest": q_dialect_ttest,
-    "dialect_meanz": q_dialect_meanz,
-    "dialect_probe9": q_dialect_probe9,
-    "dialect_probe10": q_dialect_probe10,
-    "dialect_probe11": q_dialect_probe11,
-    "dialect_window_derivative": q_dialect_window_derivative,
-    "dialect_argmax_combinators": q_dialect_argmax_combinators,
-    "dialect_exp_decay": q_dialect_exp_decay,
-    "dialect_probe13": q_dialect_probe13,
-    "dialect_normalize": q_dialect_normalize,
-    "dialect_vector_math": q_dialect_vector_math,
-    "dialect_fuzzy_family": q_dialect_fuzzy_family,
-    "dialect_json_paths": q_dialect_json_paths,
-    "dialect_sum_overflow": q_dialect_sum_overflow,
-    "dialect_uuid_generators": q_dialect_uuid_generators,
-    "dialect_resample": q_dialect_resample,
-    "dialect_reinterpret_tuples": q_dialect_reinterpret_tuples,
-    "dialect_hilbert": q_dialect_hilbert,
-    "dialect_weighted_quantiles": q_dialect_weighted_quantiles,
-    "dialect_qw_expr": q_dialect_qw_expr,
-    "dialect_group_concat_bounded": q_dialect_group_concat_bounded,
-    "dialect_group_concat_join": q_dialect_group_concat_join,
-    "dialect_probe20": q_dialect_probe20,
-    "dialect_probe21": q_dialect_probe21,
-    "dialect_probe22": q_dialect_probe22,
-    "dialect_probe23": q_dialect_probe23,
-    "dialect_probe24": q_dialect_probe24,
-    "dialect_anova": q_dialect_anova,
-    "dialect_geo_distance": q_dialect_geo_distance,
-    "dialect_wkt_geometry": q_dialect_wkt_geometry,
-    "dialect_series_tukey": q_dialect_series_tukey,
-    "dialect_probe25": q_dialect_probe25,
-    "dialect_probe26": q_dialect_probe26,
-    "dialect_probe27": q_dialect_probe27,
-    "dialect_series_fft": q_dialect_series_fft,
-    "dialect_probe28": q_dialect_probe28,
-    "dialect_probe29": q_dialect_probe29,
-    "dialect_probe30": q_dialect_probe30,
-    "dialect_statement_forms": q_dialect_statement_forms,
-    "dialect_probe31": q_dialect_probe31,
-    "dialect_probe32": q_dialect_probe32,
-    "dialect_window_heads": q_dialect_window_heads,
-    "dialect_tumble": q_dialect_tumble,
-    "dialect_probe19": q_dialect_probe19,
-    "dialect_star_modifiers": q_dialect_star_modifiers,
-    "dialect_sample_clause": q_dialect_sample_clause,
-    "dialect_sample_rows": q_dialect_sample_rows,
-    "dialect_state_merge": q_dialect_state_merge,
-    "dialect_state_merge2": q_dialect_state_merge2,
-    "dialect_state_merge3": q_dialect_state_merge3,
-    "dialect_state_merge4": q_dialect_state_merge4,
-    "dialect_paste_join": q_dialect_paste_join,
-    "dialect_group_array_tiers": q_dialect_group_array_tiers,
-    "dialect_idn_family": q_dialect_idn_family,
-    "dialect_json_merge": q_dialect_json_merge,
-    "dialect_probe14": q_dialect_probe14,
-    "dialect_interval_sweeps": q_dialect_interval_sweeps,
-    "dialect_probe15": q_dialect_probe15,
-    "dialect_probe16": q_dialect_probe16,
-    "dialect_probe17": q_dialect_probe17,
-    "dialect_probe18": q_dialect_probe18,
-    "dialect_columns_select": q_dialect_columns_select,
-    "dialect_dictionary": q_dialect_dictionary,
-    "dialect_limit_by": q_dialect_limit_by,
-    "dialect_asof_join": q_dialect_asof_join,
-    "dialect_asof_on": q_dialect_asof_on,
-    "dialect_with_fill": q_dialect_with_fill,
-    "dialect_with_fill_date": q_dialect_with_fill_date,
-    "dialect_with_fill_desc": q_dialect_with_fill_desc,
-    "dialect_with_fill_multikey": q_dialect_with_fill_multikey,
-    "dialect_with_fill_interp": q_dialect_with_fill_interp,
-    "dialect_with_fill_expr": q_dialect_with_fill_expr,
-    "dialect_topk": q_dialect_topk,
-    "dialect_subscript": q_dialect_subscript,
-    "dialect_combinators": q_dialect_combinators,
-    "dialect_arrayjoin": q_dialect_arrayjoin,
-    "dialect_multiif": q_dialect_multiif,
-    "dialect_array_hof": q_dialect_array_hof,
-    "dialect_with_totals": q_dialect_with_totals,
-    "dialect_array_join_clause": q_dialect_array_join_clause,
-    "dialect_array_join_zip": q_dialect_array_join_zip,
-}
-
-ORACLES = {
-    "dialect_strings": O_STRINGS,
-    "ch_script_lifecycle": O_CH_SCRIPT_LIFECYCLE,
-    "ch_script_blue_green": O_BLUE_GREEN,
-    "ch_script_retention": O_RETENTION_SCRIPT,
-    "ch_script_detach": O_DETACH_SCRIPT,
-    "ch_script_detach_table": O_DETACH_TABLE,
-    "ch_script_attach_full": O_ATTACH_FULL,
-    "ch_script_partition_ops": O_PARTITION_OPS,
-    "ch_script_schema_evolution": O_CH_SCRIPT_SCHEMA_EVOLUTION,
-    "dialect_any_join": O_ANY_JOIN,
-    "dialect_any_join_on": O_ANY_JOIN_ON,
-    "dialect_any_join_ineq": O_ANY_JOIN_INEQ,
-    "dialect_any_join_noeq": O_ANY_JOIN_NOEQ,
-    "dialect_any_right_join": O_ANY_RIGHT_JOIN,
-    "dialect_combinators2": O_COMBINATORS2,
-    "dialect_numbers": O_NUMBERS,
-    "dialect_file_read": O_FILE_READ,
-    "dialect_scalar_extras": O_SCALAR_EXTRAS,
-    "dialect_probe8": O_PROBE8,
-    "dialect_funnel_dedup": O_FUNNEL_DEDUP,
-    "dialect_json_url": O_JSON_URL,
-    "dialect_window_funnel": O_WINDOW_FUNNEL,
-    "dialect_retention": O_RETENTION,
-    "dialect_sequence_match": O_SEQ_MATCH,
-    "dialect_sequence_count": O_SEQ_COUNT,
-    "dialect_sequence_guard": O_SEQ_GUARD,
-    "dialect_sequence_guard2": O_SEQ_GUARD2,
-    "dialect_topk_weighted": O_TOPK_WEIGHTED,
-    "dialect_distinct_on": O_DISTINCT_ON,
-    "dialect_modern_sql": O_MODERN,
-    "dialect_ttest": O_TTEST,
-    "dialect_meanz": O_MEANZ,
-    "dialect_probe9": O_PROBE9,
-    "dialect_probe10": O_PROBE10,
-    "dialect_probe11": O_PROBE11,
-    "dialect_window_derivative": O_WINDOW_DERIVATIVE,
-    "dialect_argmax_combinators": O_ARGMAX_COMBINATORS,
-    "dialect_exp_decay": O_EXP_DECAY,
-    "dialect_probe13": O_PROBE13,
-    "dialect_normalize": O_NORMALIZE,
-    "dialect_vector_math": O_VECTOR,
-    "dialect_fuzzy_family": O_FUZZY_FAMILY,
-    "dialect_json_paths": O_JSON_PATHS,
-    "dialect_sum_overflow": O_SUM_OVERFLOW,
-    "dialect_uuid_generators": O_UUID_GENERATORS,
-    "dialect_resample": O_RESAMPLE,
-    "dialect_reinterpret_tuples": O_REINTERPRET_TUPLES,
-    "dialect_hilbert": O_HILBERT,
-    "dialect_weighted_quantiles": O_WEIGHTED_QUANTILES,
-    "dialect_qw_expr": O_QW_EXPR,
-    "dialect_group_concat_bounded": O_GROUP_CONCAT_BOUNDED,
-    "dialect_group_concat_join": O_GROUP_CONCAT_JOIN,
-    "dialect_probe20": O_PROBE20,
-    "dialect_probe21": O_PROBE21,
-    "dialect_probe22": O_PROBE22,
-    "dialect_probe23": O_PROBE23,
-    "dialect_probe24": O_PROBE24,
-    "dialect_anova": O_ANOVA,
-    "dialect_geo_distance": O_GEO_DIST_ELL,
-    "dialect_wkt_geometry": O_WKT,
-    "dialect_series_tukey": O_SERIES_TUKEY,
-    "dialect_probe25": O_PROBE25,
-    "dialect_probe26": O_PROBE26,
-    "dialect_probe27": O_PROBE27,
-    "dialect_series_fft": O_SERIES_FFT,
-    "dialect_probe28": O_PROBE28,
-    "dialect_probe29": O_PROBE29,
-    "dialect_probe30": O_PROBE30,
-    "dialect_statement_forms": O_STATEMENT_FORMS,
-    "dialect_probe31": O_PROBE31,
-    "dialect_probe32": O_PROBE32,
-    "dialect_window_heads": O_WINDOW_HEADS,
-    "dialect_tumble": O_TUMBLE,
-    "dialect_probe19": O_PROBE19,
-    "dialect_star_modifiers": O_STAR_MODIFIERS,
-    "dialect_sample_clause": _o_sample_dialect(),
-    "dialect_sample_rows": _o_sample_rows(),
-    "dialect_state_merge": O_STATE_MERGE,
-    "dialect_state_merge2": O_STATE_MERGE2,
-    "dialect_state_merge3": _o_state_merge3(),
-    "dialect_state_merge4": O_STATE_MERGE4,
-    "dialect_paste_join": O_PASTE_JOIN,
-    "dialect_group_array_tiers": _o_group_array_tiers(),
-    "dialect_idn_family": O_IDN_FAMILY,
-    "dialect_json_merge": O_JSON_MERGE,
-    "dialect_probe14": O_PROBE14,
-    "dialect_interval_sweeps": O_INTERVAL_SWEEPS,
-    "dialect_probe15": O_PROBE15,
-    "dialect_probe16": O_PROBE16,
-    "dialect_probe17": O_PROBE17,
-    "dialect_probe18": O_PROBE18,
-    "dialect_columns_select": O_COLUMNS_SELECT,
-    "dialect_dictionary": O_DICTIONARY,
-    "dialect_limit_by": O_LIMIT_BY,
-    "dialect_asof_join": O_ASOF,
-    "dialect_asof_on": O_ASOF_ON,
-    "dialect_with_fill": O_WITH_FILL,
-    "dialect_with_fill_date": O_WITH_FILL_DATE,
-    "dialect_with_fill_desc": O_WITH_FILL_DESC,
-    "dialect_with_fill_multikey": O_WITH_FILL_MULTI,
-    "dialect_with_fill_interp": O_WITH_FILL_INTERP,
-    "dialect_with_fill_expr": O_WITH_FILL_EXPR,
-    "dialect_topk": O_TOPK,
-    "dialect_subscript": O_SUBSCRIPT,
-    "dialect_combinators": O_COMBINATORS,
-    "dialect_arrayjoin": O_ARRAYJOIN,
-    "dialect_multiif": O_MULTIIF,
-    "dialect_array_hof": O_ARRAY_HOF,
-    "dialect_with_totals": O_TOTALS,
-    "dialect_array_join_clause": O_ARRAY_JOIN_CLAUSE,
-    "dialect_array_join_zip": O_ARRAY_JOIN_ZIP,
-}
+QUERIES = {name: q for name, q, _ in _GATES}
+ORACLES = {name: o for name, _, o in _GATES}

@@ -2174,7 +2174,7 @@ def test_probe3_scalar_family_values(spark):
     assert row.frs == "1.50 KiB" and row.frq == "1.50 million"
     # no thousands separators (ClickHouse prints none; r6 advice)
     assert row.frs2 == "1023.00 KiB"
-    assert row.frq2 == "10000.00 trillion"
+    assert row.frq2 == "10.00 quadrillion"
     # '?' and bare-'#' URLs both lose their tail (r6 advice)
     assert row.cqf == "http://e.com/p" and row.cqf2 == "http://e.com/p"
     # ISO week-year: 2021-01-01 belongs to ISO year 2020
@@ -4784,6 +4784,11 @@ def test_r10_scalar_batch9(spark):
     ).collect()[0].v
     assert one("formatReadableQuantity(1234567)") == "1.23 million"
     assert one("formatReadableQuantity(123)") == "123.00"
+    # quadrillion is ClickHouse's largest unit
+    assert one("formatReadableQuantity(2000000000000000)") == (
+        "2.00 quadrillion"
+    )
+    assert one("formatReadableQuantity(5e18)") == "5000.00 quadrillion"
     assert one("arrayReduce('sum', [1, 2, 3])") == 6.0
     assert one("arrayReduce('uniqExact', [1, 2, 2])") == 2
     assert one("arrayReduce('anyLast', [1, 2, 9])") == 9
@@ -7733,6 +7738,37 @@ def test_replan_alias_key_keeps_compound_operators(spark):
                 (r[0], sorted(r[1].split(",")) if isinstance(r[1], str)
                  else r[1])
                 for r in spark.sql(q).collect()
+            )
+
+        assert rows(replan) == rows(fold), sql
+
+
+def test_group_concat_replans_keep_compound_operators(spark):
+    """Both bounded groupConcat re-plans, joined and single-relation,
+    re-join the call's parameters and argument without splitting
+    ``>=`` into ``> =`` (a Spark parse error), and each agrees with
+    its fold spelling."""
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW gco_t AS SELECT id AS k FROM range(3)"
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMP VIEW gco_u AS SELECT id % 3 AS k, "
+        "id % 2 AS x, concat('s', id) AS s FROM range(6)"
+    )
+    for sql in (
+        "SELECT c.k, groupConcat(',', 2)(if(o.x >= 1, o.s, 'z')) AS g "
+        "FROM gco_t AS c JOIN gco_u AS o ON c.k = o.k GROUP BY c.k",
+        "SELECT k, groupConcat(',', 2)(if(x >= 1, s, 'z')) AS g "
+        "FROM gco_u GROUP BY k",
+    ):
+        replan = transpile(sql)
+        fold = transpile(sql + " HAVING count(*) >= 0")
+        assert "__gc_rn0" in replan and "__gc_rn0" not in fold, sql
+        assert "> =" not in replan, sql
+
+        def rows(q):
+            return sorted(
+                (r.k, sorted(r.g.split(","))) for r in spark.sql(q).collect()
             )
 
         assert rows(replan) == rows(fold), sql

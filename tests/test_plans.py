@@ -214,9 +214,9 @@ def test_with_totals_is_single_pass_expand(spark, sf_dir):
     """WITH TOTALS → GROUPING SETS must compute the totals row via
     grouping-set Expand in the SAME aggregate pass: exactly one scan,
     no union of a per-group and a global aggregate."""
-    from clickhouse_vs_dbt_spark.dialect import q_dialect_with_totals
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_with_totals(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_with_totals"](spark, sf_dir))
     assert "Expand" in plan
     assert plan.count("Scan parquet") == 1
     assert "Union" not in plan
@@ -226,9 +226,9 @@ def test_array_join_clause_generates_in_scan_stage(spark, sf_dir):
     """The ARRAY JOIN rewrite must plan as Generate explode directly
     over the scan — no exchange between scan and generator, filter
     still pushed to the scan."""
-    from clickhouse_vs_dbt_spark.dialect import q_dialect_array_join_clause
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_array_join_clause(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_array_join_clause"](spark, sf_dir))
     assert "Generate explode" in plan
     gen = plan.index("Generate explode")
     scan = plan.index("Scan parquet")
@@ -256,9 +256,9 @@ def test_asof_dialect_avoids_nested_loop_domain_join(spark, sf_dir):
     keyed window shuffle, linear.  Catalyst's LATERAL decorrelation
     fallback builds a ts-domain BroadcastNestedLoopJoin (quadratic),
     which must never be the front-door plan."""
-    from clickhouse_vs_dbt_spark.dialect import q_dialect_asof_join
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_asof_join(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_asof_join"](spark, sf_dir))
     assert "NestedLoop" not in plan
     assert "last_value" in plan and "Union" in plan
 
@@ -266,9 +266,9 @@ def test_asof_dialect_avoids_nested_loop_domain_join(spark, sf_dir):
 def test_limit_by_dialect_is_single_keyed_window(spark, sf_dir):
     """LIMIT n BY must plan as one row_number window partitioned by
     the BY keys — no join, no extra aggregate."""
-    from clickhouse_vs_dbt_spark.dialect import q_dialect_limit_by
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_limit_by(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_limit_by"](spark, sf_dir))
     assert "row_number" in plan and "Join" not in plan
 
 
@@ -306,9 +306,9 @@ def test_r7_ties_boundary_plan_has_no_window(spark, sf_dir):
     """LIMIT n WITH TIES: two-pass boundary — TakeOrderedAndProject
     over a pruned key scan + broadcast boundary filter; no Window
     operator anywhere in the executed plan."""
-    from clickhouse_vs_dbt_spark.dialect import q_dialect_modern_sql
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_modern_sql(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_modern_sql"](spark, sf_dir))
     assert "Window" not in plan
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastExchange" in plan or "BroadcastNestedLoop" in plan
@@ -318,9 +318,9 @@ def test_r7_sample_clause_filter_reaches_scan(spark, sf_dir):
     """Transpiled SAMPLE k OFFSET m: the hash-range predicate is a
     DataFilter in the scan stage — no join, no extra exchange beyond
     the aggregate's."""
-    from clickhouse_vs_dbt_spark.dialect import q_dialect_sample_clause
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_sample_clause(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_sample_clause"](spark, sf_dir))
     assert "2246822519" in plan.split("FileScan")[1].split("ReadSchema")[0] \
         or "2246822519" in plan  # mixer constant pushed to the scan
     assert "Join" not in plan
@@ -330,9 +330,9 @@ def test_r7_sample_clause_filter_reaches_scan(spark, sf_dir):
 def test_r7_star_modifier_expansion_prunes_columns(spark, sf_dir):
     """* EXCEPT/REPLACE/APPLY expands to a plain projection — the scan
     reads ONLY the surviving columns (ReadSchema pruning intact)."""
-    from clickhouse_vs_dbt_spark.dialect import q_dialect_star_modifiers
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_star_modifiers(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_star_modifiers"](spark, sf_dir))
     scan = plan.split("ReadSchema:")[1].splitlines()[0]
     assert "s_suppkey" in scan and "s_name" in scan
     assert "s_acctbal" not in scan  # EXCEPT'd column never read
@@ -342,9 +342,9 @@ def test_r7_state_merge_is_stacked_hash_aggregates(spark, sf_dir):
     """-State/-Merge two-level aggregation: two stacked HashAggregate
     pairs with map-side partials, no Window, no sort of the raw
     table."""
-    from clickhouse_vs_dbt_spark.dialect import q_dialect_state_merge
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_state_merge(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_state_merge"](spark, sf_dir))
     assert plan.count("HashAggregate") >= 4  # partial+final x 2 levels
     assert "Window" not in plan and "SortMergeJoin" not in plan
 
@@ -449,11 +449,9 @@ def test_r17_group_array_tiers_window_group_limit(spark, sf_dir):
     into its keyed exchange instead of collecting whole groups.
     Either degradation (re-plan lost → collect fold; Partial limit
     lost → full-group shuffle) fails here."""
-    from clickhouse_vs_dbt_spark.dialect import (
-        q_dialect_group_array_tiers,
-    )
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_group_array_tiers(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_group_array_tiers"](spark, sf_dir))
     # two tiers x Partial+Final
     assert plan.count("WindowGroupLimit") == 4
     assert "Partial" in plan and "Final" in plan
@@ -465,11 +463,9 @@ def test_r17_interval_sweeps_preaggregates(spark, sf_dir):
     collect — the partial HashAggregate compresses duplicate
     endpoint pairs map-side before any shuffle, so the sweep folds
     see distinct pairs with batched deltas, not every row."""
-    from clickhouse_vs_dbt_spark.dialect import (
-        q_dialect_interval_sweeps,
-    )
+    from clickhouse_vs_dbt_spark.dialect import QUERIES
 
-    plan = _plan(q_dialect_interval_sweeps(spark, sf_dir))
+    plan = _plan(QUERIES["dialect_interval_sweeps"](spark, sf_dir))
     assert "__iv_s" in plan and "__iv_c" in plan
     # the (keys, s, e) pre-aggregate: partial + final HashAggregate
     # below the ObjectHashAggregate collect stage

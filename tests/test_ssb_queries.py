@@ -67,6 +67,24 @@ def test_every_query_has_callable(spark):
         assert callable(fn), name
 
 
+def test_registries_share_names_and_reject_duplicates(monkeypatch):
+    # the same names; three operator modules list their oracles in
+    # another order than their queries
+    assert entrymod.queries().keys() == entrymod.oracle_sql().keys()
+
+    class A:
+        QUERIES = {"q": None}
+        ORACLES = {"q": "SELECT 1"}
+
+    class B:
+        QUERIES = {"r": None}
+        ORACLES = {"q": "SELECT 2"}
+
+    monkeypatch.setattr(entrymod, "_MODULES", [A, B])
+    with pytest.raises(ValueError, match="duplicate ORACLES names"):
+        entrymod.oracle_sql()
+
+
 def test_second_star_call_launches_no_job(spark, sf_dir):
     """common.star memoizes its unexecuted scan per session: a second
     call neither re-lists the year directories nor re-reads a footer

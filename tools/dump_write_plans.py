@@ -6,29 +6,34 @@ rebalance evidence to A/B timings and file counts).
 
 Runs the named ``queries()`` entries, then reads the session's
 SQLAppStatusStore and writes each execution's physicalPlanDescription
-(the post-AQE executed plan) to ``plans/r17/<query>_writes.txt``.
+(the post-AQE executed plan) to ``<out_dir>/<query>_writes.txt``.
 
-Usage: python tools/dump_write_plans.py q1 [q2 ...]
+Usage: SPARK_GRAFT_SF_DIR=<sf dir> \\
+           python tools/dump_write_plans.py <out_dir> q1 [q2 ...]
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> int:
-    names = sys.argv[1:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    if len(sys.argv) < 3 or "SPARK_GRAFT_SF_DIR" not in os.environ:
+        print(__doc__, file=sys.stderr)
+        return 2
+    out_dir, names = sys.argv[1], sys.argv[2:]
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
 
     import __spark_entry__ as e
     from clickhouse_vs_dbt_spark.session import get_spark
 
     spark = get_spark("dump_write_plans")
     qs = e.queries()
-    os.makedirs("/root/repo/plans/r17", exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     store = spark._jsparkSession.sharedState().statusStore()
     for name in names:
         start = store.executionsList().size()
@@ -36,7 +41,7 @@ def main() -> int:
             "overwrite"
         ).save()
         lst = store.executionsList()
-        out = f"/root/repo/plans/r17/{name}_writes.txt"
+        out = os.path.join(out_dir, f"{name}_writes.txt")
         with open(out, "w") as f:
             for i in range(start, lst.size()):
                 ex = lst.apply(i)
