@@ -930,7 +930,7 @@ _TEMPLATES = _template_table((
     ("splitByNonAlpha", 1,
      "filter(split({0}, '[^A-Za-z0-9]+'), __t -> __t != '')"),
     # textbook metrics via the Arrow-UDF precedent (VERDICT r9
-    # item 5; compat.py _register_vectorized) — char-level, the
+    # item 5; compat.py _vectorized_udfs) — char-level, the
     # documented editDistance→levenshtein UTF-8 caveat applies
     ("damerauLevenshteinDistance", 2, "ch_damerau_levenshtein({0}, {1})"),
     ("jaroSimilarity", 2, "ch_jaro({0}, {1})"),
@@ -16927,14 +16927,17 @@ def _copy_on_write(spark: "SparkSession", target: str, df) -> None:
 
     path = _table_location(spark, target)
     tmp = tempfile.mkdtemp(prefix="ch_mutate_")
-    rebalanced(df).write.mode("overwrite").parquet(tmp)
-    for f in glob.glob(os.path.join(path, "*")):
-        if os.path.isdir(f):
-            shutil.rmtree(f)
-        else:
-            os.remove(f)
-    for f in glob.glob(os.path.join(tmp, "*")):
-        shutil.move(f, os.path.join(path, os.path.basename(f)))
+    try:
+        rebalanced(df).write.mode("overwrite").parquet(tmp)
+        for f in glob.glob(os.path.join(path, "*")):
+            if os.path.isdir(f):
+                shutil.rmtree(f)
+            else:
+                os.remove(f)
+        for f in glob.glob(os.path.join(tmp, "*")):
+            shutil.move(f, os.path.join(path, os.path.basename(f)))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     spark.sql(f"REFRESH TABLE {target}")
 
 
@@ -16953,14 +16956,17 @@ def _recreate_table_as(spark: "SparkSession", target: str, df) -> None:
 
     loc = _table_location(spark, target)
     tmp = tempfile.mkdtemp(prefix="ch_schema_")
-    rebalanced(df).write.mode("overwrite").parquet(tmp)
-    cols = ", ".join(f"{n} {t}" for n, t in df.dtypes)
-    spark.sql(f"DROP TABLE {target}")
-    os.makedirs(loc, exist_ok=True)
-    for f in glob.glob(os.path.join(loc, "*")):
-        shutil.rmtree(f) if os.path.isdir(f) else os.remove(f)
-    for f in glob.glob(os.path.join(tmp, "*")):
-        shutil.move(f, loc)
+    try:
+        rebalanced(df).write.mode("overwrite").parquet(tmp)
+        cols = ", ".join(f"{n} {t}" for n, t in df.dtypes)
+        spark.sql(f"DROP TABLE {target}")
+        os.makedirs(loc, exist_ok=True)
+        for f in glob.glob(os.path.join(loc, "*")):
+            shutil.rmtree(f) if os.path.isdir(f) else os.remove(f)
+        for f in glob.glob(os.path.join(tmp, "*")):
+            shutil.move(f, loc)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     spark.sql(
         f"CREATE TABLE {target} ({cols}) USING parquet "
         f"LOCATION '{loc}'"
@@ -17245,13 +17251,16 @@ def _partition_scoped_rewrite(
     val = part.strip().strip("'\"")
     pdir = os.path.join(base, f"{pcol}={val}")
     tmp = tempfile.mkdtemp(prefix="ch_mutate_part_")
-    rebalanced(df.drop(pcol)).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(pdir, ignore_errors=True)
-    os.makedirs(pdir, exist_ok=True)
-    for f in glob.glob(os.path.join(tmp, "*")):
-        if os.path.basename(f).startswith("_"):
-            continue
-        shutil.move(f, os.path.join(pdir, os.path.basename(f)))
+    try:
+        rebalanced(df.drop(pcol)).write.mode("overwrite").parquet(tmp)
+        shutil.rmtree(pdir, ignore_errors=True)
+        os.makedirs(pdir, exist_ok=True)
+        for f in glob.glob(os.path.join(tmp, "*")):
+            if os.path.basename(f).startswith("_"):
+                continue
+            shutil.move(f, os.path.join(pdir, os.path.basename(f)))
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     spark.sql(f"REFRESH TABLE {target}")
 
 
@@ -18468,6 +18477,20 @@ def _reset_script_tables(
         _DETACHED_TABLES.pop(t, None)
 
 
+def _gate_scratch(spark: SparkSession, gate: str) -> str:
+    """An empty scratch directory for ``gate``'s own parquet inputs:
+    one fixed path per gate under the session's warehouse directory,
+    replaced on each run, so runs leave no temp directories behind."""
+    import os
+    import shutil
+
+    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    path = f"{wh}/gate_scratch/{gate}"
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
+
+
 # --- gated proofs: verbatim ClickHouse queries through the front door ---
 
 # 1. aggregate combinators + parametric aggregate + exact-decimal sums.
@@ -18726,9 +18749,7 @@ def q_dialect_file_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the CH query reads it back through Spark's direct file query
     (``parquet.`path``` — the same FileSystem machinery s3()/url()
     resolve through; swapping scheme is configuration)."""
-    import tempfile
-
-    path = tempfile.mkdtemp(prefix="dialect_file_") + "/orders_slice"
+    path = _gate_scratch(spark, "dialect_file_read") + "/orders_slice"
     rebalanced(
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -21218,9 +21239,8 @@ def q_ch_script_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One verbatim ClickHouse script driving a table's whole life
     (module doc #16); every statement routes through
     :func:`run_clickhouse_script`."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="ch_lifecycle_")
+    spark.sql("DROP TABLE IF EXISTS lc_t")
+    base = _gate_scratch(spark, "ch_script_lifecycle")
     tbl_path = base + "/tbl"
     ins_path = base + "/ins"
     o = load_table(spark, sf_dir, "orders").select(
@@ -21254,7 +21274,6 @@ def q_ch_script_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
            toFloat64(sum(toDecimal64(o_totalprice, 2))) AS total
     FROM lc_t GROUP BY o_orderstatus;
     """
-    spark.sql("DROP TABLE IF EXISTS lc_t")
     register_views(spark, sf_dir, ("orders",))
     results = run_clickhouse_script(
         spark, script, path_overrides={"lc_t": tbl_path}
@@ -21293,9 +21312,9 @@ def q_ch_script_schema_evolution(
     """One verbatim ClickHouse script driving schema evolution
     (module doc #16b); every statement routes through
     :func:`run_clickhouse_script`."""
-    import tempfile
-
-    base = tempfile.mkdtemp(prefix="ch_schema_evo_")
+    spark.sql("DROP TABLE IF EXISTS evo_t")
+    spark.sql("DROP TABLE IF EXISTS orders_evolved")
+    base = _gate_scratch(spark, "ch_script_schema_evolution")
     src = base + "/src"
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -21325,11 +21344,9 @@ def q_ch_script_schema_evolution(
            toFloat64(sum(o_totalprice)) AS total
     FROM orders_evolved GROUP BY status, region;
     """
-    spark.sql("DROP TABLE IF EXISTS evo_t")
-    spark.sql("DROP TABLE IF EXISTS orders_evolved")
     register_views(spark, sf_dir, ("orders",))
-    # external path (fresh tempdir): no warehouse-location residue
-    # across processes can break the CREATE
+    # external path (emptied scratch dir): no warehouse-location
+    # residue across processes can break the CREATE
     results = run_clickhouse_script(
         spark, script, path_overrides={"evo_t": tbl_path}
     )

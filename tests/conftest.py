@@ -1,10 +1,12 @@
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, whichever directory it was cloned to
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from clickhouse_vs_dbt_spark.session import get_spark  # noqa: E402
 

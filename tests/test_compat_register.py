@@ -1,0 +1,124 @@
+"""``register_clickhouse_compat`` in a fresh session: one call makes
+every compat function resolvable, each SQL function computes its body,
+a repeat call is free, and a failed registration leaves the session
+unmarked so the next call registers everything."""
+
+from __future__ import annotations
+
+import itertools
+
+import pytest
+
+from clickhouse_vs_dbt_spark import compat
+
+# sample values per parameter type, NULL included (no zero BIGINT:
+# intDiv/modulo raise on a zero divisor under ANSI mode)
+_SAMPLES = {
+    "DATE": ["DATE'2024-02-29'", "DATE'1995-12-31'", "DATE'1970-01-01'"],
+    "TIMESTAMP": [
+        "TIMESTAMP'2024-02-29 13:45:07'", "TIMESTAMP'1995-12-31 23:59:59'",
+    ],
+    "INT": ["3", "-14"],
+    "BIGINT": ["17", "-5", "9007199254740993"],
+    "STRING": ["'abc'", "''", "'a,b,,c'", "'ß,'"],
+}
+
+
+def _temporary_names(spark) -> set[str]:
+    return {f.name.lower() for f in spark.catalog.listFunctions()
+            if f.isTemporary}
+
+
+def _all_names() -> set[str]:
+    return {n.lower() for n in compat._COMPAT_FUNCS} | {
+        n.lower() for n, _ in compat._vectorized_udfs()
+    }
+
+
+@pytest.fixture
+def fresh(spark):
+    return spark.newSession()
+
+
+def test_one_call_registers_every_function(fresh):
+    assert not _all_names() & _temporary_names(fresh)
+    compat.register_clickhouse_compat(fresh)
+    assert _all_names() <= _temporary_names(fresh)
+    assert len(compat._vectorized_udfs()) == 28
+    assert len(compat._COMPAT_FUNCS) == 34
+
+
+def _params(sig: str) -> tuple[list[tuple[str, str]], str]:
+    """``(d DATE, n INT) RETURNS DATE`` -> ([(d, DATE), (n, INT)], DATE)."""
+    args, ret = sig.split(" RETURNS ")
+    params = [tuple(p.split()) for p in args.strip("()").split(",")]
+    return params, ret.strip()
+
+
+@pytest.fixture(scope="module")
+def registered(spark):
+    s = spark.newSession()
+    compat.register_clickhouse_compat(s)
+    return s
+
+
+@pytest.mark.parametrize("name", sorted(compat._COMPAT_FUNCS))
+def test_sql_function_equals_its_body(registered, name):
+    sig, body = compat._COMPAT_FUNCS[name]
+    params, ret = _params(sig)
+    # every combination of sample values, each parameter also NULL
+    cols = [
+        [f"CAST({v} AS {t})" for v in _SAMPLES[t] + ["NULL"]]
+        for _, t in params
+    ]
+    rows = ", ".join(
+        "(" + ", ".join(combo) + ")" for combo in itertools.product(*cols)
+    )
+    names = ", ".join(p for p, _ in params)
+    got = registered.sql(
+        f"SELECT {names}, {name}({names}) AS got, "
+        f"CAST(({body}) AS {ret}) AS want "
+        f"FROM VALUES {rows} AS t({names})"
+    ).collect()
+    assert len(got) == len(list(itertools.product(*cols)))
+    bad = [r for r in got if r["got"] != r["want"]]
+    assert not bad, bad[:3]
+    assert any(r["got"] is None for r in got)
+
+
+def test_second_call_issues_no_round_trip(fresh, monkeypatch):
+    compat.register_clickhouse_compat(fresh)
+    calls = []
+
+    def refuse(*args, **kwargs):
+        calls.append(args)
+        raise AssertionError("registration round trip on a second call")
+
+    monkeypatch.setattr(fresh, "sql", refuse)
+    monkeypatch.setattr(type(fresh.udf), "register", refuse)
+    compat.register_clickhouse_compat(fresh)
+    assert calls == []
+
+
+def test_failed_registration_raises_and_leaves_session_unmarked(
+    fresh, monkeypatch
+):
+    broken = dict(compat._COMPAT_FUNCS)
+    broken["toYear"] = ("(d DATE) RETURNS INT", "year(d")
+    monkeypatch.setattr(compat, "_COMPAT_FUNCS", broken)
+    with pytest.raises(Exception, match="(?i)syntax|parse"):
+        compat.register_clickhouse_compat(fresh)
+    assert fresh.conf.get(compat._REGISTERED_FLAG, None) is None
+    monkeypatch.undo()
+    compat.register_clickhouse_compat(fresh)
+    assert fresh.conf.get(compat._REGISTERED_FLAG, None) is not None
+    assert _all_names() <= _temporary_names(fresh)
+    assert fresh.sql("SELECT toYear(DATE'1993-05-01') AS y").first().y == 1993
+
+
+def test_registers_without_pinned_threads(fresh, monkeypatch):
+    # PYSPARK_PIN_THREAD=false: PySpark returns the session it was
+    # given instead of a thread-target wrapper
+    monkeypatch.setattr(compat, "inheritable_thread_target", lambda s: s)
+    compat.register_clickhouse_compat(fresh)
+    assert _all_names() <= _temporary_names(fresh)

@@ -8,6 +8,8 @@ can't (approx aggregates whose registers differ across engines).
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 from clickhouse_vs_dbt_spark.catalog import register_views
@@ -1284,7 +1286,8 @@ def test_migration_demo_script_runs_on_managed_tables(spark):
     for t in ("demo_events", "demo_part"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-    with open("/root/repo/tools/migration_demo.sql") as f:
+    demo = Path(__file__).resolve().parents[1] / "tools/migration_demo.sql"
+    with open(demo) as f:
         script = f.read()
     results = run_clickhouse_script(spark, script)
     kinds = [k for k, _ in results]

@@ -18,8 +18,11 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 import pytest
+
+ROOT = Path(__file__).resolve().parents[1]
 
 SWEEP_SF_DIR = "/root/testdata/sf0.01"
 
@@ -28,7 +31,7 @@ SWEEP_SF_DIR = "/root/testdata/sf0.01"
 def test_full_oracle_sweep():
     proc = subprocess.run(
         [sys.executable, "tools/oracle_check.py", SWEEP_SF_DIR],
-        cwd="/root/repo",
+        cwd=ROOT,
         capture_output=True,
         text=True,
         timeout=3600,
@@ -57,10 +60,9 @@ def test_rotating_never_sampled_slice_cross_scale():
     import json
 
     sampled: set[str] = set()
-    rounds = sorted(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+    rounds = sorted(glob.glob(str(ROOT / "CORRECTNESS_r*.json")))
     for f in rounds:
         sampled |= set(json.load(open(f)))
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as entry
 
     never = sorted(set(entry.queries()) - sampled)
@@ -71,7 +73,7 @@ def test_rotating_never_sampled_slice_cross_scale():
     proc = subprocess.run(
         [sys.executable, "tools/oracle_check.py",
          "/root/testdata/sf0.001", *slice_],
-        cwd="/root/repo",
+        cwd=ROOT,
         capture_output=True,
         text=True,
         timeout=3600,

@@ -5,10 +5,6 @@ arraySort(f, arr) miscompile)."""
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_known_names_map_or_refuse(spark):
     from tools.passthrough_audit import run_audit

@@ -7,8 +7,10 @@ Usage: python tools/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 # (query name, the scale property its plan demonstrates)
 SHOWCASE = [
@@ -187,7 +189,7 @@ def main() -> int:
         plan = df._jdf.queryExecution().executedPlan().toString()
         out += [f"## {name}", "", f"*{why}*", "", "```", plan.rstrip(), "```", ""]
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(ROOT / "PLANS.md", "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(SHOWCASE)} plans)")
     return 0

@@ -30,6 +30,7 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+from pathlib import Path
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -69,7 +70,7 @@ if __name__ == "__main__":
     src = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     dst = (
         sys.argv[2] if len(sys.argv) > 2
-        else "/root/repo/.localdata/sf1"
+        else str(Path(__file__).resolve().parents[1] / ".localdata/sf1")
     )
     reps = int(sys.argv[3]) if len(sys.argv) > 3 else 10
     generate(src, dst, reps)
