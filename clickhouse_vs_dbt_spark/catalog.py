@@ -19,6 +19,8 @@ from collections.abc import Iterable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_vs_dbt_spark.session import scratch_dir
+
 # Fixture tables (TESTDATA.md): one parquet file per table, read
 # with its declared schema in Spark DDL.  The types are the ones Spark
 # infers from the footers of every fixture generation (checked in
@@ -89,8 +91,6 @@ def _rechunk(spark: SparkSession, sf_dir: str, name: str) -> str | None:
     key = (sf_dir, name)
     path = _CHUNK_CACHE.get(key)
     if path is None:
-        import tempfile
-
         n = spark.sparkContext.defaultParallelism
         # Splittability is governed by BYTE ranges, not row groups:
         # Spark carves a file into ceil(size / maxPartitionBytes)
@@ -116,7 +116,7 @@ def _rechunk(spark: SparkSession, sf_dir: str, name: str) -> str | None:
         if os.path.getsize(src) // mpb >= n:
             _CHUNK_CACHE[key] = ""  # already splits wide enough
             return None
-        path = tempfile.mkdtemp(prefix=f"fixture_chunks_{name}_")
+        path = scratch_dir(f"fixture_chunks_{name}")
         _read(spark, name, src).repartition(n).write.mode("overwrite").parquet(path)
         _CHUNK_CACHE[key] = path
     return path or None

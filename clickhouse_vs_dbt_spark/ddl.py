@@ -44,6 +44,7 @@ from __future__ import annotations
 import re
 
 from clickhouse_vs_dbt_spark.dialect import DialectError
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 _SCALAR = {
     "UInt8": "SMALLINT",
@@ -840,9 +841,7 @@ class MaterializedView:
         # the moment the source's files are mutated/compacted away
         # (ALTER DELETE / OPTIMIZE rewrite them)
         if not self.target:
-            import tempfile
-
-            self.target = tempfile.mkdtemp(prefix=f"mv_state_{self.name}_")
+            self.target = scratch_dir(f"mv_state_{self.name}")
         self._version += 1
         path = f"{self.target}/v{self._version}"
         # NO rebalance here (r16, measured): the state is a tiny
@@ -919,15 +918,9 @@ class MaterializedView:
         state is re-read from its persisted parquet version per
         trigger, so the plan never accumulates a cross-batch lineage
         chain.  Returns the started StreamingQuery."""
-        import os
-        import tempfile
-        import uuid
-
         if not self.target:
-            self.target = tempfile.mkdtemp(prefix=f"mv_state_{self.name}_")
-        ckpt = checkpoint_dir or os.path.join(
-            tempfile.gettempdir(), f"mv_ckpt_{self.name}_{uuid.uuid4().hex[:8]}"
-        )
+            self.target = scratch_dir(f"mv_state_{self.name}")
+        ckpt = checkpoint_dir or scratch_dir(f"mv_ckpt_{self.name}")
 
         def _fold(batch: "DataFrame", batch_id: int) -> None:
             self.apply_batch(batch.sparkSession, batch)
@@ -1225,8 +1218,6 @@ def _write_customer_tbl(spark: SparkSession, sf_dir: str) -> str:
     deterministically from the customer fixture — the missing SSB
     columns are pure functions of the fixture keys, reproduced
     identically by the oracle SQL."""
-    import tempfile
-
     c = load_table(spark, sf_dir, "customer")
     out = c.select(
         F.col("c_custkey").alias("C_CUSTKEY"),
@@ -1238,7 +1229,7 @@ def _write_customer_tbl(spark: SparkSession, sf_dir: str) -> str:
         F.concat(F.lit("PH_"), F.col("c_custkey") % 100).alias("C_PHONE"),
         F.col("c_mktsegment").alias("C_MKTSEGMENT"),
     )
-    path = tempfile.mkdtemp(prefix="ddl_customer_tbl_")
+    path = scratch_dir("ddl_customer_tbl")
     out.write.mode("overwrite").option("sep", "|").option(
         "header", "false"
     ).csv(path)
@@ -1596,8 +1587,6 @@ def q_ddl_final_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     ClickHouse FINAL aggregate reads the collapsed (max-version) rows.
     The DuckDB oracle derives the identical versioned relation inline
     and collapses with a window — independent spelling, same rows."""
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders")
     v1 = o.select(
         "o_orderkey",
@@ -1611,7 +1600,7 @@ def q_ddl_final_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("o_totalprice") + F.lit(100.0)).alias("o_totalprice"),
         F.lit(2).cast("smallint").alias("ver"),
     )
-    path = tempfile.mkdtemp(prefix="ddl_final_") + "/orders_versioned"
+    path = scratch_dir("ddl_final") + "/orders_versioned"
     rebalanced(v1.unionByName(v2)).write.mode("overwrite").parquet(path)
     spark.sql("DROP TABLE IF EXISTS orders_versioned")
     spark.sql(transpile_ddl(REFERENCE_REPLACING_DDL, path_override=path))
@@ -1657,8 +1646,6 @@ def q_ddl_mv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     its persisted parquet version per trigger).  Convergence to the
     one-shot aggregate — the identical oracle as the batch roundtrip —
     proves one DDL front door drives both maintenance modes."""
-    import tempfile
-
     from clickhouse_vs_dbt_spark.streaming.events_stream import (
         events_raw_schema,
         normalize_ts,
@@ -1667,7 +1654,7 @@ def q_ddl_mv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     mv = transpile_materialized_view(
         REFERENCE_MV_DDL.replace("mv_events_by_type", "mv_events_stream"),
-        target_path=tempfile.mkdtemp(prefix="ddl_mv_stream_"),
+        target_path=scratch_dir("ddl_mv_stream"),
     )
     src = _batched_dir(spark, sf_dir)
     stream = normalize_ts(
@@ -1715,8 +1702,6 @@ def q_ddl_final_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-cancelled state rows — updated prices for %3 keys, nothing for
     %15 keys.  Oracle: the same relation collapsed with a
     net-sign + window spelling in DuckDB."""
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1749,7 +1734,7 @@ def q_ddl_final_versioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(2).cast("long").alias("ver"),
         )
     )
-    path = tempfile.mkdtemp(prefix="ddl_final_vc_") + "/orders_vc"
+    path = scratch_dir("ddl_final_vc") + "/orders_vc"
     rebalanced(
         p1.unionByName(c1).unionByName(p2).unionByName(c2)
     ).write.mode("overwrite").parquet(path)
@@ -1820,8 +1805,6 @@ def q_ddl_final_summing(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (exact decimal amounts) with a deterministic
     representative for the string column.  The dtype-aware resolver
     decides which columns sum."""
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders")
     rows = o.selectExpr(
         "o_orderkey % 1000 AS k",
@@ -1829,7 +1812,7 @@ def q_ddl_final_summing(spark: SparkSession, sf_dir: str) -> DataFrame:
         "CAST(o_totalprice AS DECIMAL(18,2)) AS amount",
         "o_orderstatus AS tag",
     )
-    path = tempfile.mkdtemp(prefix="ddl_final_sum_") + "/orders_sum"
+    path = scratch_dir("ddl_final_sum") + "/orders_sum"
     rebalanced(rows).write.mode("overwrite").parquet(path)
     spark.sql("DROP TABLE IF EXISTS orders_sum")
     spark.sql(transpile_ddl(REFERENCE_SUM_DDL, path_override=path))
@@ -1879,8 +1862,6 @@ def q_ddl_final_collapsing(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic lexicographic-max refinement coincides with
     ClickHouse's insertion-order pick here because the restated
     price is strictly higher than the cancelled original."""
-    import tempfile
-
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1899,7 +1880,7 @@ def q_ddl_final_collapsing(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(25.0))
         .select("*", F.lit(-1).cast("tinyint").alias("sign"))
     )
-    path = tempfile.mkdtemp(prefix="ddl_final_cl_") + "/orders_cl"
+    path = scratch_dir("ddl_final_cl") + "/orders_cl"
     rebalanced(
         s1.unionByName(c1).unionByName(s2).unionByName(c2)
     ).write.mode("overwrite").parquet(path)

@@ -161,6 +161,7 @@ from clickhouse_vs_dbt_spark.catalog import (
     register_views,
 )
 from clickhouse_vs_dbt_spark.compat import register_clickhouse_compat
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 _TOKEN_RE = re.compile(
     r"""
@@ -2495,15 +2496,12 @@ def _uniq_finalize_sql(ents_expr: str) -> str:
     runs, which is NOT globally sorted."""
     m, scale = _HLL_M, 1 << 53
     # present-bucket maxima: positions whose NEXT code starts a new
-    # bucket.  At the last position element_at(__ue, __ui + 1) is out
-    # of range, which raises under ANSI mode (Spark 4's default); the
-    # `__ui = size(__ue)` disjunct is true there and OR short-circuits,
-    # so the out-of-range read never runs
+    # bucket; past the last position try_element_at is NULL
     mx = (
         "CASE WHEN size(__ue) = 0 THEN CAST(array() AS ARRAY<INT>) "
         "ELSE filter(sequence(1, size(__ue)), __ui -> "
         "__ui = size(__ue) OR element_at(__ue, __ui) div 64 != "
-        "element_at(__ue, __ui + 1) div 64) END"
+        "try_element_at(__ue, __ui + 1) div 64) END"
     )
     raw = f"{_hll_num()} / CAST(__ud AS DOUBLE)"
     est = (
@@ -2595,15 +2593,14 @@ def _qt_state_sql(x: str) -> str:
     run start and a ``zip_with`` against the shifted starts emits
     (value, run length) directly — 0.31 s for the identical state
     (A/B-verified element-for-element)."""
-    # run starts: element_at(L, __qi - 1) at __qi = 1 reads index 0,
-    # which raises; the `__qi = 1` disjunct is true there and OR
-    # short-circuits, so that read never runs
+    # run starts; the predecessor is read 0-based with get(), which is
+    # NULL at __qi = 1 (try_element_at still raises on index 0)
     rle = (
         "CASE WHEN size(L) = 0 "
         "THEN CAST(array() AS ARRAY<STRUCT<v: INT, c: BIGINT>>) "
         "ELSE element_at(transform(array("
         "filter(sequence(1, size(L)), __qi -> __qi = 1 "
-        "OR element_at(L, __qi) != element_at(L, __qi - 1))), "
+        "OR element_at(L, __qi) != get(L, __qi - 2))), "
         "__qs -> zip_with(__qs, "
         "concat(slice(__qs, 2, size(__qs) - 1), array(size(L) + 1)), "
         "(__qa, __qb) -> named_struct('v', element_at(L, __qa), "
@@ -16923,21 +16920,17 @@ def _copy_on_write(spark: "SparkSession", target: str, df) -> None:
     import glob
     import os
     import shutil
-    import tempfile
 
     path = _table_location(spark, target)
-    tmp = tempfile.mkdtemp(prefix="ch_mutate_")
-    try:
-        rebalanced(df).write.mode("overwrite").parquet(tmp)
-        for f in glob.glob(os.path.join(path, "*")):
-            if os.path.isdir(f):
-                shutil.rmtree(f)
-            else:
-                os.remove(f)
-        for f in glob.glob(os.path.join(tmp, "*")):
-            shutil.move(f, os.path.join(path, os.path.basename(f)))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = scratch_dir("ch_mutate")
+    rebalanced(df).write.mode("overwrite").parquet(tmp)
+    for f in glob.glob(os.path.join(path, "*")):
+        if os.path.isdir(f):
+            shutil.rmtree(f)
+        else:
+            os.remove(f)
+    for f in glob.glob(os.path.join(tmp, "*")):
+        shutil.move(f, os.path.join(path, os.path.basename(f)))
     spark.sql(f"REFRESH TABLE {target}")
 
 
@@ -16952,21 +16945,17 @@ def _recreate_table_as(spark: "SparkSession", target: str, df) -> None:
     import glob
     import os
     import shutil
-    import tempfile
 
     loc = _table_location(spark, target)
-    tmp = tempfile.mkdtemp(prefix="ch_schema_")
-    try:
-        rebalanced(df).write.mode("overwrite").parquet(tmp)
-        cols = ", ".join(f"{n} {t}" for n, t in df.dtypes)
-        spark.sql(f"DROP TABLE {target}")
-        os.makedirs(loc, exist_ok=True)
-        for f in glob.glob(os.path.join(loc, "*")):
-            shutil.rmtree(f) if os.path.isdir(f) else os.remove(f)
-        for f in glob.glob(os.path.join(tmp, "*")):
-            shutil.move(f, loc)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = scratch_dir("ch_schema")
+    rebalanced(df).write.mode("overwrite").parquet(tmp)
+    cols = ", ".join(f"{n} {t}" for n, t in df.dtypes)
+    spark.sql(f"DROP TABLE {target}")
+    os.makedirs(loc, exist_ok=True)
+    for f in glob.glob(os.path.join(loc, "*")):
+        shutil.rmtree(f) if os.path.isdir(f) else os.remove(f)
+    for f in glob.glob(os.path.join(tmp, "*")):
+        shutil.move(f, loc)
     spark.sql(
         f"CREATE TABLE {target} ({cols}) USING parquet "
         f"LOCATION '{loc}'"
@@ -17245,22 +17234,18 @@ def _partition_scoped_rewrite(
     import glob
     import os
     import shutil
-    import tempfile
 
     base = _table_location(spark, target)
     val = part.strip().strip("'\"")
     pdir = os.path.join(base, f"{pcol}={val}")
-    tmp = tempfile.mkdtemp(prefix="ch_mutate_part_")
-    try:
-        rebalanced(df.drop(pcol)).write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(pdir, ignore_errors=True)
-        os.makedirs(pdir, exist_ok=True)
-        for f in glob.glob(os.path.join(tmp, "*")):
-            if os.path.basename(f).startswith("_"):
-                continue
-            shutil.move(f, os.path.join(pdir, os.path.basename(f)))
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    tmp = scratch_dir("ch_mutate_part")
+    rebalanced(df.drop(pcol)).write.mode("overwrite").parquet(tmp)
+    shutil.rmtree(pdir, ignore_errors=True)
+    os.makedirs(pdir, exist_ok=True)
+    for f in glob.glob(os.path.join(tmp, "*")):
+        if os.path.basename(f).startswith("_"):
+            continue
+        shutil.move(f, os.path.join(pdir, os.path.basename(f)))
     spark.sql(f"REFRESH TABLE {target}")
 
 
@@ -18477,20 +18462,6 @@ def _reset_script_tables(
         _DETACHED_TABLES.pop(t, None)
 
 
-def _gate_scratch(spark: SparkSession, gate: str) -> str:
-    """An empty scratch directory for ``gate``'s own parquet inputs:
-    one fixed path per gate under the session's warehouse directory,
-    replaced on each run, so runs leave no temp directories behind."""
-    import os
-    import shutil
-
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = f"{wh}/gate_scratch/{gate}"
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
-    return path
-
-
 # --- gated proofs: verbatim ClickHouse queries through the front door ---
 
 # 1. aggregate combinators + parametric aggregate + exact-decimal sums.
@@ -18749,7 +18720,7 @@ def q_dialect_file_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the CH query reads it back through Spark's direct file query
     (``parquet.`path``` — the same FileSystem machinery s3()/url()
     resolve through; swapping scheme is configuration)."""
-    path = _gate_scratch(spark, "dialect_file_read") + "/orders_slice"
+    path = scratch_dir("dialect_file_read") + "/orders_slice"
     rebalanced(
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
@@ -21240,7 +21211,7 @@ def q_ch_script_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     (module doc #16); every statement routes through
     :func:`run_clickhouse_script`."""
     spark.sql("DROP TABLE IF EXISTS lc_t")
-    base = _gate_scratch(spark, "ch_script_lifecycle")
+    base = scratch_dir("ch_script_lifecycle")
     tbl_path = base + "/tbl"
     ins_path = base + "/ins"
     o = load_table(spark, sf_dir, "orders").select(
@@ -21314,7 +21285,7 @@ def q_ch_script_schema_evolution(
     :func:`run_clickhouse_script`."""
     spark.sql("DROP TABLE IF EXISTS evo_t")
     spark.sql("DROP TABLE IF EXISTS orders_evolved")
-    base = _gate_scratch(spark, "ch_script_schema_evolution")
+    base = scratch_dir("ch_script_schema_evolution")
     src = base + "/src"
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"

@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from clickhouse_vs_dbt_spark.catalog import register_views
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 DEC = "DECIMAL(18,6)"
 
@@ -386,11 +387,9 @@ def run_rank_corr(spark: SparkSession, cache_key: str | None = None) -> DataFram
     the source table.  ``cache_key`` (an immutable input identifier,
     e.g. the fixture dir) additionally memoizes the written scratch
     across calls; synthetic-view callers pass None and re-derive."""
-    import tempfile
-
     path = _RC_SCRATCH.get(cache_key) if cache_key else None
     if path is None:
-        path = tempfile.mkdtemp(prefix="rank_corr_base_") + "/rc_b"
+        path = scratch_dir("rank_corr_base") + "/rc_b"
         spark.sql(_rank_corr_base_sql()).write.mode("overwrite").parquet(
             path
         )

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.plans.star import build_star
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 DEC = "decimal(18,6)"
 
@@ -77,9 +78,7 @@ def star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     path = _STAR_CACHE.get(sf_dir)
     if path is None:
-        import tempfile
-
-        path = tempfile.mkdtemp(prefix="star_mat_") + "/star"
+        path = scratch_dir("star_mat") + "/star"
         (
             build_star(spark, sf_dir)
             .withColumn("order_year", F.year("o_orderdate").cast("int"))

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.catalog import load_table
 from clickhouse_vs_dbt_spark.functions.vectorfns import cosine
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 N_QUERIES = 3  # vec_id 0..2 are the demo query vectors
 TOP_K = 5
@@ -520,8 +521,6 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
     Returns (index path, fitted centroids)."""
     cached = _IVF_INDEX_CACHE.get(sf_dir)
     if cached is None:
-        import tempfile
-
         from clickhouse_vs_dbt_spark.operators.kmeans import (
             _assign,
             fit_centroids,
@@ -529,7 +528,7 @@ def _ivf_index(spark: SparkSession, sf_dir: str) -> tuple[str, dict]:
 
         e = load_table(spark, sf_dir, "embeddings")
         centroids = fit_centroids(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="ivf_index_") + "/index"
+        path = scratch_dir("ivf_index") + "/index"
         (
             _assign(e.select("vec_id", "embedding"), centroids)
             .write.mode("overwrite")

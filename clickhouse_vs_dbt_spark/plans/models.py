@@ -40,7 +40,6 @@ import contextlib
 import enum
 import re
 import shutil
-import tempfile
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 from graphlib import TopologicalSorter
@@ -50,6 +49,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from clickhouse_vs_dbt_spark.catalog import rebalanced
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 
 @contextlib.contextmanager
@@ -438,7 +438,7 @@ class ModelRunner:
         * neither → **append**.
         """
         if self.warehouse_dir is None:
-            self.warehouse_dir = tempfile.mkdtemp(prefix="spark_models_")
+            self.warehouse_dir = scratch_dir("spark_models")
         state = self._incr_state.get(model.name)
         existing = self._scan(state[1]) if state else None
         batch = model.builder(self.spark, existing)  # type: ignore[call-arg]
@@ -487,7 +487,7 @@ class ModelRunner:
             writer.saveAsTable(model.name)
             return self.spark.table(model.name)
         if self.warehouse_dir is None:
-            self.warehouse_dir = tempfile.mkdtemp(prefix="spark_models_")
+            self.warehouse_dir = scratch_dir("spark_models")
         return self._create(
             df, f"{self.warehouse_dir}/{model.name}", model.partition_by,
             rebalance=bool(model.partition_by),

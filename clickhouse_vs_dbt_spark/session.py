@@ -27,15 +27,44 @@ would also set on a 1000-executor cluster:
 * UTC session timezone so date/time semantics are engine-independent
   (and match the DuckDB correctness oracle).
 * Arrow enabled for the Pandas-UDF slow path.
+
+Scratch files: every file the package stages for itself goes into a
+directory from :func:`scratch_dir`, under one root per process,
+``$TMPDIR/cvds_scratch_*``.  The root is removed at normal interpreter
+exit, not when a session stops, because process-level memos (the star,
+the re-chunked fixtures, the rank-corr base, the IVF index) hand its
+paths to later sessions.  SIGKILL or a timeout leaves it behind.
 """
 
 from __future__ import annotations
 
+import atexit
+import itertools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+_SCRATCH_ROOT: str | None = None
+_SCRATCH_SEQ = itertools.count()
+
+
+def scratch_dir(owner: str) -> str:
+    """A new, empty directory ``<root>/<owner>_<n>`` for ``owner``'s
+    scratch files, under this process's scratch root (module doc,
+    "Scratch files").  The root is private to the process, so a
+    counter names its entries uniquely; callers never remove them."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        root = tempfile.mkdtemp(prefix="cvds_scratch_")
+        atexit.register(shutil.rmtree, root, ignore_errors=True)
+        _SCRATCH_ROOT = root
+    path = os.path.join(_SCRATCH_ROOT, f"{owner}_{next(_SCRATCH_SEQ)}")
+    os.mkdir(path)
+    return path
 
 
 def get_spark(

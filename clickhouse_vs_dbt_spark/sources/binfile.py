@@ -23,12 +23,12 @@ those shards.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.catalog import load_table
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 N_FILES = 64  # smallest doc_ids become standalone blobs
 _CACHE: dict[str, str] = {}
@@ -46,7 +46,7 @@ def blob_dir(spark: SparkSession, sf_dir: str) -> str:
             .limit(N_FILES)
             .collect()
         )
-        out = os.path.join(tempfile.mkdtemp(prefix="binfile_"), "blobs")
+        out = os.path.join(scratch_dir("binfile"), "blobs")
         os.makedirs(out, exist_ok=True)
         for r in rows:
             with open(os.path.join(out, f"doc_{r.doc_id}.bin"), "wb") as f:

@@ -23,13 +23,13 @@ need a rewrite, same as any columnar store.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.catalog import load_table
 from clickhouse_vs_dbt_spark.operators.common import dsum, sql_dsum
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 SPLIT_MOD = 2  # doc_id % 2 == 0 → old-schema batch, == 1 → new-schema
 _CACHE: dict[str, str] = {}
@@ -39,7 +39,7 @@ def evolved_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the two-generation layout once per process per sf."""
     if sf_dir not in _CACHE:
         d = load_table(spark, sf_dir, "documents")
-        out = os.path.join(tempfile.mkdtemp(prefix="schema_evo_"), "docs")
+        out = os.path.join(scratch_dir("schema_evo"), "docs")
         (
             d.filter(F.col("doc_id") % SPLIT_MOD == 0)
             .select("doc_id", "lang", "n_chars")  # old producer: no source col

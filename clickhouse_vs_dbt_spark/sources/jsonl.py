@@ -19,7 +19,6 @@ mistyping in either direction breaks the hash).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +26,7 @@ from pyspark.sql import types as T
 
 from clickhouse_vs_dbt_spark.catalog import load_table
 from clickhouse_vs_dbt_spark.operators.common import dsum, sql_dsum
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 DOCUMENTS_SCHEMA = T.StructType(
     [
@@ -51,9 +51,7 @@ def q_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → JSONL → read back → per-(lang, source) aggregate.
     Deleting/retyping any field in either direction changes the hash."""
     d = load_table(spark, sf_dir, "documents")
-    out = os.path.join(
-        tempfile.mkdtemp(prefix="jsonl_roundtrip_"), "documents_jsonl"
-    )
+    out = os.path.join(scratch_dir("jsonl_roundtrip"), "documents_jsonl")
     write_jsonl(d, out)
     back = read_jsonl(spark, out, DOCUMENTS_SCHEMA)
     return (

@@ -29,14 +29,15 @@ which computes the same aggregate straight from the fixture.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.operators.common import dsum, sql_dsum
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 CUTOFF_PRICE = 100000.0
+# mount-table name → its scratch directory, one per process (below)
+_SCRATCH: dict[str, str] = {}
 
 
 def mount(spark: SparkSession, name: str, link: str, target_dir: str) -> None:
@@ -63,15 +64,14 @@ def _mount_name(sf_dir: str) -> str:
 
 def q_objectstore_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Source + sink through a mounted non-file scheme (module doc)."""
-    import os
-
     name = _mount_name(sf_dir)
-    # scratch is DETERMINISTIC per mount table: Hadoop caches the
-    # viewfs FileSystem by authority and never re-reads mount links, so
-    # a fresh mkdtemp per call would be silently ignored on the second
-    # call in a session (and leak an empty dir per call)
-    scratch = os.path.join(tempfile.gettempdir(), f"objectstore_{name}")
-    os.makedirs(scratch, exist_ok=True)
+    # scratch is memoized per mount table: Hadoop caches the viewfs
+    # FileSystem by authority and never re-reads mount links, so a
+    # fresh directory per call would be silently ignored on the second
+    # call in the JVM
+    scratch = _SCRATCH.get(name)
+    if scratch is None:
+        scratch = _SCRATCH[name] = scratch_dir(f"objectstore_{name}")
     mount(spark, name, "tables", sf_dir)
     mount(spark, name, "scratch", scratch)
 

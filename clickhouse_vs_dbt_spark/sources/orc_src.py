@@ -17,13 +17,13 @@ a lossy type mapping in either direction breaks the hash).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.catalog import load_table
 from clickhouse_vs_dbt_spark.operators.common import dsum, sql_dsum
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 
 def write_orc(df: DataFrame, path: str) -> None:
@@ -39,7 +39,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     class (timestamp, long, double, string) so any type-mapping loss in
     either direction changes the hash."""
     e = load_table(spark, sf_dir, "events")
-    out = os.path.join(tempfile.mkdtemp(prefix="orc_roundtrip_"), "events_orc")
+    out = os.path.join(scratch_dir("orc_roundtrip"), "events_orc")
     write_orc(e, out)
     back = read_orc(spark, out)
     return (

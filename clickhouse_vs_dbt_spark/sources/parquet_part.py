@@ -20,12 +20,12 @@ size files at 128-512 MB.  tests/test_sources.py asserts the
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.catalog import load_table
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 PRUNE_LANGS = ("de", "fr")
 _CACHE: dict[str, str] = {}
@@ -38,7 +38,7 @@ def write_partitioned(df: DataFrame, path: str, key: str = "lang") -> None:
 def partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the partitioned copy once per process per sf."""
     if sf_dir not in _CACHE:
-        out = os.path.join(tempfile.mkdtemp(prefix="parquet_part_"), "documents_by_lang")
+        out = os.path.join(scratch_dir("parquet_part"), "documents_by_lang")
         write_partitioned(load_table(spark, sf_dir, "documents"), out)
         _CACHE[sf_dir] = out
     return _CACHE[sf_dir]

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from clickhouse_vs_dbt_spark.session import scratch_dir
+
 
 def _st(*fields: tuple[str, T.DataType]) -> T.StructType:
     return T.StructType([T.StructField(n, t, False) for n, t in fields])
@@ -149,12 +151,10 @@ def q_csv_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed FAILFAST CSV scan, and aggregates.  The oracle aggregates the
     parquet directly — a hash match proves the CSV parse/coercion path
     is lossless for ints, strings, and doubles."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     sup = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    d = tempfile.mkdtemp(prefix="tbl_roundtrip_")
+    d = scratch_dir("tbl_roundtrip")
     (
         sup.select(
             F.concat_ws(
@@ -207,14 +207,12 @@ def q_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     of size, so at 100 TB compressed text must arrive as many files
     (or be transcoded to a splittable container on first touch); the
     parquet cache in catalog.py is that transcode step."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from clickhouse_vs_dbt_spark.operators.common import dsum
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    d = tempfile.mkdtemp(prefix="csvgz_roundtrip_")
+    d = scratch_dir("csvgz_roundtrip")
     (
         cust.select(
             "c_custkey",

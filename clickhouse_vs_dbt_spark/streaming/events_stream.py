@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from clickhouse_vs_dbt_spark.operators.common import dsum
 from clickhouse_vs_dbt_spark.operators.timeseries import TUMBLE_SEC
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 # events.ts has shipped both as TIMESTAMP(NANOS) parquet (surfaced as
 # int64 via nanosAsLong, see catalog.py) and as micros TIMESTAMP_NTZ.
@@ -53,9 +54,8 @@ def _as_stream_dir(sf_dir: str) -> str:
     a single parquet file.  Expose it through a scratch dir with a
     symlink (no fixture copy; the fixture itself is never written)."""
     import os
-    import tempfile
 
-    d = tempfile.mkdtemp(prefix="events_stream_")
+    d = scratch_dir("events_stream")
     os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), f"{d}/events.parquet")
     return d
 

@@ -41,12 +41,12 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.ddl import DialectError, lookup_kafka_info
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 #: the Kafka source's fixed output schema (Spark's kafka connector
 #: contract) — the envelope stand-in writes exactly these columns
@@ -303,7 +303,7 @@ def _envelope_batches(spark: SparkSession, sf_dir: str) -> str:
         F.col("event_id").cast("bigint").alias("offset"),
         F.col("ts").cast("timestamp").alias("timestamp"),
     )
-    out = tempfile.mkdtemp(prefix="kafka_envelope_")
+    out = scratch_dir("kafka_envelope")
     # ONE producer job instead of N_FILES filtered single-task scans
     # (guide §1.2/§2.4: the old loop scanned + JSON-encoded the whole
     # events fixture once per batch file, 3 jobs × 1 task each;
@@ -367,7 +367,7 @@ def q_ddl_kafka_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     results = run_clickhouse_script(spark, KAFKA_MV_SCRIPT)
     mv = next(r[1] for r in results if r[0] == "materialized_view")
-    mv.target = tempfile.mkdtemp(prefix="kafka_mv_state_")
+    mv.target = scratch_dir("kafka_mv_state")
     stream = kafka_read_stream(
         spark, "events_queue", envelope_dir=_envelope_batches(spark, sf_dir)
     )

@@ -40,7 +40,6 @@ incrementally; the same code runs on kafka sources by swapping
 from __future__ import annotations
 
 import os
-import tempfile
 import time
 import uuid
 from collections.abc import Iterator
@@ -55,6 +54,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from clickhouse_vs_dbt_spark.catalog import load_table
 from clickhouse_vs_dbt_spark.operators.timeseries import SESSION_GAP_MIN
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 GAP_US = SESSION_GAP_MIN * 60 * 1_000_000
 _MICRO = Decimal("0.000001")
@@ -144,7 +144,7 @@ def _chunked_replay_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 4) -> 
     """Re-chunk the events fixture into chronological parquet files with
     strictly increasing mtimes (FileStreamSource orders by mtime), plus
     a far-future sentinel.  Writes only to a scratch dir."""
-    d = tempfile.mkdtemp(prefix="events_sessions_")
+    d = scratch_dir("events_sessions")
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", F.to_timestamp("ts").alias("ts"), "user_id", "event_type", "value"
     )

@@ -24,13 +24,13 @@ Reference parity: no streaming surface exists in the reference
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.operators.common import DEC
+from clickhouse_vs_dbt_spark.session import scratch_dir
 from clickhouse_vs_dbt_spark.streaming.events_stream import (
     events_raw_schema,
     normalize_ts,
@@ -42,7 +42,7 @@ def _as_duplicated_stream_dir(sf_dir: str) -> str:
     same data arrives twice (two distinct file names — the
     FileStreamSource treats them as two deliveries).  Symlinks only; the
     fixture is never copied or written."""
-    d = tempfile.mkdtemp(prefix="events_dup_stream_")
+    d = scratch_dir("events_dup_stream")
     src = os.path.abspath(f"{sf_dir}/events.parquet")
     os.symlink(src, f"{d}/delivery_1.parquet")
     os.symlink(src, f"{d}/delivery_2.parquet")

@@ -40,13 +40,13 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.operators.common import dsum, sql_dsum
 from clickhouse_vs_dbt_spark.operators.timeseries import TUMBLE_SEC
+from clickhouse_vs_dbt_spark.session import scratch_dir
 from clickhouse_vs_dbt_spark.streaming.events_stream import (
     events_raw_schema,
     normalize_ts,
@@ -62,7 +62,7 @@ def _batched_dir(spark: SparkSession, sf_dir: str) -> str:
     raw = spark.read.schema(events_raw_schema(spark, sf_dir)).parquet(
         f"{sf_dir}/events.parquet"
     )
-    out = tempfile.mkdtemp(prefix="late_stream_")
+    out = scratch_dir("late_stream")
     for i in range(N_FILES):
         tmp = os.path.join(out, f"_tmp{i}")
         raw.filter(F.col("event_id") % N_FILES == i).coalesce(1).write.mode(

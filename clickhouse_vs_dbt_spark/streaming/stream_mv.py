@@ -18,7 +18,6 @@ one-shot batch aggregate is the oracle check.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -26,6 +25,7 @@ from pyspark.sql import functions as F
 
 
 from clickhouse_vs_dbt_spark.operators.common import sql_dsum
+from clickhouse_vs_dbt_spark.session import scratch_dir
 from clickhouse_vs_dbt_spark.streaming.events_stream import (
     events_raw_schema,
     normalize_ts,
@@ -52,7 +52,7 @@ def _batched_dir(spark: SparkSession, sf_dir: str) -> str:
     raw = spark.read.schema(events_raw_schema(spark, sf_dir)).parquet(
         f"{sf_dir}/events.parquet"
     )
-    out = tempfile.mkdtemp(prefix="mv_stream_")
+    out = scratch_dir("mv_stream")
     for i in range(N_FILES):
         tmp = os.path.join(out, f"_tmp{i}")
         raw.filter(F.col("event_id") % N_FILES == i).coalesce(1).write.mode(
@@ -70,7 +70,7 @@ def q_events_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay events through a foreachBatch MV maintainer; return the
     finalized per-event-type aggregate table."""
     src = _batched_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="stream_mv_state_")
+    base = scratch_dir("stream_mv_state")
     state = {"version": -1}
 
     def fold_batch(batch: DataFrame, batch_id: int) -> None:

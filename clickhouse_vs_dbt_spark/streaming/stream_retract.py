@@ -28,7 +28,6 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +36,7 @@ from pyspark.sql import types as T
 
 from clickhouse_vs_dbt_spark.catalog import load_table
 from clickhouse_vs_dbt_spark.operators.mergetree import _collapsing_sql
+from clickhouse_vs_dbt_spark.session import scratch_dir
 
 _DEC18 = "decimal(18,6)"
 _DEC38 = "decimal(38,6)"
@@ -74,7 +74,7 @@ def _changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _batched_dir(spark: SparkSession, sf_dir: str) -> str:
     """Three single-file batches striped by orderkey with pinned mtimes
     so FileStreamSource replays them in order, one per trigger."""
-    out = tempfile.mkdtemp(prefix="retract_stream_")
+    out = scratch_dir("retract_stream")
     cl = _changelog(spark, sf_dir)
     for i in range(N_FILES):
         tmp = os.path.join(out, f"_tmp{i}")
@@ -143,7 +143,7 @@ def q_events_stream_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintainer; return the finalized per-customer net state (keys whose
     net row count is positive), identical to the one-shot collapse."""
     src = _batched_dir(spark, sf_dir)
-    base = tempfile.mkdtemp(prefix="retract_state_")
+    base = scratch_dir("retract_state")
     state = {"last_committed": -1}
     fold_batch = make_fold_batch(base, state)
 

@@ -22,12 +22,12 @@ check against the fixture-side oracle.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from clickhouse_vs_dbt_spark.operators.common import DEC
+from clickhouse_vs_dbt_spark.session import scratch_dir
 from clickhouse_vs_dbt_spark.streaming.events_stream import events_raw_schema
 from clickhouse_vs_dbt_spark.streaming.stream_dedup import (
     _as_duplicated_stream_dir,
@@ -48,7 +48,7 @@ def q_events_stream_upsert(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.parquet(_as_duplicated_stream_dir(sf_dir))
-    base = tempfile.mkdtemp(prefix="stream_upsert_")
+    base = scratch_dir("stream_upsert")
     state = {"version": -1}
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:

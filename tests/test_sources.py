@@ -93,15 +93,12 @@ def test_parquet_roundtrip_lossless(spark, sf_dir):
     assert sorted(back.columns) == sorted(orig.columns)
 
 
-def test_orc_roundtrip_lossless(spark, sf_dir):
-    import os
-    import tempfile
-
+def test_orc_roundtrip_lossless(spark, sf_dir, tmp_path):
     from clickhouse_vs_dbt_spark.catalog import load_table
     from clickhouse_vs_dbt_spark.sources.orc_src import read_orc, write_orc
 
     e = load_table(spark, sf_dir, "events")
-    path = os.path.join(tempfile.mkdtemp(prefix="orc_test_"), "events_orc")
+    path = str(tmp_path / "events_orc")
     write_orc(e, path)
     back = read_orc(spark, path)
     assert back.schema == e.schema  # exact type preservation both ways
