@@ -9,7 +9,9 @@ temp view, so both the DataFrame API and ``spark.sql`` resolve the same
 relations.  Like the reference's source DDL (README.md:155-222), the
 catalog declares each table's column types (:data:`FIXTURE_SCHEMAS`) and
 reads with them, so loading a table plans a scan without running a
-Spark job to infer its schema from parquet footers.
+Spark job to infer its schema from parquet footers.  A fixture too
+large for one scan task is split in the driver, once per process, into
+a multi-part copy (:func:`_rechunk`), again without a Spark job.
 """
 
 from __future__ import annotations
@@ -59,12 +61,16 @@ DIMENSION_TABLES = frozenset({"region", "nation", "customer", "supplier", "part"
 # SINGLE-ROW-GROUP parquet, which caps every scan at one task no matter
 # how many cores the session has — a pure test-artifact bottleneck (any
 # real table at any real scale has many row groups/files, and at 100 TB
-# the scan parallelism comes for free).  Rewrite large fixtures once per
-# process into a multi-part cache so local plans exercise the same
-# parallel scan shape a cluster would see.  Content-identical; every
-# value-checked query is order-insensitive by construction.
+# the scan parallelism comes for free).  Split large fixtures once per
+# process into a multi-part copy so local plans exercise the same
+# parallel scan shape a cluster would see.  The split runs in the
+# driver with pyarrow, not as a Spark job: the copy has the source's
+# rows in the source's order and its physical types.
 _CHUNK_CACHE: dict[tuple[str, str], str] = {}
 _CHUNK_MIN_BYTES = 1 << 20
+# Rows per record batch the split streams; a file whose row range is
+# longer gets one row group per batch.
+_SPLIT_BATCH_ROWS = 1 << 18
 
 
 def _read(spark: SparkSession, name: str, path: str) -> DataFrame:
@@ -75,11 +81,50 @@ def _read(spark: SparkSession, name: str, path: str) -> DataFrame:
     return (spark.read.schema(ddl) if ddl else spark.read).parquet(path)
 
 
+def _max_partition_bytes(spark: SparkSession) -> int:
+    """``spark.sql.files.maxPartitionBytes`` in bytes, parsed by the
+    same JVM byte-string parser Spark's SQL conf uses, so every suffix
+    Spark accepts (``512m``, ``128mb``, ``1g``, ``1p`` …) parses and an
+    invalid value raises instead of falling back."""
+    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
+    jutils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    return jutils.byteStringAsBytes(raw)
+
+
+def _split(src: str, dst: str, n: int) -> None:
+    """Write the rows of the parquet file ``src`` to ``n`` files
+    ``dst/part-0000i.parquet`` of consecutive row ranges, in order.
+    Record batches stream from source to copy through a buffered reader,
+    so the driver never holds the whole table, nor a whole row group of
+    the source; the writer keeps the source's arrow schema, hence its
+    physical types (``events.ts`` stays nanos where it was nanos).  A
+    range of at most :data:`_SPLIT_BATCH_ROWS` rows is one row group."""
+    import pyarrow.parquet as pq
+
+    with pq.ParquetFile(src, buffer_size=1 << 20) as source:
+        per = max(1, -(-source.metadata.num_rows // n))
+        batches = source.iter_batches(batch_size=min(per, _SPLIT_BATCH_ROWS))
+        rest = None  # the unwritten tail of the current batch
+        for i in range(n):
+            with pq.ParquetWriter(f"{dst}/part-{i:05d}.parquet", source.schema_arrow) as out:
+                need = per
+                while need:
+                    if rest is None or not rest.num_rows:
+                        rest = next(batches, None)
+                        if rest is None:
+                            break
+                    take = min(need, rest.num_rows)
+                    out.write_batch(rest.slice(0, take))
+                    rest, need = rest.slice(take), need - take
+
+
 def _rechunk(spark: SparkSession, sf_dir: str, name: str) -> str | None:
-    """Path of the multi-part copy of ``name`` (written on first use in
+    """Path of the multi-part copy of ``name`` (split on first use in
     the process), or None when the fixture file is used as it is.  The
-    copy is read from the source with the declared schema, so the
-    rewrite is the only job it costs."""
+    split is a driver-side row-range copy (:func:`_split`) and
+    launches no Spark job.  A source whose column types drifted from
+    the declared ones is copied as it is and fails loudly when
+    :func:`load_table`'s declared-schema scan reads the copy."""
     import os
 
     src = f"{sf_dir}/{name}.parquet"
@@ -97,27 +142,13 @@ def _rechunk(spark: SparkSession, sf_dir: str, name: str) -> str | None:
         # splits (plus openCost padding), so a 108 MB ten-row-group
         # file still scans as ONE task under the 128 MB default —
         # the r17 sf1 scaling probe measured flat 8-vs-32-core
-        # ratios for exactly this reason.  Rewrite whenever the
+        # ratios for exactly this reason.  Split whenever the
         # file's natural split count leaves cores idle.
-        raw = spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", "134217728"
-        ).strip().lower().removesuffix("b")
-        # Spark byte-size strings carry k/m/g/t suffixes ('512m',
-        # '1g'); a bare-number-only parse would silently fall back
-        # to 128 MB and mis-decide the rewrite (review r17a)
-        mult = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30,
-                "t": 1 << 40}.get(raw[-1:], 1)
-        if mult > 1:
-            raw = raw[:-1]
-        try:
-            mpb = int(raw) * mult
-        except ValueError:
-            mpb = 128 * 1024 * 1024
-        if os.path.getsize(src) // mpb >= n:
+        if os.path.getsize(src) // _max_partition_bytes(spark) >= n:
             _CHUNK_CACHE[key] = ""  # already splits wide enough
             return None
         path = scratch_dir(f"fixture_chunks_{name}")
-        _read(spark, name, src).repartition(n).write.mode("overwrite").parquet(path)
+        _split(src, path, n)
         _CHUNK_CACHE[key] = path
     return path or None
 
@@ -130,8 +161,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     The scan reads with the table's declared schema
     (:data:`FIXTURE_SCHEMAS`), from the fixture file or from its
     re-chunked copy alike, so no footer is read to plan it and loading
-    a table launches no Spark job (the re-chunk's one-off rewrite
-    aside).  Only ``events`` still infers its schema from the footer
+    a table launches no Spark job, the re-chunk's driver-side split
+    included.  Only ``events`` still infers its schema from the footer
     (one job), because the type of its ``ts`` column picks the
     normalization below.  A file whose column has another type than
     the declared one fails loudly on read
@@ -200,8 +231,7 @@ def rebalanced(df: DataFrame, *cols: str) -> DataFrame:
     ``repartition(cols)``, splits skewed partitions so one hot key
     cannot serialize the write.  Row content is untouched; only file
     layout changes, and every gated query is order-insensitive by
-    construction (the fixture re-chunk in :func:`_rechunk` already
-    randomizes row order)."""
+    construction (the oracle gate compares sorted rows)."""
     return df.hint("rebalance", *cols) if cols else df.hint("rebalance")
 
 

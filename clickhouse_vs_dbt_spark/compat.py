@@ -149,13 +149,23 @@ def register_clickhouse_compat(spark: SparkSession) -> None:
         for name, udf in _vectorized_udfs()
     ]
     # each pool thread pins its own py4j connection, closed when the
-    # thread ends; the wrapper gives it the caller's local properties.
-    # Without pinned threads (PYSPARK_PIN_THREAD=false) PySpark hands
-    # back the session itself instead of a wrapper: nothing to inherit
-    wrap = inheritable_thread_target(spark)
-    run = _call if wrap is spark else wrap(_call)
-    with ThreadPoolExecutor(_REGISTER_THREADS) as pool:
-        for _ in pool.map(run, calls):
+    # thread ends.  A wrapper installs the caller's local properties,
+    # cloned once when it is made, in whichever thread runs it, so one
+    # wrapper shared by the pool hands every thread the SAME Properties
+    # object; concurrent spark.sql calls then set and clear
+    # spark.sql.execution.id on it under each other (a null read back
+    # raises NumberFormatException).  Each pool thread therefore runs a
+    # wrapper of its own, once, when it starts.  Without pinned threads
+    # (PYSPARK_PIN_THREAD=false) PySpark hands back the session itself
+    # instead of a wrapper: nothing to inherit
+    wraps = [inheritable_thread_target(spark) for _ in range(_REGISTER_THREADS)]
+
+    def inherit() -> None:
+        wraps.pop()(lambda: None)()
+
+    init = None if wraps[0] is spark else inherit
+    with ThreadPoolExecutor(_REGISTER_THREADS, initializer=init) as pool:
+        for _ in pool.map(_call, calls):
             pass
     spark.conf.set(_REGISTERED_FLAG, digest)
 

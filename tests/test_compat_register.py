@@ -122,3 +122,42 @@ def test_registers_without_pinned_threads(fresh, monkeypatch):
     monkeypatch.setattr(compat, "inheritable_thread_target", lambda s: s)
     compat.register_clickhouse_compat(fresh)
     assert _all_names() <= _temporary_names(fresh)
+
+
+def test_pool_threads_run_on_their_own_local_properties(fresh, monkeypatch):
+    """Each pool thread gets its own clone of the caller's local
+    properties.  A shared one is where concurrent ``spark.sql`` calls
+    set and clear ``spark.sql.execution.id`` under each other."""
+    import threading
+
+    sc = fresh.sparkContext
+    identity = sc._jvm.System.identityHashCode
+    seen: dict[int, set] = {}
+
+    def record(call):
+        props = sc._jsc.sc().getLocalProperties()
+        seen.setdefault(threading.get_ident(), set()).add(
+            (identity(props), props.getProperty("cvds.test.inherited"))
+        )
+        return call()
+
+    monkeypatch.setattr(compat, "_call", record)
+    sc.setLocalProperty("cvds.test.inherited", "yes")
+    try:
+        compat.register_clickhouse_compat(fresh)
+    finally:
+        sc.setLocalProperty("cvds.test.inherited", None)
+    caller = identity(sc._jsc.sc().getLocalProperties())
+    assert threading.get_ident() not in seen and len(seen) >= 2
+    assert all(len(props) == 1 for props in seen.values()), seen
+    owned = [next(iter(props)) for props in seen.values()]
+    assert len({ident for ident, _ in owned} | {caller}) == len(owned) + 1
+    assert {inherited for _, inherited in owned} == {"yes"}
+
+
+def test_fresh_sessions_register_concurrently(spark):
+    for _ in range(20):
+        s = spark.newSession()
+        compat.register_clickhouse_compat(s)
+        assert s.conf.get(compat._REGISTERED_FLAG, None) is not None
+    assert s.sql("SELECT toYear(DATE'1993-05-01') AS y").first().y == 1993

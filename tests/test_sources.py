@@ -269,9 +269,10 @@ def test_load_table_launches_no_schema_job(spark, sf_dir, tmp_path):
 
 
 def test_rechunked_table_launches_only_its_rewrite(spark, sf_dir, tmp_path, monkeypatch):
-    """A re-chunked table costs the jobs of its rewrite and no more: no
-    schema job for the source, none for the re-read of the copy, and
-    the copy reads with the declared schema."""
+    """A re-chunked table's rewrite is the driver-side split, so loading
+    it launches no Spark job at all: none for the split, no schema job
+    for the source, none for the re-read of the copy, and the copy
+    reads with the declared schema."""
     import shutil
 
     from pyspark.sql.types import StructType
@@ -280,32 +281,151 @@ def test_rechunked_table_launches_only_its_rewrite(spark, sf_dir, tmp_path, monk
 
     monkeypatch.setattr(cat, "_CHUNK_MIN_BYTES", 0)
     fresh = _fresh_dir(tmp_path, sf_dir)
-    ddl = cat.FIXTURE_SCHEMAS["orders"]
     try:
         df, loaded = _job_ids(spark, f"rechunk-{fresh}",
                               lambda: cat.load_table(spark, fresh, "orders"))
     finally:
         copy = cat._CHUNK_CACHE.pop((fresh, "orders"), None)
     assert copy and all(f.startswith(f"file://{copy}/") for f in df.inputFiles())
-    n = spark.sparkContext.defaultParallelism
-    _, rewrite = _job_ids(
-        spark, f"rewrite-{fresh}",
-        lambda: spark.read.schema(ddl).parquet(f"{fresh}/orders.parquet")
-        .repartition(n).write.parquet(str(tmp_path / "rewrite")),
-    )
-    assert rewrite and len(loaded) == len(rewrite)
-    assert df.schema == StructType.fromDDL(ddl)
+    assert loaded == []
+    assert df.schema == StructType.fromDDL(cat.FIXTURE_SCHEMAS["orders"])
     assert df.count() == spark.read.parquet(f"{sf_dir}/orders.parquet").count()
     shutil.rmtree(copy)
 
 
-def test_declared_type_mismatch_fails_loudly(spark, tmp_path):
-    """A fixture file whose column type differs from the declared one
-    fails the read; it returns no rows, not converted or NULL values."""
+def _orders_and_events(d, rows: int = 10_000) -> None:
+    """``orders`` and ``events`` parquet files in ``d``, one row group
+    each, with NULLs in every column, a TIMESTAMP_NTZ ``o_orderdate``
+    and nanos ``events.ts``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from clickhouse_vs_dbt_spark.catalog import load_table
+    def col(values, typ):
+        return pa.array([None if i % 7 == 3 else v for i, v in enumerate(values)], typ)
+
+    ks = range(rows)
+    tables = {
+        "orders": pa.table({
+            "o_orderkey": col(ks, pa.int64()),
+            "o_custkey": col((k * 31 % 997 for k in ks), pa.int64()),
+            "o_orderstatus": col(("OFP"[k % 3] for k in ks), pa.string()),
+            "o_totalprice": col((k * 1.25 for k in ks), pa.float64()),
+            "o_orderdate": col((k * 86_400_000_123 for k in ks), pa.timestamp("us")),
+            "o_orderpriority": col((f"{k % 5}-P" for k in ks), pa.string()),
+        }),
+        "events": pa.table({
+            "event_id": col(ks, pa.int64()),
+            "ts": col((k * 1_000_000_007 for k in ks), pa.timestamp("ns")),
+            "user_id": col((k % 101 for k in ks), pa.int64()),
+            "event_type": col((("click", "view", "buy")[k % 3] for k in ks), pa.string()),
+            "value": col((k / 8 for k in ks), pa.float64()),
+            "props": col((f'{{"k": {k}}}' for k in ks), pa.string()),
+        }),
+    }
+    for name, table in tables.items():
+        pq.write_table(table, f"{d}/{name}.parquet", row_group_size=rows)
+
+
+def test_rechunked_copy_equals_its_source(spark, tmp_path, monkeypatch):
+    """The copy holds the source's rows (multiset-equal both ways, NULLs
+    included), in the source's order and with its arrow schema (nanos
+    ``events.ts`` included), in n files that scan as n partitions; the
+    copy's inferred schema is the declared one.  A batch size that does
+    not divide a file's row range exercises the re-slicing."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
+
+    from clickhouse_vs_dbt_spark import catalog as cat
+
+    src = str(tmp_path / "src")
+    (tmp_path / "src").mkdir()
+    _orders_and_events(src)
+    plain = _fresh_dir(tmp_path, src)
+    monkeypatch.setattr(cat, "_SPLIT_BATCH_ROWS", 1_000)
+    monkeypatch.setattr(cat, "_CHUNK_MIN_BYTES", 0)
+    n = spark.sparkContext.defaultParallelism
+    for name in ("orders", "events"):
+        try:
+            df = cat.load_table(spark, src, name)
+        finally:
+            copy = cat._CHUNK_CACHE.pop((src, name), None)
+        files = sorted(glob.glob(f"{copy}/part-*.parquet"))
+        assert len(files) == n
+        assert df.rdd.getNumPartitions() == n
+        want = pq.read_table(f"{src}/{name}.parquet")
+        got = pa.concat_tables(pq.read_table(f) for f in files)
+        assert got.schema.equals(want.schema, check_metadata=True)
+        assert got.equals(want)
+        ddl = cat.FIXTURE_SCHEMAS[name]
+        if ddl:
+            assert spark.read.parquet(copy).schema == StructType.fromDDL(ddl)
+        with monkeypatch.context() as m:
+            m.setattr(cat, "_CHUNK_MIN_BYTES", 1 << 62)
+            base = cat.load_table(spark, plain, name)
+        assert base.inputFiles() == [f"file://{plain}/{name}.parquet"]
+        assert df.schema == base.schema
+        assert df.exceptAll(base).count() == 0 and base.exceptAll(df).count() == 0
+        assert df.count() == base.count() == want.num_rows
+        assert df.filter(df[df.columns[1]].isNull()).count() > 0
+
+
+def test_rechunk_split_streams_batches(tmp_path, monkeypatch):
+    """The split never reads the whole source: with every whole-file
+    and whole-row-group read refused, it still copies every row."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from clickhouse_vs_dbt_spark import catalog as cat
+
+    _orders_and_events(tmp_path)
+    src = str(tmp_path / "orders.parquet")
+    want = pq.read_table(src)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError("the split read a whole table or row group")
+
+    for attr in ("read", "read_row_group", "read_row_groups"):
+        monkeypatch.setattr(pq.ParquetFile, attr, refuse)
+    monkeypatch.setattr(pq, "read_table", refuse)
+    monkeypatch.setattr(cat, "_SPLIT_BATCH_ROWS", 512)
+    out = tmp_path / "copy"
+    out.mkdir()
+    cat._split(src, str(out), 3)
+    monkeypatch.undo()
+    files = sorted(glob.glob(f"{out}/part-*.parquet"))
+    assert len(files) == 3
+    assert pa.concat_tables(pq.read_table(f) for f in files).equals(want)
+    # a 3334-row range in 512-row batches: seven row groups per file
+    assert pq.ParquetFile(files[0]).metadata.num_row_groups == 7
+
+
+@pytest.mark.parametrize("raw, want", [
+    ("134217728", 134217728),
+    ("512m", 512 << 20),
+    ("128mb", 128 << 20),
+    ("1g", 1 << 30),
+    ("1p", 1 << 50),
+])
+def test_max_partition_bytes_takes_spark_byte_strings(spark, raw, want):
+    from clickhouse_vs_dbt_spark import catalog as cat
+
+    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    try:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", raw)
+        assert cat._max_partition_bytes(spark) == want
+    finally:
+        spark.conf.set("spark.sql.files.maxPartitionBytes", old)
+
+
+def _drifted_orders(d) -> None:
+    """An ``orders`` file in ``d`` whose ``o_orderkey`` is a string."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     n = 3
     table = pa.table({
@@ -316,9 +436,34 @@ def test_declared_type_mismatch_fails_loudly(spark, tmp_path):
         "o_orderdate": pa.array([0] * n, pa.timestamp("us")),
         "o_orderpriority": pa.array(["1-URGENT"] * n),
     })
-    pq.write_table(table, str(tmp_path / "orders.parquet"))
+    pq.write_table(table, f"{d}/orders.parquet")
+
+
+def test_declared_type_mismatch_fails_loudly(spark, tmp_path):
+    """A fixture file whose column type differs from the declared one
+    fails the read; it returns no rows, not converted or NULL values."""
+    from clickhouse_vs_dbt_spark.catalog import load_table
+
+    _drifted_orders(tmp_path)
     rows = None
     with pytest.raises(SparkException,
                        match="FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
         rows = load_table(spark, str(tmp_path), "orders").collect()
     assert rows is None
+
+
+def test_declared_type_mismatch_fails_loudly_in_the_copy(spark, tmp_path, monkeypatch):
+    """The re-chunk copies a drifted source as it is; the declared-schema
+    scan of the copy then fails as a scan of the source would."""
+    from clickhouse_vs_dbt_spark import catalog as cat
+
+    monkeypatch.setattr(cat, "_CHUNK_MIN_BYTES", 0)
+    _drifted_orders(tmp_path)
+    try:
+        df = cat.load_table(spark, str(tmp_path), "orders")
+    finally:
+        copy = cat._CHUNK_CACHE.pop((str(tmp_path), "orders"), None)
+    assert copy and all(f.startswith(f"file://{copy}/") for f in df.inputFiles())
+    with pytest.raises(SparkException,
+                       match="FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        df.collect()
