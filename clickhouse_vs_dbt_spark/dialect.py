@@ -40,6 +40,14 @@ They run after the registry declines, so a pattern never shadows a
 registered name; a handler that needs a pattern's answer first calls
 it itself.
 
+A parametric aggregate ``fn(params)(args)`` renders through
+:func:`_render_parametric` from ``_PARAMETRIC_RENDERERS``, whose keys
+are the heads the walk routes there (``_PARAMETRIC``).  To add one: a
+percentile row, an ``_ONE_LEVEL`` or ``_MASKED_IF`` row, or else
+``fn(name, params, args)`` under ``@_parametric("name", ...)`` — one
+renderer per name, as above.  A default for the plain one-list spelling
+is a ``_PARAMETRIC_DEFAULTS`` row; ``-Resample`` is a suffix rule.
+
 Statement re-plans give some aggregate families (weighted quantiles,
 interval sweeps, group-array tiers, bounded ``groupConcat``) a
 whole-statement plan with bounded aggregation state when the SELECT
@@ -150,6 +158,7 @@ equivalence tests instead); ``quantile`` maps to ``percentile_approx``
 
 from __future__ import annotations
 
+import math
 import re
 from collections.abc import Callable
 
@@ -1342,22 +1351,29 @@ _TEMPLATE_NAMES = frozenset(name for name, _ in _TEMPLATES)
 
 
 _HANDLERS: dict[str, Callable[[str, list[str]], str | None]] = {}
+_PARAMETRIC_RENDERERS: dict[str, Callable[..., str | None]] = {}
 
 
-def _handler(*names: str):
+def _handler(*names: str, table: dict = _HANDLERS, taken=_TEMPLATE_NAMES):
     """Register the decorated ``fn(name, args) -> str | None`` as the
     renderer of ``names``; None declines (see :func:`_render_call`).
     A name has one renderer — a template row or a handler — so a
-    second registration raises ValueError at import."""
+    second registration raises ValueError at import.  ``@_parametric``
+    registers ``fn(name, params, args)`` for :func:`_render_parametric`
+    by the same rule."""
 
     def register(fn):
         for name in names:
-            if name in _HANDLERS or name in _TEMPLATE_NAMES:
+            if name in table or name in taken:
                 raise ValueError(f"{name} already has a renderer")
-            _HANDLERS[name] = fn
+            table[name] = fn
         return fn
 
     return register
+
+
+def _parametric(*names: str):
+    return _handler(*names, table=_PARAMETRIC_RENDERERS, taken=())
 
 
 def _refuse(name, args):
@@ -7716,32 +7732,21 @@ def _render_greatest(name, args):
         )
 
 
-@_handler("medianTiming", "medianTDigest", "medianBFloat16")
-def _render_median_timing(name, args):
-    if len(args) == 1:
-        # median* = the parametric quantile* register at p=0.5
-        # (batch 23)
-        return _render_parametric(
-            "quantile" + name[len("median"):], ["0.5"], [args[0]],
-        )
+#: median* spellings of parametric heads: name → arity.  Each renders
+#: as its quantile* head at level 0.5 (batch 23); in the -If twins the
+#: condition masks the value (code-review r13i, r14d)
+_MEDIANS = {
+    "medianTiming": 1, "medianTDigest": 1, "medianBFloat16": 1,
+    "medianTimingIf": 2, "medianTDigestIf": 2, "medianBFloat16If": 2,
+    "medianExactWeightedIf": 3,
+}
 
 
-@_handler("medianTimingIf", "medianTDigestIf", "medianBFloat16If")
-def _render_median_timing_if(name, args):
-    if len(args) == 2:
-        # the -If combinator of the sketch twins (code-review r13i)
+@_handler(*_MEDIANS)
+def _render_median(name, args):
+    if len(args) == _MEDIANS[name]:
         return _render_parametric(
             "quantile" + name[len("median"):], ["0.5"], args,
-        )
-
-
-@_handler("medianExactWeightedIf")
-def _render_median_exact_weighted_if(name, args):
-    if len(args) == 3:
-        # the -If twin of the exact-weighted median: condition masks
-        # the value, the fold drops the NULL pair (code-review r14d)
-        return _weighted_exact_quantile(
-            f"CASE WHEN {args[2]} THEN {args[0]} END", args[1], "0.5",
         )
 
 
@@ -9454,35 +9459,29 @@ _PATTERNS = (
 )
 
 
+#: the ClickHouse default of a parametric aggregate written with one
+#: argument list: name → (arity, params) — level 0.5 for the quantile
+#: family, k = 10 for topK
+_PARAMETRIC_DEFAULTS = {
+    "quantile": (1, ["0.5"]), "quantileExact": (1, ["0.5"]),
+    "quantileTDigest": (1, ["0.5"]), "quantileTiming": (1, ["0.5"]),
+    "topK": (1, ["10"]), "topKWeighted": (2, ["10"]),
+    "quantileExactWeighted": (2, ["0.5"]),
+    "medianExactWeighted": (2, ["0.5"]),
+}
+
+
 def _plain_parametric(name: str, args: list[str]) -> str:
-    # plain one-list form of a parametric aggregate: ClickHouse
-    # applies the parameter's documented default (level 0.5 for
-    # the quantile family, k=10 for topK); the remaining forms
-    # have no meaningful default → refuse naming the parametric
-    # spelling rather than surfacing an opaque Spark
-    # undefined-function error.
-    joined = ", ".join(args)
-    if name == "quantile" and len(args) == 1:
-        return f"percentile_approx({args[0]}, 0.5)"
-    if name == "quantileExact" and len(args) == 1:
-        return f"percentile({args[0]}, 0.5)"
-    if (
-        name in ("quantileTDigest", "quantileTiming")
-        and len(args) == 1
-    ):
-        return f"percentile_approx({args[0]}, 0.5)"
-    if name == "topK" and len(args) == 1:
-        return _topk_exact(args[0], "10")
-    if name == "topKWeighted" and len(args) == 2:
-        return _topk_weighted_exact(args[0], args[1], "10")
-    if name in (
-        "quantileExactWeighted", "medianExactWeighted",
-    ) and len(args) == 2:
-        # CH default level 0.5 (the median form)
-        return _weighted_exact_quantile(args[0], args[1], "0.5")
+    # the plain one-list form applies the parameters' documented
+    # default; the remaining forms have no meaningful default →
+    # refuse naming the parametric spelling rather than surfacing an
+    # opaque Spark undefined-function error
+    arity, params = _PARAMETRIC_DEFAULTS.get(name, (None, []))
+    if len(args) == arity:
+        return _render_parametric(name, params, args)
     raise DialectError(
         f"{name} is a parametric aggregate — write "
-        f"{name}(params)({joined})"
+        f"{name}(params)({', '.join(args)})"
     )
 
 
@@ -9492,8 +9491,10 @@ def _render_call(name: str, args: list[str]) -> str:
     The first answer wins: the ``(name, arity)`` row of ``_TEMPLATES``,
     the name's registered handler, the first of ``_PATTERNS`` (prefix,
     suffix and combinator families) that answers, a ``_RENAME``, the
-    plain-list default of a ``_PARAMETRIC`` aggregate, and finally the
-    call verbatim.  Handlers and patterns return None to decline."""
+    plain-list default of a parametric head (its
+    ``_PARAMETRIC_DEFAULTS`` row, rendered by
+    :func:`_render_parametric`), and finally the call verbatim.
+    Handlers and patterns return None to decline."""
     name = _B18_ALIASES.get(name, name)
     template = _TEMPLATES.get((name, len(args)))
     if template is not None:
@@ -9650,10 +9651,193 @@ def _weighted_exact_quantile(v: str, w: str, p: str) -> str:
 
 
 def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
-    """CH parametric aggregates: ``fn(params)(args)``."""
-    if name in (
-        "windowFunnelIf", "sequenceMatchIf", "sequenceCountIf",
-    ) and len(args) >= 3:
+    """Render the ClickHouse parametric aggregate ``name(params)(args)``.
+
+    The name's ``_PARAMETRIC_RENDERERS`` entry answers first, then the
+    ``-Resample`` suffix rule; a renderer returns None to decline, and a
+    call nothing answers refuses."""
+    render = _PARAMETRIC_RENDERERS.get(name)
+    if render is not None and (out := render(name, params, args)) is not None:
+        return out
+    if name.endswith("Resample") and len(name) > len("Resample"):
+        return _render_resample(name, params, args)
+    raise DialectError(f"unsupported parametric aggregate: {name}")
+
+
+def _render_resample(name: str, params: list[str], args: list[str]) -> str:
+    """-Resample combinator (VERDICT r10 item 2):
+    ``fooResample(start, stop, step)(args…, key)`` aggregates each
+    subinterval [start + i·step, min(start + (i+1)·step, stop)) of the
+    key independently and returns the ARRAY of results.
+    start/stop/step are CH-mandated literals, so the bucket list folds
+    at TRANSPILE time into one -If aggregate per bucket — map-side
+    partial aggregation over a single pass, no extra shuffle, the same
+    plan a hand-written FILTER-per-bucket GROUP BY would get."""
+    head = name[: -len("Resample")]
+    if head not in _RESAMPLE_HEADS:
+        raise DialectError(
+            f"{name}: -Resample transpiles for the -If-capable "
+            "heads (" + ", ".join(sorted(_RESAMPLE_HEADS)) + ") — "
+            "GROUP BY intDiv(key - start, step) for other "
+            "aggregates"
+        )
+    if len(params) != 3:
+        raise DialectError(
+            f"{name}: exactly one (start, stop, step) triple "
+            "transpiles — multiple resampling keys need explicit "
+            "GROUP BY buckets"
+        )
+
+    def _num(tok: str, what: str) -> float:
+        tok = tok.strip()
+        try:
+            return float(tok) if "." in tok or "e" in tok.lower() else int(tok)
+        except ValueError:
+            raise DialectError(
+                f"{name}: {what} must be a numeric literal — the "
+                "bucket list expands at transpile time"
+            ) from None
+
+    start = _num(params[0], "start")
+    stop = _num(params[1], "stop")
+    step = _num(params[2], "step")
+    if step <= 0 or stop <= start:
+        raise DialectError(f"{name}: requires stop > start and step > 0")
+    n = math.ceil((stop - start) / step)
+    if n > 256:
+        raise DialectError(
+            f"{name}: {n} buckets would expand to {n} aggregate "
+            "expressions — GROUP BY intDiv(key - start, step) "
+            "with a HAVING range instead"
+        )
+    min_args = 1 if head == "count" else 2
+    if len(args) < min_args:
+        raise DialectError(
+            f"{name}: the argument list is (…aggregate args, "
+            "resampling key)"
+        )
+    key, head_args = args[-1], args[:-1]
+    buckets = []
+    for i in range(n):
+        lo = start + i * step
+        hi = min(start + (i + 1) * step, stop)
+        cond = f"(({key}) >= {lo} AND ({key}) < {hi})"
+        cell = _render_call(head + "If", head_args + [cond])
+        if head == "sum":
+            # an EMPTY bucket: CH's non-Nullable sum yields 0, the
+            # Spark CASE-masked sum yields NULL (code-review r11).
+            # count/uniq/uniqExact already return 0; the remaining
+            # heads (min/max/avg/any…) keep NULL — a documented
+            # refinement of CH's type-default footgun (MIGRATION.md)
+            cell = f"coalesce({cell}, 0)"
+        buckets.append(cell)
+    return f"array({', '.join(buckets)})"
+
+
+def _levels(name: str, levels: list[str]) -> str:
+    """A singular head's one level as itself; the levels of a plural
+    ``quantiles*`` head, or several of a singular one, as array(…)."""
+    if len(levels) == 1 and not name.startswith("quantiles"):
+        return levels[0]
+    return f"array({', '.join(levels)})"
+
+
+def _percentile(fn: str):
+    """The renderer of a percentile-family row: ``fn(x, level)``, and
+    ``fn(x, array(levels…))`` for the plural ``quantiles*`` twin."""
+
+    def render(name, params, args):
+        plural = name.startswith("quantiles")
+        if plural or len(params) == 1:
+            if not (params and args):
+                shape = "level, …" if plural else "level"
+                raise DialectError(
+                    f"{name} needs a level and a value: {name}({shape})(x)"
+                )
+            return f"{fn}({args[0]}, {_levels(name, params)})"
+
+    return render
+
+
+# the percentile family as rows: the approximate-quantile registers
+# are all ClickHouse sketches whose Spark register is percentile_approx
+# (same role, different sketch); quantileExact is Spark's percentile
+_parametric(
+    "quantile", "quantiles", "quantileTDigest", "quantilesTDigest",
+    "quantileTiming", "quantilesTiming", "quantileBFloat16",
+    "quantilesBFloat16",
+)(_percentile("percentile_approx"))
+_parametric("quantileExact", "quantilesExact")(_percentile("percentile"))
+
+
+@_parametric("quantileDeterministic", "quantilesDeterministic")
+def _render_quantile_deterministic(name, params, args):
+    # (x, determinator): the determinator only stabilizes CH's
+    # sampling — percentile_approx is already deterministic
+    if params and args:
+        return _PARAMETRIC_RENDERERS["quantile"](name, params, args)
+
+
+#: fn(p)(x) heads, one row each: name → render(x, p)
+_ONE_LEVEL = {
+    # adaptive histogram: Spark's histogram_numeric is the same
+    # streaming-merge construction (centers + heights); ClickHouse
+    # returns (lower, upper, height) triples vs Spark's (x, y)
+    # centers — same role, documented shape difference
+    "histogram": lambda x, p: f"histogram_numeric({x}, {p})",
+    # exact: the n smallest values in order (CH semantics)
+    "groupArraySorted": lambda x, p: (
+        f"slice(sort_array(collect_list({x})), 1, {p})"
+    ),
+    # ClickHouse's non-interpolating exact tiers: the element at
+    # floor/ceil((n-1)·level) of the sorted group (Low keeps the
+    # lower of two middle elements, High the upper)
+    "quantileExactLow": lambda x, p: (
+        f"element_at(sort_array(collect_list({x})), "
+        f"CAST(floor((count({x}) - 1) * ({p})) + 1 AS INT))"
+    ),
+    "quantileExactHigh": lambda x, p: (
+        f"element_at(sort_array(collect_list({x})), "
+        f"CAST(ceil((count({x}) - 1) * ({p})) + 1 AS INT))"
+    ),
+    # parametric level over the portable sorted-multiset state
+    "quantileMerge": lambda x, p: _q_merge_sql(x, p, restate=False),
+    "quantileExactMerge": lambda x, p: _q_merge_sql(x, p, restate=False),
+    "quantileTimingMerge": lambda x, p: _qt_merge_sql(x, p, restate=False),
+}
+
+
+@_parametric(*_ONE_LEVEL)
+def _render_one_level(name, params, args):
+    if len(params) == len(args) == 1:
+        return _ONE_LEVEL[name](args[0], params[0])
+
+
+#: value-masked -If forms → (argument count, one level only)
+_MASKED_IF = {
+    "quantileIf": (2, True), "quantileTDigestIf": (2, True),
+    "quantileTimingIf": (2, True), "quantileExactIf": (2, True),
+    "topKIf": (2, True), "quantilesIf": (2, False),
+    "quantileExactWeightedIf": (3, False),
+    "quantilesExactWeightedIf": (3, False),
+}
+
+
+@_parametric(*_MASKED_IF)
+def _render_masked_if(name, params, args):
+    # -If combinator: the condition masks the VALUE and the base head
+    # renders — every base skips NULL values (the weighted fold drops
+    # the NULL pair), so masked rows contribute neither weight nor
+    # value (code-review r14d)
+    nargs, one_level = _MASKED_IF[name]
+    if len(args) == nargs and params and not (one_level and params[1:]):
+        masked = [f"CASE WHEN {args[-1]} THEN {args[0]} END", *args[1:-1]]
+        return _PARAMETRIC_RENDERERS[name[:-2]](name, params, masked)
+
+
+@_parametric("windowFunnelIf", "sequenceMatchIf", "sequenceCountIf")
+def _render_sequence_if(name, params, args):
+    if len(args) >= 3:
         # -If on the sequence family: excluded rows must match NO
         # stage — AND the condition into every per-row stage flag
         # (r14 batch 28; the retentionIf composition).  EXCEPT
@@ -9674,19 +9858,11 @@ def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
             name[:-2], params,
             [args[0]] + [f"(({c}) AND ({cond}))" for c in args[1:-1]],
         )
-    if name == "quantilesIf" and len(args) == 2 and params:
-        return (
-            f"percentile_approx(CASE WHEN {args[1]} THEN {args[0]} "
-            f"END, array({', '.join(params)}))"
-        )
-    if name == "topKIf" and len(params) == 1 and len(args) == 2:
-        return _render_parametric(
-            "topK", params,
-            [f"CASE WHEN {args[1]} THEN {args[0]} END"],
-        )
-    if name == "groupConcat" and len(params) in (1, 2) and len(
-        args
-    ) == 1:
+
+
+@_parametric("groupConcat")
+def _render_group_concat(name, params, args):
+    if len(params) in (1, 2) and len(args) == 1:
         # CH parametric spelling groupConcat(sep[, limit])(x) —
         # delimiter and limit are both PARAMETERS, the aggregate is
         # unary (code-review r11b: the first cut invented a
@@ -9697,242 +9873,96 @@ def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
                 f"{params[1]}), {params[0]})"
             )
         return f"array_join(collect_list({args[0]}), {params[0]})"
-    if name in (
-        "quantileExactWeighted", "quantilesExactWeighted",
-        "medianExactWeighted",
-    ) and len(args) == 2 and params:
-        cells = [
-            _weighted_exact_quantile(args[0], args[1], p)
-            for p in params
-        ]
-        if name == "quantilesExactWeighted":
-            return f"array({', '.join(cells)})"
-        if len(params) != 1:
+
+
+@_parametric(
+    "quantileExactWeighted", "quantilesExactWeighted", "medianExactWeighted",
+)
+def _render_exact_weighted(name, params, args):
+    if len(args) == 2 and params:
+        if params[1:] and not name.startswith("quantiles"):
             raise DialectError(f"{name} takes exactly one level")
-        return cells[0]
-    if name in (
-        "quantileExactWeightedIf", "quantilesExactWeightedIf",
-    ) and len(args) == 3 and params:
-        # -If combinator: mask the VALUE by the condition — the
-        # fold skips NULL (value, weight) pairs, so masked rows
-        # contribute neither weight nor value (code-review r14d)
-        v = f"CASE WHEN {args[2]} THEN {args[0]} END"
-        cells = [
-            _weighted_exact_quantile(v, args[1], p) for p in params
-        ]
-        if name == "quantilesExactWeightedIf":
-            return f"array({', '.join(cells)})"
-        if len(params) != 1:
-            raise DialectError(f"{name} takes exactly one level")
-        return cells[0]
-    if name.endswith("Resample") and len(name) > len("Resample"):
-        # -Resample combinator (VERDICT r10 item 2):
-        # ``fooResample(start, stop, step)(args…, key)`` aggregates
-        # each subinterval [start + i·step, min(start + (i+1)·step,
-        # stop)) of the key independently and returns the ARRAY of
-        # results.  start/stop/step are CH-mandated literals, so the
-        # bucket list folds at TRANSPILE time into one -If aggregate
-        # per bucket — map-side partial aggregation over a single
-        # pass, no extra shuffle, the same plan a hand-written
-        # FILTER-per-bucket GROUP BY would get.
-        head = name[: -len("Resample")]
-        if head not in _RESAMPLE_HEADS:
-            raise DialectError(
-                f"{name}: -Resample transpiles for the -If-capable "
-                "heads (" + ", ".join(sorted(_RESAMPLE_HEADS)) + ") — "
-                "GROUP BY intDiv(key - start, step) for other "
-                "aggregates"
-            )
-        if len(params) != 3:
-            raise DialectError(
-                f"{name}: exactly one (start, stop, step) triple "
-                "transpiles — multiple resampling keys need explicit "
-                "GROUP BY buckets"
-            )
+        return _levels(name, [
+            _weighted_exact_quantile(args[0], args[1], p) for p in params
+        ])
 
-        def _num(tok: str, what: str) -> float:
-            tok = tok.strip()
-            try:
-                return (
-                    float(tok)
-                    if ("." in tok or "e" in tok.lower())
-                    else int(tok)
-                )
-            except ValueError:
-                raise DialectError(
-                    f"{name}: {what} must be a numeric literal — the "
-                    "bucket list expands at transpile time"
-                ) from None
 
-        start = _num(params[0], "start")
-        stop = _num(params[1], "stop")
-        step = _num(params[2], "step")
-        if step <= 0 or stop <= start:
-            raise DialectError(
-                f"{name}: requires stop > start and step > 0"
-            )
-        import math
+@_parametric(
+    "quantileDD", "medianDD", "quantilesDD", "quantileGK", "quantilesGK",
+)
+def _render_sketch_quantile(name, params, args):
+    # (accuracy, level, …) sketches → percentile_approx.  GK
+    # (Greenwald-Khanna): percentile_approx IS a GK-family sketch with
+    # the same (expr, level, accuracy) contract.  DD (DDSketch): the
+    # quantileTDigest precedent — same role, different sketch; the
+    # relative accuracy has no percentile_approx twin and is absorbed,
+    # and the singular level defaults to 0.5.  medianDD is CH's
+    # literal alias of quantileDD — it honors an explicit level the
+    # same way (code-review r15c: a name-gated check pinned it to 0.5)
+    plural, gk = name.startswith("quantiles"), name.endswith("GK")
+    if len(args) != 1 or len(params) < 1 + (plural or gk):
+        return None
+    if len(params) > 2 and not plural:
+        if gk:
+            return None
+        raise DialectError(
+            f"{name} takes (relative_accuracy[, level]) — "
+            "use quantilesDD for multiple levels"
+        )
+    accuracy = f", {params[0]}" if gk else ""
+    levels = _levels(name, params[1:] or ["0.5"])
+    return f"percentile_approx({args[0]}, {levels}{accuracy})"
 
-        n = math.ceil((stop - start) / step)
-        if n > 256:
-            raise DialectError(
-                f"{name}: {n} buckets would expand to {n} aggregate "
-                "expressions — GROUP BY intDiv(key - start, step) "
-                "with a HAVING range instead"
-            )
-        min_args = 1 if head == "count" else 2
-        if len(args) < min_args:
-            raise DialectError(
-                f"{name}: the argument list is (…aggregate args, "
-                "resampling key)"
-            )
-        key, head_args = args[-1], args[:-1]
-        buckets = []
-        for i in range(n):
-            lo = start + i * step
-            hi = min(start + (i + 1) * step, stop)
-            cond = f"(({key}) >= {lo} AND ({key}) < {hi})"
-            cell = _render_call(head + "If", head_args + [cond])
-            if head == "sum":
-                # an EMPTY bucket: CH's non-Nullable sum yields 0, the
-                # Spark CASE-masked sum yields NULL (code-review r11).
-                # count/uniq/uniqExact already return 0; the remaining
-                # heads (min/max/avg/any…) keep NULL — a documented
-                # refinement of CH's type-default footgun (MIGRATION.md)
-                cell = f"coalesce({cell}, 0)"
-            buckets.append(cell)
-        return f"array({', '.join(buckets)})"
-    if name == "quantile" and len(params) == 1:
-        return f"percentile_approx({args[0]}, {params[0]})"
-    if name == "quantileExact" and len(params) == 1:
-        return f"percentile({args[0]}, {params[0]})"
-    if name in ("quantiles", "quantilesTiming", "quantilesTDigest",
-                "quantilesBFloat16"):
-        return f"percentile_approx({args[0]}, array({', '.join(params)}))"
-    if (
-        name in ("quantileExactLow", "quantileExactHigh")
-        and len(params) == 1
-        and len(args) == 1
-    ):
-        # ClickHouse's non-interpolating exact tiers: the element at
-        # floor/ceil((n-1)·level) of the sorted group (Low keeps the
-        # lower of two middle elements, High the upper)
-        x, p = args[0], params[0]
-        fn = "floor" if name == "quantileExactLow" else "ceil"
+
+@_parametric(
+    "quantileExactInclusive", "quantilesExactInclusive",
+    "quantileExactExclusive", "quantilesExactExclusive",
+)
+def _render_exact_inclusive_exclusive(name, params, args):
+    # CH ExactInclusive == PERCENTILE.INC == Spark's exact percentile
+    # (type-7 linear interpolation).  PERCENTILE.EXC (type 6): h =
+    # (n+1)p over the sorted values, clamped to the ends — computed on
+    # the sorted collected array, bound once via the
+    # single-element-transform trick
+    if not (params and len(args) == 1):
+        return None
+    if name.endswith("Inclusive"):
+        return f"percentile({args[0]}, {_levels(name, params)})"
+
+    def exc(p: str) -> str:
+        h = f"((size(__q) + 1) * CAST({p} AS DOUBLE))"
+        f0 = f"CAST(floor({h}) AS INT)"
         return (
-            f"element_at(sort_array(collect_list({x})), "
-            f"CAST({fn}((count({x}) - 1) * ({p})) + 1 AS INT))"
+            f"CASE WHEN size(__q) = 0 THEN CAST(NULL AS DOUBLE) "
+            f"WHEN {h} < 1 THEN element_at(__q, 1) "
+            f"WHEN {h} >= size(__q) THEN element_at(__q, -1) "
+            f"ELSE element_at(__q, {f0}) + ({h} - floor({h})) * "
+            f"(element_at(__q, {f0} + 1) - element_at(__q, {f0}))"
+            f" END"
         )
-    if name == "quantilesExact":
-        return f"percentile({args[0]}, array({', '.join(params)}))"
-    if name == "quantileExactIf" and len(params) == 1 and len(args) == 2:
-        return (
-            f"percentile(CASE WHEN {args[1]} THEN {args[0]} END, {params[0]})"
-        )
-    if name == "histogram" and len(params) == 1 and len(args) == 1:
-        # adaptive histogram: Spark's histogram_numeric is the same
-        # streaming-merge construction (centers + heights); ClickHouse
-        # returns (lower, upper, height) triples vs Spark's (x, y)
-        # centers — same role, documented shape difference
-        return f"histogram_numeric({args[0]}, {params[0]})"
-    if name == "groupArraySorted" and len(params) == 1 and len(args) == 1:
-        # exact: the n smallest values in order (CH semantics)
-        return (
-            f"slice(sort_array(collect_list({args[0]})), 1, {params[0]})"
-        )
-    if (
-        name in ("quantileTDigest", "quantileTiming", "quantileBFloat16")
-        and len(params) == 1
-    ):
-        # all ClickHouse approximate-quantile registers; the Spark
-        # register is percentile_approx — same role, different sketch
-        return f"percentile_approx({args[0]}, {params[0]})"
-    if (
-        name in ("quantileDD", "medianDD")
-        and len(params) >= 1 and len(args) == 1
-    ):
-        # DDSketch(relative_accuracy[, level]) — the approximate-
-        # quantile ROLE → percentile_approx (the quantileTDigest/
-        # Timing/BFloat16 precedent: same contract class, different
-        # sketch; the relative-accuracy parameter has no
-        # percentile_approx twin and is documented as absorbed)
-        # medianDD is CH's literal alias of quantileDD — it honors
-        # an explicit level the same way (code-review r15c: the
-        # name-gated check silently pinned medianDD to 0.5)
-        if len(params) > 2:
-            raise DialectError(
-                f"{name} takes (relative_accuracy[, level]) — "
-                "use quantilesDD for multiple levels"
-            )
-        level = params[1] if len(params) == 2 else "0.5"
-        return f"percentile_approx({args[0]}, {level})"
-    if name == "quantilesDD" and len(params) >= 2 and len(args) == 1:
-        levels = params[1:]
-        return (
-            f"percentile_approx({args[0]}, "
-            f"array({', '.join(levels)}))"
-        )
-    if name == "quantileGK" and len(params) == 2 and len(args) == 1:
-        # Greenwald-Khanna(accuracy, level) — percentile_approx IS
-        # a GK-family sketch with the same (expr, level, accuracy)
-        # contract
-        acc, level = params
-        return f"percentile_approx({args[0]}, {level}, {acc})"
-    if name == "quantilesGK" and len(params) >= 2 and len(args) == 1:
-        # plural form: quantilesGK(accuracy, l1, l2, …)(x)
-        acc, levels = params[0], params[1:]
-        return (
-            f"percentile_approx({args[0]}, "
-            f"array({', '.join(levels)}), {acc})"
-        )
-    if (
-        name in ("quantileExactInclusive", "quantilesExactInclusive")
-        and params and len(args) == 1
-    ):
-        # CH ExactInclusive == PERCENTILE.INC == Spark's exact
-        # percentile (type-7 linear interpolation)
-        levels = (
-            params[0] if len(params) == 1
-            else f"array({', '.join(params)})"
-        )
-        if name.startswith("quantiles"):
-            levels = f"array({', '.join(params)})"
-        return f"percentile({args[0]}, {levels})"
-    if (
-        name in ("quantileExactExclusive", "quantilesExactExclusive")
-        and params and len(args) == 1
-    ):
-        # PERCENTILE.EXC (type 6): h = (n+1)p over the sorted values,
-        # clamped to the ends — computed on the sorted collected
-        # array, bound once via the single-element-transform trick
-        x = args[0]
-        def exc(p: str) -> str:
-            h = f"((size(__q) + 1) * CAST({p} AS DOUBLE))"
-            f0 = f"CAST(floor({h}) AS INT)"
-            return (
-                f"CASE WHEN size(__q) = 0 THEN CAST(NULL AS DOUBLE) "
-                f"WHEN {h} < 1 THEN element_at(__q, 1) "
-                f"WHEN {h} >= size(__q) THEN element_at(__q, -1) "
-                f"ELSE element_at(__q, {f0}) + ({h} - floor({h})) * "
-                f"(element_at(__q, {f0} + 1) - element_at(__q, {f0}))"
-                f" END"
-            )
-        if name.startswith("quantiles"):
-            body = f"array({', '.join(exc(p) for p in params)})"
-        else:
-            body = exc(params[0])
-        return (
-            f"element_at(transform(array(sort_array(collect_list("
-            f"CAST({x} AS DOUBLE)))), __q -> {body}), 1)"
-        )
-    if name == "quantileInterpolatedWeighted" and params:
+
+    levels = params if name.startswith("quantiles") else params[:1]
+    return (
+        f"element_at(transform(array(sort_array(collect_list("
+        f"CAST({args[0]} AS DOUBLE)))), "
+        f"__q -> {_levels(name, [exc(p) for p in levels])}), 1)"
+    )
+
+
+@_parametric("quantileInterpolatedWeighted")
+def _render_quantile_interpolated_weighted(name, params, args):
+    if params:
         raise DialectError(
             "quantileInterpolatedWeighted's interpolation over "
             "cumulative weights has no exact register here — "
             "quantileExactWeighted (which transpiles) is the exact "
             "weighted quantile with step semantics"
         )
-    if name == "groupArraySample" and params and len(args) == 1:
+
+
+@_parametric("groupArraySample")
+def _render_group_array_sample(name, params, args):
+    if params and len(args) == 1:
         # deterministic tier of CH's RANDOM per-group sample (the
         # topK exact-tier precedent): rank every element by the
         # engine-portable md5 prefix of (value, seed) and keep the n
@@ -9966,69 +9996,45 @@ def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
             f"named_struct('h', {h}, 'x', {args[0]}) END)), 1, {n}), "
             f"__gp -> __gp.x)"
         )
-    if name == "groupArrayLast" and params:
-        # CH keeps the LAST n in INSERTION order — order-dependent in
-        # any distributed engine (CH's own result shifts with merge
-        # order).  The deterministic tier requires the order spelled:
-        # the two-arg extension groupArrayLast(n)(x, ord) keeps the
-        # last n by ord (slice from the end of the ord-sorted
-        # multiset); the bare one-arg form refuses.
-        if len(args) == 2 and len(params) == 1:
-            x, ordc = args
-            n = params[0]
-            # single-element-transform binding so the collected array
-            # aggregates ONCE; slice start 0 is illegal, so the
-            # empty/short cases guard explicitly
-            k = f"least(CAST({n} AS INT), size(__ga))"
-            return (
-                f"element_at(transform(array(sort_array("
-                f"collect_list(named_struct('o', {ordc}, 'x', {x})))), "
-                f"__ga -> CASE WHEN size(__ga) = 0 OR ({n}) <= 0 "
-                f"THEN slice(transform(__ga, __ge -> __ge.x), 1, 0) "
-                f"ELSE transform("
-                f"slice(__ga, -{k}, {k}), __gl -> __gl.x) END), 1)"
-            )
-        raise DialectError(
-            "groupArrayLast keeps the LAST n in insertion order — "
-            "order-dependent in a distributed engine; spell the "
-            "order with the deterministic two-arg tier "
-            "groupArrayLast(n)(x, ord) (last n by ord), or "
-            "groupArraySorted over a negated key"
-        )
-    if (
-        name in ("quantileMerge", "quantileExactMerge")
-        and len(params) == 1
-        and len(args) == 1
-    ):
-        # parametric level over the portable sorted-multiset state
-        return _q_merge_sql(args[0], params[0], restate=False)
-    if (
-        name == "quantileTimingMerge"
-        and len(params) == 1
-        and len(args) == 1
-    ):
-        return _qt_merge_sql(args[0], params[0], restate=False)
-    if name == "quantileDeterministic" and len(params) == 1 and args:
-        # (x, determinator): the determinator only stabilizes CH's
-        # sampling — percentile_approx is already deterministic
-        return f"percentile_approx({args[0]}, {params[0]})"
-    if name == "quantilesDeterministic" and params and args:
-        # the plural twin (r14 batch 26)
+
+
+@_parametric("groupArrayLast")
+def _render_group_array_last(name, params, args):
+    if not params:
+        return None
+    # CH keeps the LAST n in INSERTION order — order-dependent in
+    # any distributed engine (CH's own result shifts with merge
+    # order).  The deterministic tier requires the order spelled:
+    # the two-arg extension groupArrayLast(n)(x, ord) keeps the
+    # last n by ord (slice from the end of the ord-sorted
+    # multiset); the bare one-arg form refuses.
+    if len(args) == 2 and len(params) == 1:
+        x, ordc = args
+        n = params[0]
+        # single-element-transform binding so the collected array
+        # aggregates ONCE; slice start 0 is illegal, so the
+        # empty/short cases guard explicitly
+        k = f"least(CAST({n} AS INT), size(__ga))"
         return (
-            f"percentile_approx({args[0]}, "
-            f"array({', '.join(params)}))"
+            f"element_at(transform(array(sort_array("
+            f"collect_list(named_struct('o', {ordc}, 'x', {x})))), "
+            f"__ga -> CASE WHEN size(__ga) = 0 OR ({n}) <= 0 "
+            f"THEN slice(transform(__ga, __ge -> __ge.x), 1, 0) "
+            f"ELSE transform("
+            f"slice(__ga, -{k}, {k}), __gl -> __gl.x) END), 1)"
         )
-    if (
-        name.endswith("If")
-        and name[:-2] in ("quantile", "quantileTDigest", "quantileTiming")
-        and len(params) == 1
-        and len(args) == 2
-    ):
-        return (
-            f"percentile_approx(CASE WHEN {args[1]} THEN {args[0]} END, "
-            f"{params[0]})"
-        )
-    if name == "topK" and len(params) in (1, 2, 3) and len(args) == 1:
+    raise DialectError(
+        "groupArrayLast keeps the LAST n in insertion order — "
+        "order-dependent in a distributed engine; spell the "
+        "order with the deterministic two-arg tier "
+        "groupArrayLast(n)(x, ord) (last n by ord), or "
+        "groupArraySorted over a negated key"
+    )
+
+
+@_parametric("topK")
+def _render_topk(name, params, args):
+    if len(params) in (1, 2, 3) and len(args) == 1:
         # exact tier of ClickHouse's approximate sketch (see
         # _topk_exact); events_topk_sketch is the sketch-shaped
         # scale operator.  Extended params: load_factor is a sketch
@@ -10042,11 +10048,20 @@ def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
                 "final value projection"
             )
         return _topk_exact(args[0], params[0])
-    if (
-        name in ("uniqCombined", "uniqCombined64")
-        and len(params) == 1
-        and len(args) >= 1
-    ):
+
+
+@_parametric("topKWeighted")
+def _render_topk_weighted(name, params, args):
+    if len(params) == 1 and len(args) == 2:
+        # exact tier of ClickHouse's weighted sketch (see
+        # _topk_weighted_exact); events_topk_weighted is the
+        # dedicated scale operator
+        return _topk_weighted_exact(args[0], args[1], params[0])
+
+
+@_parametric("uniqCombined", "uniqCombined64")
+def _render_uniq_combined(name, params, args):
+    if len(params) == 1 and len(args) >= 1:
         # precision form: K = log2(registers); Spark's HLL knob is
         # relative standard deviation — the textbook equivalence is
         # rsd = 1.04 / sqrt(2^K) (same register count), folded to a
@@ -10060,11 +10075,11 @@ def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
         rsd = max(0.01, min(0.36, 1.04 / (2.0 ** (k / 2.0))))
         cols = ", ".join(args)
         return f"approx_count_distinct({cols}, {rsd:.6f})"
-    if (
-        name in ("sumMapFiltered", "minMapFiltered", "maxMapFiltered")
-        and len(params) == 1
-        and len(args) == 2
-    ):
+
+
+@_parametric("sumMapFiltered", "minMapFiltered", "maxMapFiltered")
+def _render_map_filtered(name, params, args):
+    if len(params) == 1 and len(args) == 2:
         # keep only the whitelisted keys BEFORE the per-key fold —
         # the filter runs row-local, so the collected state only
         # ever holds whitelisted pairs
@@ -10082,71 +10097,94 @@ def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
             [f"transform({flt}, __fp -> __fp.k)",
              f"transform({flt}, __fp -> __fp.v)"],
         )
-    if name == "uniqUpTo" and len(params) == 1 and args:
+
+
+@_parametric("uniqUpTo")
+def _render_uniq_up_to(name, params, args):
+    if len(params) == 1 and args:
         # exact distinct count saturating at k+1 (CH's contract:
         # "k+1 means more than k")
         return (
             f"least(count(DISTINCT {', '.join(args)}), "
             f"CAST(({params[0]}) + 1 AS BIGINT))"
         )
-    if name == "windowFunnel" and len(args) >= 2:
-        win_us = f"CAST({params[0]} AS BIGINT) * 1000000"
-        if len(params) == 1:
-            return _window_funnel_fold(win_us, args[0], args[1:])
-        modes = set()
-        for p in params[1:]:
-            m = p.strip().strip("'").lower()
-            if m == "strict":  # deprecated CH alias
-                m = "strict_dedup"
-            if m not in (
-                "strict_order", "strict_dedup", "strict_increase",
-            ):
-                raise DialectError(
-                    f"unknown windowFunnel mode {p}; supported: "
-                    "'strict_order', 'strict_dedup', 'strict_increase'"
-                )
-            modes.add(m)
-        return _window_funnel_modes_fold(
-            win_us,
-            args[0],
-            args[1:],
-            strict_order="strict_order" in modes,
-            strict_dedup="strict_dedup" in modes,
-            strict_increase="strict_increase" in modes,
+
+
+@_parametric("windowFunnel")
+def _render_window_funnel(name, params, args):
+    if len(args) < 2:
+        return None
+    if not params:
+        raise DialectError(
+            "windowFunnel needs a window and the events: "
+            "windowFunnel(window[, mode, …])(timestamp, cond, …)"
         )
-    if name == "sequenceMatch" and len(params) == 1 and len(args) >= 2:
-        refs, links = _parse_sequence_pattern(params[0])
-        if max(refs) > len(args) - 1:
-            raise DialectError(
-                f"sequenceMatch pattern references condition "
-                f"(?{max(refs)}) but only {len(args) - 1} were "
-                "supplied"
-            )
-        # extra unreferenced conditions are legal and MEANINGFUL:
-        # they make events visible to adjacency (CH's documented
-        # chain-breaking example) — only the pure-subsequence case
-        # with no extras may take the shared windowFunnel path
-        if (
-            refs == list(range(1, len(refs) + 1))
-            and max(refs) == len(args) - 1
-            and all(k[0] == "any" for k in links)
+    win_us = f"CAST({params[0]} AS BIGINT) * 1000000"
+    if len(params) == 1:
+        return _window_funnel_fold(win_us, args[0], args[1:])
+    modes = set()
+    for p in params[1:]:
+        m = p.strip().strip("'").lower()
+        if m == "strict":  # deprecated CH alias
+            m = "strict_dedup"
+        if m not in (
+            "strict_order", "strict_dedup", "strict_increase",
         ):
-            # plain ordered subsequence: the windowFunnel DP with an
-            # unbounded window (shared, plan-tested path)
-            win = str((1 << 62) - 1)
-            return (
-                f"CAST({_window_funnel_fold(win, args[0], args[1:])} "
-                f"= {len(refs)} AS SMALLINT)"
+            raise DialectError(
+                f"unknown windowFunnel mode {p}; supported: "
+                "'strict_order', 'strict_dedup', 'strict_increase'"
             )
-        # adjacency / time guards / repeated-or-reordered refs:
-        # the generalized extremal-anchor fold (r8); two-sided or
-        # exact gap guards need the full per-level anchor lists
-        if _needs_anchor_lists(links):
-            return _sequence_match_fold_anchors(
-                args[0], args[1:], refs, links
-            )
-        return _sequence_match_fold(args[0], args[1:], refs, links)
-    if name == "sequenceCount" and len(params) == 1 and len(args) >= 2:
+        modes.add(m)
+    return _window_funnel_modes_fold(
+        win_us,
+        args[0],
+        args[1:],
+        strict_order="strict_order" in modes,
+        strict_dedup="strict_dedup" in modes,
+        strict_increase="strict_increase" in modes,
+    )
+
+
+@_parametric("sequenceMatch")
+def _render_sequence_match(name, params, args):
+    if len(params) != 1 or len(args) < 2:
+        return None
+    refs, links = _parse_sequence_pattern(params[0])
+    if max(refs) > len(args) - 1:
+        raise DialectError(
+            f"sequenceMatch pattern references condition "
+            f"(?{max(refs)}) but only {len(args) - 1} were "
+            "supplied"
+        )
+    # extra unreferenced conditions are legal and MEANINGFUL:
+    # they make events visible to adjacency (CH's documented
+    # chain-breaking example) — only the pure-subsequence case
+    # with no extras may take the shared windowFunnel path
+    if (
+        refs == list(range(1, len(refs) + 1))
+        and max(refs) == len(args) - 1
+        and all(k[0] == "any" for k in links)
+    ):
+        # plain ordered subsequence: the windowFunnel DP with an
+        # unbounded window (shared, plan-tested path)
+        win = str((1 << 62) - 1)
+        return (
+            f"CAST({_window_funnel_fold(win, args[0], args[1:])} "
+            f"= {len(refs)} AS SMALLINT)"
+        )
+    # adjacency / time guards / repeated-or-reordered refs:
+    # the generalized extremal-anchor fold (r8); two-sided or
+    # exact gap guards need the full per-level anchor lists
+    if _needs_anchor_lists(links):
+        return _sequence_match_fold_anchors(
+            args[0], args[1:], refs, links
+        )
+    return _sequence_match_fold(args[0], args[1:], refs, links)
+
+
+@_parametric("sequenceCount")
+def _render_sequence_count(name, params, args):
+    if len(params) == 1 and len(args) >= 2:
         n = _sequence_chain_len(params[0])
         if n != len(args) - 1:
             raise DialectError(
@@ -10156,119 +10194,60 @@ def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
         # ClickHouse restart semantics (see _sequence_count_fold);
         # the pending-pool greedy variant is events_sequence_count
         return _sequence_count_fold(args[0], args[1:])
-    if name == "topKWeighted" and len(params) == 1 and len(args) == 2:
-        # exact tier of ClickHouse's weighted sketch (see
-        # _topk_weighted_exact); events_topk_weighted is the
-        # dedicated scale operator
-        return _topk_weighted_exact(args[0], args[1], params[0])
-    if name == "meanZTest" and len(params) == 3 and len(args) == 2:
-        # meanZTest(σx², σy², conf)(x, ind): the variances are GIVEN
-        # population constants, so the whole statistic is a FLAT
-        # conditional-sum aggregate — z = (x̄₀-x̄₁)/√(σx²/n₀+σy²/n₁),
-        # p = erfc(|z|/√2), CI on the mean difference at `conf`.
-        # The confidence quantile Φ⁻¹((1+conf)/2) folds to a constant
-        # at transpile time (CH parametric params are literals), via
-        # the stdlib's exact inverse normal CDF — no runtime UDF on
-        # the CI path; the p-value reuses the libm-exact ch_erfc
-        # compat UDF (applied to aggregate OUTPUT rows only).
-        vx, vy, conf = params
-        try:
-            conf_f = float(conf)
-            float(vx), float(vy)
-        except ValueError:
-            raise DialectError(
-                "meanZTest(variance_x, variance_y, confidence) takes "
-                "numeric literal parameters"
-            )
-        if not 0.0 < conf_f < 1.0:
-            raise DialectError(
-                "meanZTest confidence level must be in (0, 1)"
-            )
-        from statistics import NormalDist
 
-        zcrit = NormalDist().inv_cdf((1.0 + conf_f) / 2.0)
-        x, raw_ind = args
-        ind = f"CAST(({raw_ind}) AS INT)"
-        d = "DECIMAL(38,6)"
-        n0 = f"CAST(count_if(({ind}) = 0) AS DOUBLE)"
-        n1 = f"CAST(count_if(({ind}) = 1) AS DOUBLE)"
-        s0 = (f"CAST(sum(CASE WHEN ({ind}) = 0 THEN "
-              f"CAST({x} AS {d}) END) AS DOUBLE)")
-        s1 = (f"CAST(sum(CASE WHEN ({ind}) = 1 THEN "
-              f"CAST({x} AS {d}) END) AS DOUBLE)")
-        m0, m1 = f"(({s0}) / ({n0}))", f"(({s1}) / ({n1}))"
-        se = f"sqrt(({vx}) / ({n0}) + ({vy}) / ({n1}))"
-        diff = f"(({m0}) - ({m1}))"
-        z = f"(({diff}) / ({se}))"
-        return (
-            f"named_struct('z_stat', {z}, "
-            f"'p_value', ch_erfc(abs({z}) / sqrt(2.0)), "
-            f"'ci_low', ({diff}) - ({zcrit!r}) * ({se}), "
-            f"'ci_high', ({diff}) + ({zcrit!r}) * ({se}))"
+
+@_parametric("meanZTest")
+def _render_mean_z_test(name, params, args):
+    if len(params) != 3 or len(args) != 2:
+        return None
+    # meanZTest(σx², σy², conf)(x, ind): the variances are GIVEN
+    # population constants, so the whole statistic is a FLAT
+    # conditional-sum aggregate — z = (x̄₀-x̄₁)/√(σx²/n₀+σy²/n₁),
+    # p = erfc(|z|/√2), CI on the mean difference at `conf`.
+    # The confidence quantile Φ⁻¹((1+conf)/2) folds to a constant
+    # at transpile time (CH parametric params are literals), via
+    # the stdlib's exact inverse normal CDF — no runtime UDF on
+    # the CI path; the p-value reuses the libm-exact ch_erfc
+    # compat UDF (applied to aggregate OUTPUT rows only).
+    vx, vy, conf = params
+    try:
+        conf_f = float(conf)
+        float(vx), float(vy)
+    except ValueError:
+        raise DialectError(
+            "meanZTest(variance_x, variance_y, confidence) takes "
+            "numeric literal parameters"
         )
-    raise DialectError(f"unsupported parametric aggregate: {name}")
+    if not 0.0 < conf_f < 1.0:
+        raise DialectError(
+            "meanZTest confidence level must be in (0, 1)"
+        )
+    from statistics import NormalDist
+
+    zcrit = NormalDist().inv_cdf((1.0 + conf_f) / 2.0)
+    x, raw_ind = args
+    ind = f"CAST(({raw_ind}) AS INT)"
+    d = "DECIMAL(38,6)"
+    n0 = f"CAST(count_if(({ind}) = 0) AS DOUBLE)"
+    n1 = f"CAST(count_if(({ind}) = 1) AS DOUBLE)"
+    s0 = (f"CAST(sum(CASE WHEN ({ind}) = 0 THEN "
+          f"CAST({x} AS {d}) END) AS DOUBLE)")
+    s1 = (f"CAST(sum(CASE WHEN ({ind}) = 1 THEN "
+          f"CAST({x} AS {d}) END) AS DOUBLE)")
+    m0, m1 = f"(({s0}) / ({n0}))", f"(({s1}) / ({n1}))"
+    se = f"sqrt(({vx}) / ({n0}) + ({vy}) / ({n1}))"
+    diff = f"(({m0}) - ({m1}))"
+    z = f"(({diff}) / ({se}))"
+    return (
+        f"named_struct('z_stat', {z}, "
+        f"'p_value', ch_erfc(abs({z}) / sqrt(2.0)), "
+        f"'ci_low', ({diff}) - ({zcrit!r}) * ({se}), "
+        f"'ci_high', ({diff}) + ({zcrit!r}) * ({se}))"
+    )
 
 
-_PARAMETRIC = {
-    "groupConcat",
-    "quantileExactWeighted",
-    "quantilesExactWeighted",
-    "quantileExactWeightedIf",
-    "quantilesExactWeightedIf",
-    "quantilesIf",
-    "topKIf",
-    "windowFunnelIf",
-    "sequenceMatchIf",
-    "sequenceCountIf",
-    "medianExactWeighted",
-    "meanZTest",
-    "quantilesGK",
-    "quantile",
-    "uniqCombined",
-    "uniqCombined64",
-    "sumMapFiltered",
-    "minMapFiltered",
-    "maxMapFiltered",
-    "quantileBFloat16",
-    "quantileGK",
-    "quantileDD",
-    "quantilesDD",
-    "medianDD",
-    "quantileExactInclusive",
-    "quantileExactExclusive",
-    "quantilesExactInclusive",
-    "quantilesExactExclusive",
-    "quantileInterpolatedWeighted",
-    "groupArraySample",
-    "groupArrayLast",
-    "quantileExact",
-    "quantiles",
-    "quantilesExact",
-    "quantilesTiming",
-    "quantilesTDigest",
-    "quantilesBFloat16",
-    "quantilesDeterministic",
-    "quantileExactLow",
-    "quantileExactHigh",
-    "quantileExactIf",
-    "quantileIf",
-    "quantileTDigestIf",
-    "quantileTimingIf",
-    "quantileDeterministic",
-    "quantileMerge",
-    "quantileExactMerge",
-    "quantileTimingMerge",
-    "uniqUpTo",
-    "quantileTDigest",
-    "quantileTiming",
-    "groupArraySorted",
-    "topK",
-    "topKWeighted",
-    "windowFunnel",
-    "sequenceMatch",
-    "sequenceCount",
-    "histogram",
-}
+#: every head that has a ``fn(params)(args)`` renderer
+_PARAMETRIC = frozenset(_PARAMETRIC_RENDERERS)
 
 
 def _walk(
@@ -17743,6 +17722,15 @@ def run_clickhouse_script(
                 spark.sql(f"DROP TABLE IF EXISTS {name}")
                 _ddl.unregister_engine_info(name)
             out_ddl = _ddl.transpile_ddl(stmt, path_override=override)
+            if override and engine_info(name) is not None:
+                # a relocated local (MergeTree-family) table: create its
+                # directory first, so neither the CREATE nor the next
+                # statement resolves a missing path
+                sc = spark.sparkContext
+                loc = sc._jvm.org.apache.hadoop.fs.Path(override)
+                fs = loc.getFileSystem(sc._jsc.hadoopConfiguration())
+                if not fs.exists(loc):
+                    fs.mkdirs(loc)
             if out_ddl:  # ENGINE=Kafka registers a readStream
                 spark.sql(out_ddl)  # source and emits no batch DDL
             results.append(("table", name))

@@ -490,6 +490,28 @@ def test_script_create_table_existence_semantics(spark, tmp_path):
     run_clickhouse_script(spark, "DROP TABLE IF EXISTS sem_t;")
 
 
+def test_script_creates_relocated_table_directory(spark, tmp_path):
+    """A MergeTree CREATE relocated by ``path_overrides`` creates its
+    directory, so neither the CREATE nor the next read resolves a
+    missing path; an S3 table's relocated source is left as given."""
+    from clickhouse_vs_dbt_spark.dialect import run_clickhouse_script
+
+    loc, src = tmp_path / "reloc" / "t", tmp_path / "s3" / "k.parquet"
+    spark.sql("DROP TABLE IF EXISTS reloc_t")
+    spark.sql("DROP TABLE IF EXISTS reloc_s3")
+    run_clickhouse_script(
+        spark,
+        "CREATE TABLE reloc_t (k UInt64) ENGINE = MergeTree ORDER BY k;"
+        "CREATE TABLE reloc_s3 (k UInt64) "
+        "ENGINE = S3('s3://b/k.parquet', 'Parquet');",
+        path_overrides={"reloc_t": str(loc), "reloc_s3": str(src)},
+    )
+    assert loc.is_dir() and not src.exists()
+    assert spark.table("reloc_t").count() == 0
+    spark.sql("DROP TABLE reloc_t")
+    spark.sql("DROP TABLE reloc_s3")
+
+
 def test_ddl_drops_index_projection_constraint(spark, tmp_path):
     """r7: table-level INDEX (data-skipping), PROJECTION, and
     CONSTRAINT entries are layout/engine concerns — dropped, with the

@@ -487,6 +487,22 @@ def test_plain_parametric_without_default_raises():
         transpile("SELECT groupArraySorted(x) FROM t")
 
 
+@pytest.mark.parametrize("sql, shape", [
+    ("SELECT quantile(0.5)() FROM t", "quantile(level)(x)"),
+    ("SELECT quantiles(0.5)() FROM t", "quantiles(level, …)(x)"),
+    ("SELECT quantiles()(x) FROM t", "quantiles(level, …)(x)"),
+    ("SELECT quantilesExact()(x) FROM t", "quantilesExact(level, …)(x)"),
+    ("SELECT windowFunnel()(t, a) FROM t",
+     "windowFunnel(window[, mode, …])(timestamp, cond, …)"),
+])
+def test_parametric_empty_list_names_the_shape(sql, shape):
+    """An empty level or argument list refuses with the spelling it
+    needs, not an IndexError or a ``percentile(x, array())``."""
+    with pytest.raises(DialectError) as caught:
+        transpile(sql)
+    assert str(caught.value).endswith(shape)
+
+
 def test_multiif_arity_check():
     with pytest.raises(DialectError):
         transpile("multiIf(a, b)")

@@ -9,6 +9,15 @@ and ``transpile`` of every ``tools/passthrough_audit.py`` candidate.  A
 result is the output string, or ``[exception class, message]``; when
 DialectWarnings fired it is ``{"out" | "exc": ..., "warn": [...]}``.
 Dispatch changes must keep all of it byte for byte.
+
+The ``render_parametric`` section was recorded later, from the if-chain
+``_render_parametric`` that the parametric registry replaced: for every
+``_PARAMETRIC`` head plus three ``-Resample`` heads, each parameter list
+of :data:`_PARAM_SHAPES` against the :func:`_variants` argument shapes
+at arities 0-4.  :func:`record_render_parametric` rewrites that section
+alone, run from the repository root::
+
+    python -c "from tests.test_dialect_golden import record_render_parametric as r; r()"
 """
 
 from __future__ import annotations
@@ -21,8 +30,19 @@ import pytest
 
 from clickhouse_vs_dbt_spark import dialect
 
-GOLDEN = json.loads(
-    (Path(__file__).with_name("dialect_golden.json")).read_text()
+GOLDEN_PATH = Path(__file__).with_name("dialect_golden.json")
+GOLDEN = json.loads(GOLDEN_PATH.read_text(encoding="utf-8"))
+
+#: parameter lists for ``fn(params)(args)``: levels, a bucket triple,
+#: an array literal, sequence patterns (plain subsequence, adjacency,
+#: exact time guard) and the string modes some heads inspect
+_PARAM_SHAPES = (
+    [],
+    ["1"], ["0.5"], ["[1, 2]"],
+    ["'(?1).*(?2)'"], ["'(?1)(?2)'"], ["'(?1)(?t==1)(?2)'"],
+    ["0.5", "0.9"], ["1", "'strict_order'"],
+    ["0", "4", "2"], ["0.5", "0.9", "0.95"],
+    ["1", "'strict'", "'strict_increase'"], ["10", "0", "'counts'"],
 )
 
 
@@ -56,6 +76,43 @@ def _record(fn, *args):
     return {key: res, "warn": msgs} if msgs else res
 
 
+def _parametric_cases():
+    """``(key, name, params)`` for the ``render_parametric`` section;
+    the key spells the parameter list, ``quantiles(0.5, 0.9)``."""
+    names = dialect._PARAMETRIC | {
+        "sumResample", "countResample", "avgResample",
+    }
+    for name in sorted(names):
+        for params in _PARAM_SHAPES:
+            yield f"{name}({', '.join(params)})", name, params
+
+
+def _render_parametric_results() -> dict[str, list]:
+    shapes = [a for n in range(5) for a in _variants(n)]
+    return {
+        key: [_record(dialect._render_parametric, name, params, args)
+              for args in shapes]
+        for key, name, params in _parametric_cases()
+    }
+
+
+def record_render_parametric(path: Path = GOLDEN_PATH) -> None:
+    """Rewrite the ``render_parametric`` section of the golden file
+    from the current ``_render_parametric``, leaving the bytes of
+    every other section as they are."""
+    text = path.read_text(encoding="utf-8")
+    cut = text.find(',\n"render_parametric": {')
+    body = text[:cut] if cut >= 0 else text.rstrip()[:-1].rstrip()
+    lines = ",\n".join(
+        f" {json.dumps(key)}: {json.dumps(res, ensure_ascii=False)}"
+        for key, res in _render_parametric_results().items()
+    )
+    path.write_text(
+        f'{body},\n"render_parametric": {{\n{lines}\n}}\n}}\n',
+        encoding="utf-8",
+    )
+
+
 def _mismatches(pairs):
     bad = [(key, want, got) for key, want, got in pairs if want != got]
     return f"{len(bad)} mismatch(es); first: {bad[:3]}" if bad else None
@@ -73,6 +130,18 @@ def test_render_call_matches_golden():
 
     assert GOLDEN["render_call"]
     assert _mismatches(pairs()) is None
+
+
+def test_render_parametric_matches_golden():
+    got = _render_parametric_results()
+    want = GOLDEN["render_parametric"]
+    assert list(got) == list(want)
+    assert all(len(got[key]) == len(v) for key, v in want.items())
+    assert _mismatches(
+        ((key, i), w, g)
+        for key in want
+        for i, (w, g) in enumerate(zip(want[key], got[key]))
+    ) is None
 
 
 def test_ch_statements_match_golden():
@@ -108,12 +177,51 @@ def test_second_registration_raises():
     with pytest.raises(ValueError, match="cutWWW/1"):
         dialect._template_table([("cutWWW", 1, "a"), ("cutWWW", 1, "b")])
     assert dialect._HANDLERS["multiIf"] is not fn
+    with pytest.raises(ValueError, match="topK"):
+        dialect._parametric("topK")(fn)  # has a renderer
+    with pytest.raises(ValueError, match="quantiles"):
+        dialect._parametric("quantiles")(fn)  # a percentile row
+    assert dialect._PARAMETRIC_RENDERERS["topK"] is not fn
+
+
+#: the parametric heads of the if-chain the registry replaced; the
+#: front door's refusal message lists them in this order
+_PARENT_PARAMETRIC = [
+    "groupArrayLast", "groupArraySample", "groupArraySorted",
+    "groupConcat", "histogram", "maxMapFiltered", "meanZTest",
+    "medianDD", "medianExactWeighted", "minMapFiltered", "quantile",
+    "quantileBFloat16", "quantileDD", "quantileDeterministic",
+    "quantileExact", "quantileExactExclusive", "quantileExactHigh",
+    "quantileExactIf", "quantileExactInclusive", "quantileExactLow",
+    "quantileExactMerge", "quantileExactWeighted",
+    "quantileExactWeightedIf", "quantileGK", "quantileIf",
+    "quantileInterpolatedWeighted", "quantileMerge", "quantileTDigest",
+    "quantileTDigestIf", "quantileTiming", "quantileTimingIf",
+    "quantileTimingMerge", "quantiles", "quantilesBFloat16",
+    "quantilesDD", "quantilesDeterministic", "quantilesExact",
+    "quantilesExactExclusive", "quantilesExactInclusive",
+    "quantilesExactWeighted", "quantilesExactWeightedIf", "quantilesGK",
+    "quantilesIf", "quantilesTDigest", "quantilesTiming",
+    "sequenceCount", "sequenceCountIf", "sequenceMatch",
+    "sequenceMatchIf", "sumMapFiltered", "topK", "topKIf",
+    "topKWeighted", "uniqCombined", "uniqCombined64", "uniqUpTo",
+    "windowFunnel", "windowFunnelIf",
+]
+
+
+def test_parametric_heads_are_the_registry_keys():
+    assert dialect._PARAMETRIC == frozenset(dialect._PARAMETRIC_RENDERERS)
+    assert sorted(dialect._PARAMETRIC) == _PARENT_PARAMETRIC
+    with pytest.raises(dialect.DialectError) as caught:
+        dialect.transpile("SELECT fooBar(1)(x) FROM t")
+    assert str(caught.value).endswith(", ".join(_PARENT_PARAMETRIC))
 
 
 def test_every_registered_key_is_reachable(monkeypatch):
     """No alias or pattern shadows a registration: the dispatcher
     answers each template key from its row and each handler name
-    from its handler."""
+    from its handler, and :func:`_render_parametric` answers each
+    parametric head from its renderer, before the -Resample rule."""
     for (name, arity), template in dialect._TEMPLATES.items():
         args = [f"a{i}" for i in range(arity)]
         assert name not in dialect._B18_ALIASES, name
@@ -124,6 +232,29 @@ def test_every_registered_key_is_reachable(monkeypatch):
             dialect._HANDLERS, name, lambda n, a: f"<handled {n}>"
         )
         assert dialect._render_call(name, ["a0"]) == f"<handled {name}>"
+    # the parametric table: each percentile row renders its own Spark
+    # aggregate, and every key is answered by its own renderer
+    rows = {
+        name: "percentile" if "Exact" in name else "percentile_approx"
+        for name in ("quantile", "quantiles", "quantileTDigest",
+                     "quantilesTDigest", "quantileTiming",
+                     "quantilesTiming", "quantileBFloat16",
+                     "quantilesBFloat16", "quantileExact",
+                     "quantilesExact")
+    }
+    for name, fn in rows.items():
+        levels = "array(0.5)" if name.startswith("quantiles") else "0.5"
+        assert dialect._render_parametric(name, ["0.5"], ["x"]) == (
+            f"{fn}(x, {levels})"
+        )
+    for name in list(dialect._PARAMETRIC_RENDERERS):
+        monkeypatch.setitem(
+            dialect._PARAMETRIC_RENDERERS, name,
+            lambda n, p, a: f"<rendered {n}>",
+        )
+        assert dialect._render_parametric(name, ["1"], ["a0"]) == (
+            f"<rendered {name}>"
+        )
 
 
 @pytest.mark.parametrize("name, args", [
