@@ -1,13 +1,15 @@
-"""ClickHouse-dialect compatibility layer: SQL function registry.
+"""ClickHouse-dialect compatibility layer: the scalar-name table.
 
 A user of the reference writes ``toYear(LO_ORDERDATE) = 1993``
-(reference README.md:417, 426, 435).  This module registers the
-ClickHouse scalar-function names as **Spark SQL UDFs** (``CREATE
-TEMPORARY FUNCTION ... RETURN <expr>``) — pure Catalyst expression
-substitution, inlined into the plan at analysis time (no Python, no JVM
-UDF object) — an expression written with these names produces the
-IDENTICAL plan to its built-in spelling, including whatever pushdown
-that spelling gets.  The few functions with no Catalyst spelling
+(reference README.md:417, 426, 435).  ``_COMPAT_FUNCS`` is the one
+definition of each such name: a signature and a body template.  The
+dialect front door (``dialect.transpile``) inlines the body with the
+call's arguments, so its SQL is the built-in spelling itself — same
+plan, same pushdown, no session object.  For raw ``spark.sql``
+callers, ``register_clickhouse_compat`` registers the same rows as
+**Spark SQL UDFs** (``CREATE TEMPORARY FUNCTION ... RETURN <expr>``),
+which Catalyst inlines at analysis time.  The few functions with no
+Catalyst spelling
 (``ch_erf``, ``ch_idn``, the SipHash family …) are Arrow-batched pandas
 UDFs (``_vectorized_udfs``).  ``register_clickhouse_compat`` issues the
 62 registrations, each one JVM round trip, concurrently on a small
@@ -45,65 +47,63 @@ from clickhouse_vs_dbt_spark.operators.common import sql_dsum
 if TYPE_CHECKING:
     from pyspark.sql._typing import UserDefinedFunctionLike
 
-# name -> (signature, body).  Each body is a single Catalyst expression.
+# name -> (signature, body), the one definition of each name.  The body
+# is a str.format template ({0} the first argument) that ``transpile``
+# fills with the call's arguments and the SQL function with its
+# parameters: it names each argument once and parenthesizes operators.
 _COMPAT_FUNCS: dict[str, tuple[str, str]] = {
     # date functions (the reference's entire scalar surface, D1-D3)
-    "toYear": ("(d DATE) RETURNS INT", "year(d)"),
-    "toYYYYMM": ("(d DATE) RETURNS INT", "year(d) * 100 + month(d)"),
-    "toISOWeek": ("(d DATE) RETURNS INT", "weekofyear(d)"),
-    "toMonth": ("(d DATE) RETURNS INT", "month(d)"),
-    "toDayOfMonth": ("(d DATE) RETURNS INT", "day(d)"),
-    "toDayOfWeek": ("(d DATE) RETURNS INT", "weekday(d) + 1"),  # 1=Mon..7=Sun
-    "toQuarter": ("(d DATE) RETURNS INT", "quarter(d)"),
-    "toStartOfMonth": ("(d DATE) RETURNS DATE", "CAST(date_trunc('month', d) AS DATE)"),
-    "toMonday": ("(d DATE) RETURNS DATE", "CAST(date_trunc('week', d) AS DATE)"),
-    "toStartOfQuarter": (
-        "(d DATE) RETURNS DATE",
-        "CAST(date_trunc('quarter', d) AS DATE)",
-    ),
-    "toUnixTimestamp": ("(t TIMESTAMP) RETURNS BIGINT", "unix_timestamp(t)"),
-    "addDays": ("(d DATE, n INT) RETURNS DATE", "date_add(d, n)"),
-    "subtractDays": ("(d DATE, n INT) RETURNS DATE", "date_sub(d, n)"),
-    "addMonths": ("(d DATE, n INT) RETURNS DATE", "add_months(d, n)"),
-    "addYears": ("(d DATE, n INT) RETURNS DATE", "add_months(d, n * 12)"),
-    "toDayOfYear": ("(d DATE) RETURNS INT", "dayofyear(d)"),
-    "toStartOfHour": (
-        "(t TIMESTAMP) RETURNS TIMESTAMP",
-        "date_trunc('hour', t)",
-    ),
-    "toStartOfMinute": (
-        "(t TIMESTAMP) RETURNS TIMESTAMP",
-        "date_trunc('minute', t)",
-    ),
-    "toLastDayOfMonth": ("(d DATE) RETURNS DATE", "last_day(d)"),
-    "dateDiff_day": ("(a DATE, b DATE) RETURNS INT", "datediff(b, a)"),
-    "toStartOfYear": ("(d DATE) RETURNS DATE", "CAST(date_trunc('year', d) AS DATE)"),
-    "toStartOfDay": (
-        "(t TIMESTAMP) RETURNS TIMESTAMP",
-        "date_trunc('day', t)",
-    ),
-    "toDate": ("(t TIMESTAMP) RETURNS DATE", "CAST(t AS DATE)"),
-    "toHour": ("(t TIMESTAMP) RETURNS INT", "hour(t)"),
-    "toMinute": ("(t TIMESTAMP) RETURNS INT", "minute(t)"),
-    "toSecond": ("(t TIMESTAMP) RETURNS INT", "second(t)"),
+    "toYear": ("(d DATE) RETURNS INT", "year({0})"),
+    "toYYYYMM": ("(d DATE) RETURNS INT", "CAST(date_format({0}, 'yyyyMM') AS INT)"),
+    "toISOWeek": ("(d DATE) RETURNS INT", "weekofyear({0})"),
+    "toMonth": ("(d DATE) RETURNS INT", "month({0})"),
+    "toDayOfMonth": ("(d DATE) RETURNS INT", "day({0})"),
+    "toDayOfWeek": ("(d DATE) RETURNS INT", "(weekday({0}) + 1)"),  # 1=Mon..7=Sun
+    "toQuarter": ("(d DATE) RETURNS INT", "quarter({0})"),
+    "toStartOfMonth": ("(d DATE) RETURNS DATE", "CAST(date_trunc('month', {0}) AS DATE)"),
+    "toMonday": ("(d DATE) RETURNS DATE", "CAST(date_trunc('week', {0}) AS DATE)"),
+    "toStartOfQuarter": ("(d DATE) RETURNS DATE", "CAST(date_trunc('quarter', {0}) AS DATE)"),
+    # CAST as the parameter does where a bare date string (for
+    # unix_timestamp), BIGINT or fractional count answers otherwise
+    "toUnixTimestamp": ("(t TIMESTAMP) RETURNS BIGINT", "unix_timestamp(CAST({0} AS TIMESTAMP))"),
+    "addDays": ("(d DATE, n INT) RETURNS DATE", "date_add({0}, CAST({1} AS INT))"),
+    "subtractDays": ("(d DATE, n INT) RETURNS DATE", "date_sub({0}, CAST({1} AS INT))"),
+    "addMonths": ("(d DATE, n INT) RETURNS DATE", "add_months({0}, {1})"),
+    "addYears": ("(d DATE, n INT) RETURNS DATE", "add_months({0}, CAST({1} AS INT) * 12)"),
+    "toDayOfYear": ("(d DATE) RETURNS INT", "dayofyear({0})"),
+    "toStartOfHour": ("(t TIMESTAMP) RETURNS TIMESTAMP", "date_trunc('hour', {0})"),
+    "toStartOfMinute": ("(t TIMESTAMP) RETURNS TIMESTAMP", "date_trunc('minute', {0})"),
+    "toLastDayOfMonth": ("(d DATE) RETURNS DATE", "last_day({0})"),
+    "dateDiff_day": ("(a DATE, b DATE) RETURNS INT", "datediff({1}, {0})"),
+    "toStartOfYear": ("(d DATE) RETURNS DATE", "CAST(date_trunc('year', {0}) AS DATE)"),
+    "toStartOfDay": ("(t TIMESTAMP) RETURNS TIMESTAMP", "date_trunc('day', {0})"),
+    "toDate": ("(t TIMESTAMP) RETURNS DATE", "CAST({0} AS DATE)"),
+    "toHour": ("(t TIMESTAMP) RETURNS INT", "hour({0})"),
+    "toMinute": ("(t TIMESTAMP) RETURNS INT", "minute({0})"),
+    "toSecond": ("(t TIMESTAMP) RETURNS INT", "second({0})"),
     # bit functions
-    "bitCount": ("(x BIGINT) RETURNS INT", "bit_count(x)"),
+    "bitCount": ("(x BIGINT) RETURNS INT", "bit_count({0})"),
     # arithmetic / conditional
-    "intDiv": ("(a BIGINT, b BIGINT) RETURNS BIGINT", "a div b"),
-    "modulo": ("(a BIGINT, b BIGINT) RETURNS BIGINT", "a % b"),
+    "intDiv": ("(a BIGINT, b BIGINT) RETURNS BIGINT", "(({0}) DIV ({1}))"),
+    "modulo": ("(a BIGINT, b BIGINT) RETURNS BIGINT", "(({0}) % ({1}))"),
     # string functions
-    "empty": ("(s STRING) RETURNS BOOLEAN", "length(s) = 0"),
-    "notEmpty": ("(s STRING) RETURNS BOOLEAN", "length(s) > 0"),
-    "lengthUTF8": ("(s STRING) RETURNS INT", "length(s)"),
-    "editDistance": ("(a STRING, b STRING) RETURNS INT", "levenshtein(a, b)"),
+    "empty": ("(s STRING) RETURNS BOOLEAN", "(length({0}) = 0)"),
+    "notEmpty": ("(s STRING) RETURNS BOOLEAN", "(length({0}) > 0)"),
+    "lengthUTF8": ("(s STRING) RETURNS INT", "length({0})"),
+    "editDistance": ("(a STRING, b STRING) RETURNS INT", "levenshtein({0}, {1})"),
     # NOTE: ClickHouse position(h, n) is NOT registered — `position` is a
     # reserved Spark built-in (SQL-standard position(n IN h)) that SQL
     # UDFs may not shadow; instr() already has the ClickHouse signature.
     "splitByChar": (
         "(sep STRING, s STRING) RETURNS ARRAY<STRING>",
-        "split(s, concat('\\\\Q', sep, '\\\\E'))",
+        "split({1}, concat('\\\\Q', {0}, '\\\\E'))",  # \Q..\E quotes sep
     ),
 }
+
+
+def compat_params(sig: str) -> list[str]:
+    """``(d DATE, n INT) RETURNS DATE`` -> ``['d', 'n']``."""
+    return [p.split()[0] for p in sig[1:sig.index(")")].split(",")]
 
 
 #: driver threads that issue the registrations; a fixed pool — 2, 4 and
@@ -141,7 +141,8 @@ def register_clickhouse_compat(spark: SparkSession) -> None:
     calls = [
         functools.partial(
             spark.sql,
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} RETURN {body}",
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} "
+            f"RETURN {body.format(*compat_params(sig))}",
         )
         for name, (sig, body) in _COMPAT_FUNCS.items()
     ] + [

@@ -1,11 +1,10 @@
-"""ClickHouse-SQL → Spark-SQL transpiler: the dialect constructs a
-scalar SQL UDF cannot express.
+"""ClickHouse-SQL → Spark-SQL transpiler: names and syntax.
 
-``compat.py`` covers the scalar surface (``toYear`` et al.) by
-registering Catalyst-inlined SQL UDFs — same plan, same pushdown.  But a
-ClickHouse user's queries (the reference is 100% ClickHouse SQL,
-README.md:415-436 and every dbt model) also lean on constructs that are
-*syntax*, not functions, and so cannot be registered:
+The scalar surface (``toYear`` et al., README.md:415-436) is inlined
+from ``compat._COMPAT_FUNCS``, so transpiled SQL calls no session SQL
+function.  But a ClickHouse user's queries (the reference is 100%
+ClickHouse SQL, and so is every dbt model) also lean on constructs that
+are *syntax*, not functions, and so could never be registered:
 
 * **aggregate combinators** — ``sumIf(x, cond)``, ``countIf(cond)``:
   Spark SQL UDFs may not be aggregates;
@@ -21,19 +20,19 @@ README.md:415-436 and every dbt model) also lean on constructs that are
 tokenizing (string literals, quoted identifiers, and comments are
 opaque tokens — parens inside them never confuse the walk) and
 recursively rewriting function-call sites with balanced-paren argument
-parsing.  Everything unrecognized passes through verbatim, so the
-transpiler composes with the compat UDF registry: ``transpile``
-handles syntax, ``compat`` handles names, and a verbatim reference
-query runs unmodified.
+parsing.  Everything unrecognized passes through verbatim, and a
+verbatim reference query runs unmodified.
 
 Each call site renders through :func:`_render_call`, a lookup in one
-name-keyed registry.  To add a function: a mapping that
-is one format string over the arguments is a ``_TEMPLATES`` row
-``(name, arity, template)`` with ``{0}`` the first argument; a name
-that refuses whatever its arguments is a ``_REFUSALS`` row; anything
-else is a handler ``fn(name, args)`` under ``@_handler("name", ...)``
-that returns the Spark SQL, or None to decline.  A name has exactly
-one of these, and registering it twice raises ValueError at import.
+name-keyed registry.  To add a function: a compat name is one
+``_COMPAT_FUNCS`` row (``_TEMPLATES`` loads it; raw ``spark.sql`` gets
+it as a SQL function); another one-format-string mapping is a
+``_TEMPLATES`` row ``(name, arity, template)`` with ``{0}`` the first
+argument; a name that refuses whatever its arguments is a
+``_REFUSALS`` row; anything else is a handler ``fn(name, args)`` under
+``@_handler("name", ...)`` that returns the Spark SQL, or None to
+decline.  A name has exactly one of these, and registering it twice
+raises ValueError at import.
 ``_PATTERNS`` is only for families recognized by prefix or suffix
 (``toInterval*``, the ``-If``/``-OrNull``/``-State`` combinators).
 They run after the registry declines, so a pattern never shadows a
@@ -169,6 +168,7 @@ from clickhouse_vs_dbt_spark.catalog import (
     rebalanced,
     register_views,
 )
+from clickhouse_vs_dbt_spark.compat import _COMPAT_FUNCS, compat_params
 from clickhouse_vs_dbt_spark.compat import register_clickhouse_compat
 from clickhouse_vs_dbt_spark.session import scratch_dir
 
@@ -262,7 +262,6 @@ _RENAME = {
     "bitShiftLeft": "shiftleft",
     "bitShiftRight": "shiftright",
     "isNaN": "isnan",
-    "bitCount": "bit_count",
     "trimLeft": "ltrim",
     "trimRight": "rtrim",
     "reverseUTF8": "reverse",
@@ -280,10 +279,6 @@ _RENAME = {
     "mapContains": "map_contains_key",
     "mapContainsKey": "map_contains_key",  # r13 batch 18 alias
     # r8 batch 6 (third pass-through audit): engine-exact equivalents
-    "toLastDayOfMonth": "last_day",
-    "toQuarter": "quarter",
-    "toDayOfYear": "dayofyear",
-    "editDistance": "levenshtein",
     "editDistanceUTF8": "levenshtein",
     "arrayZipUnaligned": "arrays_zip",  # Spark zips pad NULL (CH rule)
 }
@@ -508,6 +503,10 @@ def _template_table(rows) -> dict[tuple[str, int], str]:
     return table
 
 
+#: compat names whose handler also renders a mode or timezone arity
+_COMPAT_HANDLED = frozenset(("toDate", "toDayOfWeek", "toUnixTimestamp"))
+
+
 # one-line mappings: (name, arity) → a str.format template over the
 # call's arguments ({0} is the first).  A name listed here has no
 # handler; see _render_call for the lookup order.
@@ -587,7 +586,6 @@ _TEMPLATES = _template_table((
      "{0})), true)), __lp -> "
      "IF(coalesce(__lp, 0) = 0, CAST(0 AS BIGINT), "
      "size({1}) - __lp + 1)), 1)"),
-    ("toMonday", 1, "CAST(date_sub({0}, (dayofweek({0}) + 5) % 7) AS DATE)"),
     ("toRelativeDayNum", 1, "datediff({0}, DATE'1970-01-01')"),
     ("toRelativeHourNum", 1, "(unix_timestamp({0}) div 3600)"),
     ("toRelativeMinuteNum", 1, "(unix_timestamp({0}) div 60)"),
@@ -1127,7 +1125,6 @@ _TEMPLATES = _template_table((
     # (docs pin countEqual([1, 2, NULL, NULL], NULL) = 2) —
     # '=' would drop every NULL comparison (r15b)
     ("countEqual", 2, "size(filter({0}, __ce -> __ce <=> ({1})))"),
-    ("intDiv", 2, "(({0}) DIV ({1}))"),
     ("intDivOrZero", 2,
      "(CASE WHEN ({1}) = 0 THEN 0 ELSE ({0}) DIV ({1}) END)"),
     ("bitAnd", 2, "(({0}) & ({1}))"),
@@ -1137,8 +1134,6 @@ _TEMPLATES = _template_table((
     ("isFinite", 1,
      "(NOT isnan({0}) AND abs({0}) != CAST('Infinity' AS DOUBLE))"),
     ("isInfinite", 1, "(abs({0}) = CAST('Infinity' AS DOUBLE))"),
-    # Spark length counts characters
-    ("lengthUTF8", 1, "length({0})"),
     # Spark STRING values are valid UTF-8 by construction (the
     # JVM/Arrow string types enforce it) — constant true with
     # NULL propagation; validate raw BYTES before casting if the
@@ -1287,10 +1282,6 @@ _TEMPLATES = _template_table((
     # patterns WITH a capture group — ClickHouse would return the
     # group; write regexp_extract_all(s, re, 1) directly for that.
     ("extractAll", 2, "regexp_extract_all({0}, {1}, 0)"),
-    # inlined (not left to the compat SQL UDF): Spark rejects SQL
-    # UDFs under Generate, so arrayJoin(splitByChar(...)) needs the
-    # raw expression; \\Q..\\E regex-quotes the separator
-    ("splitByChar", 2, "split({1}, concat('\\\\Q', {0}, '\\\\E'))"),
     # any NON-NULL element across the group's arrays (CH any
     # skips NULLs): per row, the first non-null element; empty
     # or all-null arrays yield NULL, which ignoreNulls skips
@@ -1346,6 +1337,9 @@ _TEMPLATES = _template_table((
     ("tryIdnaEncode", 1, "ch_idn({0}, 'itry')"),
     ("idnaDecode", 1, "ch_idn({0}, 'idec')"),
     ("countIfOrNull", 1, "nullif(count_if({0}), 0)"),
+    # every compat name at its declared arity: its _COMPAT_FUNCS row
+    *((name, len(compat_params(sig)), body) for name, (sig, body)
+      in _COMPAT_FUNCS.items() if name not in _COMPAT_HANDLED),
 ))
 _TEMPLATE_NAMES = frozenset(name for name, _ in _TEMPLATES)
 
@@ -3943,8 +3937,10 @@ _TZ_ARITY = {
 }
 
 
-@_handler("toDate")
+@_handler("toDate", "toUnixTimestamp")
 def _strip_utc_zone(name, args):
+    if len(args) == 1 and name in _COMPAT_HANDLED:
+        return _COMPAT_FUNCS[name][1].format(*args)
     if len(args) in _TZ_ARITY[name]:
         tz = args[-1].strip().strip("'\"")
         if tz in ("UTC", "Etc/UTC", "Universal"):
@@ -5286,7 +5282,7 @@ def _render_to_day_of_week(name, args):
         # dayofweek() (Sun=1..Sat=7); the 3-arg timezone form refuses
         mode = args[1].strip() if len(args) == 2 else "0"
         spell = {
-            "0": f"(weekday({args[0]}) + 1)",
+            "0": _COMPAT_FUNCS[name][1].format(args[0]),
             "1": f"weekday({args[0]})",
             "2": f"(dayofweek({args[0]}) - 1)",
             "3": f"dayofweek({args[0]})",
@@ -7319,14 +7315,6 @@ def _render_interval_length_sum(name, args):
             "'ce', greatest(coalesce(a.ce, x.e), x.e)), "
             "a -> a.t)"
         )
-
-
-@_handler("toUnixTimestamp")
-def _render_to_unix_timestamp(name, args):
-    if (out := _strip_utc_zone(name, args)) is not None:
-        return out
-    if len(args) == 1:
-        return f"unix_timestamp({args[0]})"
 
 
 @_handler("countSubstringsCaseInsensitive")
@@ -9655,7 +9643,9 @@ def _render_parametric(name: str, params: list[str], args: list[str]) -> str:
 
     The name's ``_PARAMETRIC_RENDERERS`` entry answers first, then the
     ``-Resample`` suffix rule; a renderer returns None to decline, and a
-    call nothing answers refuses."""
+    call nothing answers refuses (as do two levels on a singular head)."""
+    if params[1:] and name in _ONE_LEVEL_QUANTILES:
+        raise DialectError(f"{name} takes exactly one level")
     render = _PARAMETRIC_RENDERERS.get(name)
     if render is not None and (out := render(name, params, args)) is not None:
         return out
@@ -9736,7 +9726,7 @@ def _render_resample(name: str, params: list[str], args: list[str]) -> str:
 
 def _levels(name: str, levels: list[str]) -> str:
     """A singular head's one level as itself; the levels of a plural
-    ``quantiles*`` head, or several of a singular one, as array(…)."""
+    ``quantiles*`` head as array(…)."""
     if len(levels) == 1 and not name.startswith("quantiles"):
         return levels[0]
     return f"array({', '.join(levels)})"
@@ -9748,8 +9738,8 @@ def _percentile(fn: str):
 
     def render(name, params, args):
         plural = name.startswith("quantiles")
-        if plural or len(params) == 1:
-            if not (params and args):
+        if plural or params:
+            if not (params and len(args) == 1):
                 shape = "level, …" if plural else "level"
                 raise DialectError(
                     f"{name} needs a level and a value: {name}({shape})(x)"
@@ -9775,7 +9765,10 @@ def _render_quantile_deterministic(name, params, args):
     # (x, determinator): the determinator only stabilizes CH's
     # sampling — percentile_approx is already deterministic
     if params and args:
-        return _PARAMETRIC_RENDERERS["quantile"](name, params, args)
+        if args[2:]:
+            shape = f"{name}(level)(x, determinator)"
+            raise DialectError(f"{name} takes a value and a determinator: {shape}")
+        return _PARAMETRIC_RENDERERS["quantile"](name, params, args[:1])
 
 
 #: fn(p)(x) heads, one row each: name → render(x, p)
@@ -9817,6 +9810,7 @@ def _render_one_level(name, params, args):
 _MASKED_IF = {
     "quantileIf": (2, True), "quantileTDigestIf": (2, True),
     "quantileTimingIf": (2, True), "quantileExactIf": (2, True),
+    "quantileBFloat16If": (2, True),
     "topKIf": (2, True), "quantilesIf": (2, False),
     "quantileExactWeightedIf": (3, False),
     "quantilesExactWeightedIf": (3, False),
@@ -9880,8 +9874,6 @@ def _render_group_concat(name, params, args):
 )
 def _render_exact_weighted(name, params, args):
     if len(args) == 2 and params:
-        if params[1:] and not name.startswith("quantiles"):
-            raise DialectError(f"{name} takes exactly one level")
         return _levels(name, [
             _weighted_exact_quantile(args[0], args[1], p) for p in params
         ])
@@ -9941,11 +9933,10 @@ def _render_exact_inclusive_exclusive(name, params, args):
             f" END"
         )
 
-    levels = params if name.startswith("quantiles") else params[:1]
     return (
         f"element_at(transform(array(sort_array(collect_list("
         f"CAST({args[0]} AS DOUBLE)))), "
-        f"__q -> {_levels(name, [exc(p) for p in levels])}), 1)"
+        f"__q -> {_levels(name, [exc(p) for p in params])}), 1)"
     )
 
 
@@ -10248,6 +10239,12 @@ def _render_mean_z_test(name, params, args):
 
 #: every head that has a ``fn(params)(args)`` renderer
 _PARAMETRIC = frozenset(_PARAMETRIC_RENDERERS)
+
+#: the singular quantile heads, whose one parameter is the level (a
+#: sketch's first is its accuracy; InterpolatedWeighted always refuses)
+_ONE_LEVEL_QUANTILES = frozenset(
+    name for name in _PARAMETRIC if re.match("quantile(?!s)|median", name)
+) - {"quantileDD", "medianDD", "quantileGK", "quantileInterpolatedWeighted"}
 
 
 def _walk(
@@ -18489,7 +18486,7 @@ GROUP BY o_orderstatus
 """
 
 
-# 2. arrayJoin + splitByChar (compat UDF) + rename aggregates — the
+# 2. arrayJoin + splitByChar (compat name) + rename aggregates — the
 #    explode runs in the subquery select list exactly where CH puts it.
 _CH_ARRAYJOIN = """
 SELECT tok,

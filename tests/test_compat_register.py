@@ -10,6 +10,7 @@ import itertools
 import pytest
 
 from clickhouse_vs_dbt_spark import compat
+from clickhouse_vs_dbt_spark.dialect import _tokens, transpile
 
 # sample values per parameter type, NULL included (no zero BIGINT:
 # intDiv/modulo raise on a zero divisor under ANSI mode)
@@ -27,6 +28,17 @@ _SAMPLES = {
 def _temporary_names(spark) -> set[str]:
     return {f.name.lower() for f in spark.catalog.listFunctions()
             if f.isTemporary}
+
+
+def _compat_calls(sql: str) -> list[str]:
+    """The ``_COMPAT_FUNCS`` names that ``sql`` calls; Spark resolves
+    function names case-insensitively, and string literals and quoted
+    identifiers are single tokens, so a column named ``toYear(d)`` is
+    no call."""
+    names = {n.lower() for n in compat._COMPAT_FUNCS}
+    code = [t for t in _tokens(sql) if not t.isspace()]
+    return [t for t, nxt in zip(code, code[1:])
+            if nxt == "(" and t.lower() in names]
 
 
 def _all_names() -> set[str]:
@@ -62,8 +74,28 @@ def registered(spark):
     return s
 
 
+#: what a front-door caller passes for each parameter type, NULL
+#: included: dates, timestamps with and without a zone and date strings
+#: for a date or timestamp, INT and BIGINT for an integer
+_DATES = [
+    "DATE'2024-02-29'", "DATE'1970-01-01'",
+    "TIMESTAMP'2024-02-29 13:45:07'", "TIMESTAMP'1995-12-31 23:59:59'",
+    "TIMESTAMP_NTZ'2024-02-29 13:45:07'", "'2024-02-29'",
+    "'1995-12-31 23:59:59'", "NULL",
+]
+_INTEGERS = ["3", "-14", "CAST(17 AS BIGINT)", "CAST(-5 AS BIGINT)", "NULL"]
+_INPUTS = {
+    "DATE": _DATES, "TIMESTAMP": _DATES, "INT": _INTEGERS,
+    "BIGINT": _INTEGERS + ["9007199254740993"],
+    "STRING": _SAMPLES["STRING"] + ["NULL"],
+}
+
+
 @pytest.mark.parametrize("name", sorted(compat._COMPAT_FUNCS))
-def test_sql_function_equals_its_body(registered, name):
+def test_sql_function_equals_its_body(registered, fresh, name):
+    """The registered SQL function computes its row's body, and the
+    front door's inlined body answers as the SQL function does in a
+    session that never registered one."""
     sig, body = compat._COMPAT_FUNCS[name]
     params, ret = _params(sig)
     # every combination of sample values, each parameter also NULL
@@ -74,16 +106,31 @@ def test_sql_function_equals_its_body(registered, name):
     rows = ", ".join(
         "(" + ", ".join(combo) + ")" for combo in itertools.product(*cols)
     )
-    names = ", ".join(p for p, _ in params)
+    names = [p for p, _ in params]
     got = registered.sql(
-        f"SELECT {names}, {name}({names}) AS got, "
-        f"CAST(({body}) AS {ret}) AS want "
-        f"FROM VALUES {rows} AS t({names})"
+        f"SELECT {', '.join(names)}, {name}({', '.join(names)}) AS got, "
+        f"CAST(({body.format(*names)}) AS {ret}) AS want "
+        f"FROM VALUES {rows} AS t({', '.join(names)})"
     ).collect()
     assert len(got) == len(list(itertools.product(*cols)))
     bad = [r for r in got if r["got"] != r["want"]]
     assert not bad, bad[:3]
     assert any(r["got"] is None for r in got)
+
+    calls = [
+        f"CAST({name}({', '.join(combo)}) AS STRING) AS c{i}"
+        for i, combo in enumerate(
+            itertools.product(*(_INPUTS[t] for _, t in params))
+        )
+    ]
+    query = f"SELECT {', '.join(calls)}"
+    inline = transpile(query)
+    assert not _compat_calls(inline), inline
+    assert not _all_names() & _temporary_names(fresh)
+    want = registered.sql(query).first().asDict()
+    got = fresh.sql(inline).first().asDict()
+    bad = {c: (want[c], got[c]) for c in want if want[c] != got[c]}
+    assert not bad, [(calls[int(c[1:])], v) for c, v in bad.items()][:3]
 
 
 def test_second_call_issues_no_round_trip(fresh, monkeypatch):
@@ -104,7 +151,7 @@ def test_failed_registration_raises_and_leaves_session_unmarked(
     fresh, monkeypatch
 ):
     broken = dict(compat._COMPAT_FUNCS)
-    broken["toYear"] = ("(d DATE) RETURNS INT", "year(d")
+    broken["toYear"] = ("(d DATE) RETURNS INT", "year({0}")
     monkeypatch.setattr(compat, "_COMPAT_FUNCS", broken)
     with pytest.raises(Exception, match="(?i)syntax|parse"):
         compat.register_clickhouse_compat(fresh)

@@ -143,7 +143,7 @@ def test_with_totals_multi_expr_and_tail_clauses():
     out = transpile(
         "SELECT a, b FROM t GROUP BY toYear(d), b WITH TOTALS ORDER BY a"
     )
-    assert "GROUPING SETS((toYear(d), b), ())" in out
+    assert "GROUPING SETS((year(d), b), ())" in out
     assert out.endswith("ORDER BY a")
 
 
@@ -501,6 +501,49 @@ def test_parametric_empty_list_names_the_shape(sql, shape):
     with pytest.raises(DialectError) as caught:
         transpile(sql)
     assert str(caught.value).endswith(shape)
+
+
+@pytest.mark.parametrize("sql, shape", [
+    ("SELECT quantile(0.5)(a, b) FROM t", "quantile(level)(x)"),
+    ("SELECT quantileTDigest(0.5)(a, b, c) FROM t",
+     "quantileTDigest(level)(x)"),
+    ("SELECT quantilesExact(0.5, 0.9)(a, b) FROM t",
+     "quantilesExact(level, …)(x)"),
+    ("SELECT quantileDeterministic(0.5)(a, b, c) FROM t",
+     "quantileDeterministic(level)(x, determinator)"),
+])
+def test_percentile_extra_values_name_the_shape(sql, shape):
+    """A second value is not dropped: ClickHouse rejects the call."""
+    with pytest.raises(DialectError) as caught:
+        transpile(sql)
+    assert str(caught.value).endswith(shape)
+
+
+@pytest.mark.parametrize("head, args", [
+    ("quantile", "x"), ("quantileExact", "x"), ("quantileTDigest", "x"),
+    ("quantileTiming", "x"), ("quantileBFloat16", "x"),
+    ("quantileDeterministic", "x, d"), ("quantileExactLow", "x"),
+    ("quantileExactHigh", "x"), ("quantileExactExclusive", "x"),
+    ("quantileExactInclusive", "x"), ("quantileIf", "x, c"),
+    ("quantileBFloat16If", "x, c"), ("quantileExactWeighted", "x, w"),
+    ("medianExactWeighted", "x, w"), ("quantileExactWeightedIf", "x, w, c"),
+])
+def test_singular_quantile_heads_take_one_level(head, args):
+    """Two levels on a singular head refuse with one text, as in
+    ClickHouse; a plural head keeps the array."""
+    with pytest.raises(DialectError, match=f"^{head} takes exactly one level$"):
+        transpile(f"SELECT {head}(0.5, 0.9)({args}) FROM t")
+    assert "array(0.5, 0.9)" in transpile(
+        "SELECT quantilesExactInclusive(0.5, 0.9)(x) FROM t"
+    )
+
+
+def test_median_bfloat16_if_masks_like_its_twins():
+    want = "percentile_approx(CASE WHEN c THEN x END, 0.5)"
+    for head in ("medianTimingIf", "medianTDigestIf", "medianBFloat16If"):
+        assert transpile(f"SELECT {head}(x, c) FROM t") == (
+            f"SELECT {want} FROM t"
+        )
 
 
 def test_multiif_arity_check():

@@ -184,13 +184,15 @@ def test_second_registration_raises():
     assert dialect._PARAMETRIC_RENDERERS["topK"] is not fn
 
 
-#: the parametric heads of the if-chain the registry replaced; the
-#: front door's refusal message lists them in this order
+#: the parametric heads of the if-chain the registry replaced, plus
+#: quantileBFloat16If, the -If twin medianBFloat16If renders through;
+#: the front door's refusal message lists them in this order
 _PARENT_PARAMETRIC = [
     "groupArrayLast", "groupArraySample", "groupArraySorted",
     "groupConcat", "histogram", "maxMapFiltered", "meanZTest",
     "medianDD", "medianExactWeighted", "minMapFiltered", "quantile",
-    "quantileBFloat16", "quantileDD", "quantileDeterministic",
+    "quantileBFloat16", "quantileBFloat16If", "quantileDD",
+    "quantileDeterministic",
     "quantileExact", "quantileExactExclusive", "quantileExactHigh",
     "quantileExactIf", "quantileExactInclusive", "quantileExactLow",
     "quantileExactMerge", "quantileExactWeighted",
@@ -255,6 +257,36 @@ def test_every_registered_key_is_reachable(monkeypatch):
         assert dialect._render_parametric(name, ["1"], ["a0"]) == (
             f"<rendered {name}>"
         )
+
+
+def test_compat_names_render_from_their_row():
+    """Each ``_COMPAT_FUNCS`` name has one definition: at its declared
+    arity the front door renders the row's template, and no rename or
+    template row of the transpiler spells it."""
+    assert not dialect._RENAME.keys() & dialect._COMPAT_FUNCS.keys()
+    for name, (sig, body) in dialect._COMPAT_FUNCS.items():
+        args = [f"a{i}" for i in range(len(dialect.compat_params(sig)))]
+        assert dialect._render_call(name, args) == body.format(*args), name
+        template = dialect._TEMPLATES.get((name, len(args)))
+        assert template in (None, body), name
+
+
+def test_no_transpiled_statement_calls_a_compat_function():
+    """The front door inlines every compat name, so no ``_CH_*``
+    statement or pass-through candidate needs a session SQL function."""
+    from tests.test_compat_register import _compat_calls
+    from tools.passthrough_audit import CANDIDATES
+
+    sqls = [v for k, v in vars(dialect).items()
+            if k.startswith("_CH_") and isinstance(v, str)]
+    sqls += [f"SELECT {expr} AS r FROM __pt_audit" for expr in CANDIDATES]
+    calls = {}
+    for sql in sqls:
+        got = _record(dialect.transpile, sql)
+        out = got.get("out") if isinstance(got, dict) else got
+        if isinstance(out, str) and (found := _compat_calls(out)):
+            calls[sql] = found
+    assert len(sqls) > 111 and not calls, calls
 
 
 @pytest.mark.parametrize("name, args", [
