@@ -50,13 +50,16 @@ is a ``_PARAMETRIC_DEFAULTS`` row; ``-Resample`` is a suffix rule.
 Statement re-plans give some aggregate families (weighted quantiles,
 interval sweeps, group-array tiers, bounded ``groupConcat``) a
 whole-statement plan with bounded aggregation state when the SELECT
-that owns the call is flat and grouped.  To add one: a hit predicate
-``(toks, n) -> bool`` that spots the family's call at token ``n``; a
-replan ``(toks, s, e) -> str | None`` for the owning segment that
-builds on :func:`_select_clause_spans` and :func:`_own_grouped_select`
-(and :func:`_vet_residual` for calls nested in scalar expressions)
-and emits only the family's SQL, None keeping the expression-position
-fold; and one row ``(hit, replan)`` in ``_STATEMENT_REPLANS``.
+that owns the call is flat and grouped.  All four build on one
+analysis, :func:`_own_grouped_select`, and project the group keys
+through an inner select over the verbatim FROM.  To add one: a hit
+predicate ``(toks, n) -> bool`` that spots the family's call at token
+``n``; a replan ``(toks, s, e) -> str | None`` for the owning segment
+that builds on :func:`_select_clause_spans` and
+:func:`_own_grouped_select` (and :func:`_vet_residual` for calls
+nested in scalar expressions) and emits only the family's SQL, None
+keeping the expression-position fold; and one row ``(hit, replan)``
+in ``_STATEMENT_REPLANS``.
 
 Every gated front-door query is one row ``(name, query, oracle)`` in
 ``_GATES``, from which ``QUERIES`` and ``ORACLES`` are built.  To add
@@ -9806,14 +9809,14 @@ def _render_one_level(name, params, args):
         return _ONE_LEVEL[name](args[0], params[0])
 
 
-#: value-masked -If forms → (argument count, one level only)
+#: value-masked -If forms → argument count (the base head's own
+#: parameter rules apply: a singular quantile refuses a second level
+#: in :func:`_render_parametric`)
 _MASKED_IF = {
-    "quantileIf": (2, True), "quantileTDigestIf": (2, True),
-    "quantileTimingIf": (2, True), "quantileExactIf": (2, True),
-    "quantileBFloat16If": (2, True),
-    "topKIf": (2, True), "quantilesIf": (2, False),
-    "quantileExactWeightedIf": (3, False),
-    "quantilesExactWeightedIf": (3, False),
+    "quantileIf": 2, "quantileTDigestIf": 2, "quantileTimingIf": 2,
+    "quantileExactIf": 2, "quantileBFloat16If": 2, "topKIf": 2,
+    "quantilesIf": 2, "quantileExactWeightedIf": 3,
+    "quantilesExactWeightedIf": 3,
 }
 
 
@@ -9823,8 +9826,7 @@ def _render_masked_if(name, params, args):
     # renders — every base skips NULL values (the weighted fold drops
     # the NULL pair), so masked rows contribute neither weight nor
     # value (code-review r14d)
-    nargs, one_level = _MASKED_IF[name]
-    if len(args) == nargs and params and not (one_level and params[1:]):
+    if len(args) == _MASKED_IF[name] and params:
         masked = [f"CASE WHEN {args[-1]} THEN {args[0]} END", *args[1:-1]]
         return _PARAMETRIC_RENDERERS[name[:-2]](name, params, masked)
 
@@ -13801,14 +13803,8 @@ def _memoized_table_count(table: str):
         spark = SparkSession.getActiveSession()
         if spark is None:
             return None
-        loc = None
-        for row in spark.sql(
-            f"DESCRIBE FORMATTED {table}"
-        ).collect():
-            if str(row[0]).strip() == "Location":
-                loc = str(row[1]).strip()
-                break
-        if not loc or not loc.startswith("file:"):
+        loc = _table_location(spark, table)
+        if not loc.startswith("file:"):
             return None
         import os
 
@@ -14619,7 +14615,7 @@ _CALL_HOLE = "\x00call"
 def _select_clause_spans(toks: list[str], s: int, e: int):
     """Clause texts of a FLAT SELECT segment — the clause parse every
     statement re-plan starts from (weighted quantile, interval sweep,
-    group-array tier, and both bounded-groupConcat forms).  Returns
+    group-array tier, bounded groupConcat).  Returns
     ``{"select", "from"[, "where"][, "group"][, "order"][, "limit"]}``
     (limit keeps its LIMIT keyword), or None when the segment
     contains a construct the re-plans don't own: DISTINCT,
@@ -14749,12 +14745,14 @@ def _split_alias(ts: list[str]):
 
 def _item_key(ts: list[str]):
     """``(expr, outname)`` of a select item that projects a group key —
-    ``expr AS alias``, a bare identifier, or a dotted path (output
-    name: its last component) — or None.  ``ts`` are the item's code
-    tokens; the expression re-joins through :func:`_join_code_tokens`
-    so ``>=``/``.5`` survive an alias swap into an inner select."""
-    if _as_alias(ts):
-        return _join_code_tokens(ts[:-2]), ts[-1]
+    an aliased expression (:func:`_split_alias`), a bare identifier,
+    or a dotted path (output name: its last component) — or None.
+    ``ts`` are the item's code tokens; the expression re-joins through
+    :func:`_join_code_tokens` so ``>=``/``.5`` survive an alias swap
+    into an inner select."""
+    body, alias = _split_alias(ts)
+    if alias:
+        return _join_code_tokens(body), alias
     if len(ts) % 2 and all(
         _is_ident(t) if n % 2 == 0 else t == "." for n, t in enumerate(ts)
     ):
@@ -14884,6 +14882,27 @@ def _vet_residual(ts: list[str], slots: dict, keyref: str):
         else:
             return None
     return out
+
+
+def _lift_one_call(ts: list[str], family, parse_call):
+    """``(template, call, alias)`` of an aliased select item (code
+    tokens) holding exactly one ``family`` call, lifted out of its
+    residual ``template`` as a ``_CALL_HOLE`` token; ``parse_call``
+    (tokens, call index → ``(end_exclusive, *call)`` or None) parses
+    the call.  None for any other item."""
+    ts, alias = _split_alias(ts)
+    hits = [
+        n for n, t in enumerate(ts)
+        if t in family and ts[n + 1:n + 2] == ["("]
+    ]
+    if alias is None or len(hits) != 1:
+        return None
+    parsed = parse_call(ts, hits[0])
+    if parsed is None:
+        return None
+    end, *call = parsed
+    template = ts[:hits[0]] + [f"{_CALL_HOLE}0"] + ts[end:]
+    return template, tuple(call), alias
 
 
 def _plain_table_ref(from_text: str) -> bool:
@@ -15066,66 +15085,96 @@ def _qw_replan(toks: list[str], s: int, e: int):
     )
 
 
-#: SQL infix/structural keywords that can precede a trailing
-#: identifier WITHOUT making it a bare alias (code-review r12c: the
-#: bare-alias heuristic must not read `v MOD k` as alias 'k')
-_SQL_INFIX_KEYWORDS = frozenset(
-    "AS AND OR NOT IS IN MOD DIV LIKE ILIKE RLIKE REGEXP BETWEEN "
-    "XOR OVER THEN ELSE WHEN CASE END INTERVAL DISTINCT ALL ANY "
-    "SOME EXISTS ASC DESC FROM ESCAPE COLLATE".split()
-)
-
-
-def _gc_parse_item(ts: list[str]):
-    """Parse one groupConcat select item (code tokens) for the
-    JOIN-owned bounded re-plan: ``("gc", sep, lim, x, alias)`` for a
-    whole ``groupConcat(sep, lim)(x) AS alias`` call with a literal
-    limit, else None (caller keeps the slice form)."""
-    alias, ts = _as_alias(ts), ts[:-2]
-    if alias is None or ts[:2] != ["groupConcat", "("]:
+def _gc_parse_call(ts: list[str], j: int):
+    """Parse a ``groupConcat(sep, lim)(x)`` call starting at token
+    ``j``; returns (end_exclusive, sep, lim, x) or None when the call
+    doesn't fit the ownable shape (one parameter, a limit that is not
+    a positive literal, more than one argument)."""
+    c1 = _match_close(ts, j + 1)
+    k = c1 + 1
+    if k >= len(ts) or ts[k] != "(":
         return None
-    c1 = _match_close(ts, 1)
-    params = _split_top_commas(_join_code_tokens(ts[2:c1]))
-    rest = c1 + 1
-    if (
-        rest >= len(ts) or ts[rest] != "("
-        or _match_close(ts, rest) != len(ts) - 1
-        or len(params) != 2
-    ):
-        return None
-    args = _split_top_commas(_join_code_tokens(ts[rest + 1:-1]))
-    if len(args) != 1:
+    c2 = _match_close(ts, k)
+    params = _split_top_commas(_join_code_tokens(ts[j + 2:c1]))
+    args = _split_top_commas(_join_code_tokens(ts[k + 1:c2]))
+    if len(params) != 2 or len(args) != 1:
         return None
     lim = params[1].strip()
     if not re.fullmatch(r"\d+", lim) or int(lim) < 1:
         return None  # dynamic limit: slice form
-    return ("gc", params[0].strip(), lim, args[0].strip(), alias)
+    return (c2 + 1, params[0].strip(), lim, args[0].strip())
 
 
-def _gc_replan_joined(spans: dict):
-    """Join-owned bounded groupConcat (VERDICT r12 item 3): the
-    single-relation form's ``SELECT *`` wrap would strip the join's
-    relation aliases, so this narrower form PROJECTS the group keys
-    and concat operands through an explicit inner select over the
-    verbatim from_text — the :func:`_qw_replan` precedent: qualified
-    refs resolve in the inner scope where the join aliases still
-    exist, and everything downstream (rank windows, masked collects,
-    the final GROUP BY) runs on ``__gc_k*``/``__gc_x*`` aliases.
-    Ownable shape: every select item is a projected group key or a
-    whole ``groupConcat(sep, lim)(x) AS alias`` call; mixed
-    aggregates, unaliased expressions, and set-semantics joins
-    (ASOF/ANY/PASTE/ARRAY/LATERAL, pre-screened by the caller) keep
-    the O(group) slice form."""
+def _gc_parse_item(ts: list[str]):
+    """Parse one groupConcat select item (code tokens): ``("gc",
+    template, (sep, lim, x), alias)`` — see :func:`_lift_one_call` —
+    or None (the slice form keeps it)."""
+    lifted = _lift_one_call(ts, ("groupConcat",), _gc_parse_call)
+    return lifted and ("gc", *lifted)
+
+
+def _gc_hit(toks: list[str], n: int) -> bool:
+    """A parametric ``groupConcat(sep, limit)(x)`` call at token n."""
+    if toks[n] != "groupConcat":
+        return False
+    j = _next_code(toks, n + 1)
+    if j >= len(toks) or toks[j] != "(":
+        return False
+    c1 = _match_close(toks, j)
+    k = _next_code(toks, c1 + 1)
+    return (
+        k < len(toks) and toks[k] == "("
+        and len(_split_top_commas("".join(toks[j + 1:c1]))) == 2
+    )
+
+
+def _gc_replan(toks: list[str], s: int, e: int):
+    """Statement-owned bounded form of ``groupConcat(sep, limit)(x)``
+    (VERDICT r11 item 7).  The expression renderer's
+    ``slice(collect_list(x), 1, limit)`` collects the WHOLE group
+    before truncating — O(group) state.  When the owning SELECT is an
+    owned grouped SELECT (:func:`_own_grouped_select`), an inner
+    select PROJECTS the group keys and concat operands over the
+    verbatim FROM — qualified refs resolve there, where join aliases
+    still exist — as ``__gc_k*``/``__gc_x*``, and a per-group
+    ``row_number`` pre-rank masks every row past ``limit`` to NULL
+    *before* collection (``collect_list`` drops NULLs), so the
+    aggregate state is bounded by ``limit`` regardless of group size.
+    The rank orders non-NULL values first (CH skips NULLs without
+    consuming the limit) and ties break on a read-order id,
+    preserving the renderer's partition-order contract (CH's own
+    order is unspecified).  One extra window shuffle on the group
+    keys, which the following GROUP BY reuses.  A select item may
+    wrap its one call in a scalar residual (:func:`_vet_residual`).
+    Segments it doesn't own — dynamic limits, mixed aggregates,
+    unaliased calls, a source column with the ``__gc_`` helper
+    prefix, ASOF/ANY/PASTE/ARRAY/LATERAL (their rewrites own the
+    statement shape) — keep the slice form: None."""
+    spans = _select_clause_spans(toks, s, e)
+    if spans is None or any(
+        _is_ident(t) and t.startswith("__gc_") for t in toks[s:e]
+    ):
+        return None
+    depth = 0
+    for t in _tokens(spans["from"]):
+        if t in ("(", "["):
+            depth += 1
+        elif t in (")", "]"):
+            depth -= 1
+        elif depth == 0 and _is_ident(t) and t.upper() in (
+            "LATERAL", "ARRAY", "PASTE", "ASOF", "ANY",
+        ):
+            return None
     own = _own_grouped_select(spans, ("groupConcat",), _gc_parse_item)
     if own is None:
         return None
-    items, gexprs, key_slot, _ = own
+    items, gexprs, key_slot, slots = own
     xs: list[str] = []
     x_slot: dict[str, int] = {}
     for it in items:
-        if it[0] == "gc" and _norm_expr(it[3]) not in x_slot:
-            x_slot[_norm_expr(it[3])] = len(xs)
-            xs.append(it[3])
+        if it[0] == "gc" and _norm_expr(it[2][2]) not in x_slot:
+            x_slot[_norm_expr(it[2][2])] = len(xs)
+            xs.append(it[2][2])
     ks = ", ".join(f"__gc_k{n}" for n in range(len(gexprs)))
     part = f"PARTITION BY {ks} " if gexprs else ""
     k_sel = "".join(
@@ -15150,225 +15199,23 @@ def _gc_replan_joined(spans: dict):
     for n, it in enumerate(items):
         if it[0] == "key":
             out_items.append(f"__gc_k{key_slot[n]} AS {it[2]}")
-        else:
-            _, sep, lim, x, alias = it
-            i = x_slot[_norm_expr(x)]
-            out_items.append(
-                f"array_join(collect_list(CASE WHEN __gc_rn{i} <= "
-                f"{lim} THEN __gc_x{i} END), {sep}) AS {alias}"
-            )
+            continue
+        _, template, (sep, lim, x), alias = it
+        parts = _vet_residual(template, slots, "__gc_k{}")
+        if parts is None:
+            return None
+        i = x_slot[_norm_expr(x)]
+        cell = (
+            f"array_join(collect_list(CASE WHEN __gc_rn{i} <= "
+            f"{lim} THEN __gc_x{i} END), {sep})"
+        )
+        body = _join_code_tokens([
+            cell if t.startswith(_CALL_HOLE) else t for t in parts
+        ])
+        out_items.append(f"{body} AS {alias}")
     return (
         f"SELECT {', '.join(out_items)} FROM ({inner2}) __gc_j2"
         + (f" GROUP BY {ks}" if gexprs else "")
-        + _outer_tail(spans)
-    )
-
-
-def _gc_hit(toks: list[str], n: int) -> bool:
-    """A parametric ``groupConcat(sep, limit)(x)`` call at token n."""
-    if toks[n] != "groupConcat":
-        return False
-    j = _next_code(toks, n + 1)
-    if j >= len(toks) or toks[j] != "(":
-        return False
-    c1 = _match_close(toks, j)
-    k = _next_code(toks, c1 + 1)
-    return (
-        k < len(toks) and toks[k] == "("
-        and len(_split_top_commas("".join(toks[j + 1:c1]))) == 2
-    )
-
-
-def _gc_replan(toks: list[str], s: int, e: int):
-    """Statement-owned bounded form of ``groupConcat(sep, limit)(x)``
-    (VERDICT r11 item 7).  The expression renderer's
-    ``slice(collect_list(x), 1, limit)`` collects the WHOLE group
-    before truncating — O(group) state.  When the owning SELECT is a
-    flat grouped query, a per-group ``row_number`` pre-rank masks
-    every row past ``limit`` to NULL *before* collection
-    (``collect_list`` drops NULLs), so the aggregate state is bounded
-    by ``limit`` regardless of group size.  The rank orders non-NULL
-    values first (CH skips NULLs without consuming the limit) and
-    ties break on a read-order id, preserving the renderer's
-    partition-order contract (CH's own order is unspecified).  One
-    extra window shuffle on the group keys, which the following
-    GROUP BY reuses.  Plain joined FROMs route to the projecting
-    :func:`_gc_replan_joined` form (r13); segments neither form owns
-    (SELECT *, dynamic limits, mixed aggregates over joins,
-    ASOF/ANY/PASTE/ARRAY/LATERAL) keep the slice form: None."""
-    spans = _select_clause_spans(toks, s, e)
-    if spans is None:
-        return None
-    if any(
-        _is_ident(t) and t.startswith("__gc_")
-        for t in toks[s:e]
-    ):
-        # the wrap injects __gc_ord/__gc_rn* helper columns via
-        # SELECT *; a source column sharing the prefix would collide
-        # as a duplicate/ambiguous name, so keep the slice form
-        # (ADVICE r12 — mirrors the ANY-join __any_* rcols guard)
-        return None
-    sel_text = spans["select"]
-    from_text = spans["from"]
-    where_text = spans.get("where", "")
-    group_text = spans.get("group", "")
-    # a depth-0 JOIN/comma would lose its aliases behind the
-    # SELECT-* wrap — route plain joins to the projecting form
-    # (VERDICT r12 item 3); ASOF/ANY/PASTE/ARRAY/LATERAL keep the
-    # slice form (their rewrites own the statement shape)
-    fcode = [t for t in _tokens(from_text) if not _is_skippable(t)]
-    depth = 0
-    joined = False
-    for t in fcode:
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and _is_ident(t) and t.upper() in (
-            "LATERAL", "ARRAY", "PASTE", "ASOF", "ANY",
-        ):
-            return None
-        elif depth == 0 and (
-            t == "," or (_is_ident(t) and t.upper() == "JOIN")
-        ):
-            joined = True
-    if joined:
-        return _gc_replan_joined(spans)
-    acode = fcode[:-1] if fcode and fcode[-1].upper() == "FINAL" \
-        else fcode
-    if not acode:
-        return None
-    if acode[-1] == ")":
-        alias = "__gc_src"  # unaliased subquery: nothing can qualify
-    elif _is_ident(acode[-1]):
-        alias = acode[-1]  # [AS] alias, or a (dotted) name's last part
-    else:
-        return None
-    gitems = (
-        [g.strip() for g in _split_top_commas(group_text)]
-        if group_text else []
-    )
-    if gitems and _grouping_sets(group_text):
-        return None
-    if any(re.fullmatch(r"\d+", g) for g in gitems):
-        return None  # ordinal keys: no expression to partition on
-    # GROUP BY may name SELECT aliases — the window's PARTITION BY
-    # runs inside the wrap where aliases don't exist, so substitute
-    # each alias-shaped group item with its select expression
-    # (code-review r12a); the OUTER group_text stays verbatim (the
-    # outer scope still has the aliases)
-    amap: dict[str, str] = {}
-    for it in _split_top_commas(sel_text):
-        its = [t for t in _tokens(it) if not _is_skippable(t)]
-        if (
-            len(its) >= 3 and _is_ident(its[-1])
-            and its[-2].upper() == "AS"
-        ):
-            amap[its[-1]] = _join_code_tokens(its[:-2])
-        elif (
-            # CH's bare `expr alias` form (code-review r12b): a
-            # trailing identifier directly after ')', ']', a literal
-            # or a NON-KEYWORD identifier is an alias — without the
-            # mapping the window would partition on a name that
-            # doesn't exist inside the wrap.  Infix keywords (MOD,
-            # LIKE, …) are NOT expression ends (code-review r12c).
-            len(its) >= 2 and _is_ident(its[-1])
-            and its[-1].upper() != "END"
-            and (
-                its[-2] in (")", "]")
-                or (_is_ident(its[-2])
-                    and its[-2].upper() not in _SQL_INFIX_KEYWORDS)
-                or re.fullmatch(r"[\d.']+.*", its[-2] or "")
-            )
-            and (len(its) < 3 or its[-2] != ".")
-        ):
-            amap[its[-1]] = _join_code_tokens(its[:-1])
-    gitems = [
-        amap.get(g, g) if _is_ident(g) else g for g in gitems
-    ]
-    if any("groupConcat" in _tokens(g) for g in gitems):
-        return None  # a group item resolved to an aggregate alias
-    # every parametric groupConcat in the segment must sit in the
-    # select span (an ORDER BY copy would silently keep slice state)
-    sel_toks = _tokens(sel_text)
-    calls = []  # (start, end_exclusive, sep, limit, x) in sel_toks
-    n = 0
-    while n < len(sel_toks):
-        if _gc_hit(sel_toks, n):
-            j = _next_code(sel_toks, n + 1)
-            c1 = _match_close(sel_toks, j)
-            k = _next_code(sel_toks, c1 + 1)
-            params = _split_top_commas(_join_code_tokens(sel_toks[j + 1:c1]))
-            c2 = _match_close(sel_toks, k)
-            args = _split_top_commas(_join_code_tokens(sel_toks[k + 1:c2]))
-            if len(args) != 1:
-                return None
-            lim = params[1].strip()
-            if not re.fullmatch(r"\d+", lim) or int(lim) < 1:
-                return None  # dynamic limit: slice form
-            calls.append(
-                (n, c2 + 1, params[0].strip(), lim, args[0].strip())
-            )
-            n = c2 + 1
-            continue
-        n += 1
-    if not calls:
-        return None
-    # bail on SELECT * (the wrap's helper columns would leak) and on
-    # any parametric groupConcat OUTSIDE the select span.  Only a
-    # PROJECTION star counts — after SELECT / ',' / '.' — never
-    # depth-0 multiplication (code-review r12c)
-    depth = 0
-    for n, t in enumerate(sel_toks):
-        if t in ("(", "["):
-            depth += 1
-        elif t in (")", "]"):
-            depth -= 1
-        elif depth == 0 and t == "*":
-            p = _prev_code(sel_toks, n - 1)
-            prev = sel_toks[p] if p >= 0 else ""
-            if prev in (".", ",", ""):
-                return None
-    if sum(_gc_hit(toks, m) for m in range(s, e)) != len(calls):
-        return None
-    # one rank column per distinct concat operand
-    xs: list[str] = []
-    x_slot: dict[str, int] = {}
-    for _, _, _, _, x in calls:
-        nx = _norm_expr(x)
-        if nx not in x_slot:
-            x_slot[nx] = len(xs)
-            xs.append(x)
-    part = (
-        f"PARTITION BY {', '.join(gitems)} " if gitems else ""
-    )
-    rn_cols = ", ".join(
-        f"row_number() OVER ({part}ORDER BY (({x}) IS NULL), "
-        f"__gc_ord) AS __gc_rn{i}"
-        for i, x in enumerate(xs)
-    )
-    new_sel = []
-    pos = 0
-    for st, en, sep, lim, x in calls:
-        new_sel.append("".join(sel_toks[pos:st]))
-        i = x_slot[_norm_expr(x)]
-        new_sel.append(
-            f"array_join(collect_list(CASE WHEN __gc_rn{i} <= {lim} "
-            f"THEN ({x}) END), {sep})"
-        )
-        pos = en
-    new_sel.append("".join(sel_toks[pos:]))
-    inner1 = (
-        f"SELECT *, monotonically_increasing_id() AS __gc_ord "
-        f"FROM {from_text}"
-        + (f" WHERE {where_text}" if where_text else "")
-    )
-    inner2 = (
-        f"SELECT *, {rn_cols} FROM ({inner1}) {alias}"
-    )
-    return (
-        f"SELECT {''.join(new_sel)} FROM ({inner2}) {alias}"
-        + (f" GROUP BY {group_text}" if group_text else "")
         + _outer_tail(spans)
     )
 
@@ -15555,21 +15402,9 @@ def _ga_parse_call(its: list[str], j: int):
 
 def _ga_parse_item(ts: list[str]):
     """Parse one group-array tier select item (code tokens): ``("ga",
-    template, call, alias)`` — exactly one tier call, lifted out of
-    its residual ``template`` as a ``_CALL_HOLE`` token — or None."""
-    ts, alias = _split_alias(ts)
-    hits = [
-        n for n, t in enumerate(ts)
-        if t in _GA_FAMILY and ts[n + 1:n + 2] == ["("]
-    ]
-    if alias is None or len(hits) != 1:
-        return None
-    parsed = _ga_parse_call(ts, hits[0])
-    if parsed is None:
-        return None
-    end, *call = parsed
-    template = ts[:hits[0]] + [f"{_CALL_HOLE}0"] + ts[end:]
-    return ("ga", template, tuple(call), alias)
+    template, call, alias)`` — see :func:`_lift_one_call` — or None."""
+    lifted = _lift_one_call(ts, _GA_FAMILY, _ga_parse_call)
+    return lifted and ("ga", *lifted)
 
 
 def _ga_replan(toks: list[str], s: int, e: int):
@@ -16875,11 +16710,13 @@ def split_statements(script: str) -> list[str]:
 
 
 def _table_location(spark: "SparkSession", target: str) -> str:
-    rows = spark.sql(f"DESCRIBE FORMATTED {target}").collect()
-    for r in rows:
-        if str(r[0]).strip() == "Location":
-            return str(r[1]).removeprefix("file:")
-    raise DialectError(f"cannot determine storage location of {target}")
+    """``target``'s schemed storage URI (``file:/…``, ``s3a://…``) —
+    the scheme picks a Hadoop FileSystem; local glob/shutil callers
+    strip ``file:``."""
+    for row in spark.sql(f"DESCRIBE FORMATTED {target}").collect():
+        if str(row[0]).strip() == "Location":
+            return str(row[1]).strip()
+    raise DialectError(f"{target} has no resolvable storage location")
 
 
 def _copy_on_write(spark: "SparkSession", target: str, df) -> None:
@@ -16897,7 +16734,7 @@ def _copy_on_write(spark: "SparkSession", target: str, df) -> None:
     import os
     import shutil
 
-    path = _table_location(spark, target)
+    path = _table_location(spark, target).removeprefix("file:")
     tmp = scratch_dir("ch_mutate")
     rebalanced(df).write.mode("overwrite").parquet(tmp)
     for f in glob.glob(os.path.join(path, "*")):
@@ -16922,7 +16759,7 @@ def _recreate_table_as(spark: "SparkSession", target: str, df) -> None:
     import os
     import shutil
 
-    loc = _table_location(spark, target)
+    loc = _table_location(spark, target).removeprefix("file:")
     tmp = scratch_dir("ch_schema")
     rebalanced(df).write.mode("overwrite").parquet(tmp)
     cols = ", ".join(f"{n} {t}" for n, t in df.dtypes)
@@ -17211,7 +17048,7 @@ def _partition_scoped_rewrite(
     import os
     import shutil
 
-    base = _table_location(spark, target)
+    base = _table_location(spark, target).removeprefix("file:")
     val = part.strip().strip("'\"")
     pdir = os.path.join(base, f"{pcol}={val}")
     tmp = scratch_dir("ch_mutate_part")
@@ -17268,7 +17105,7 @@ def _freeze_partition(
     returning the snapshot path."""
     import clickhouse_vs_dbt_spark.ddl as _ddl
 
-    loc = _table_location_uri(spark, target)
+    loc = _table_location(spark, target)
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     HPath = jvm.org.apache.hadoop.fs.Path
@@ -17319,7 +17156,7 @@ def _move_detached_partition(
     rename ``<table>/<pcol>=<v>`` to/from ``<table>/.detached/`` via
     the table's own Hadoop FileSystem (works for any scheme the table
     lives on), then drop/add the partition in the catalog."""
-    loc = _table_location_uri(spark, target)
+    loc = _table_location(spark, target)
     val = part.strip().strip("'\"")
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
@@ -17385,7 +17222,7 @@ def _detach_table(spark: "SparkSession", target: str) -> None:
     create = str(
         spark.sql(f"SHOW CREATE TABLE {name}").collect()[0][0]
     )
-    loc = _table_location_uri(spark, name)
+    loc = _table_location(spark, name)
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     HPath = jvm.org.apache.hadoop.fs.Path
@@ -17518,7 +17355,7 @@ def _attach_table_full(
     # location is adopted the same way, matching ClickHouse's
     # attach-over-existing-data contract.  No parked directory at
     # all = the empty CREATE (CH attach-over-empty-directory).
-    loc = _table_location_uri(spark, name)
+    loc = _table_location(spark, name)
     live = HPath(loc)
     fs = live.getFileSystem(conf)
     if st is None:
@@ -17535,17 +17372,6 @@ def _attach_table_full(
             spark.sql(f"ALTER TABLE {name} RECOVER PARTITIONS")
         spark.sql(f"REFRESH TABLE {name}")
     _DETACHED_TABLES.pop(name, None)
-
-
-def _table_location_uri(spark: "SparkSession", target: str) -> str:
-    """Schemed storage URI (``file:/…``, ``s3a://…``) — for Hadoop
-    FileSystem operations, where the scheme picks the filesystem.
-    The scheme-stripped :func:`_table_location` serves the local
-    glob/shutil callers instead."""
-    for row in spark.sql(f"DESCRIBE FORMATTED {target}").collect():
-        if str(row[0]).strip() == "Location":
-            return str(row[1]).strip()
-    raise DialectError(f"{target} has no resolvable storage location")
 
 
 def _copy_partition_between(
@@ -17585,8 +17411,8 @@ def _copy_partition_between(
     jvm = spark.sparkContext._jvm
     conf = spark.sparkContext._jsc.hadoopConfiguration()
     HPath = jvm.org.apache.hadoop.fs.Path
-    src = HPath(f"{_table_location_uri(spark, src_t)}/{pcol}={val}")
-    dst = HPath(f"{_table_location_uri(spark, dst_t)}/{pcol}={val}")
+    src = HPath(f"{_table_location(spark, src_t)}/{pcol}={val}")
+    dst = HPath(f"{_table_location(spark, dst_t)}/{pcol}={val}")
     fs = src.getFileSystem(conf)
     if not fs.exists(src):
         raise DialectError(

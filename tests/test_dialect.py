@@ -5526,7 +5526,7 @@ def test_r12_group_concat_bounded(spark):
         "SELECT k, groupConcat(',', 2)(s) AS g FROM t GROUP BY k"
     )
     assert "__gc_rn0" in owned and "slice(" not in owned
-    # joined FROM now re-plans through the projecting form (r13)
+    # a joined FROM re-plans through the same projecting form (r13)
     j = transpile(
         "SELECT a.k, groupConcat(',', 2)(b.s) AS g "
         "FROM a JOIN b ON a.k = b.k GROUP BY a.k"
@@ -5535,21 +5535,35 @@ def test_r12_group_concat_bounded(spark):
     for sql in (
         # dynamic limit
         "SELECT k, groupConcat(',', n)(s) AS g FROM t GROUP BY k",
-        # mixed aggregate over a JOIN: the projecting form can't
+        # mixed aggregate over a JOIN: the re-plan can't
         # carry count(*) through, so the slice form stays
         "SELECT a.k, count() AS n, groupConcat(',', 2)(b.s) AS g "
         "FROM a JOIN b ON a.k = b.k GROUP BY a.k",
         # ASOF stays un-owned (its own rewrite owns the statement)
         "SELECT a.k, groupConcat(',', 2)(b.s) AS g "
         "FROM a ASOF JOIN b ON a.k = b.k AND a.t >= b.t GROUP BY a.k",
-        # SELECT * would leak the helper columns
+        # SELECT * projects no group key
         "SELECT *, groupConcat(',', 2)(s) AS g FROM t GROUP BY k",
         # a source column sharing the __gc_ helper prefix would
-        # collide with the wrap's injected columns (ADVICE r12)
+        # collide with the re-plan's helper columns (ADVICE r12)
         "SELECT k, groupConcat(',', 2)(__gc_ord) AS g "
         "FROM t GROUP BY k",
+        # a second kind of aggregate on one relation
+        "SELECT k, count() AS n, groupConcat(',', 2)(s) AS g "
+        "FROM t GROUP BY k",
+        # an unaliased call: CH's auto-name is the call text
+        "SELECT k, groupConcat(',', 2)(s) FROM t GROUP BY k",
     ):
         assert "slice(collect_list" in transpile(sql), sql
+    # owned on one relation: a call nested in a scalar residual, a
+    # bare alias, and a GROUP BY ordinal
+    for sql in (
+        "SELECT k, concat(k, ':', groupConcat(',', 2)(s)) AS g "
+        "FROM t GROUP BY k",
+        "SELECT k, groupConcat(',', 2)(s) g FROM t GROUP BY k",
+        "SELECT k, groupConcat(',', 2)(s) AS g FROM t GROUP BY 1",
+    ):
+        assert "__gc_rn0" in transpile(sql), sql
     spark.sql(
         "CREATE OR REPLACE TEMP VIEW gcb_t AS "
         "SELECT id % 4 AS k, "
@@ -5570,8 +5584,8 @@ def test_r12_group_concat_bounded(spark):
     assert rows[2] == "v2,v10"
     # group k=3: ids 3,7,11 → NULL,v7,v11
     assert rows[3] == "v7,v11"
-    # GROUP BY the select ALIAS still executes: the window partitions
-    # on the substituted expression, not the alias (code-review r12a)
+    # GROUP BY the select ALIAS still executes: the inner select
+    # projects the aliased expression, not the alias (code-review r12a)
     rows2 = {
         r.kk: r.g for r in spark.sql(transpile(
             "SELECT k AS kk, groupConcat(',', 2)(s) AS g "
@@ -5592,6 +5606,21 @@ def test_r12_group_concat_bounded(spark):
             int(r.kk): r.g for r in spark.sql(transpile(sql)).collect()
         }
         assert rows3 == rows, sql
+    # the nested and ordinal spellings agree with their fold spelling
+    # (each group holds two non-NULL values, so both keep all of them)
+    for sql in (
+        "SELECT k, concat(CAST(k AS String), ',', "
+        "groupConcat(',', 2)(s)) AS g FROM gcb_t GROUP BY k",
+        "SELECT k, groupConcat(',', 2)(s) AS g FROM gcb_t GROUP BY 1",
+    ):
+        replan = transpile(sql)
+        fold = transpile(sql + " HAVING count(*) >= 0")
+        assert "__gc_rn0" in replan and "__gc_rn0" not in fold, sql
+        got, want = (
+            sorted((r.k, sorted(r.g.split(","))) for r in spark.sql(q).collect())
+            for q in (replan, fold)
+        )
+        assert got == want and len(got) == 4, sql
 
 
 def test_r13_group_concat_bounded_join(spark):
@@ -6503,18 +6532,18 @@ def test_r12c_review_fixes(spark):
         "SELECT k MOD 2 AS m, groupConcat(',', 2)(s) AS g "
         "FROM rc_t GROUP BY k MOD 2"
     )
-    assert "PARTITION BY k MOD 2" in o.replace("  ", " ")
+    assert "k MOD 2 AS __gc_k0" in o.replace("  ", " ")
     rows2 = spark.sql(transpile(
         "SELECT arr[1] kk, groupConcat(',', 9)(s) AS g "
         "FROM rc_t GROUP BY kk ORDER BY kk"
     )).collect()
     assert [r.kk for r in rows2] == [0, 1, 2, 3, 4, 5, 6, 7, 8]
-    # depth-0 multiplication doesn't kill the bounded re-plan
+    # a depth-0 multiplication key keeps the bounded re-plan
     o2 = transpile(
-        "SELECT k AS kk, k * 2 AS d, groupConcat(',', 2)(s) AS g "
-        "FROM rc_t GROUP BY k"
+        "SELECT k * 2 AS d, groupConcat(',', 2)(s) AS g "
+        "FROM rc_t GROUP BY d"
     )
-    assert "__gc_rn" in o2
+    assert "k * 2 AS __gc_k0" in o2 and "__gc_rn" in o2
 
 
 def test_r13_batch22_value_pins(spark):
@@ -6945,6 +6974,7 @@ def test_r14_batch28_if_combinators(spark):
         ("quantilesIf(0.25, 0.75)(v, c)",
          "quantiles(0.25, 0.75)(v)"),
         ("topKIf(2)(g, c)", "topK(2)(g)"),
+        ("topKIf(2, 0.5)(g, c)", "topK(2, 0.5)(g)"),
     ]
     for iff, base in pairs:
         got = spark.sql(
@@ -7773,7 +7803,7 @@ def test_replan_alias_key_keeps_compound_operators(spark):
     expression into the re-plan's inner select.  The swap re-joins
     the expression's tokens without splitting ``>=`` into ``> =``
     (a Spark parse error), in the weighted-quantile re-plan and the
-    joined groupConcat re-plan alike; both agree with their fold
+    groupConcat re-plan over a join alike; both agree with their fold
     spelling."""
     spark.sql(
         "CREATE OR REPLACE TEMP VIEW ak_t AS SELECT id, "
@@ -7806,10 +7836,10 @@ def test_replan_alias_key_keeps_compound_operators(spark):
 
 
 def test_group_concat_replans_keep_compound_operators(spark):
-    """Both bounded groupConcat re-plans, joined and single-relation,
-    re-join the call's parameters and argument without splitting
-    ``>=`` into ``> =`` (a Spark parse error), and each agrees with
-    its fold spelling."""
+    """The bounded groupConcat re-plan, over a join and over one
+    relation, re-joins the call's parameters and argument without
+    splitting ``>=`` into ``> =`` (a Spark parse error), and each
+    agrees with its fold spelling."""
     spark.sql(
         "CREATE OR REPLACE TEMP VIEW gco_t AS SELECT id AS k FROM range(3)"
     )

@@ -369,6 +369,7 @@ GROUP_VARIANTS = {
     "column": ("k", "k", lambda k: k),
     "ordinal": ("k", "1", lambda k: k),
     "alias": ("k >= 1 AS kk", "kk", lambda k: None if k is None else k >= 1),
+    "bare_alias": ("(k >= 1) kk", "kk", lambda k: None if k is None else k >= 1),
 }
 KEYS = st.one_of(st.none(), st.integers(min_value=0, max_value=2))
 KEEP = st.one_of(st.none(), st.booleans())  # WHERE keep may empty a group
@@ -409,6 +410,10 @@ def _view(spark, name, rows, dup, ddl):
     rows=[(0, 1, 2, True), (0, 2, 3, True), (1, 0, 5, True)],
     dup=1, big=True, variant="ordinal",
 )
+@example(  # a bare-alias key `(k >= 1) kk`
+    rows=[(0, 1, 4, True), (1, 2, 3, True), (None, 0, 2, True), (2, 5, 1, True)],
+    dup=1, big=False, variant="bare_alias",
+)
 def test_interval_replan_matches_fold(spark, rows, dup, big, variant):
     base = 1 << 53 if big else 0
     rows = [
@@ -443,6 +448,10 @@ def test_interval_replan_matches_fold(spark, rows, dup, big, variant):
           (1, 1, 0, True), (2, 1, 1, False), (None, 1, 2, True)],
     dup=1, variant="alias",
 )
+@example(  # a bare-alias key `(k >= 1) kk`
+    rows=[(0, 1, 1, True), (1, 3, 2, True), (2, 2, 1, True), (None, 4, 1, True)],
+    dup=1, variant="bare_alias",
+)
 def test_weighted_quantile_replan_matches_fold(spark, rows, dup, variant):
     _view(spark, "pp_qw", rows, dup, "k bigint, v bigint, w bigint, keep boolean")
     key, gb, _ = GROUP_VARIANTS[variant]
@@ -475,6 +484,10 @@ def test_weighted_quantile_replan_matches_fold(spark, rows, dup, variant):
           (1, 4, 1, True), (1, 5, None, True), (2, 1, 1, False)],
     dup=2, variant="column",
 )
+@example(  # a bare-alias key `(k >= 1) kk`
+    rows=[(0, 1, 1, True), (1, 3, 2, True), (2, 2, 1, True), (None, 4, 1, True)],
+    dup=1, variant="bare_alias",
+)
 def test_group_array_replan_matches_fold(spark, rows, dup, variant):
     _view(spark, "pp_ga", rows, dup, "k bigint, x bigint, o bigint, keep boolean")
     key, gb, _ = GROUP_VARIANTS[variant]
@@ -501,12 +514,16 @@ def test_group_array_replan_matches_fold(spark, rows, dup, variant):
           (2, "c", False), (None, "b", True)],
     dup=1, variant="alias",
 )
+@example(  # a bare-alias key `(k >= 1) kk`
+    rows=[(0, "a", True), (1, "b", True), (2, "c", True), (2, "a", True),
+          (None, "c", True)],
+    dup=1, variant="bare_alias",
+)
 def test_group_concat_replans_match_fold(spark, rows, dup, variant):
-    """Both groupConcat forms: the single-relation wrap (which keeps
-    GROUP BY ordinals on the fold) and the joined projection.  Which
-    values fill the limit is unspecified, so each group compares as a
-    multiset when nothing is cut off, else as a size-2 sub-multiset of
-    the group's non-NULL values."""
+    """The groupConcat re-plan over both FROM shapes, one relation and
+    a comma join.  Which values fill the limit is unspecified, so each
+    group compares as a multiset when nothing is cut off, else as a
+    size-2 sub-multiset of the group's non-NULL values."""
     from collections import Counter
 
     _view(spark, "pp_gc", rows, dup, "k bigint, s string, keep boolean")
@@ -516,15 +533,12 @@ def test_group_concat_replans_match_fold(spark, rows, dup, variant):
     for k, s, keep in rows + rows[:dup]:
         if keep:
             values.setdefault(key_of(k), Counter()).update([s] if s else [])
-    forms = [("pp_gc, pp_one", "__gc_k")]
-    if variant != "ordinal":
-        forms.append(("pp_gc", "__gc_rn0"))
-    for src, marker in forms:
+    for src in ("pp_gc, pp_one", "pp_gc"):
         replan, fold = _replan_and_fold(
             spark,
             f"SELECT {key}, groupConcat(',', 2)(s) AS g "
             f"FROM {src} WHERE keep GROUP BY {gb}",
-            marker,
+            "__gc_k",
         )
         got = {r[0]: Counter(r.g.split(",") if r.g else []) for r in replan}
         want = {r[0]: Counter(r.g.split(",") if r.g else []) for r in fold}
