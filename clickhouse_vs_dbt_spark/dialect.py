@@ -14732,12 +14732,14 @@ def _split_alias(ts: list[str]):
     """``(body, alias)`` of a select item's code tokens: ``… AS
     alias``, or a bare ``alias`` right after a closing paren or
     bracket (CH's ``f(x) alias``).  Any other trailing identifier
-    (``… + k``) is an operand, not an alias: ``(ts, None)``."""
+    (``… + k``) is an operand, and a trailing SQL word (the ``END``
+    of ``CASE … f(x) END``) closes the expression — neither is an
+    alias: ``(ts, None)``."""
     if _as_alias(ts):
         return ts[:-2], ts[-1]
     if (
         len(ts) >= 2 and ts[-2] in (")", "]")
-        and _is_ident(ts[-1]) and ts[-1].upper() != "AS"
+        and _is_ident(ts[-1]) and ts[-1].upper() not in _RESIDUAL_WORDS
     ):
         return ts[:-1], ts[-1]
     return ts, None
@@ -14765,11 +14767,12 @@ def _group_keys(group_text: str, items: list[tuple]):
     keys (``("key", expr, outname)`` items).  Returns ``(gexprs,
     key_slot, slots)``: the deduplicated group expressions in
     first-seen order, select-item index → its ``gexprs`` slot for
-    each key item, and normalized group text or expression → slot
-    (the lookup residual identifiers substitute through).  None when
-    a key is not grouped, an ordinal names a non-key item, or the
-    grouping is one no re-plan reproduces, or GROUP BY names an alias
-    two items share.
+    each grouped key item, and normalized group text or expression →
+    slot (the lookup residual identifiers substitute through).  A key
+    item that is not itself grouped (``k * 2 AS d`` under ``GROUP BY
+    k``) has no ``key_slot`` entry; :func:`_key_out` projects it.
+    None when an ordinal names a non-key item, the grouping is one no
+    re-plan reproduces, or GROUP BY names an alias two items share.
 
     A GROUP BY ordinal resolves to the item it names, and a GROUP BY
     that names a select ALIAS to the aliased expression — the alias
@@ -14799,13 +14802,28 @@ def _group_keys(group_text: str, items: list[tuple]):
         if slot == len(gexprs):
             gexprs.append(expr)
         slots.setdefault(_norm_expr(g), slot)
-    key_slot: dict[int, int] = {}
-    for n, it in enumerate(items):
-        if it[0] == "key":
-            if _norm_expr(it[1]) not in slots:
-                return None  # a projected key that is not grouped
-            key_slot[n] = slots[_norm_expr(it[1])]
+    key_slot = {
+        n: slots[_norm_expr(it[1])] for n, it in enumerate(items)
+        if it[0] == "key" and _norm_expr(it[1]) in slots
+    }
     return gexprs, key_slot, slots
+
+
+def _key_out(n: int, it: tuple, key_slot: dict, slots: dict, keyref: str):
+    """The re-plan's OUTER projection of key item ``n``: its group
+    slot as ``keyref.format(slot)``, or — for an expression of group
+    keys that is not itself grouped — that expression vetted as a
+    residual over the slots (:func:`_vet_residual`).  None when the
+    item is neither — a column that is not grouped, or a constant
+    (``1 AS one`` under ``GROUP BY 1``) that names no group key:
+    :func:`_own_grouped_select` declines the statement."""
+    if n in key_slot:
+        return f"{keyref.format(key_slot[n])} AS {it[2]}"
+    ts = [t for t in _tokens(it[1]) if not _is_skippable(t)]
+    parts = _vet_residual(ts, slots, keyref)
+    if parts is None or parts == ts:
+        return None
+    return f"{_join_code_tokens(parts)} AS {it[2]}"
 
 
 def _order_by_outputs(order_text: str, items: list[tuple]) -> bool:
@@ -14828,7 +14846,8 @@ def _own_grouped_select(spans: dict, family, parse_call):
     projected key (:func:`_item_key`).  Returns ``(items, gexprs,
     key_slot, slots)`` — see :func:`_group_keys` — or None when an
     item doesn't parse, no item is a family call, a group expression
-    contains one, or ORDER BY names a non-output."""
+    contains one, a key item is not an expression of group keys, or
+    ORDER BY names a non-output."""
     items = []
     for it in _split_top_commas(spans["select"]):
         ts = [t for t in _tokens(it) if not _is_skippable(t)]
@@ -14842,6 +14861,9 @@ def _own_grouped_select(spans: dict, family, parse_call):
     keys = _group_keys(spans.get("group", ""), items)
     if keys is None or any(
         t in family for g in keys[0] for t in _tokens(g)
+    ) or any(
+        it[0] == "key" and _key_out(n, it, *keys[1:], "{}") is None
+        for n, it in enumerate(items)
     ):
         return None
     if not _order_by_outputs(spans.get("order", ""), items):
@@ -15063,7 +15085,7 @@ def _qw_replan(toks: list[str], s: int, e: int):
     out_items = []
     for n, it in enumerate(items):
         if it[0] == "key":
-            out_items.append(f"__qw_k{key_slot[n]} AS {it[2]}")
+            out_items.append(_key_out(n, it, key_slot, slots, "__qw_k{}"))
         elif it[0] == "expr":
             # r15 expression position: holes become the aggregate
             # cells; group keys substitute as __qw_kN
@@ -15198,7 +15220,7 @@ def _gc_replan(toks: list[str], s: int, e: int):
     out_items = []
     for n, it in enumerate(items):
         if it[0] == "key":
-            out_items.append(f"__gc_k{key_slot[n]} AS {it[2]}")
+            out_items.append(_key_out(n, it, key_slot, slots, "__gc_k{}"))
             continue
         _, template, (sep, lim, x), alias = it
         parts = _vet_residual(template, slots, "__gc_k{}")
@@ -15284,7 +15306,7 @@ def _iv_replan(toks: list[str], s: int, e: int):
     own = spans and _own_grouped_select(spans, _IV_FAMILY, _iv_parse_item)
     if not own:
         return None
-    items, gexprs, key_slot, _ = own
+    items, gexprs, key_slot, slots = own
     calls = [it for it in items if it[0] == "iv"]
     if len({(_norm_expr(c[2]), _norm_expr(c[3])) for c in calls}) != 1:
         return None  # one shared (start, end) pair only
@@ -15342,7 +15364,7 @@ def _iv_replan(toks: list[str], s: int, e: int):
     out_items = []
     for n, it in enumerate(items):
         if it[0] == "key":
-            out_items.append(f"__iv_k{key_slot[n]} AS {it[2]}")
+            out_items.append(_key_out(n, it, key_slot, slots, "__iv_k{}"))
         else:
             out_items.append(f"{bodies[it[1]]} AS {it[4]}")
     ks = ", ".join(f"__iv_k{n}" for n in range(len(gexprs)))
@@ -15507,7 +15529,7 @@ def _ga_replan(toks: list[str], s: int, e: int):
     for n, it in enumerate(items):
         if it[0] == "key":
             out_items.append(
-                f"__ga_t0.__ga_k{key_slot[n]} AS {it[2]}"
+                _key_out(n, it, key_slot, slots, "__ga_t0.__ga_k{}")
             )
             continue
         # group keys in the residual are QUALIFIED — the outer FROM

@@ -5621,6 +5621,18 @@ def test_r12_group_concat_bounded(spark):
             for q in (replan, fold)
         )
         assert got == want and len(got) == 4, sql
+    # a CASE item's closing END is not a bare alias: the unaliased
+    # call and the unaliased CASE key both keep the slice form, and
+    # the statements run
+    for sql in (
+        "SELECT k, CASE WHEN k > 0 THEN groupConcat(',', 2)(s) "
+        "ELSE concat(k) END FROM gcb_t GROUP BY k",
+        "SELECT CASE WHEN k > 0 THEN abs(k) ELSE 0 - abs(k) END, "
+        "groupConcat(',', 2)(s) AS g FROM gcb_t GROUP BY 1",
+    ):
+        fold = transpile(sql)
+        assert "slice(collect_list" in fold and "__gc_" not in fold, sql
+        assert len(spark.sql(fold).collect()) == 4, sql
 
 
 def test_r13_group_concat_bounded_join(spark):
@@ -6538,12 +6550,23 @@ def test_r12c_review_fixes(spark):
         "FROM rc_t GROUP BY kk ORDER BY kk"
     )).collect()
     assert [r.kk for r in rows2] == [0, 1, 2, 3, 4, 5, 6, 7, 8]
-    # a depth-0 multiplication key keeps the bounded re-plan
-    o2 = transpile(
+    # depth-0 multiplication doesn't kill the bounded re-plan: an
+    # ungrouped expression of the group key projects over its slot
+    sql = (
+        "SELECT k AS kk, k * 2 AS d, groupConcat(',', 2)(s) AS g "
+        "FROM rc_t GROUP BY k"
+    )
+    o2 = transpile(sql)
+    assert "__gc_rn" in o2 and "__gc_k0 * 2 AS d" in o2
+    assert sorted(
+        (r.kk, r.d) for r in spark.sql(o2).collect()
+    ) == [(0, 0), (1, 2), (2, 4)]
+    # a grouped multiplication key keeps it too
+    o3 = transpile(
         "SELECT k * 2 AS d, groupConcat(',', 2)(s) AS g "
         "FROM rc_t GROUP BY d"
     )
-    assert "k * 2 AS __gc_k0" in o2 and "__gc_rn" in o2
+    assert "k * 2 AS __gc_k0" in o3 and "__gc_rn" in o3
 
 
 def test_r13_batch22_value_pins(spark):

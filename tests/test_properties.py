@@ -370,6 +370,7 @@ GROUP_VARIANTS = {
     "ordinal": ("k", "1", lambda k: k),
     "alias": ("k >= 1 AS kk", "kk", lambda k: None if k is None else k >= 1),
     "bare_alias": ("(k >= 1) kk", "kk", lambda k: None if k is None else k >= 1),
+    "derived": ("k * 2 AS kk", "k", lambda k: None if k is None else k * 2),
 }
 KEYS = st.one_of(st.none(), st.integers(min_value=0, max_value=2))
 KEEP = st.one_of(st.none(), st.booleans())  # WHERE keep may empty a group
@@ -414,6 +415,10 @@ def _view(spark, name, rows, dup, ddl):
     rows=[(0, 1, 4, True), (1, 2, 3, True), (None, 0, 2, True), (2, 5, 1, True)],
     dup=1, big=False, variant="bare_alias",
 )
+@example(  # an ungrouped expression of the key `k * 2 AS kk`
+    rows=[(0, 1, 4, True), (1, 2, 3, True), (None, 0, 2, True), (2, 5, 1, True)],
+    dup=1, big=False, variant="derived",
+)
 def test_interval_replan_matches_fold(spark, rows, dup, big, variant):
     base = 1 << 53 if big else 0
     rows = [
@@ -452,6 +457,10 @@ def test_interval_replan_matches_fold(spark, rows, dup, big, variant):
     rows=[(0, 1, 1, True), (1, 3, 2, True), (2, 2, 1, True), (None, 4, 1, True)],
     dup=1, variant="bare_alias",
 )
+@example(  # an ungrouped expression of the key `k * 2 AS kk`
+    rows=[(0, 1, 1, True), (1, 3, 2, True), (2, 2, 1, True), (None, 4, 1, True)],
+    dup=1, variant="derived",
+)
 def test_weighted_quantile_replan_matches_fold(spark, rows, dup, variant):
     _view(spark, "pp_qw", rows, dup, "k bigint, v bigint, w bigint, keep boolean")
     key, gb, _ = GROUP_VARIANTS[variant]
@@ -488,6 +497,10 @@ def test_weighted_quantile_replan_matches_fold(spark, rows, dup, variant):
     rows=[(0, 1, 1, True), (1, 3, 2, True), (2, 2, 1, True), (None, 4, 1, True)],
     dup=1, variant="bare_alias",
 )
+@example(  # an ungrouped expression of the key `k * 2 AS kk`
+    rows=[(0, 1, 1, True), (1, 3, 2, True), (2, 2, 1, True), (None, 4, 1, True)],
+    dup=1, variant="derived",
+)
 def test_group_array_replan_matches_fold(spark, rows, dup, variant):
     _view(spark, "pp_ga", rows, dup, "k bigint, x bigint, o bigint, keep boolean")
     key, gb, _ = GROUP_VARIANTS[variant]
@@ -518,6 +531,11 @@ def test_group_array_replan_matches_fold(spark, rows, dup, variant):
     rows=[(0, "a", True), (1, "b", True), (2, "c", True), (2, "a", True),
           (None, "c", True)],
     dup=1, variant="bare_alias",
+)
+@example(  # an ungrouped expression of the key `k * 2 AS kk`
+    rows=[(0, "a", True), (1, "b", True), (2, "c", True), (2, "a", True),
+          (None, "c", True)],
+    dup=1, variant="derived",
 )
 def test_group_concat_replans_match_fold(spark, rows, dup, variant):
     """The groupConcat re-plan over both FROM shapes, one relation and
