@@ -13,7 +13,7 @@ event-time windows, streaming).
 Layout:
     session.py    SparkSession factory tuned for local[N] and for scale
     catalog.py    fixture-table registry (typed parquet readers + views)
-    compat.py     ClickHouse scalar names as Catalyst-inlined SQL UDFs
+    compat.py     ClickHouse scalar names the transpiler inlines + pandas UDFs
     dialect.py    ClickHouse-SQL → Spark-SQL transpiler (see MIGRATION.md)
     ddl.py        ClickHouse DDL transpiler: CREATE TABLE (+ engine
                   metadata for FINAL reads) and CREATE MATERIALIZED

@@ -138,7 +138,8 @@ def cmd_sql(args) -> int:
         return 0
     # full ClickHouse-dialect front door: the transpiler handles syntax
     # (combinators, parametric aggregates, multiIf, WITH TOTALS, ...);
-    # the compat UDF registry, loaded by _prepare, handles scalar names;
+    # it inlines the compat scalar names, and _prepare registers the
+    # pandas UDFs some of them call;
     # the catalog resolver unlocks the scale-shaped ASOF/ANY rewrites
     spark.sql(
         transpile(args.query, resolve_columns=catalog_resolver(spark))

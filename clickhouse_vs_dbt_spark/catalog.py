@@ -9,9 +9,11 @@ temp view, so both the DataFrame API and ``spark.sql`` resolve the same
 relations.  Like the reference's source DDL (README.md:155-222), the
 catalog declares each table's column types (:data:`FIXTURE_SCHEMAS`) and
 reads with them, so loading a table plans a scan without running a
-Spark job to infer its schema from parquet footers.  A fixture too
-large for one scan task is split in the driver, once per process, into
-a multi-part copy (:func:`_rechunk`), again without a Spark job.
+Spark job to infer its schema from parquet footers; ``events`` takes
+one of two declared schemas, picked from its footer read on the driver
+(:func:`events_ddl`).  A fixture too large for one scan task is split
+in the driver, once per process, into a multi-part copy
+(:func:`_rechunk`), again without a Spark job.
 """
 
 from __future__ import annotations
@@ -26,9 +28,10 @@ from clickhouse_vs_dbt_spark.session import scratch_dir
 # Fixture tables (TESTDATA.md): one parquet file per table, read
 # with its declared schema in Spark DDL.  The types are the ones Spark
 # infers from the footers of every fixture generation (checked in
-# tests/test_sources.py).  ``events`` declares none: its ``ts`` column is
-# micros TIMESTAMP_NTZ or int64 nanos depending on the generation, and
-# :func:`load_table` picks the normalization from the footer's type.
+# tests/test_sources.py).  ``events`` declares no fixed one: its ``ts``
+# column is micros TIMESTAMP_NTZ or int64 nanos depending on the
+# generation, so :func:`events_ddl` fills ``ts`` in :data:`_EVENTS_DDL`
+# from the footer.
 FIXTURE_SCHEMAS: dict[str, str | None] = {
     "region": "r_regionkey INT, r_name STRING",
     "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
@@ -50,6 +53,9 @@ FIXTURE_SCHEMAS: dict[str, str | None] = {
                  "n_chars BIGINT",
     "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
 }
+
+_EVENTS_DDL = ("event_id BIGINT, ts {}, user_id BIGINT, event_type STRING, "
+               "value DOUBLE, props STRING")
 
 # Small dimension tables — always broadcast-join these against facts so
 # the fact side never shuffles (SURVEY.md §4: at 100 TB the lineitem scan
@@ -73,12 +79,45 @@ _CHUNK_MIN_BYTES = 1 << 20
 _SPLIT_BATCH_ROWS = 1 << 18
 
 
-def _read(spark: SparkSession, name: str, path: str) -> DataFrame:
-    """Scan ``path`` with ``name``'s declared schema; a table that
-    declares none (``events``) has its schema inferred from the footer,
-    which Spark runs as a job."""
-    ddl = FIXTURE_SCHEMAS[name]
-    return (spark.read.schema(ddl) if ddl else spark.read).parquet(path)
+def events_ddl(spark: SparkSession, path: str) -> str:
+    """The declared schema of the ``events`` parquet at ``path`` (a file,
+    or a directory whose first ``part-*`` file is read), its ``ts`` type
+    picked from the footer, which pyarrow reads on the driver: no Spark
+    job.  Micros ``ts`` is TIMESTAMP_NTZ.  Nanos ``ts`` is BIGINT,
+    whether stored as a plain int64 or as a TIMESTAMP(NANOS) column
+    (some fixture generations); the latter turns on
+    ``spark.sql.legacy.parquet.nanosAsLong`` for the session, as
+    Spark's reader rejects it without that setting, which every other
+    file leaves alone."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        path = min(glob.glob(f"{path}/part-*"))
+    typ = pq.read_schema(path).field("ts").type
+    if typ == pa.timestamp("us"):
+        return _EVENTS_DDL.format("TIMESTAMP_NTZ")
+    if typ == pa.timestamp("ns"):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        return _EVENTS_DDL.format("BIGINT")
+    if typ == pa.int64():
+        return _EVENTS_DDL.format("BIGINT")
+    raise TypeError(f"{path}: events.ts is {typ}, not micros or nanos")
+
+
+def normalize_ts(df: DataFrame) -> DataFrame:
+    """``ts`` as a session-tz TIMESTAMP whatever the footer said: int64
+    nanos are truncated to micros (DuckDB truncates identically,
+    verified in tests/test_timeseries.py); a TIMESTAMP_NTZ is cast,
+    the identity on the stored micros under the UTC session tz, so
+    every downstream unix_micros/window/watermark op sees the same
+    TimestampType either way."""
+    if dict(df.dtypes)["ts"] == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def _max_partition_bytes(spark: SparkSession) -> int:
@@ -159,12 +198,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     but columnar so Catalyst pushes filters/projection into the scan).
 
     The scan reads with the table's declared schema
-    (:data:`FIXTURE_SCHEMAS`), from the fixture file or from its
-    re-chunked copy alike, so no footer is read to plan it and loading
-    a table launches no Spark job, the re-chunk's driver-side split
-    included.  Only ``events`` still infers its schema from the footer
-    (one job), because the type of its ``ts`` column picks the
-    normalization below.  A file whose column has another type than
+    (:data:`FIXTURE_SCHEMAS`; for ``events`` the one :func:`events_ddl`
+    picks from the footer on the driver), from the fixture file or from
+    its re-chunked copy alike, so Spark reads no footer to plan it and
+    loading a table launches no Spark job, the re-chunk's driver-side
+    split included.  A file whose column has another type than
     the declared one fails loudly on read
     (``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``), but a
     file that *lacks* a declared column reads it as NULL without
@@ -192,25 +230,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     hit = cache.get(key)
     if hit is not None:
         return hit
-    if name == "events":
-        # events.ts has shipped as TIMESTAMP(NANOS) parquet in some
-        # fixture generations (Spark's reader rejects nanos unless told
-        # to surface them as int64) and as micros TIMESTAMP in others.
-        # Read with nanosAsLong on, then convert only if we actually got
-        # the raw int64 nanos (DuckDB truncates nanos→micros identically,
-        # verified in tests/test_timeseries.py).
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = _rechunk(spark, sf_dir, name) or f"{sf_dir}/{name}.parquet"
-    df = _read(spark, name, path)
     if name == "events":
-        if dict(df.dtypes)["ts"] == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        else:
-            # micros TIMESTAMP_NTZ fixture → session-tz timestamp (UTC
-            # session, so the cast is identity on the stored micros and
-            # every downstream unix_micros/window/watermark op sees the
-            # same TimestampType either way).
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        df = normalize_ts(spark.read.schema(events_ddl(spark, path)).parquet(path))
+    else:
+        df = spark.read.schema(FIXTURE_SCHEMAS[name]).parquet(path)
     cache[key] = df
     return df
 

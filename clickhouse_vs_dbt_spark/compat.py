@@ -5,18 +5,17 @@ A user of the reference writes ``toYear(LO_ORDERDATE) = 1993``
 definition of each such name: a signature and a body template.  The
 dialect front door (``dialect.transpile``) inlines the body with the
 call's arguments, so its SQL is the built-in spelling itself — same
-plan, same pushdown, no session object.  For raw ``spark.sql``
-callers, ``register_clickhouse_compat`` registers the same rows as
-**Spark SQL UDFs** (``CREATE TEMPORARY FUNCTION ... RETURN <expr>``),
-which Catalyst inlines at analysis time.  The few functions with no
-Catalyst spelling
-(``ch_erf``, ``ch_idn``, the SipHash family …) are Arrow-batched pandas
-UDFs (``_vectorized_udfs``).  ``register_clickhouse_compat`` issues the
-62 registrations, each one JVM round trip, concurrently on a small
-fixed thread pool, once per session.  ``queries()`` gates a query
-written verbatim in the ClickHouse dialect to prove the surface.
+plan, same pushdown, no session object.  No SQL function is
+registered under these names: a raw ``spark.sql("SELECT toYear(d)")``
+does not resolve; ``transpile``, ``dialect.run_clickhouse_sql`` and
+the CLI ``sql`` command are the way in (MIGRATION.md).  The few
+functions with no Catalyst spelling (``ch_erf``, ``ch_idn``, the
+SipHash family …) are Arrow-batched pandas UDFs
+(``_vectorized_udfs``), which ``register_clickhouse_compat`` registers
+once per session.  ``queries()`` gates a query written verbatim in the
+ClickHouse dialect to prove the surface.
 
-Only functions with engine-exact Spark equivalents are registered
+Only functions with engine-exact Spark equivalents have a row
 (SURVEY.md §2.1 D1-D3 et al.); anything with divergent semantics
 (formatDateTime patterns, timezone-dependent toStartOfWeek modes) is
 deliberately absent rather than subtly wrong.
@@ -24,9 +23,7 @@ deliberately absent rather than subtly wrong.
 
 from __future__ import annotations
 
-import functools
-from concurrent.futures import ThreadPoolExecutor
-from typing import TYPE_CHECKING, Callable
+from typing import TYPE_CHECKING
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -39,7 +36,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-from pyspark.util import inheritable_thread_target
 
 from clickhouse_vs_dbt_spark.catalog import register_views
 from clickhouse_vs_dbt_spark.operators.common import sql_dsum
@@ -49,8 +45,9 @@ if TYPE_CHECKING:
 
 # name -> (signature, body), the one definition of each name.  The body
 # is a str.format template ({0} the first argument) that ``transpile``
-# fills with the call's arguments and the SQL function with its
-# parameters: it names each argument once and parenthesizes operators.
+# fills with the call's arguments: it names each argument once and
+# parenthesizes operators.  The signature gives the arity and the
+# parameter types the body is written for.
 _COMPAT_FUNCS: dict[str, tuple[str, str]] = {
     # date functions (the reference's entire scalar surface, D1-D3)
     "toYear": ("(d DATE) RETURNS INT", "year({0})"),
@@ -91,9 +88,9 @@ _COMPAT_FUNCS: dict[str, tuple[str, str]] = {
     "notEmpty": ("(s STRING) RETURNS BOOLEAN", "(length({0}) > 0)"),
     "lengthUTF8": ("(s STRING) RETURNS INT", "length({0})"),
     "editDistance": ("(a STRING, b STRING) RETURNS INT", "levenshtein({0}, {1})"),
-    # NOTE: ClickHouse position(h, n) is NOT registered — `position` is a
-    # reserved Spark built-in (SQL-standard position(n IN h)) that SQL
-    # UDFs may not shadow; instr() already has the ClickHouse signature.
+    # NOTE: ClickHouse position(h, n) has no row — `position` is a
+    # reserved Spark built-in (SQL-standard position(n IN h)); instr()
+    # already has the ClickHouse signature.
     "splitByChar": (
         "(sep STRING, s STRING) RETURNS ARRAY<STRING>",
         "split({1}, concat('\\\\Q', {0}, '\\\\E'))",  # \Q..\E quotes sep
@@ -106,73 +103,26 @@ def compat_params(sig: str) -> list[str]:
     return [p.split()[0] for p in sig[1:sig.index(")")].split(",")]
 
 
-#: driver threads that issue the registrations; a fixed pool — 2, 4 and
-#: 8 threads measured alike, all well under the serial time
-_REGISTER_THREADS = 4
-
-#: session conf key holding the digest of the registered set
+#: session conf key holding the version of the registered UDF set
 _REGISTERED_FLAG = "spark.clickhouse_vs_dbt_spark.compat.registered"
 
 
 def register_clickhouse_compat(spark: SparkSession) -> None:
-    """Register every compat function in the session (idempotent).
+    """Register the ``_vectorized_udfs()`` pandas UDFs in the session
+    (idempotent).
 
-    When this returns, every ``_COMPAT_FUNCS`` SQL function and every
-    ``_vectorized_udfs()`` pandas UDF resolves in ``spark``.  Each of
-    the 62 registrations is one JVM round trip (a ``CREATE OR REPLACE
-    TEMPORARY FUNCTION`` statement or a ``spark.udf.register``) that
-    depends on no other, so they run on a pool of
-    ``_REGISTER_THREADS`` driver threads instead of one after another;
-    the first failure is raised.  A session conf flag, set only after
-    every registration succeeded, makes later calls free: every dialect
-    front-door call invokes this, and temp functions live for the
-    session."""
-    import hashlib
-
-    # key = content hash of the registry (not its count): editing a UDF
-    # body without changing the count must still re-register, or a
-    # session keeps serving the stale definition
-    digest = hashlib.sha256(
-        (repr(sorted(_COMPAT_FUNCS.items()))
-         + f"|vectorized_v{_VECTORIZED_VERSION}").encode()
-    ).hexdigest()[:16]
-    if spark.conf.get(_REGISTERED_FLAG, None) == digest:
+    The ``_COMPAT_FUNCS`` names are not registered: ``transpile``
+    inlines each as its body, so a session SQL function named
+    ``toYear`` would be called by no transpiled statement.  A session
+    conf flag, set only after every registration succeeded, makes later
+    calls free: every dialect front-door call invokes this, and
+    temporary functions live for the session."""
+    flag = f"vectorized_v{_VECTORIZED_VERSION}"
+    if spark.conf.get(_REGISTERED_FLAG, None) == flag:
         return
-    calls = [
-        functools.partial(
-            spark.sql,
-            f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{sig} "
-            f"RETURN {body.format(*compat_params(sig))}",
-        )
-        for name, (sig, body) in _COMPAT_FUNCS.items()
-    ] + [
-        functools.partial(spark.udf.register, name, udf)
-        for name, udf in _vectorized_udfs()
-    ]
-    # each pool thread pins its own py4j connection, closed when the
-    # thread ends.  A wrapper installs the caller's local properties,
-    # cloned once when it is made, in whichever thread runs it, so one
-    # wrapper shared by the pool hands every thread the SAME Properties
-    # object; concurrent spark.sql calls then set and clear
-    # spark.sql.execution.id on it under each other (a null read back
-    # raises NumberFormatException).  Each pool thread therefore runs a
-    # wrapper of its own, once, when it starts.  Without pinned threads
-    # (PYSPARK_PIN_THREAD=false) PySpark hands back the session itself
-    # instead of a wrapper: nothing to inherit
-    wraps = [inheritable_thread_target(spark) for _ in range(_REGISTER_THREADS)]
-
-    def inherit() -> None:
-        wraps.pop()(lambda: None)()
-
-    init = None if wraps[0] is spark else inherit
-    with ThreadPoolExecutor(_REGISTER_THREADS, initializer=init) as pool:
-        for _ in pool.map(_call, calls):
-            pass
-    spark.conf.set(_REGISTERED_FLAG, digest)
-
-
-def _call(call: Callable[[], object]) -> object:
-    return call()
+    for name, udf in _vectorized_udfs():
+        spark.udf.register(name, udf)
+    spark.conf.set(_REGISTERED_FLAG, flag)
 
 
 def _betainc(x: float, a: float, b: float) -> float:
@@ -252,7 +202,7 @@ def f_pvalue(f: float, d1: float, d2: float) -> float:
 
 
 #: bump when the vectorized set below changes — the registration
-#: digest must move or live sessions keep stale definitions
+#: flag must move or live sessions keep stale definitions
 _VECTORIZED_VERSION = 16  # r14: ch_siphash64_keyed (SipHash-2-4)
 
 
@@ -1098,11 +1048,13 @@ ORDER BY ym, iso_week
 
 
 def q_clickhouse_dialect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SSB-style rollup written with ClickHouse function names; the
-    oracle is the same query spelled in ANSI/DuckDB built-ins."""
+    """SSB-style rollup written with ClickHouse function names, run
+    through the front door's ``transpile``; the oracle is the same
+    query spelled in ANSI/DuckDB built-ins."""
+    from clickhouse_vs_dbt_spark.dialect import transpile  # dialect imports us
+
     register_views(spark, sf_dir, ("orders",))
-    register_clickhouse_compat(spark)
-    return spark.sql(_DIALECT_SQL.format(revenue=sql_dsum("o_totalprice")))
+    return spark.sql(transpile(_DIALECT_SQL.format(revenue=sql_dsum("o_totalprice"))))
 
 
 O_CLICKHOUSE_DIALECT = f"""

@@ -1646,10 +1646,7 @@ def q_ddl_mv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     its persisted parquet version per trigger).  Convergence to the
     one-shot aggregate — the identical oracle as the batch roundtrip —
     proves one DDL front door drives both maintenance modes."""
-    from clickhouse_vs_dbt_spark.streaming.events_stream import (
-        events_raw_schema,
-        normalize_ts,
-    )
+    from clickhouse_vs_dbt_spark.catalog import events_ddl, normalize_ts
     from clickhouse_vs_dbt_spark.streaming.stream_mv import _batched_dir
 
     mv = transpile_materialized_view(
@@ -1658,7 +1655,7 @@ def q_ddl_mv_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     src = _batched_dir(spark, sf_dir)
     stream = normalize_ts(
-        spark.readStream.schema(events_raw_schema(spark, sf_dir))
+        spark.readStream.schema(events_ddl(spark, f"{sf_dir}/events.parquet"))
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )

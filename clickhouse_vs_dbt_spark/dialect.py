@@ -25,8 +25,8 @@ verbatim reference query runs unmodified.
 
 Each call site renders through :func:`_render_call`, a lookup in one
 name-keyed registry.  To add a function: a compat name is one
-``_COMPAT_FUNCS`` row (``_TEMPLATES`` loads it; raw ``spark.sql`` gets
-it as a SQL function); another one-format-string mapping is a
+``_COMPAT_FUNCS`` row (``_TEMPLATES`` loads it); another
+one-format-string mapping is a
 ``_TEMPLATES`` row ``(name, arity, template)`` with ``{0}`` the first
 argument; a name that refuses whatever its arguments is a
 ``_REFUSALS`` row; anything else is a handler ``fn(name, args)`` under
@@ -18251,7 +18251,7 @@ def run_clickhouse_script(
 def run_clickhouse_sql(
     spark: SparkSession, sql: str, sf_dir: str, tables: tuple[str, ...]
 ) -> DataFrame:
-    """One-call front door: register the parquet views and the scalar
+    """One-call front door: register the parquet views and the pandas
     compat UDFs, transpile, execute."""
     from clickhouse_vs_dbt_spark import ddl as _ddl  # lazy: ddl imports us
 

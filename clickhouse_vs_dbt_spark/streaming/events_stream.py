@@ -18,35 +18,11 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from clickhouse_vs_dbt_spark.catalog import events_ddl, normalize_ts
 from clickhouse_vs_dbt_spark.operators.common import dsum
 from clickhouse_vs_dbt_spark.operators.timeseries import TUMBLE_SEC
 from clickhouse_vs_dbt_spark.session import scratch_dir
-
-# events.ts has shipped both as TIMESTAMP(NANOS) parquet (surfaced as
-# int64 via nanosAsLong, see catalog.py) and as micros TIMESTAMP_NTZ.
-# FileStreamSource needs an explicit schema, so probe the fixture's
-# actual footer once per (sf_dir) instead of hardcoding either layout.
-_SCHEMA_CACHE: dict = {}
-
-
-def events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
-    if sf_dir not in _SCHEMA_CACHE:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        _SCHEMA_CACHE[sf_dir] = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    return _SCHEMA_CACHE[sf_dir]
-
-
-def normalize_ts(df: DataFrame) -> DataFrame:
-    """Whatever the footer said, emit ts as a session-tz timestamp: raw
-    int64 nanos are truncated to micros (DuckDB truncates identically);
-    micros TIMESTAMP_NTZ is cast (identity under the UTC session tz)."""
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    else:
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def _as_stream_dir(sf_dir: str) -> str:
@@ -62,7 +38,7 @@ def _as_stream_dir(sf_dir: str) -> str:
 
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = (
-        spark.readStream.schema(events_raw_schema(spark, sf_dir))
+        spark.readStream.schema(events_ddl(spark, f"{sf_dir}/events.parquet"))
         .parquet(_as_stream_dir(sf_dir))
     )
     return normalize_ts(raw)

@@ -274,16 +274,10 @@ def _envelope_batches(spark: SparkSession, sf_dir: str) -> str:
     bytes, value = the JSONEachRow payload with ts as epoch micros.
     The producer analog; offsets stripe by event_id so replay order is
     deterministic."""
-    from clickhouse_vs_dbt_spark.streaming.events_stream import (
-        events_raw_schema,
-        normalize_ts,
-    )
+    from clickhouse_vs_dbt_spark.catalog import events_ddl, normalize_ts
 
-    raw = normalize_ts(
-        spark.read.schema(events_raw_schema(spark, sf_dir)).parquet(
-            f"{sf_dir}/events.parquet"
-        )
-    )
+    path = f"{sf_dir}/events.parquet"
+    raw = normalize_ts(spark.read.schema(events_ddl(spark, path)).parquet(path))
     payload = raw.select(
         F.encode(F.col("event_id").cast("string"), "UTF-8").alias("key"),
         F.encode(

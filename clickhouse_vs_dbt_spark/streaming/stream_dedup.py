@@ -29,12 +29,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_vs_dbt_spark.catalog import events_ddl, normalize_ts
 from clickhouse_vs_dbt_spark.operators.common import DEC
 from clickhouse_vs_dbt_spark.session import scratch_dir
-from clickhouse_vs_dbt_spark.streaming.events_stream import (
-    events_raw_schema,
-    normalize_ts,
-)
 
 
 def _as_duplicated_stream_dir(sf_dir: str) -> str:
@@ -60,9 +57,9 @@ def q_events_stream_dedup(
     rather than growing state forever (choose the horizon ≥ the source's
     redelivery window).  Here both deliveries land in one micro-batch,
     which also exercises intra-batch dedup."""
-    raw = spark.readStream.schema(events_raw_schema(spark, sf_dir)).parquet(
-        _as_duplicated_stream_dir(sf_dir)
-    )
+    raw = spark.readStream.schema(
+        events_ddl(spark, f"{sf_dir}/events.parquet")
+    ).parquet(_as_duplicated_stream_dir(sf_dir))
     deduped = (
         normalize_ts(raw)
         .withWatermark("ts", watermark)

@@ -44,13 +44,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_vs_dbt_spark.catalog import events_ddl, normalize_ts
 from clickhouse_vs_dbt_spark.operators.common import dsum, sql_dsum
 from clickhouse_vs_dbt_spark.operators.timeseries import TUMBLE_SEC
 from clickhouse_vs_dbt_spark.session import scratch_dir
-from clickhouse_vs_dbt_spark.streaming.events_stream import (
-    events_raw_schema,
-    normalize_ts,
-)
 
 DELAY_SEC = 3600  # watermark delay: 1 hour
 N_FILES = 3  # file i = rows with event_id % 3 == i; f2 holds the stragglers
@@ -59,9 +56,8 @@ N_FILES = 3  # file i = rows with event_id % 3 == i; f2 holds the stragglers
 def _batched_dir(spark: SparkSession, sf_dir: str) -> str:
     """Write the fixture as three single-file batches with pinned mtimes
     so FileStreamSource picks them up in order, one per trigger."""
-    raw = spark.read.schema(events_raw_schema(spark, sf_dir)).parquet(
-        f"{sf_dir}/events.parquet"
-    )
+    path = f"{sf_dir}/events.parquet"
+    raw = spark.read.schema(events_ddl(spark, path)).parquet(path)
     out = scratch_dir("late_stream")
     for i in range(N_FILES):
         tmp = os.path.join(out, f"_tmp{i}")
@@ -83,7 +79,7 @@ def run_late_drop_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src = _batched_dir(spark, sf_dir)
     events = normalize_ts(
-        spark.readStream.schema(events_raw_schema(spark, sf_dir))
+        spark.readStream.schema(events_ddl(spark, f"{sf_dir}/events.parquet"))
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )

@@ -24,12 +24,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+from clickhouse_vs_dbt_spark.catalog import events_ddl, normalize_ts
 from clickhouse_vs_dbt_spark.operators.common import sql_dsum
 from clickhouse_vs_dbt_spark.session import scratch_dir
-from clickhouse_vs_dbt_spark.streaming.events_stream import (
-    events_raw_schema,
-    normalize_ts,
-)
 
 _DEC18 = "decimal(18,6)"
 _DEC38 = "decimal(38,6)"
@@ -42,16 +39,15 @@ def _batched_dir(spark: SparkSession, sf_dir: str) -> str:
     Batches are written from the RAW footer-schema read (same as
     stream_late._batched_dir) — not from load_table, whose ts is already
     normalized to TimestampType.  The stream below re-reads them with
-    ``events_raw_schema`` + ``normalize_ts``; writing normalized batches
+    ``events_ddl`` + ``normalize_ts``; writing normalized batches
     here would make that declared schema lie about the file contents
     under the nanos-int64 events layout (ts BIGINT declared, timestamp
     stored) and normalize_ts would then divide micros by 1000 again."""
     import glob
     import shutil
 
-    raw = spark.read.schema(events_raw_schema(spark, sf_dir)).parquet(
-        f"{sf_dir}/events.parquet"
-    )
+    path = f"{sf_dir}/events.parquet"
+    raw = spark.read.schema(events_ddl(spark, path)).parquet(path)
     out = scratch_dir("mv_stream")
     for i in range(N_FILES):
         tmp = os.path.join(out, f"_tmp{i}")
@@ -97,7 +93,7 @@ def q_events_stream_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial.write.mode("overwrite").parquet(f"{base}/v{state['version']}")
 
     stream = normalize_ts(
-        spark.readStream.schema(events_raw_schema(spark, sf_dir))
+        spark.readStream.schema(events_ddl(spark, f"{sf_dir}/events.parquet"))
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )

@@ -26,9 +26,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from clickhouse_vs_dbt_spark.catalog import events_ddl
 from clickhouse_vs_dbt_spark.operators.common import DEC
 from clickhouse_vs_dbt_spark.session import scratch_dir
-from clickhouse_vs_dbt_spark.streaming.events_stream import events_raw_schema
 from clickhouse_vs_dbt_spark.streaming.stream_dedup import (
     _as_duplicated_stream_dir,
 )
@@ -44,7 +44,9 @@ def q_events_stream_upsert(
     separate micro-batches, exercising the cross-batch merge path
     (existing-table anti-join); the default single batch exercises
     intra-batch dedup.  Both must converge to the fixture."""
-    reader = spark.readStream.schema(events_raw_schema(spark, sf_dir))
+    reader = spark.readStream.schema(
+        events_ddl(spark, f"{sf_dir}/events.parquet")
+    )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     raw = reader.parquet(_as_duplicated_stream_dir(sf_dir))

@@ -217,10 +217,9 @@ def test_stream_mv_equals_batch_aggregate(spark, sf_dir):
 
 
 def test_clickhouse_compat_functions(spark, sf_dir):
-    from clickhouse_vs_dbt_spark import compat
+    from clickhouse_vs_dbt_spark.dialect import transpile
 
-    compat.register_clickhouse_compat(spark)
-    row = spark.sql(
+    row = spark.sql(transpile(
         """SELECT toYear(DATE'1994-02-07') AS y,
                   toYYYYMM(DATE'1994-01-15') AS ym,
                   toISOWeek(DATE'1994-02-07') AS w,
@@ -231,11 +230,11 @@ def test_clickhouse_compat_functions(spark, sf_dir):
                   editDistance('kitten', 'sitting') AS ed,
                   empty('') AS e, notEmpty('x') AS ne,
                   splitByChar('|', 'a|b|c') AS parts"""
-    ).first()
+    )).first()
     assert row.y == 1994 and row.ym == 199401 and row.w == 6
     assert row.dow == 1  # 1994-02-07 is a Monday
     assert str(row.mon) == "1994-02-07"
-    row2 = spark.sql(
+    row2 = spark.sql(transpile(
         """SELECT toStartOfYear(DATE'1994-02-07') AS soy,
                   toDate(TIMESTAMP'1994-02-07 13:45:09') AS d,
                   toHour(TIMESTAMP'1994-02-07 13:45:09') AS h,
@@ -243,7 +242,7 @@ def test_clickhouse_compat_functions(spark, sf_dir):
                   toSecond(TIMESTAMP'1994-02-07 13:45:09') AS s,
                   bitCount(255) AS bc,
                   toStartOfDay(TIMESTAMP'1994-02-07 13:45:09') AS sod"""
-    ).first()
+    )).first()
     assert str(row2.soy) == "1994-01-01" and str(row2.d) == "1994-02-07"
     assert (row2.h, row2.mi, row2.s, row2.bc) == (13, 45, 9, 8)
     assert str(row2.sod) == "1994-02-07 00:00:00"
@@ -257,7 +256,8 @@ def test_clickhouse_dialect_inlines_to_builtin_plan(spark, sf_dir):
 
     df = compat.q_clickhouse_dialect(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    # SQL UDFs are substituted at analysis time: no python/UDF nodes
+    # transpile inlines each compat name as its built-in body: no
+    # python/UDF nodes
     assert "BatchEvalPython" not in plan and "pythonUDF" not in plan
 
 

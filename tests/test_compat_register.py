@@ -1,7 +1,8 @@
-"""``register_clickhouse_compat`` in a fresh session: one call makes
-every compat function resolvable, each SQL function computes its body,
-a repeat call is free, and a failed registration leaves the session
-unmarked so the next call registers everything."""
+"""``register_clickhouse_compat`` in a fresh session: one call registers
+the pandas UDFs and no compat SQL function, a repeat call is free, and
+a failed registration leaves the session unmarked so the next call
+registers everything.  Each ``_COMPAT_FUNCS`` name answers, through
+the front door, what its native Spark spelling answers."""
 
 from __future__ import annotations
 
@@ -11,18 +12,6 @@ import pytest
 
 from clickhouse_vs_dbt_spark import compat
 from clickhouse_vs_dbt_spark.dialect import _tokens, transpile
-
-# sample values per parameter type, NULL included (no zero BIGINT:
-# intDiv/modulo raise on a zero divisor under ANSI mode)
-_SAMPLES = {
-    "DATE": ["DATE'2024-02-29'", "DATE'1995-12-31'", "DATE'1970-01-01'"],
-    "TIMESTAMP": [
-        "TIMESTAMP'2024-02-29 13:45:07'", "TIMESTAMP'1995-12-31 23:59:59'",
-    ],
-    "INT": ["3", "-14"],
-    "BIGINT": ["17", "-5", "9007199254740993"],
-    "STRING": ["'abc'", "''", "'a,b,,c'", "'ß,'"],
-}
 
 
 def _temporary_names(spark) -> set[str]:
@@ -41,10 +30,8 @@ def _compat_calls(sql: str) -> list[str]:
             if nxt == "(" and t.lower() in names]
 
 
-def _all_names() -> set[str]:
-    return {n.lower() for n in compat._COMPAT_FUNCS} | {
-        n.lower() for n, _ in compat._vectorized_udfs()
-    }
+def _udf_names() -> set[str]:
+    return {n.lower() for n, _ in compat._vectorized_udfs()}
 
 
 @pytest.fixture
@@ -53,25 +40,53 @@ def fresh(spark):
 
 
 def test_one_call_registers_every_function(fresh):
-    assert not _all_names() & _temporary_names(fresh)
+    before = _temporary_names(fresh)
+    assert not _udf_names() & before
     compat.register_clickhouse_compat(fresh)
-    assert _all_names() <= _temporary_names(fresh)
+    assert _temporary_names(fresh) - before == _udf_names()
     assert len(compat._vectorized_udfs()) == 28
     assert len(compat._COMPAT_FUNCS) == 34
 
 
-def _params(sig: str) -> tuple[list[tuple[str, str]], str]:
-    """``(d DATE, n INT) RETURNS DATE`` -> ([(d, DATE), (n, INT)], DATE)."""
-    args, ret = sig.split(" RETURNS ")
-    params = [tuple(p.split()) for p in args.strip("()").split(",")]
-    return params, ret.strip()
+def test_front_door_setup_launches_no_job(spark, sf_dir, monkeypatch):
+    """What a ``dialect_frontdoor`` set-up does — load every table it
+    names (``events`` included) and register the compat UDFs — runs no
+    Spark job, and the only temporary functions it adds are the 28
+    ``ch_*`` pandas UDFs."""
+    import importlib
+    import sys
+    from pathlib import Path
 
+    from clickhouse_vs_dbt_spark.catalog import register_views
 
-@pytest.fixture(scope="module")
-def registered(spark):
+    perfbench = Path(__file__).resolve().parents[1] / "perfbench"
+    monkeypatch.syspath_prepend(str(perfbench))
+    try:
+        tables = importlib.import_module("workloads").DIALECT_TABLES
+    finally:  # perfbench's flat module names stay out of other tests
+        for name in ("workloads", "check"):
+            sys.modules.pop(name, None)
+
     s = spark.newSession()
-    compat.register_clickhouse_compat(s)
-    return s
+    before = _temporary_names(s)
+    sc = s.sparkContext
+    group = f"front-door-setup-{id(s)}"
+    sc.setJobGroup(group, group)
+    try:
+        register_views(s, sf_dir, tables)
+        compat.register_clickhouse_compat(s)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    added = _temporary_names(s) - before
+    assert added == _udf_names()
+    assert all(n.startswith("ch_") for n in added)
+    assert not added & {n.lower() for n in compat._COMPAT_FUNCS}
+
+
+def _params(sig: str) -> list[str]:
+    """``(d DATE, n INT) RETURNS DATE`` -> ``['DATE', 'INT']``."""
+    return [p.split()[1] for p in sig[1:sig.index(")")].split(",")]
 
 
 #: what a front-door caller passes for each parameter type, NULL
@@ -87,48 +102,84 @@ _INTEGERS = ["3", "-14", "CAST(17 AS BIGINT)", "CAST(-5 AS BIGINT)", "NULL"]
 _INPUTS = {
     "DATE": _DATES, "TIMESTAMP": _DATES, "INT": _INTEGERS,
     "BIGINT": _INTEGERS + ["9007199254740993"],
-    "STRING": _SAMPLES["STRING"] + ["NULL"],
+    "STRING": ["'abc'", "''", "'a,b,,c'", "'ß,'", "NULL"],
+}
+
+#: each name's expected answer, spelled with Spark built-ins over its
+#: arguments cast to the signature's parameter types, then cast to its
+#: return type; where a built-in other than the row's body says the
+#: same thing, it is the one written here
+_NATIVE = {
+    "toYear": "extract(YEAR FROM {0})",
+    "toYYYYMM": "year({0}) * 100 + month({0})",
+    "toISOWeek": "extract(WEEK FROM {0})",
+    "toMonth": "extract(MONTH FROM {0})",
+    "toDayOfMonth": "dayofmonth({0})",
+    "toDayOfWeek": "extract(DAYOFWEEK_ISO FROM {0})",
+    "toQuarter": "extract(QUARTER FROM {0})",
+    "toStartOfMonth": "trunc({0}, 'MM')",
+    "toMonday": "date_sub({0}, weekday({0}))",
+    "toStartOfQuarter": "trunc({0}, 'QUARTER')",
+    "toUnixTimestamp": "unix_seconds({0})",
+    "addDays": "{0} + {1}",
+    "subtractDays": "{0} - {1}",
+    "addMonths": "{0} + make_ym_interval(0, {1})",
+    "addYears": "{0} + make_ym_interval({1}, 0)",
+    "toDayOfYear": "extract(DOY FROM {0})",
+    "toStartOfHour": "date_trunc('HOUR', {0})",
+    "toStartOfMinute": "date_trunc('MINUTE', {0})",
+    "toLastDayOfMonth": "date_sub(add_months(trunc({0}, 'MM'), 1), 1)",
+    "dateDiff_day": "unix_date({1}) - unix_date({0})",
+    "toStartOfYear": "trunc({0}, 'YEAR')",
+    "toStartOfDay": "date_trunc('DAY', {0})",
+    "toDate": "to_date({0})",
+    "toHour": "extract(HOUR FROM {0})",
+    "toMinute": "extract(MINUTE FROM {0})",
+    "toSecond": "extract(SECOND FROM {0})",
+    "bitCount": "bit_count({0})",
+    "intDiv": "{0} DIV {1}",
+    "modulo": "{0} - {0} DIV {1} * {1}",
+    "empty": "{0} = ''",
+    "notEmpty": "{0} <> ''",
+    "lengthUTF8": "char_length({0})",
+    "editDistance": "levenshtein({0}, {1})",
+    "splitByChar": "split({1}, concat('\\\\Q', {0}, '\\\\E'))",
 }
 
 
-@pytest.mark.parametrize("name", sorted(compat._COMPAT_FUNCS))
-def test_sql_function_equals_its_body(registered, fresh, name):
-    """The registered SQL function computes its row's body, and the
-    front door's inlined body answers as the SQL function does in a
-    session that never registered one."""
-    sig, body = compat._COMPAT_FUNCS[name]
-    params, ret = _params(sig)
-    # every combination of sample values, each parameter also NULL
-    cols = [
-        [f"CAST({v} AS {t})" for v in _SAMPLES[t] + ["NULL"]]
-        for _, t in params
-    ]
-    rows = ", ".join(
-        "(" + ", ".join(combo) + ")" for combo in itertools.product(*cols)
-    )
-    names = [p for p, _ in params]
-    got = registered.sql(
-        f"SELECT {', '.join(names)}, {name}({', '.join(names)}) AS got, "
-        f"CAST(({body.format(*names)}) AS {ret}) AS want "
-        f"FROM VALUES {rows} AS t({', '.join(names)})"
-    ).collect()
-    assert len(got) == len(list(itertools.product(*cols)))
-    bad = [r for r in got if r["got"] != r["want"]]
-    assert not bad, bad[:3]
-    assert any(r["got"] is None for r in got)
+def test_every_name_has_a_native_spelling():
+    assert _NATIVE.keys() == compat._COMPAT_FUNCS.keys()
 
+
+@pytest.mark.parametrize("name", sorted(compat._COMPAT_FUNCS))
+def test_sql_function_equals_its_body(fresh, name):
+    """The front door's inlined body answers, for every combination of
+    ``_INPUTS`` (NULL included), what the name's native spelling over
+    the typed arguments answers, in a session that registered no
+    compat function."""
+    sig, _ = compat._COMPAT_FUNCS[name]
+    types = _params(sig)
+    ret = sig.split(" RETURNS ")[1]
+    combos = list(itertools.product(*(_INPUTS[t] for t in types)))
     calls = [
         f"CAST({name}({', '.join(combo)}) AS STRING) AS c{i}"
-        for i, combo in enumerate(
-            itertools.product(*(_INPUTS[t] for _, t in params))
-        )
+        for i, combo in enumerate(combos)
     ]
-    query = f"SELECT {', '.join(calls)}"
-    inline = transpile(query)
+    natives = [
+        "CAST(CAST(({}) AS {}) AS STRING) AS c{}".format(
+            _NATIVE[name].format(
+                *(f"CAST({v} AS {t})" for v, t in zip(combo, types))
+            ), ret, i,
+        )
+        for i, combo in enumerate(combos)
+    ]
+    inline = transpile(f"SELECT {', '.join(calls)}")
     assert not _compat_calls(inline), inline
-    assert not _all_names() & _temporary_names(fresh)
-    want = registered.sql(query).first().asDict()
     got = fresh.sql(inline).first().asDict()
+    want = fresh.sql(f"SELECT {', '.join(natives)}").first().asDict()
+    assert not _udf_names() & _temporary_names(fresh)
+    assert len(got) == len(combos)
+    assert any(v is None for v in want.values())
     bad = {c: (want[c], got[c]) for c in want if want[c] != got[c]}
     assert not bad, [(calls[int(c[1:])], v) for c, v in bad.items()][:3]
 
@@ -150,61 +201,14 @@ def test_second_call_issues_no_round_trip(fresh, monkeypatch):
 def test_failed_registration_raises_and_leaves_session_unmarked(
     fresh, monkeypatch
 ):
-    broken = dict(compat._COMPAT_FUNCS)
-    broken["toYear"] = ("(d DATE) RETURNS INT", "year({0}")
-    monkeypatch.setattr(compat, "_COMPAT_FUNCS", broken)
-    with pytest.raises(Exception, match="(?i)syntax|parse"):
+    rows = compat._vectorized_udfs()
+    broken = rows[:-1] + [(rows[-1][0], "not a udf")]
+    monkeypatch.setattr(compat, "_vectorized_udfs", lambda: broken)
+    with pytest.raises(Exception, match="NOT_CALLABLE"):
         compat.register_clickhouse_compat(fresh)
     assert fresh.conf.get(compat._REGISTERED_FLAG, None) is None
     monkeypatch.undo()
     compat.register_clickhouse_compat(fresh)
     assert fresh.conf.get(compat._REGISTERED_FLAG, None) is not None
-    assert _all_names() <= _temporary_names(fresh)
-    assert fresh.sql("SELECT toYear(DATE'1993-05-01') AS y").first().y == 1993
-
-
-def test_registers_without_pinned_threads(fresh, monkeypatch):
-    # PYSPARK_PIN_THREAD=false: PySpark returns the session it was
-    # given instead of a thread-target wrapper
-    monkeypatch.setattr(compat, "inheritable_thread_target", lambda s: s)
-    compat.register_clickhouse_compat(fresh)
-    assert _all_names() <= _temporary_names(fresh)
-
-
-def test_pool_threads_run_on_their_own_local_properties(fresh, monkeypatch):
-    """Each pool thread gets its own clone of the caller's local
-    properties.  A shared one is where concurrent ``spark.sql`` calls
-    set and clear ``spark.sql.execution.id`` under each other."""
-    import threading
-
-    sc = fresh.sparkContext
-    identity = sc._jvm.System.identityHashCode
-    seen: dict[int, set] = {}
-
-    def record(call):
-        props = sc._jsc.sc().getLocalProperties()
-        seen.setdefault(threading.get_ident(), set()).add(
-            (identity(props), props.getProperty("cvds.test.inherited"))
-        )
-        return call()
-
-    monkeypatch.setattr(compat, "_call", record)
-    sc.setLocalProperty("cvds.test.inherited", "yes")
-    try:
-        compat.register_clickhouse_compat(fresh)
-    finally:
-        sc.setLocalProperty("cvds.test.inherited", None)
-    caller = identity(sc._jsc.sc().getLocalProperties())
-    assert threading.get_ident() not in seen and len(seen) >= 2
-    assert all(len(props) == 1 for props in seen.values()), seen
-    owned = [next(iter(props)) for props in seen.values()]
-    assert len({ident for ident, _ in owned} | {caller}) == len(owned) + 1
-    assert {inherited for _, inherited in owned} == {"yes"}
-
-
-def test_fresh_sessions_register_concurrently(spark):
-    for _ in range(20):
-        s = spark.newSession()
-        compat.register_clickhouse_compat(s)
-        assert s.conf.get(compat._REGISTERED_FLAG, None) is not None
-    assert s.sql("SELECT toYear(DATE'1993-05-01') AS y").first().y == 1993
+    assert _udf_names() <= _temporary_names(fresh)
+    assert fresh.sql("SELECT ch_erf(0.0) AS e").first().e == 0.0

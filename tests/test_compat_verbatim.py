@@ -1,8 +1,9 @@
 """The strongest "same query capabilities" claim: the reference's own
 Q1.x SQL strings, CHARACTER-FOR-CHARACTER as published (reference
 README.md:415-417, 424-426, 433-436), run unmodified through the
-ClickHouse-dialect layer (``compat.register_clickhouse_compat``) and
-return exactly what the natively-spelled Spark SQL returns.
+ClickHouse-dialect front door (``dialect.transpile``, which inlines
+each compat name as its built-in body) and return exactly what the
+natively-spelled Spark SQL returns.
 
 "Modulo table name" adaptation happens entirely in ONE view, never in
 the query text: ``star`` here exposes the reference's SSB column
@@ -26,7 +27,7 @@ from __future__ import annotations
 
 import pytest
 
-from clickhouse_vs_dbt_spark.compat import register_clickhouse_compat
+from clickhouse_vs_dbt_spark.dialect import transpile
 from clickhouse_vs_dbt_spark.operators.common import star
 
 # --- verbatim strings from reference README.md (table name `star` and
@@ -73,7 +74,6 @@ def ssb_star(spark, sf_dir):
                   CAST(l_quantity AS INT) AS LO_QUANTITY
            FROM _star_fixture"""
     )
-    register_clickhouse_compat(spark)
     yield
     spark.catalog.dropTempView("star")
 
@@ -84,7 +84,7 @@ def ssb_star(spark, sf_dir):
     ids=["q1_1", "q1_2", "q1_3"],
 )
 def test_reference_sql_verbatim_equals_native(spark, ssb_star, verbatim):
-    got = spark.sql(verbatim).collect()[0]["revenue"]
+    got = spark.sql(transpile(verbatim)).collect()[0]["revenue"]
     want = spark.sql(_NATIVE[verbatim]).collect()[0]["revenue"]
     assert got is not None, "verbatim predicates matched zero rows — vacuous"
     assert got == want
@@ -99,9 +99,7 @@ def test_reference_sql_with_clickhouse_tails(spark, ssb_star, verbatim):
     """The same verbatim queries with the clause tails a real ClickHouse
     session appends — SETTINGS and FORMAT — run through the transpiler
     front door and return the identical answer (transpile strips the
-    engine-specific tails, compat UDFs cover the scalar names)."""
-    from clickhouse_vs_dbt_spark.dialect import transpile
-
+    engine-specific tails and inlines the scalar names)."""
     tailed = verbatim + "\nSETTINGS max_threads = 8 FORMAT TabSeparated"
     got = spark.sql(transpile(tailed)).collect()[0]["revenue"]
     want = spark.sql(_NATIVE[verbatim]).collect()[0]["revenue"]

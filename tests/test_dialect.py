@@ -624,10 +624,9 @@ def test_anylastif_picks_last_match_not_null(spark):
 
 
 def test_new_compat_date_scalars(spark):
-    """Each newly-registered scalar equals its Spark built-in on a
-    probe date/timestamp."""
-    register_clickhouse_compat(spark)
-    row = spark.sql(
+    """Each compat date scalar, through the front door, equals its
+    Spark built-in on a probe date/timestamp."""
+    row = spark.sql(transpile(
         """
         SELECT subtractDays(DATE'2024-03-15', 20) = date_sub(DATE'2024-03-15', 20) AS a,
                addMonths(DATE'2024-03-15', 11) = add_months(DATE'2024-03-15', 11) AS b,
@@ -639,7 +638,7 @@ def test_new_compat_date_scalars(spark):
                  TIMESTAMP'2024-03-15 10:47:00' AS f,
                toLastDayOfMonth(DATE'2024-02-10') = DATE'2024-02-29' AS g
         """
-    ).collect()[0]
+    )).collect()[0]
     assert all(row), row.asDict()
 
 

@@ -230,33 +230,42 @@ def _fresh_dir(tmp_path, sf_dir: str) -> str:
 
 def test_declared_schemas_equal_inferred_in_every_generation(spark, sf_dir, tmp_path):
     """Every declared schema equals the one Spark infers from the
-    footer (names, types, order, nullability) in each fixture scale and
-    in the benchmark generator's output.  Reading with the declared
-    schema would turn a column missing from a file into NULLs, so
-    drift must fail here."""
+    footer (names, types, order, nullability) in each fixture scale, in
+    the benchmark generator's output and in a nanos ``events`` file;
+    for ``events`` it is the schema :func:`catalog.events_ddl` picks.
+    Reading with the declared schema would turn a column missing from
+    a file into NULLs, so drift must fail here."""
     import glob
     import os
 
     from pyspark.sql.types import StructType
 
+    from clickhouse_vs_dbt_spark.catalog import events_ddl
+
     gen_dir = str(tmp_path / "gen")
     _generate_bench_inputs(gen_dir, 0.001)
+    nanos_dir = str(tmp_path / "nanos")
+    os.mkdir(nanos_dir)
+    _orders_and_events(nanos_dir, rows=100)
     dirs = sorted(glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*")))
     declared = _declared()
     checked: dict[str, list[str]] = {}
-    for d in [*dirs, gen_dir]:
+    for d in [*dirs, gen_dir, nanos_dir]:
         for name, ddl in declared.items():
             f = f"{d}/{name}.parquet"
             if os.path.exists(f):
                 assert spark.read.parquet(f).schema == StructType.fromDDL(ddl), f
                 checked.setdefault(name, []).append(d)
+        f = f"{d}/events.parquet"
+        ddl = events_ddl(spark, f)  # turns nanosAsLong on for a nanos ts
+        assert spark.read.parquet(f).schema == StructType.fromDDL(ddl), f
     assert set(checked) == set(declared)
-    assert len(checked["orders"]) == len(dirs) + 1
+    assert len(checked["orders"]) == len(dirs) + 2
 
 
 def test_load_table_launches_no_schema_job(spark, sf_dir, tmp_path):
-    """From a fresh path, a declared table loads without a Spark job;
-    ``events`` runs its one footer-inference job."""
+    """From a fresh path, every fixture table loads without a Spark
+    job, ``events`` included: its footer is read on the driver."""
     from clickhouse_vs_dbt_spark.catalog import FIXTURE_SCHEMAS, load_table
 
     fresh = _fresh_dir(tmp_path, sf_dir)
@@ -265,7 +274,28 @@ def test_load_table_launches_no_schema_job(spark, sf_dir, tmp_path):
                            lambda name=name: load_table(spark, fresh, name))[1])
         for name in FIXTURE_SCHEMAS
     }
-    assert jobs == {name: 0 if ddl else 1 for name, ddl in FIXTURE_SCHEMAS.items()}
+    assert jobs == dict.fromkeys(FIXTURE_SCHEMAS, 0)
+
+
+def test_nanos_events_load_without_a_job(spark, tmp_path):
+    """A nanos ``events.ts`` loads with no Spark job, to the rows and
+    schema of Spark's own footer-inferred read with nanos surfaced as
+    int64 and truncated to micros."""
+    from pyspark.sql import functions as F
+
+    from clickhouse_vs_dbt_spark.catalog import load_table
+
+    _orders_and_events(tmp_path, rows=1_000)
+    d = str(tmp_path)
+    df, jobs = _job_ids(spark, f"nanos-{d}", lambda: load_table(spark, d, "events"))
+    assert jobs == []
+    assert spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    old = spark.read.parquet(f"{d}/events.parquet")
+    assert dict(old.dtypes)["ts"] == "bigint"
+    old = old.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    assert df.schema == old.schema
+    assert df.exceptAll(old).count() == 0 and old.exceptAll(df).count() == 0
+    assert df.count() == 1_000 and df.filter(df.ts.isNull()).count() > 0
 
 
 def test_rechunked_table_launches_only_its_rewrite(spark, sf_dir, tmp_path, monkeypatch):
@@ -359,9 +389,8 @@ def test_rechunked_copy_equals_its_source(spark, tmp_path, monkeypatch):
         got = pa.concat_tables(pq.read_table(f) for f in files)
         assert got.schema.equals(want.schema, check_metadata=True)
         assert got.equals(want)
-        ddl = cat.FIXTURE_SCHEMAS[name]
-        if ddl:
-            assert spark.read.parquet(copy).schema == StructType.fromDDL(ddl)
+        ddl = cat.FIXTURE_SCHEMAS[name] or cat.events_ddl(spark, copy)
+        assert spark.read.parquet(copy).schema == StructType.fromDDL(ddl)
         with monkeypatch.context() as m:
             m.setattr(cat, "_CHUNK_MIN_BYTES", 1 << 62)
             base = cat.load_table(spark, plain, name)
