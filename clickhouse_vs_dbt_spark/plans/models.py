@@ -26,7 +26,9 @@ gives one file per partition value instead of one per task and value,
 and the incremental model's writes (copy-on-write versions and
 batches).  An unpartitioned TABLE already writes one file per write
 task, and a REBALANCE there would shuffle the whole relation just to
-resize its files.
+resize its files.  ``sort_by`` orders the rows within every file a
+model writes (a task-local sort, no shuffle); a bucketed TABLE passes
+it to ``bucketBy(...).sortBy`` instead.
 
 Within a single query Spark's lazy plan already orders work; the runner
 exists for the *cross-query* materialization boundary the reference's
@@ -91,6 +93,8 @@ class Model:
     # joins/aggs on the bucket key need no exchange (co-located join —
     # the 100 TB answer to the fact⋈fact lineitem⋈orders shuffle).
     bucket_by: tuple[int, Sequence[str]] | None = None
+    # the row order within each written file (a MergeTree ``ORDER BY``):
+    # equal keys sit together, so their columns encode in short runs
     sort_by: Sequence[str] = ()
     # INCREMENTAL only.  With unique_key: dbt's ``merge`` strategy —
     # incoming rows replace existing rows with the same key.  Without:
@@ -107,6 +111,18 @@ class Model:
     # retention (disk) is the price, exactly the table-format
     # trade-off.
     keep_versions: int = 1
+
+
+def _laid_out(df: DataFrame, model: Model, rebalance: bool) -> DataFrame:
+    """``df`` as ``model`` writes it: REBALANCEd by its partition
+    columns when ``rebalance``, then each task sorted by
+    ``model.sort_by``.  The sort leads with the partition columns:
+    that is the order a partitioned write needs, so Spark adds no sort
+    of its own that would replace this one."""
+    out = rebalanced(df, *model.partition_by) if rebalance else df
+    if model.sort_by:
+        out = out.sortWithinPartitions(*model.partition_by, *model.sort_by)
+    return out
 
 
 @dataclass
@@ -384,7 +400,7 @@ class ModelRunner:
         value) unless ``rebalance=False``, for callers that manage the
         layout themselves (compact)."""
         path = f"{self.warehouse_dir}/{model.name}_v{version}"
-        out = self._create(df, path, model.partition_by, rebalance)
+        out = self._create(df, path, model, rebalance)
         drop_below = version - max(model.keep_versions, 1) + 1
         for v in range(max(drop_below, 0)):
             old = f"{self.warehouse_dir}/{model.name}_v{v}"
@@ -395,17 +411,15 @@ class ModelRunner:
         return out
 
     def _create(
-        self, df: DataFrame, path: str, partition_by: Sequence[str],
-        rebalance: bool,
+        self, df: DataFrame, path: str, model: Model, rebalance: bool,
     ) -> DataFrame:
         """Write ``df`` as a new parquet relation at ``path``, replacing
-        any old one, with a REBALANCE first when ``rebalance``; return
-        the relation's scan (:meth:`_scan`)."""
+        any old one, laid out by :func:`_laid_out`; return the
+        relation's scan (:meth:`_scan`)."""
         shutil.rmtree(path, ignore_errors=True)
-        out = rebalanced(df, *partition_by) if rebalance else df
-        writer = out.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        writer = _laid_out(df, model, rebalance).write.mode("overwrite")
+        if model.partition_by:
+            writer = writer.partitionBy(*model.partition_by)
         writer.parquet(path)
         self._written[path] = df.schema
         return self._scan(path)
@@ -457,11 +471,11 @@ class ModelRunner:
         if model.partition_by:
             with _conf(self.spark, "spark.sql.sources.partitionOverwriteMode",
                        "dynamic"):
-                rebalanced(batch, *model.partition_by).write.mode(
+                _laid_out(batch, model, True).write.mode(
                     "overwrite"
                 ).partitionBy(*model.partition_by).parquet(path)
         else:
-            rebalanced(batch).write.mode("append").parquet(path)
+            _laid_out(batch, model, True).write.mode("append").parquet(path)
         return self._scan(path)
 
     def _materialize_table(self, model: Model, df: DataFrame) -> DataFrame:
@@ -489,7 +503,7 @@ class ModelRunner:
         if self.warehouse_dir is None:
             self.warehouse_dir = scratch_dir("spark_models")
         return self._create(
-            df, f"{self.warehouse_dir}/{model.name}", model.partition_by,
+            df, f"{self.warehouse_dir}/{model.name}", model,
             rebalance=bool(model.partition_by),
         )
 

@@ -13,9 +13,28 @@ and projects 38 aliased columns (reference README.md:349-395; joins at
 Scale posture (SURVEY.md §4/§7-M5): every dimension side is broadcast —
 at 100 TB the lineitem scan is the only big input and it never shuffles;
 the physical plan is a chain of BroadcastHashJoins over a single fact
-scan.  ``orders`` is fact-sized (1:4 with lineitem) so it is NOT
-broadcast: that join shuffles on orderkey, or stays shuffle-free when
-both sides are bucketed by orderkey (see ModelRunner materialization).
+scan, ending in a task-local Sort.  ``orders`` is fact-sized (1:4 with
+lineitem) so it is NOT broadcast: that join shuffles on orderkey, or
+stays shuffle-free when both sides are bucketed by orderkey (see
+ModelRunner materialization).
+
+Declared order: the star ends in ``sortWithinPartitions(o_custkey,
+l_orderkey)``, the part a MergeTree ``ORDER BY`` plays for the
+reference's ``materialized='table'`` star.  The lines of one order sit
+together, and so do the orders of one customer, so the customer
+columns, repeated on every line of a customer's orders, encode in runs
+when a TABLE model writes the star.  The sort is local to each task: it
+adds no Exchange.  Measured at sf0.02 with ZSTD (``session.py``), the dbt
+``star`` TABLE is 32.39 B/row sorted against 39.46 unsorted, and each
+write takes about 0.05 s longer (0.29 -> 0.34 s on local[2]); the
+other keys tried were larger (``o_orderdate`` 36.94, ``l_partkey``
+33.72, ``l_suppkey`` 34.86).
+
+``operators.common.star`` keeps its date order instead: it range-
+partitions the star by ``(order_year, o_orderdate)`` and sorts each
+task by that key, so the flight's date predicates prune year
+directories and row groups.  Catalyst's ``EliminateSorts`` drops this
+builder's sort under that one, so its plan holds a single Sort.
 """
 
 from __future__ import annotations
@@ -71,7 +90,8 @@ STAR_COLUMNS: dict[str, str] = {
 
 def build_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative star join; Catalyst plans broadcast-hash joins for the
-    three true dimensions and a shuffle join only for lineitem⋈orders."""
+    three true dimensions and a shuffle join only for lineitem⋈orders,
+    then sorts each task by the declared order (module doc)."""
     l = load_table(spark, sf_dir, "lineitem").alias("l")
     o = load_table(spark, sf_dir, "orders").alias("o")
     c = F.broadcast(load_table(spark, sf_dir, "customer")).alias("c")
@@ -86,7 +106,7 @@ def build_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.select(
         *[F.col(src).alias(dst) for dst, src in STAR_COLUMNS.items()]
-    )
+    ).sortWithinPartitions("o_custkey", "l_orderkey")
 
 
 def star_sql() -> str:

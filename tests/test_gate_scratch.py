@@ -69,14 +69,18 @@ def warm_jvm(spark):
     """The JVM's one-off temp-dir entries (its native compression
     libraries, the session's artifact directory) are made before any
     case takes its snapshot: a shuffle, a Python UDF and a parquet
-    round trip."""
+    round trip in the session's codec (ZSTD) and in Snappy, the codec
+    of the fixtures and the catalog's re-chunked copies."""
     from pyspark.sql import functions as F
 
-    path = scratch_dir("warm_jvm") + "/t"
-    spark.range(8).repartition(2).select(
+    path = scratch_dir("warm_jvm")
+    df = spark.range(8).repartition(2).select(
         F.udf(lambda x: x, "long")("id").alias("id")
-    ).write.parquet(path)
-    assert spark.read.parquet(path).count() == 8
+    )
+    df.write.parquet(path + "/zstd")
+    df.write.option("compression", "snappy").parquet(path + "/snappy")
+    for codec in ("zstd", "snappy"):
+        assert spark.read.parquet(f"{path}/{codec}").count() == 8
 
 
 @pytest.fixture

@@ -3,6 +3,7 @@ reference README.md:254-263, :391-409)."""
 
 from __future__ import annotations
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -622,6 +623,31 @@ def test_only_partitioned_table_writes_rebalance(spark, tmp_path, parquet_writes
     assert "Exchange" not in plans["flat"]
     assert "REBALANCE_PARTITIONS_BY_COL" in plans["parted"]
     assert spark.table("flat").count() == spark.table("parted").count() == 40
+
+
+@pytest.mark.parametrize("materialization", [Materialization.TABLE, Materialization.INCREMENTAL])
+@pytest.mark.parametrize("parts", [(), ("g",)])
+def test_sort_by_orders_the_rows_of_every_file(spark, tmp_path, materialization, parts):
+    """An unbucketed model honours ``sort_by`` in every file it writes:
+    a TABLE, partitioned or not, and an incremental model's first
+    version and its appended or insert_overwrite batches."""
+    runner = ModelRunner(spark, warehouse_dir=str(tmp_path))
+    runner.add(Model(
+        "srt",
+        lambda s, existing=None: s.range(0, 200, 1, 4).selectExpr(
+            "id", "id * 37 % 101 AS k", "id % 3 AS g"
+        ),
+        materialization=materialization, partition_by=parts, sort_by=("k",),
+    ))
+    runner.run()
+    runner.run()
+    files = sorted(tmp_path.rglob("*.parquet"))
+    assert len(files) > 1
+    for f in files:
+        keys = pq.read_table(f, columns=["k"])["k"].to_pylist()
+        assert keys == sorted(keys), f
+    appended = materialization is Materialization.INCREMENTAL and not parts
+    assert spark.table("srt").count() == (400 if appended else 200)
 
 
 def test_merge_plan_has_no_aggregate_over_batch_keys(spark, tmp_path, parquet_writes):
